@@ -135,17 +135,17 @@ def stream_candles_bench(spark, sf_dir: str) -> tuple[float, int]:
 
 
 def stateful_ewma_bench(spark, sf_dir: str) -> tuple[float, int]:
-    """Replay the sf events table through the stateful per-key EWMA
-    (``applyInPandasWithState``, bucket-grouped: hash(key)%32 grouping keys,
-    per-key recurrence vectorized ACROSS keys in one Cython grouped-ewm pass,
-    state = per-bucket key/ewma arrays). Measures the custom-stateful-operator
-    path — state store round-trips + Arrow transfer + the in-batch numpy
-    work — which the windowed candle stream (s01) doesn't exercise. The
-    bucketed form is bit-for-bit equal to the per-key ``stateful_ewma``
-    (equality-tested) and is the 100 TB shape: Python update calls per batch
-    are O(buckets), not O(distinct keys) — at sf0.1's 1,500 keys that cut
-    addBatch from ~1.2 s to ~0.35 s per 25k-row micro-batch (26.6k → 34k
-    ev/s best-of-3 same-box).
+    """Replay the sf events table through the stateful EWMA
+    ``stateful_ewma_bucketed`` (``applyInPandasWithState`` grouped by
+    hash(key)%32, the recurrence vectorized ACROSS keys in one Cython
+    grouped-ewm pass, state = per-bucket key/ewma arrays). Measures the
+    custom-stateful-operator path — state store round-trips + Arrow transfer
+    + the in-batch numpy work — which the windowed candle stream (s01)
+    doesn't exercise. The operator is equality-tested against pandas
+    ``ewm(adjust=False)`` and is the 100 TB shape: Python update calls per
+    batch are O(buckets), not O(distinct keys) — at sf0.1's 1,500 keys that
+    cut addBatch from ~1.2 s to ~0.35 s per 25k-row micro-batch versus one
+    group per key (26.6k → 34k ev/s best-of-3 same-box).
     """
     import shutil
     import tempfile
@@ -253,7 +253,7 @@ def main() -> None:
     print(f"# s01_stream_candles: {stream_best:.2f}s ({n_events} events, {stream_eps} ev/s)",
           file=sys.stderr)
 
-    # custom stateful-operator dimension: per-key EWMA through the state store.
+    # custom stateful-operator dimension: bucketed EWMA through the state store.
     # One extra repeat vs the batch queries: streaming walls carry state-store
     # and python-worker warmup noise that best-of-3 under-damps (r5→r6 the
     # same-code entry drifted 6% on the driver box); the extra repeat costs

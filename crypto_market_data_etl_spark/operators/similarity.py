@@ -451,7 +451,15 @@ def _signature_sweep(
                 # after drop_null(); float32 → float64 widening is exact,
                 # so this equals the expression tier's cast("double")
                 flat = np.asarray(vec.drop_null().flatten(), dtype=np.float64)
-                V = flat.reshape(-1, dim)
+                n_live = int((~na).sum())
+                if flat.size != n_live * dim:
+                    # a blind reshape would merge two short vectors into
+                    # one row and hand every later row a shifted vector
+                    raise ValueError(
+                        f"_signature_sweep: {n_live} non-NULL vectors hold "
+                        f"{flat.size} elements, expected {dim} each"
+                    )
+                V = flat.reshape(n_live, dim)
                 dots = _sweep_cross(V, P_mat)
                 bits = (dots > 0) | np.isnan(dots)
                 chars = np.where(bits, "1", "0")

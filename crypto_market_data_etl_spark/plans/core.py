@@ -1161,9 +1161,10 @@ GROUP BY 1, 2
 
 # --------------------------------------------------------------------------
 # q28 streaming as-of enrichment through the gate: the flagship's J1 as-of
-# join run as a LIVE STREAM (streaming/stateful.py::stateful_asof_enrich —
-# latest-snapshot-as-state), replaying the events table as a trade stream +
-# a snapshot stream (every 5th event; (user_id, ts_us) is tie-free at every
+# join run as a LIVE STREAM (streaming/stateful.py::
+# stateful_asof_enrich_bucketed — latest snapshot per key as state, grouped
+# by hash(code) % 32), replaying the events table as a trade stream + a
+# snapshot stream (every 5th event; (user_id, ts_us) is tie-free at every
 # SF, verified, so the result is fully deterministic). Oracle: DuckDB's
 # native ASOF LEFT JOIN. Single micro-batch replay — the cross-batch state
 # carry is pytest-gated (test_stateful_asof_enrich_matches_batch).
@@ -1171,7 +1172,8 @@ GROUP BY 1, 2
 
 def q28_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..schemas import events_stream_source
-    from ..streaming.stateful import stateful_asof_enrich
+    from ..session import state_partitions
+    from ..streaming.stateful import stateful_asof_enrich_bucketed
 
     def src() -> DataFrame:
         return events_stream_source(spark, sf_dir)
@@ -1185,10 +1187,10 @@ def q28_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("event_id") % 5 == 0)
         .select(F.col("user_id").alias("code"), "ts_us", F.col("value").alias("mid"))
     )
-    out = stateful_asof_enrich(trades, snaps, key_col="code", ts_col="ts_us")
+    out = stateful_asof_enrich_bucketed(
+        trades, snaps, key_col="code", ts_col="ts_us", n_buckets=32
+    )
     name = "q28_stream_asof_sink"
-    from ..session import state_partitions
-
     with state_partitions(spark, 8):
         q = (
             out.writeStream.format("memory").queryName(name)
@@ -1250,8 +1252,9 @@ Q29_SQL = Q09_SQL  # identical semantics; only the physical plan differs
 
 # --------------------------------------------------------------------------
 # q30 streaming dollar bars through the gate: the q08 batch pipeline's bar
-# assignment run as a LIVE STREAM (streaming/stateful.py::stateful_dollar_bars
-# — per-key cumulative cents carried as GroupState), then bar-level OHLCV as
+# assignment run as a LIVE STREAM (streaming/stateful.py::
+# stateful_dollar_bars_bucketed — per-key cumulative cents carried as
+# bucket state), then bar-level OHLCV as
 # a downstream batch groupBy over the streamed per-event assignments. Oracle:
 # the q08 DuckDB bars CTE. Single micro-batch replay — the cross-batch state
 # carry is pytest-gated (test_stateful_dollar_bars_matches_batch).
@@ -1270,9 +1273,8 @@ def q30_stream_dollar_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("value") * 100).cast("bigint").alias("cents"),
         )
     )
-    # bucket-grouped form: O(buckets) Python update calls per micro-batch
-    # instead of O(distinct user_ids) — bit-for-bit equal to the per-key
-    # stateful_dollar_bars (equality-tested) and the same gate oracle
+    # bucket-grouped: O(buckets) Python update calls per micro-batch
+    # instead of O(distinct user_ids)
     assigned = stateful_dollar_bars_bucketed(
         trades,
         key_col="user_id",
@@ -1382,43 +1384,6 @@ ORACLES = {
     "q28_stream_asof_enrich": Q28_SQL,
 }
 
-def q31_stream_asof_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q28's live as-of enrichment through the BUCKET-GROUPED stateful form
-    (``stateful_asof_enrich_bucketed`` — O(buckets) Python calls per
-    micro-batch, per-bucket array state) — same oracle: the bucketing is
-    physical, the at-or-before semantics identical."""
-    from ..schemas import events_stream_source
-    from ..session import state_partitions
-    from ..streaming.stateful import stateful_asof_enrich_bucketed
-
-    def src() -> DataFrame:
-        return events_stream_source(spark, sf_dir)
-
-    trades = src().select(
-        F.col("user_id").alias("code"), "ts_us",
-        F.col("value").alias("price"), "event_id",
-    )
-    snaps = (
-        src()
-        .filter(F.col("event_id") % 5 == 0)
-        .select(F.col("user_id").alias("code"), "ts_us", F.col("value").alias("mid"))
-    )
-    out = stateful_asof_enrich_bucketed(
-        trades, snaps, key_col="code", ts_col="ts_us", n_buckets=32
-    )
-    name = "q31_stream_asof_sink"
-    with state_partitions(spark, 8):
-        q = (
-            out.writeStream.format("memory").queryName(name)
-            .outputMode("append").start()
-        )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
-
-
 def q32_stream_ewma_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The s02 bench operator (``stateful_ewma_bucketed``) under the oracle:
     live replay of the events table through the bucket-grouped stateful
@@ -1477,7 +1442,6 @@ VARIANT_QUERIES = {
     # previously-ungated x32/x35 extension oracles.
     "q29_asof_adaptive": q29_asof_adaptive,
     "q30_stream_dollar_bars": q30_stream_dollar_bars,
-    "q31_stream_asof_bucketed": q31_stream_asof_bucketed,
     "q32_stream_ewma_bucketed": q32_stream_ewma_bucketed,
 }
 
@@ -1489,6 +1453,5 @@ VARIANT_ORACLES = {
     "q25_continuous_candles": Q19_SQL,  # IVM is physical; daily-candle semantics match q19
     "q29_asof_adaptive": Q29_SQL,  # q09 oracle; adaptive interval plan
     "q30_stream_dollar_bars": Q30_SQL,  # q08 oracle; live stateful assignment
-    "q31_stream_asof_bucketed": Q28_SQL,  # bucketing is physical; q28 semantics
     "q32_stream_ewma_bucketed": Q32_SQL,  # full recurrence ≡ 30-row window at 6dp
 }

@@ -79,7 +79,7 @@ def market_stats_job(
 
     The reference attempted these as window functions on a stream (rejected
     by Spark — SURVEY caveats); batch form uses exact per-key recurrences,
-    streaming form is ``streaming.stateful.stateful_ewma``.
+    streaming form is ``streaming.stateful.stateful_ewma_bucketed``.
 
     ``block_span`` (``None`` | span in ms | ``"auto"``) switches both
     recurrences to their skew-proof blocked forms (``blocked_lag`` /

@@ -12,4 +12,4 @@ from .continuous_agg import (  # noqa: F401
 )
 from .ann import stream_ivfpq_index  # noqa: F401
 from .corpus import stream_curate  # noqa: F401
-from .stateful import stateful_ewma  # noqa: F401
+from .stateful import stateful_ewma_bucketed  # noqa: F401

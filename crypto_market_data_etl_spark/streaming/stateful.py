@@ -3,22 +3,30 @@
 The reference *intends* a running EWMA and a lag-based OFI on a streaming
 DataFrame (``kafka_upbit_realtime_processing.py:99-104,121-128``) — both are
 rejected by Structured Streaming (non-time window functions are unsupported
-on streams). The supported mechanism is per-key state:
-``applyInPandasWithState`` keyed by instrument, carrying the tiny recurrence
-state across micro-batches:
+on streams). The supported mechanism is keyed state:
+``applyInPandasWithState`` carrying the tiny recurrence state of each
+instrument across micro-batches:
 
-- EWMA: state = last smoothed value (one double per key).
-- OFI:  state = previous best-of-book (4 doubles per key).
+- EWMA: the last smoothed value (one double per key).
+- OFI: the previous best-of-book (4 doubles per key).
+- Dollar bars: the running notional (one bigint per key).
+- As-of enrichment: the latest order-book snapshot (one row per key).
 
 State size is O(keys), not O(events) — this scales to any stream volume; the
-only requirement is per-key in-order arrival within the watermark, which the
-micro-batch sort below plus the source's per-key ordering (Kafka partitioning
-by code) provides.
+only requirement is per-key in-order arrival across micro-batches, which the
+source's per-key ordering (Kafka partitioning by code) provides. Within a
+micro-batch each operator sorts its rows by (key, ts) itself.
 
-Each micro-batch is processed VECTORIZED inside the Arrow batch (numpy
-``shift``/``cumsum`` and pandas ``ewm`` seeded from state) — no per-row
-Python loops; at stream volume the per-batch cost is a handful of numpy
-passes, so throughput is Arrow-transfer-bound, not interpreter-bound.
+Every operator has ONE physical form: the stream is grouped by
+``hash(key) % n_buckets`` rather than by the key (:func:`_bucketed`), so
+the Python update runs O(buckets) times per micro-batch, not O(distinct
+keys), and computes the recurrence for every key of its bucket in a handful
+of numpy/pandas passes over the key-sorted frame — no per-row or per-key
+Python loops. A key's rows always hash to the same bucket, so per-key order
+and state continuity are preserved. On the key-cardinality axis (1M events,
+4 micro-batches, ``tools/scale_stateful_run.py``, SCALE_r07) the bucketed
+EWMA stays flat at 247k/321k/305k ev/s at 1.5k/10k/50k keys, where the
+one-group-per-key form it replaced fell from 195k to 26k ev/s.
 
 Key/timestamp output and state dtypes are derived from the input schema, so
 the operators work unchanged on the reference's string ``code`` column and
@@ -28,7 +36,7 @@ on integer keys alike.
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator, Sequence
+from collections.abc import Callable, Iterator, Sequence
 from typing import Any
 
 import numpy as np
@@ -44,104 +52,117 @@ def _dtype(df: DataFrame, col: str) -> T.DataType:
     return df.schema[col].dataType
 
 
-def _whole_group(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Yield the group's micro-batch rows as ONE frame.
-
-    ``applyInPandasWithState`` hands a group's rows over as an iterator of
-    Arrow-batch-sized chunks; the chunk boundaries slice shuffle-arrival
-    order, NOT event-time order, so per-chunk processing that carries state
-    chunk-to-chunk silently mis-orders any group large enough to straddle a
-    chunk boundary (~10k rows per partition by default). Found as a real
-    q28 value mismatch at sf0.1 — invisible at the sf0.01 gate scale where
-    groups never split. Buffering is bounded by the group's rows in ONE
-    micro-batch — the same bound the bucketed operator family already
-    carries per bucket.
-    """
-    chunks = [p for p in pdfs if len(p)]
-    if not chunks:
-        return
-    yield chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+def _integral(t: T.DataType) -> bool:
+    return isinstance(t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
 
 
-def stateful_ofi(
+def _objects(values: Any) -> np.ndarray:
+    """1-D object array of *values* — list-valued cells (array columns)
+    stay one slot each instead of becoming a second numpy axis."""
+    return np.fromiter(values, dtype=object)
+
+
+#: One carried state field: (name, Spark element type, numpy dtype).
+_Field = tuple[str, T.DataType, Any]
+
+
+def _bucketed(
     df: DataFrame,
-    key_col: str = "code",
-    ts_col: str = "ts_us",
-    bid_price: str = "best_bid_price",
-    bid_size: str = "best_bid_size",
-    ask_price: str = "best_ask_price",
-    ask_size: str = "best_ask_size",
-    out: str = "ofi",
+    key_col: str,
+    n_buckets: int,
+    out_schema: T.StructType,
+    fields: Sequence[_Field],
+    step: Callable[[pd.DataFrame, np.ndarray, list], tuple],
 ) -> DataFrame:
-    """Streaming order-flow imbalance: the lag-based OFI of
-    ``operators.ewma.with_ofi`` with the previous best-of-book carried as
-    per-key state across micro-batches (SURVEY §4 item 2 — the reference
-    wanted ``lag`` on a stream, which Structured Streaming rejects).
+    """Group *df* by ``pmod(xxhash64(key), n_buckets)`` and run *step* once
+    per bucket per micro-batch through ``applyInPandasWithState`` (append
+    mode, no timeout). This is the one place that decides how bucket state
+    is laid out: a ``keys`` array of the bucket's keys plus one parallel
+    array per carried field — O(total keys / n_buckets) per group, O(total
+    keys) overall. At 100 TB ``n_buckets`` grows with key cardinality (keep
+    ≤ ~100k keys per bucket) and the state-store partition count with it.
 
-    State = 4 doubles per key. First row ever per key emits NULL.
+    The group's rows arrive as an iterator of Arrow-batch-sized chunks whose
+    boundaries slice shuffle-arrival order, NOT event-time order, so the
+    chunks are concatenated into one frame before *step* sorts it —
+    per-chunk processing with carried state silently mis-orders any group
+    that straddles a chunk boundary (~10k rows; found as a q28 value
+    mismatch at sf0.1). Buffering is bounded by one bucket's rows in one
+    micro-batch.
+
+    ``step(pdf, skeys, cols)`` gets the frame, the carried keys and one
+    array per field, and returns ``(rows, keep, fresh)``: the output frame
+    (or None), the mask of carried keys this batch left untouched, and this
+    batch's keys plus one array per field with their latest values. The
+    next state is the kept carried entries followed by ``fresh``.
     """
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, _dtype(df, key_col)),
-            T.StructField(ts_col, _dtype(df, ts_col)),
-            T.StructField(out, T.DoubleType()),
-        ]
-    )
+    key_t = _dtype(df, key_col)
+    int_key = _integral(key_t)
     state_schema = T.StructType(
         [
-            T.StructField("bp", T.DoubleType()),
-            T.StructField("bs", T.DoubleType()),
-            T.StructField("ap", T.DoubleType()),
-            T.StructField("as_", T.DoubleType()),
+            T.StructField("keys", T.ArrayType(key_t)),
+            *[T.StructField(name, T.ArrayType(t)) for name, t, _ in fields],
         ]
     )
 
     def update(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
+        _bkt: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        prev = tuple(state.get) if state.exists else None
-        # a group's rows can arrive as MULTIPLE Arrow chunks in arbitrary
-        # cross-chunk order (the iterator slices shuffle-arrival order, not
-        # event time) — concat before sorting, or a later chunk's earlier
-        # rows get the wrong carried book (real mismatch found at sf0.1
-        # where ~80-row groups straddle the 10k-row Arrow batch boundary)
-        for pdf in _whole_group(pdfs):
-            n = len(pdf)
-            if n == 0:
-                continue
-            # argsort + gather only the needed columns (no whole-frame sort,
-            # no key-column copy) — same move as stateful_ewma
-            ts = pdf[ts_col].to_numpy()
-            order = np.argsort(ts, kind="stable")
-            ts = ts[order]
-            bp = pdf[bid_price].to_numpy(dtype="float64")[order]
-            bs = pdf[bid_size].to_numpy(dtype="float64")[order]
-            ap = pdf[ask_price].to_numpy(dtype="float64")[order]
-            asz = pdf[ask_size].to_numpy(dtype="float64")[order]
-            # previous-row book: in-batch shift, row 0 seeded from state
-            seed = prev if prev is not None else (np.nan,) * 4
-            pbp = np.concatenate(([seed[0]], bp[:-1]))
-            pbs = np.concatenate(([seed[1]], bs[:-1]))
-            pap = np.concatenate(([seed[2]], ap[:-1]))
-            pas = np.concatenate(([seed[3]], asz[:-1]))
-            bid_c = np.where(bp > pbp, bs, np.where(bp == pbp, bs - pbs, -pbs))
-            ask_c = np.where(ap < pap, asz, np.where(ap == pap, asz - pas, -pas))
-            ofi = bid_c - ask_c
-            if prev is None:
-                ofi[0] = np.nan  # NaN → null through Arrow (no prior book)
-            prev = (float(bp[-1]), float(bs[-1]), float(ap[-1]), float(asz[-1]))
-            yield pd.DataFrame({key_col: np.full(n, k), ts_col: ts, out: ofi})
-        if prev is not None:
-            state.update(prev)
+        chunks = [p for p in pdfs if len(p)]
+        if not chunks:
+            return
+        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+        key_np = pdf[key_col].to_numpy().dtype if int_key else object
+        if state.exists:
+            skeys_l, *cols_l = state.get
+        else:
+            skeys_l, cols_l = [], [[] for _ in fields]
+        skeys = np.asarray(skeys_l, dtype=key_np)
+        cols = [
+            _objects(v) if dt is object else np.asarray(v, dtype=dt)
+            for v, (_, _, dt) in zip(cols_l, fields)
+        ]
+        out, keep, fresh = step(pdf, skeys, cols)
+        state.update(
+            tuple(
+                np.concatenate([carried[keep], new]).tolist()
+                for carried, new in zip([skeys, *cols], fresh)
+            )
+        )
+        if out is not None:
+            yield out
 
-    return df.groupBy(key_col).applyInPandasWithState(
+    bucketed = df.withColumn(
+        "__bkt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
+    )
+    return bucketed.groupBy("__bkt").applyInPandasWithState(
         update,
         outputStructType=out_schema,
         stateStructType=state_schema,
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+
+
+def _carried(
+    skeys: np.ndarray, seg_keys: np.ndarray, values: np.ndarray, missing: Any
+) -> np.ndarray:
+    """Carried ``values`` (last axis parallel to ``skeys``) of each of
+    ``seg_keys``, or ``missing`` for keys with no history."""
+    if not len(skeys):
+        return np.full(values.shape[:-1] + (len(seg_keys),), missing, values.dtype)
+    sidx = np.argsort(skeys)
+    pos_c = np.clip(np.searchsorted(skeys[sidx], seg_keys), 0, len(skeys) - 1)
+    hit = skeys[sidx][pos_c] == seg_keys
+    return np.where(hit, values[..., sidx[pos_c]], missing)
+
+
+def _segments(sk: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Start and end row of each key's run in the key-sorted ``sk``."""
+    seg_starts = np.concatenate(
+        [[0], np.nonzero(sk[1:] != sk[:-1])[0] + 1]
+    ).astype(np.int64)
+    return seg_starts, np.concatenate([seg_starts[1:], [len(sk)]]) - 1
 
 
 def stateful_ofi_bucketed(
@@ -155,51 +176,29 @@ def stateful_ofi_bucketed(
     out: str = "ofi",
     n_buckets: int = 32,
 ) -> DataFrame:
-    """:func:`stateful_ofi` vectorized ACROSS keys (the
-    :func:`stateful_ewma_bucketed` design): grouping key =
-    ``hash(key) % n_buckets``; within each bucket the previous-row book is a
-    single within-segment shift over the key-sorted frame (segment starts
-    seeded from the carried per-key book, or NaN for first-ever rows), so
-    the OFI recurrence for every key in the bucket is a handful of numpy
-    passes. State = per-bucket parallel arrays (keys, bp, bs, ap, as) —
-    O(total keys) overall like the per-key form; Python update calls per
-    micro-batch drop to O(buckets). Bit-for-bit equality-tested.
+    """Streaming order-flow imbalance: the lag-based OFI of
+    ``operators.ewma.with_ofi`` with the previous best-of-book carried as
+    per-key state across micro-batches (SURVEY §4 item 2 — the reference
+    wanted ``lag`` on a stream, which Structured Streaming rejects).
+
+    The first row ever seen per key emits NULL (no prior book). Requires
+    per-key in-order arrival across micro-batches. Within each bucket the
+    previous-row book is one within-segment shift over the (key, ts)-sorted
+    frame, segment starts seeded from the carried book (NaN for first-ever
+    rows). State = the previous book, 4 doubles per key.
     """
-    key_t = _dtype(df, key_col)
     out_schema = T.StructType(
         [
-            T.StructField(key_col, key_t),
+            T.StructField(key_col, _dtype(df, key_col)),
             T.StructField(ts_col, _dtype(df, ts_col)),
             T.StructField(out, T.DoubleType()),
         ]
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("keys", T.ArrayType(key_t)),
-            T.StructField("bp", T.ArrayType(T.DoubleType())),
-            T.StructField("bs", T.ArrayType(T.DoubleType())),
-            T.StructField("ap", T.ArrayType(T.DoubleType())),
-            T.StructField("as_", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    int_key = _integral(key_t)
+    fields = [(f, T.DoubleType(), "float64") for f in ("bp", "bs", "ap", "as_")]
 
-    def update(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            return
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    def step(pdf: pd.DataFrame, skeys: np.ndarray, cols: list):
         k = pdf[key_col].to_numpy()
         ts = pdf[ts_col].to_numpy()
-        if state.exists:
-            skeys_l, sbp_l, sbs_l, sap_l, sas_l = state.get
-            skeys = np.asarray(skeys_l, dtype=k.dtype if int_key else object)
-            sbook = np.asarray([sbp_l, sbs_l, sap_l, sas_l], dtype="float64")
-        else:
-            skeys = np.empty(0, dtype=k.dtype if int_key else object)
-            sbook = np.empty((4, 0), dtype="float64")
         order = np.lexsort((ts, k))
         sk, sts = k[order], ts[order]
         book = np.stack(
@@ -208,24 +207,13 @@ def stateful_ofi_bucketed(
                 for c in (bid_price, bid_size, ask_price, ask_size)
             ]
         )
-        seg_starts = np.concatenate(
-            [[0], np.nonzero(sk[1:] != sk[:-1])[0] + 1]
-        ).astype(np.int64)
+        seg_starts, seg_ends = _segments(sk)
         seg_keys = sk[seg_starts]
         # previous-row book: one shift, then segment starts re-seeded from
-        # the carried state (NaN where the key has no history — first row
-        # ever emits NULL, matching the per-key form)
+        # the carried state (NaN where the key has no history)
         prev = np.empty_like(book)
         prev[:, 1:] = book[:, :-1]
-        if len(skeys):
-            sidx = np.argsort(skeys)
-            pos = np.searchsorted(skeys[sidx], seg_keys)
-            pos_c = np.clip(pos, 0, len(skeys) - 1)
-            hit = skeys[sidx][pos_c] == seg_keys
-            seeds = np.where(hit, sbook[:, sidx][:, pos_c], np.nan)
-        else:
-            seeds = np.full((4, len(seg_keys)), np.nan)
-        prev[:, seg_starts] = seeds
+        prev[:, seg_starts] = _carried(skeys, seg_keys, np.stack(cols), np.nan)
         bp, bs, ap, asz = book
         pbp, pbs, pap, pas = prev
         bid_c = np.where(bp > pbp, bs, np.where(bp == pbp, bs - pbs, -pbs))
@@ -234,55 +222,37 @@ def stateful_ofi_bucketed(
         # NaN comparisons are all False → bid_c/ask_c pick the else branch;
         # force first-ever rows to NaN explicitly (their prev book is NaN)
         ofi[np.isnan(pbp)] = np.nan
-        seg_ends = np.concatenate([seg_starts[1:], [len(sk)]]) - 1
-        in_batch = np.isin(skeys, seg_keys)
-        merged_k = np.concatenate([skeys[~in_batch], seg_keys])
-        merged_book = np.concatenate(
-            [sbook[:, ~in_batch], book[:, seg_ends]], axis=1
+        return (
+            pd.DataFrame({key_col: sk, ts_col: sts, out: ofi}),
+            ~np.isin(skeys, seg_keys),
+            (seg_keys, *book[:, seg_ends]),
         )
-        state.update(
-            (
-                merged_k.tolist(),
-                merged_book[0].tolist(),
-                merged_book[1].tolist(),
-                merged_book[2].tolist(),
-                merged_book[3].tolist(),
-            )
-        )
-        yield pd.DataFrame({key_col: sk, ts_col: sts, out: ofi})
 
-    bucketed = df.withColumn(
-        "__bkt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-    )
-    return bucketed.groupBy("__bkt").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _bucketed(df, key_col, n_buckets, out_schema, fields, step)
 
 
-def stateful_dollar_bars(
+def stateful_dollar_bars_bucketed(
     df: DataFrame,
     key_col: str = "code",
     ts_col: str = "ts_us",
     notional_cents_col: str = "cents",
     bar_cents: int = 300_000_000_00,
     passthrough_cols: Sequence[str] = (),
+    n_buckets: int = 32,
 ) -> DataFrame:
-    """Streaming dollar bars: running notional cumsum per key carried as
-    state (SURVEY §7.2 — inherently sequential per key, the stateful-op
+    """Streaming dollar bars: the running notional cumsum per key carried
+    as state (SURVEY §7.2 — inherently sequential per key, the stateful-op
     route; the reference computes bars only in batch).
 
     Emits one row per input event with its cumulative cents and bar id —
     identical assignment to ``operators.bars.dollar_bars`` on the same data
     (asserted in tests). ``passthrough_cols`` (e.g. price, sequential id)
     ride along unchanged so bar-level OHLCV is a downstream groupBy on
-    (key, bar_num) with no join back to the source. State = one bigint per
-    key. Requires per-key in-order arrival across micro-batches (Kafka keyed
-    by instrument provides it). Exact under int64: cumulative cents stay
-    integer end to end.
+    (key, bar_num) with no join back to the source. Requires per-key
+    in-order arrival across micro-batches. Exact under int64: cumulative
+    cents stay integer end to end. Within each bucket the per-key cumsum is
+    one Cython ``groupby(...).cumsum()`` over the (key, ts)-sorted frame
+    plus each key's carried offset. State = one bigint per key.
     """
     passthrough_cols = [c for c in passthrough_cols]
     out_schema = T.StructType(
@@ -295,139 +265,33 @@ def stateful_dollar_bars(
             T.StructField("bar_num", T.LongType()),
         ]
     )
-    state_schema = T.StructType([T.StructField("cum", T.LongType())])
+    fields = [("cums", T.LongType(), "int64")]
 
-    def update(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        cum = state.get[0] if state.exists else 0
-        for pdf in _whole_group(pdfs):  # cross-chunk order is NOT ts order
-            n = len(pdf)
-            if n == 0:
-                continue
-            ts = pdf[ts_col].to_numpy()
-            order = np.argsort(ts, kind="stable")
-            ts = ts[order]
-            cents = pdf[notional_cents_col].to_numpy(dtype="int64")[order]
-            cums = np.cumsum(cents) + cum
-            cum = int(cums[-1])
-            out = {
-                key_col: np.full(n, k),
-                ts_col: ts,
-                notional_cents_col: cents,
-            }
-            for c in passthrough_cols:
-                out[c] = pdf[c].to_numpy()[order]
-            out["cum_cents"] = cums
-            out["bar_num"] = (cums - 1) // bar_cents
-            yield pd.DataFrame(out)
-        state.update((int(cum),))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_dollar_bars_bucketed(
-    df: DataFrame,
-    key_col: str = "code",
-    ts_col: str = "ts_us",
-    notional_cents_col: str = "cents",
-    bar_cents: int = 300_000_000_00,
-    passthrough_cols: Sequence[str] = (),
-    n_buckets: int = 32,
-) -> DataFrame:
-    """:func:`stateful_dollar_bars` vectorized ACROSS keys (the
-    :func:`stateful_ewma_bucketed` design): grouping key =
-    ``hash(key) % n_buckets``, per-key running cumsum computed for every key
-    in the bucket in one Cython ``groupby(...).cumsum()`` pass over the
-    key-sorted frame, carried offsets applied per key segment, state = one
-    (keys, cums) array pair per bucket. Python update calls per micro-batch
-    drop from O(distinct keys) to O(buckets); output and state trajectory
-    are identical to the per-key form (equality-tested bit-for-bit).
-    """
-    passthrough_cols = [c for c in passthrough_cols]
-    key_t = _dtype(df, key_col)
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, key_t),
-            T.StructField(ts_col, _dtype(df, ts_col)),
-            T.StructField(notional_cents_col, T.LongType()),
-            *[T.StructField(c, _dtype(df, c)) for c in passthrough_cols],
-            T.StructField("cum_cents", T.LongType()),
-            T.StructField("bar_num", T.LongType()),
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("keys", T.ArrayType(key_t)),
-            T.StructField("cums", T.ArrayType(T.LongType())),
-        ]
-    )
-    int_key = _integral(key_t)
-
-    def update(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            return
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    def step(pdf: pd.DataFrame, skeys: np.ndarray, cols: list):
+        (scums,) = cols
         k = pdf[key_col].to_numpy()
         ts = pdf[ts_col].to_numpy()
-        if state.exists:
-            skeys_l, scums_l = state.get
-            skeys = np.asarray(skeys_l, dtype=k.dtype if int_key else object)
-            scums = np.asarray(scums_l, dtype="int64")
-        else:
-            skeys = np.empty(0, dtype=k.dtype if int_key else object)
-            scums = np.empty(0, dtype="int64")
         order = np.lexsort((ts, k))
         sk, sts = k[order], ts[order]
         scents = pdf[notional_cents_col].to_numpy(dtype="int64")[order]
         # per-key cumsum in one pass, then add each key's carried offset
         gc = pd.Series(scents).groupby(pd.Series(sk), sort=False).cumsum().to_numpy()
-        seg_starts = np.concatenate(
-            [[0], np.nonzero(sk[1:] != sk[:-1])[0] + 1]
-        ).astype(np.int64)
+        seg_starts, seg_ends = _segments(sk)
         seg_keys = sk[seg_starts]
-        if len(skeys):
-            sidx = np.argsort(skeys)
-            pos = np.searchsorted(skeys[sidx], seg_keys)
-            pos_c = np.clip(pos, 0, len(skeys) - 1)
-            hit = skeys[sidx][pos_c] == seg_keys
-            seg_off = np.where(hit, scums[sidx][pos_c], 0).astype("int64")
-        else:
-            seg_off = np.zeros(len(seg_keys), dtype="int64")
-        reps = np.diff(np.concatenate([seg_starts, [len(sk)]]))
-        cums = gc + np.repeat(seg_off, reps)
-        seg_ends = np.concatenate([seg_starts[1:], [len(sk)]]) - 1
-        in_batch = np.isin(skeys, seg_keys)
-        merged_k = np.concatenate([skeys[~in_batch], seg_keys])
-        merged_c = np.concatenate([scums[~in_batch], cums[seg_ends]])
-        state.update((merged_k.tolist(), merged_c.tolist()))
+        seg_off = _carried(skeys, seg_keys, scums, 0)
+        cums = gc + np.repeat(seg_off, seg_ends - seg_starts + 1)
         out = {key_col: sk, ts_col: sts, notional_cents_col: scents}
         for c in passthrough_cols:
             out[c] = pdf[c].to_numpy()[order]
         out["cum_cents"] = cums
         out["bar_num"] = (cums - 1) // bar_cents
-        yield pd.DataFrame(out)
+        return (
+            pd.DataFrame(out),
+            ~np.isin(skeys, seg_keys),
+            (seg_keys, cums[seg_ends]),
+        )
 
-    bucketed = df.withColumn(
-        "__bkt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-    )
-    return bucketed.groupBy("__bkt").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _bucketed(df, key_col, n_buckets, out_schema, fields, step)
 
 
 def _pd_dtype(t: T.DataType) -> str:
@@ -446,10 +310,6 @@ def _pd_dtype(t: T.DataType) -> str:
     return "object"
 
 
-def _integral(t: T.DataType) -> bool:
-    return isinstance(t, (T.ByteType, T.ShortType, T.IntegerType, T.LongType))
-
-
 def _native_scalar(v: Any) -> Any:
     """Pandas/numpy cell → the exact Python value ``GroupState.update``
     expects (None for missing, int/float/str/bool/list/... otherwise;
@@ -465,7 +325,7 @@ def _native_scalar(v: Any) -> Any:
     return v
 
 
-def stateful_asof_enrich(
+def stateful_asof_enrich_bucketed(
     trades: DataFrame,
     snapshots: DataFrame,
     key_col: str = "code",
@@ -473,6 +333,7 @@ def stateful_asof_enrich(
     tolerance: int | None = None,
     tiebreak: Sequence[str] = (),
     suffix: str = "_r",
+    n_buckets: int = 32,
 ) -> DataFrame:
     """Streaming as-of enrichment — the streaming twin of
     ``operators.asof.asof_join`` (the §3.3 flagship join): every trade is
@@ -480,27 +341,33 @@ def stateful_asof_enrich(
     micro-batch boundaries.
 
     The batch engine buckets time and equi-joins; a stream instead carries
-    the **latest snapshot per key as state** (one row per key — O(keys)
-    state, any stream volume). The two streams are tag-unioned into one
-    keyed stream so a single ``applyInPandasWithState`` sees both sides in
-    ts order; within a micro-batch the merge is a vectorized POSITIONAL
-    forward-fill (cummax of snapshot indices + gather), so every payload
-    column is filled in the dtype Arrow delivered — int64 stays exact past
-    2^53 (integral columns ride zero-filled with a boolean validity
-    companion through the union, since Arrow hands long-with-null to pandas
-    as lossy float64), floats keep NaN≡null, and strings/decimals/arrays
-    forward-fill as objects. Snapshots sort before trades at equal ts, so
-    an equal-ts snapshot is visible to its trade — the batch join's ``<=``.
+    the **latest snapshot per key as state** (O(keys) state, any stream
+    volume). The two streams are tag-unioned into one keyed stream so one
+    update sees both sides in ts order. Snapshots sort before trades at
+    equal ts, so an equal-ts snapshot is visible to its trade — the batch
+    join's ``<=``. ``tolerance`` (same unit as ``ts_col``) nulls out
+    enrichments older than the band, matching the batch join's lower bound;
+    state is still advanced. Trades before any snapshot of their key emit
+    NULLs (left-outer). ``tiebreak`` columns (e.g. a sequence id) make
+    equal-ts snapshot order deterministic; they must exist on both streams
+    (use a constant on the side that lacks them). Requires per-key in-order
+    arrival across micro-batches.
 
-    ``tolerance`` (same unit as ``ts_col``) nulls out enrichments older
-    than the band, matching the batch join's lower bound; state is still
-    advanced. Trades before any snapshot emit NULLs (left-outer).
+    Integral payload columns ride the union zero-filled beside a boolean
+    ``__nn_`` validity companion: the union gives every payload column
+    NULLs on the other side's rows, and Arrow hands long-with-null to
+    pandas as float64 — silently lossy above 2^53 (nanosecond epochs, large
+    sequential ids). The companion tells a genuine NULL from the union
+    fill, and the same pair is what the state carries. Floats keep NaN≡null
+    and strings/decimals/arrays travel as objects, all in the dtype Arrow
+    delivered.
 
-    Requires per-key in-order arrival across micro-batches (Kafka keyed by
-    instrument provides it; same contract as every operator in this module).
-    ``tiebreak`` columns (e.g. a sequence id) make equal-ts snapshot order
-    deterministic; they must exist on both streams (use a constant on the
-    side that lacks them).
+    Within each bucket the carried per-key snapshot is PREPENDED as a
+    synthetic snapshot row, then one positional forward-fill (a global
+    ``maximum.accumulate`` over snapshot positions, floored at each key's
+    segment start — a fill from an earlier KEY is invalid) gives every
+    trade of every key its latest at-or-before snapshot; seeds, in-batch
+    snapshots and the tolerance band share the one vectorized path.
     """
     t_payload = [c for c in trades.columns if c not in (key_col, ts_col)]
     s_payload = [c for c in snapshots.columns if c not in (key_col, ts_col)]
@@ -515,15 +382,6 @@ def stateful_asof_enrich(
             f"(got {_dtype(trades, ts_col)} / {_dtype(snapshots, ts_col)}); "
             "convert timestamps to epoch micros first"
         )
-
-    # Integer columns need special transport: the tag-union gives every
-    # payload column NULLs on the other side's rows, and Arrow delivers
-    # long-with-null to pandas as float64 — silently lossy above 2^53
-    # (nanosecond epochs, large sequential ids). So integral payloads ride
-    # zero-filled (keeping the Arrow column int64-exact) next to a boolean
-    # `__nn_` validity companion that distinguishes a genuine NULL from the
-    # union fill. Floats (NaN≡null) and everything object-typed (strings,
-    # decimals, arrays) already round-trip in their native dtype.
     int_t = [c for c in t_payload if _integral(_dtype(trades, c))]
     int_s = [c for c in s_payload if _integral(_dtype(snapshots, c))]
 
@@ -568,243 +426,27 @@ def stateful_asof_enrich(
             *[T.StructField(c + suffix, _dtype(snapshots, c)) for c in s_payload],
         ]
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("snap_ts", _dtype(trades, ts_col)),
-            *[T.StructField(c, _dtype(snapshots, c)) for c in s_payload],
-        ]
-    )
-    sort_cols = [ts_col, "__is_trade", *tiebreak]
-
-    def update(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        seed = tuple(state.get) if state.exists else None
-        for pdf in _whole_group(pdfs):  # cross-chunk order is NOT ts order
-            if len(pdf) == 0:
-                continue
-            pdf = pdf.sort_values(sort_cols, kind="stable").reset_index(drop=True)
-            n = len(pdf)
-            is_snap = (pdf["__is_trade"] == 0).to_numpy()
-            # positional forward-fill: pos[i] = index of the latest snapshot
-            # row at-or-before row i (snapshots sort before trades at equal
-            # ts), -1 if none in this batch. Gathering by position keeps
-            # every column in the exact dtype Arrow delivered — no float64
-            # round-trip for int64 values, native object ffill for strings.
-            pos = np.maximum.accumulate(np.where(is_snap, np.arange(n), -1))
-            tr = ~is_snap
-            if tr.any():
-                tpos = pos[tr]
-                clip = np.clip(tpos, 0, None)
-                have = tpos >= 0  # snapshot seen within this batch
-                ts_np = pdf[ts_col].to_numpy()
-                trade_ts = ts_np[tr]
-                seed_ts = seed[0] if seed is not None else None
-                if seed_ts is not None:
-                    snap_ts = np.where(have, ts_np[clip], seed_ts)
-                    avail = np.full(len(tpos), True)
-                else:
-                    snap_ts = ts_np[clip]
-                    avail = have
-                if tolerance is not None:
-                    stale = avail & ((trade_ts - snap_ts) > tolerance)
-                else:
-                    stale = np.zeros(len(tpos), dtype=bool)
-                drop = ~avail | stale  # null the enrichment, keep the trade
-                out: dict[str, Any] = {
-                    key_col: [k] * len(tpos),
-                    ts_col: trade_ts,
-                }
-                for c in t_payload:
-                    col = pdf[c].to_numpy()[tr]
-                    if c in int_t:  # restore genuine NULLs over the 0-fill
-                        arr = pd.array(col, dtype=trade_pd[c])
-                        arr[~pdf[f"__nn_{c}"].to_numpy()[tr]] = pd.NA
-                        out[c] = arr
-                    else:
-                        out[c] = col
-                sts = pd.array(snap_ts, dtype=ts_pd)
-                sts[drop] = pd.NA
-                out[ts_col + suffix] = sts
-                seed_elems = (
-                    dict(zip(s_payload, seed[1:])) if seed is not None else {}
-                )
-                for c in s_payload:
-                    col = pdf[c].to_numpy()[clip]
-                    sv = seed_elems.get(c)
-                    if c in int_s:
-                        valid = np.where(
-                            have, pdf[f"__nn_{c}"].to_numpy()[clip], False
-                        )
-                        vals = col
-                        if sv is not None and not have.all():
-                            vals = np.where(have, col, sv)
-                            valid = valid | ~have
-                        arr = pd.array(vals, dtype=snap_pd[c])
-                        arr[~valid | drop] = pd.NA
-                        out[c + suffix] = arr
-                    else:
-                        vals = col.copy()
-                        na = np.nan if vals.dtype.kind == "f" else None
-                        if not have.all():
-                            fillv = na if sv is None else sv
-                            if isinstance(fillv, (list, tuple, np.ndarray)):
-                                # sequence-valued seed (array column): a
-                                # masked bulk assign would numpy-broadcast
-                                # the elements — fill slots one by one
-                                for j in np.where(~have)[0]:
-                                    vals[j] = fillv
-                            else:
-                                vals[~have] = fillv
-                        vals[drop] = na
-                        out[c + suffix] = vals
-                yield pd.DataFrame(out)
-            if is_snap.any():  # advance the carry to the batch's last snapshot
-                row = pdf.iloc[int(pos[-1])]
-                vals = [int(row[ts_col])]
-                for c in s_payload:
-                    if c in int_s:
-                        vals.append(
-                            int(row[c]) if bool(row[f"__nn_{c}"]) else None
-                        )
-                    else:
-                        vals.append(_native_scalar(row[c]))
-                seed = tuple(vals)
-        if seed is not None:
-            state.update(seed)
-
-    return u.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_asof_enrich_bucketed(
-    trades: DataFrame,
-    snapshots: DataFrame,
-    key_col: str = "code",
-    ts_col: str = "ts_us",
-    tolerance: int | None = None,
-    tiebreak: Sequence[str] = (),
-    suffix: str = "_r",
-    n_buckets: int = 32,
-) -> DataFrame:
-    """:func:`stateful_asof_enrich` vectorized ACROSS keys (the
-    :func:`stateful_ewma_bucketed` design): grouping key =
-    ``hash(key) % n_buckets``; each bucket's micro-batch is processed as one
-    key-sorted frame with the carried per-key snapshot PREPENDED as a
-    synthetic snapshot row, so the positional forward-fill needs no
-    per-column seed branches — seeds, in-batch snapshots, trades, and the
-    tolerance band all flow through the same vectorized path. A global
-    ``maximum.accumulate`` over snapshot positions plus a
-    per-row segment-start floor (a fill from an earlier KEY's segment is
-    invalid) gives the latest at-or-before snapshot per trade for every key
-    in the bucket at once.
-
-    State = per-bucket parallel arrays: keys, snapshot ts, one array per
-    snapshot payload column (integral columns ride zero-filled beside a
-    boolean validity array — same int64-exactness transport as the row
-    stream itself). O(total keys) state overall; Python update calls per
-    micro-batch drop from O(distinct keys) to O(buckets). Output is
-    equality-tested against the per-key form (values, NULL patterns, the
-    across-batch carry, and the tolerance band).
-    """
-    t_payload = [c for c in trades.columns if c not in (key_col, ts_col)]
-    s_payload = [c for c in snapshots.columns if c not in (key_col, ts_col)]
-    clash = set(t_payload) & set(s_payload)
-    if clash:
-        raise ValueError(f"payload columns must be disjoint, overlap: {sorted(clash)}")
-    if not _integral(_dtype(trades, ts_col)) or not _integral(
-        _dtype(snapshots, ts_col)
-    ):
-        raise TypeError(
-            f"{ts_col} must be an integer epoch column on both streams "
-            f"(got {_dtype(trades, ts_col)} / {_dtype(snapshots, ts_col)}); "
-            "convert timestamps to epoch micros first"
-        )
-    int_t = [c for c in t_payload if _integral(_dtype(trades, c))]
-    int_s = [c for c in s_payload if _integral(_dtype(snapshots, c))]
-
-    def _own(df: DataFrame, c: str, integral: bool):
-        if integral:
-            return F.coalesce(F.col(c), F.lit(0).cast(_dtype(df, c))).alias(c)
-        return F.col(c)
-
-    def _fill(df: DataFrame, c: str, integral: bool):
-        base = F.lit(0) if integral else F.lit(None)
-        return base.cast(_dtype(df, c)).alias(c)
-
-    t_tagged = trades.select(
-        key_col,
-        ts_col,
-        F.lit(1).alias("__is_trade"),
-        *[_own(trades, c, c in int_t) for c in t_payload],
-        *[F.col(c).isNotNull().alias(f"__nn_{c}") for c in int_t],
-        *[_fill(snapshots, c, c in int_s) for c in s_payload],
-        *[F.lit(False).alias(f"__nn_{c}") for c in int_s],
-    )
-    s_tagged = snapshots.select(
-        key_col,
-        ts_col,
-        F.lit(0).alias("__is_trade"),
-        *[_fill(trades, c, c in int_t) for c in t_payload],
-        *[F.lit(False).alias(f"__nn_{c}") for c in int_t],
-        *[_own(snapshots, c, c in int_s) for c in s_payload],
-        *[F.col(c).isNotNull().alias(f"__nn_{c}") for c in int_s],
-    )
-    u = t_tagged.unionByName(s_tagged)
-
-    key_t = _dtype(trades, key_col)
-    int_key = _integral(key_t)
-    ts_pd = _pd_dtype(_dtype(trades, ts_col))
-    snap_pd = {c: _pd_dtype(_dtype(snapshots, c)) for c in s_payload}
-    trade_pd = {c: _pd_dtype(_dtype(trades, c)) for c in t_payload}
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, key_t),
-            T.StructField(ts_col, _dtype(trades, ts_col)),
-            *[T.StructField(c, _dtype(trades, c)) for c in t_payload],
-            T.StructField(ts_col + suffix, _dtype(trades, ts_col)),
-            *[T.StructField(c + suffix, _dtype(snapshots, c)) for c in s_payload],
-        ]
-    )
-    state_schema = T.StructType(
-        [
-            T.StructField("keys", T.ArrayType(key_t)),
-            T.StructField("snap_ts", T.ArrayType(_dtype(trades, ts_col))),
-            *[T.StructField(c, T.ArrayType(_dtype(snapshots, c))) for c in s_payload],
-            *[T.StructField(f"__nn_{c}", T.ArrayType(T.BooleanType())) for c in int_s],
-        ]
-    )
+    fields = [
+        ("snap_ts", _dtype(trades, ts_col), "int64"),
+        *[
+            (c, _dtype(snapshots, c), "int64" if c in int_s else object)
+            for c in s_payload
+        ],
+        *[(f"__nn_{c}", T.BooleanType(), "bool") for c in int_s],
+    ]
     sort_cols = [key_col, ts_col, "__seed", "__is_trade", *tiebreak]
 
-    def update(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            return
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    def step(pdf: pd.DataFrame, skeys: np.ndarray, cols: list):
+        s_ts = cols[0]
+        s_cols = dict(zip(s_payload, cols[1 : 1 + len(s_payload)]))
+        s_nn = dict(zip(int_s, cols[1 + len(s_payload) :]))
         pdf["__seed"] = np.int8(1)
-        if state.exists:
-            st = list(state.get)
-            skeys = np.asarray(st[0], dtype=pdf[key_col].to_numpy().dtype if int_key else object)
-            s_ts = st[1]
-            s_cols = dict(zip(s_payload, st[2 : 2 + len(s_payload)]))
-            s_nn = dict(zip(int_s, st[2 + len(s_payload) :]))
-        else:
-            skeys = np.empty(0, dtype=object)
-            s_ts, s_cols, s_nn = [], {}, {}
         present = np.isin(skeys, pdf[key_col].to_numpy())
         if present.any():
             sel = np.nonzero(present)[0]
             seed = {
-                key_col: [skeys[i] for i in sel],
-                ts_col: pd.array([s_ts[i] for i in sel], dtype=ts_pd),
+                key_col: skeys[sel],
+                ts_col: pd.array(s_ts[sel], dtype=ts_pd),
                 "__is_trade": np.int8(0),
                 "__seed": np.int8(0),
             }
@@ -817,27 +459,23 @@ def stateful_asof_enrich_bucketed(
             for c in int_t:
                 seed[f"__nn_{c}"] = False
             for c in s_payload:
-                vals = [s_cols[c][i] for i in sel]
                 if c in int_s:
-                    seed[c] = pd.array(
-                        [0 if v is None else v for v in vals], dtype=snap_pd[c]
-                    )
-                    seed[f"__nn_{c}"] = [bool(s_nn[c][i]) for i in sel]
+                    seed[c] = pd.array(s_cols[c][sel], dtype=snap_pd[c])
+                    seed[f"__nn_{c}"] = s_nn[c][sel]
                 else:
-                    seed[c] = pd.Series(vals, dtype=pdf[c].dtype)
+                    seed[c] = pd.Series(s_cols[c][sel], dtype=pdf[c].dtype)
             pdf = pd.concat([pd.DataFrame(seed), pdf], ignore_index=True)
         pdf = pdf.sort_values(sort_cols, kind="stable").reset_index(drop=True)
         n = len(pdf)
         keys_np = pdf[key_col].to_numpy()
-        boundaries = np.nonzero(keys_np[1:] != keys_np[:-1])[0] + 1
-        seg_starts = np.concatenate([[0], boundaries]).astype(np.int64)
-        reps = np.diff(np.concatenate([seg_starts, [n]]))
-        seg_floor = np.repeat(seg_starts, reps)
+        seg_starts, seg_ends = _segments(keys_np)
+        seg_floor = np.repeat(seg_starts, seg_ends - seg_starts + 1)
         is_snap = (pdf["__is_trade"] == 0).to_numpy()
         pos = np.maximum.accumulate(np.where(is_snap, np.arange(n), -1))
         valid = pos >= seg_floor  # a fill from an earlier key's segment is not
-        tr = (~is_snap).to_numpy() if hasattr(~is_snap, "to_numpy") else ~is_snap
+        tr = ~is_snap
         ts_np = pdf[ts_col].to_numpy()
+        out = None
         if tr.any():
             tpos = pos[tr]
             have = valid[tr]
@@ -848,28 +486,28 @@ def stateful_asof_enrich_bucketed(
                 stale = have & ((trade_ts - snap_ts) > tolerance)
             else:
                 stale = np.zeros(len(tpos), dtype=bool)
-            drop = ~have | stale
-            out: dict[str, Any] = {
+            drop = ~have | stale  # null the enrichment, keep the trade
+            rows: dict[str, Any] = {
                 key_col: keys_np[tr],
                 ts_col: trade_ts,
             }
             for c in t_payload:
                 col = pdf[c].to_numpy()[tr]
-                if c in int_t:
+                if c in int_t:  # restore genuine NULLs over the 0-fill
                     arr = pd.array(col, dtype=trade_pd[c])
                     arr[~pdf[f"__nn_{c}"].to_numpy()[tr]] = pd.NA
-                    out[c] = arr
+                    rows[c] = arr
                 else:
-                    out[c] = col
+                    rows[c] = col
             sts_arr = pd.array(snap_ts, dtype=ts_pd)
             sts_arr[drop] = pd.NA
-            out[ts_col + suffix] = sts_arr
+            rows[ts_col + suffix] = sts_arr
             for c in s_payload:
                 col = pdf[c].to_numpy()[clip]
                 if c in int_s:
                     arr = pd.array(col, dtype=snap_pd[c])
                     arr[~pdf[f"__nn_{c}"].to_numpy()[clip] | drop] = pd.NA
-                    out[c + suffix] = arr
+                    rows[c + suffix] = arr
                 else:
                     vals = col.copy()
                     na = np.nan if vals.dtype.kind == "f" else None
@@ -877,130 +515,28 @@ def stateful_asof_enrich_bucketed(
                         if vals.dtype.kind == "f":
                             vals[drop] = na
                         else:
+                            # one slot at a time: a masked bulk assign
+                            # would numpy-broadcast list-valued cells
                             for j in np.where(drop)[0]:
                                 vals[j] = na
-                    out[c + suffix] = vals
-            yield pd.DataFrame(out)
+                    rows[c + suffix] = vals
+            out = pd.DataFrame(rows)
         # new state: the latest snapshot per key (seed rows count — a key
         # whose batch had no new snapshot keeps its carried one)
-        seg_ends = np.concatenate([seg_starts[1:], [n]]) - 1
-        last_pos = pos[seg_ends]
         has_snap = valid[seg_ends]
-        upd_rows = last_pos[has_snap]
-        upd_keys = keys_np[seg_starts][has_snap]
+        upd_rows = pos[seg_ends][has_snap]
         batch_keys = keys_np[seg_starts]
-        keep = ~np.isin(skeys, batch_keys)
-        new_keys = [_native_scalar(v) for v in skeys[keep]] + [
-            _native_scalar(v) for v in upd_keys
-        ]
-        new_ts = [s_ts[i] for i in np.nonzero(keep)[0]] + [
-            int(v) for v in ts_np[upd_rows]
-        ]
-        new_cols, new_nn = {}, {}
+        fresh = [batch_keys[has_snap], ts_np[upd_rows]]
         for c in s_payload:
-            kept = [s_cols[c][i] for i in np.nonzero(keep)[0]] if len(skeys) else []
             col = pdf[c].to_numpy()
             if c in int_s:
-                nn_np = pdf[f"__nn_{c}"].to_numpy()
-                new_cols[c] = kept + [int(col[r]) for r in upd_rows]
-                new_nn[c] = (
-                    [bool(s_nn[c][i]) for i in np.nonzero(keep)[0]]
-                    if len(skeys)
-                    else []
-                ) + [bool(nn_np[r]) for r in upd_rows]
+                fresh.append(col[upd_rows])
             else:
-                new_cols[c] = kept + [_native_scalar(col[r]) for r in upd_rows]
-        state.update(
-            (
-                new_keys,
-                new_ts,
-                *[new_cols[c] for c in s_payload],
-                *[new_nn[c] for c in int_s],
-            )
-        )
+                fresh.append(_objects(_native_scalar(col[r]) for r in upd_rows))
+        fresh += [pdf[f"__nn_{c}"].to_numpy()[upd_rows] for c in int_s]
+        return out, ~np.isin(skeys, batch_keys), fresh
 
-    bucketed = u.withColumn(
-        "__bkt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-    )
-    return bucketed.groupBy("__bkt").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def stateful_ewma(
-    df: DataFrame,
-    key_col: str = "code",
-    ts_col: str = "ts_us",
-    value_col: str = "value",
-    alpha: float = 0.8,
-    out: str = "ewma",
-) -> DataFrame:
-    """Running EWMA per key on a streaming DataFrame.
-
-    Emits every input row with its EWMA (recurrence
-    ``y_t = alpha*x_t + (1-alpha)*y_{t-1}`` seeded by the first value),
-    continuing across micro-batches via one double of state per key.
-
-    Vectorized as a state-seeded ``Series.ewm(adjust=False)``: prepending the
-    carried value as a synthetic first observation reproduces the recurrence
-    bit-for-bit (pandas' adjust=False loop computes the identical
-    ``(1-α)·y + α·x`` update in C).
-    """
-    out_schema = T.StructType(
-        [
-            T.StructField(key_col, _dtype(df, key_col)),
-            T.StructField(ts_col, _dtype(df, ts_col)),
-            T.StructField(value_col, T.DoubleType()),
-            T.StructField(out, T.DoubleType()),
-        ]
-    )
-    state_schema = T.StructType([T.StructField("last_ewma", T.DoubleType())])
-
-    def update(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        (k,) = key
-        last = state.get[0] if state.exists else None
-        for pdf in _whole_group(pdfs):  # cross-chunk order is NOT ts order
-            n = len(pdf)
-            if n == 0:
-                continue
-            # argsort the two needed columns instead of sort_values on the
-            # whole frame — skips copying/reordering the unused key column
-            ts = pdf[ts_col].to_numpy()
-            values = pdf[value_col].to_numpy(dtype="float64")
-            order = np.argsort(ts, kind="stable")
-            ts = ts[order]
-            values = values[order]
-            if last is None:
-                series = pd.Series(values)
-                ewmas = series.ewm(alpha=alpha, adjust=False).mean().to_numpy()
-            else:
-                seeded = pd.Series(np.concatenate(([last], values)))
-                ewmas = seeded.ewm(alpha=alpha, adjust=False).mean().to_numpy()[1:]
-            last = float(ewmas[-1])
-            yield pd.DataFrame(
-                {
-                    key_col: np.full(n, k),
-                    ts_col: ts,
-                    value_col: values,
-                    out: ewmas,
-                }
-            )
-        if last is not None:
-            state.update((last,))
-
-    return df.groupBy(key_col).applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _bucketed(u, key_col, n_buckets, out_schema, fields, step)
 
 
 def stateful_ewma_bucketed(
@@ -1012,72 +548,38 @@ def stateful_ewma_bucketed(
     out: str = "ewma",
     n_buckets: int = 64,
 ) -> DataFrame:
-    """:func:`stateful_ewma` vectorized ACROSS keys, not just within them.
+    """Running EWMA per key on a streaming DataFrame.
 
-    ``applyInPandasWithState`` invokes the Python update function once per
-    grouping key per micro-batch. Keyed directly on the instrument that is
-    O(distinct keys) Python calls per batch — at 1,500 keys × ~17 rows each
-    the interpreter call overhead (frame construction, ewm setup) dwarfs the
-    arithmetic: profiled ~1.2 s of addBatch per 25k-row batch, ~48 µs/row.
-    Here the stream is grouped by ``hash(key) % n_buckets`` instead, so the
-    update function runs ``n_buckets`` times per batch over frames that hold
-    MANY keys, and the recurrence is computed for all of them in one Cython
-    pass (``groupby(...).ewm(adjust=False).mean()`` on a key-sorted frame,
-    seeded per key by prepended synthetic rows carrying the state).
+    Emits every input row with its EWMA (recurrence
+    ``y_t = alpha*x_t + (1-alpha)*y_{t-1}`` seeded by the key's first
+    value), continuing across micro-batches via one double of state per
+    key. Requires per-key in-order arrival across micro-batches.
 
-    State per bucket = two parallel arrays (keys, last ewma) covering the
-    bucket's keys — O(total keys / n_buckets) per group, O(total keys)
-    overall, exactly like the per-key form. At 100 TB scale ``n_buckets``
-    grows with key cardinality (keep ≤ ~100k keys per bucket) and the state
-    store partition count grows with ``n_buckets``; the per-key form is the
-    degenerate ``n_buckets = ∞`` point of the same design.
-
-    Measured on the key-cardinality axis (1M events, 4 micro-batches,
-    ``tools/scale_stateful_run.py``, SCALE_r07): the per-key form degrades
-    linearly in keys — 195k → 101k → 26k ev/s at 1.5k/10k/50k keys — while
-    this form is FLAT (247k/321k/305k at 64 buckets): 11.9x at 50k keys.
-
-    Correctness: a key's rows always hash to the same bucket, so ordering
-    and state continuity per key are preserved; equality-tested bit-for-bit
-    against :func:`stateful_ewma` and the batch oracle.
+    Vectorized as a state-seeded ``groupby(...).ewm(adjust=False).mean()``
+    over the key-sorted bucket frame: prepending each carried value as a
+    synthetic first observation of its key reproduces the recurrence
+    bit-for-bit (pandas' adjust=False loop computes the identical
+    ``(1-α)·y + α·x`` update in C). At sf0.1's 1,500 keys, grouping by
+    bucket instead of by key cut addBatch from ~1.2 s to ~0.35 s per
+    25k-row micro-batch (the s02 bench form).
     """
-    key_t = _dtype(df, key_col)
     out_schema = T.StructType(
         [
-            T.StructField(key_col, key_t),
+            T.StructField(key_col, _dtype(df, key_col)),
             T.StructField(ts_col, _dtype(df, ts_col)),
             T.StructField(value_col, T.DoubleType()),
             T.StructField(out, T.DoubleType()),
         ]
     )
-    state_schema = T.StructType(
-        [
-            T.StructField("keys", T.ArrayType(key_t)),
-            T.StructField("ewmas", T.ArrayType(T.DoubleType())),
-        ]
-    )
-    int_key = _integral(key_t)
+    fields = [("ewmas", T.DoubleType(), "float64")]
 
-    def update(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        chunks = [p for p in pdfs if len(p)]
-        if not chunks:
-            return
-        pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    def step(pdf: pd.DataFrame, skeys: np.ndarray, cols: list):
+        (sewmas,) = cols
         k = pdf[key_col].to_numpy()
         ts = pdf[ts_col].to_numpy()
         v = pdf[value_col].to_numpy(dtype="float64")
-        if state.exists:
-            skeys_l, sewmas_l = state.get
-            skeys = np.asarray(skeys_l, dtype=k.dtype if int_key else object)
-            sewmas = np.asarray(sewmas_l, dtype="float64")
-        else:
-            skeys = np.empty(0, dtype=k.dtype if int_key else object)
-            sewmas = np.empty(0, dtype="float64")
         # seed rows: one synthetic first observation per carried key present
-        # in this batch (prepending the carry reproduces the adjust=False
-        # recurrence bit-for-bit, same argument as stateful_ewma)
+        # in this batch
         in_batch = np.isin(skeys, k)
         seed_k, seed_v = skeys[in_batch], sewmas[in_batch]
         ns = len(seed_k)
@@ -1100,33 +602,22 @@ def stateful_ewma_bucketed(
             .to_numpy()
         )
         # new last-ewma per key touched this batch = last row of its segment
-        seg_end = np.nonzero(sk[1:] != sk[:-1])[0]
-        last_idx = np.concatenate([seg_end, [len(sk) - 1]])
-        new_keys, new_lasts = sk[last_idx], ewmas[last_idx]
-        keep = ~in_batch
-        merged_k = np.concatenate([skeys[keep], new_keys])
-        merged_e = np.concatenate([sewmas[keep], new_lasts])
-        state.update((merged_k.tolist(), merged_e.tolist()))
+        _, last_idx = _segments(sk)
         real = sns == 1
-        yield pd.DataFrame(
-            {
-                key_col: sk[real],
-                ts_col: sts[real],
-                value_col: sv[real],
-                out: ewmas[real],
-            }
+        return (
+            pd.DataFrame(
+                {
+                    key_col: sk[real],
+                    ts_col: sts[real],
+                    value_col: sv[real],
+                    out: ewmas[real],
+                }
+            ),
+            ~in_batch,
+            (sk[last_idx], ewmas[last_idx]),
         )
 
-    bucketed = df.withColumn(
-        "__bkt", F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets))
-    )
-    return bucketed.groupBy("__bkt").applyInPandasWithState(
-        update,
-        outputStructType=out_schema,
-        stateStructType=state_schema,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return _bucketed(df, key_col, n_buckets, out_schema, fields, step)
 
 
 #: Session conf transformWithState requires (it is RocksDB-only; the default
@@ -1144,9 +635,9 @@ def stateful_ewma_tws(
     alpha: float = 0.8,
     out: str = "ewma",
 ) -> DataFrame:
-    """:func:`stateful_ewma` on the Spark 4 ``transformWithStateInPandas``
-    API — identical semantics and output schema, equality-tested against the
-    ``applyInPandasWithState`` form.
+    """The per-key EWMA of :func:`stateful_ewma_bucketed` on the Spark 4
+    ``transformWithStateInPandas`` API — identical semantics and output
+    schema, equality-tested against the ``applyInPandasWithState`` form.
 
     Why a second tier: ``transformWithState`` is where Structured Streaming's
     custom-state surface is headed — typed state handles (value/list/map),

@@ -366,6 +366,19 @@ def test_signature_sweep_id_exactness_past_2_53(spark):
     assert cv[big] == [0.25] * 8 and cv[2] is None
 
 
+def test_signature_sweep_rejects_wrong_length_vectors(spark):
+    """Two length-4 vectors at dim=8 hold exactly one row's worth of
+    elements: the sweep must refuse them, not reshape them into one
+    merged vector and bucket the wrong data."""
+    from crypto_market_data_etl_spark.operators.similarity import _signature_sweep
+
+    df = spark.createDataFrame(
+        [(1, [1.0] * 4), (2, [0.5] * 4)], "vec_id long, embedding array<double>"
+    ).coalesce(1)  # one Arrow batch: the element total divides evenly by dim
+    with pytest.raises(Exception, match="expected 8 each"):
+        _signature_sweep(df, "vec_id", "embedding", 4, 8).collect()
+
+
 def test_numpy_signatures_match_expression_tier(spark, embs):
     expr_sig = {
         r.vec_id: r.b

@@ -15,8 +15,8 @@ from crypto_market_data_etl_spark.streaming.candles import (
     stream_sliding_stats,
 )
 from crypto_market_data_etl_spark.streaming.stateful import (
-    stateful_dollar_bars,
-    stateful_ewma,
+    stateful_dollar_bars_bucketed,
+    stateful_ewma_bucketed,
 )
 
 SCHEMA = T.StructType(
@@ -137,7 +137,7 @@ def test_stream_sliding_stats(spark, tmp_path):
 
 def test_stateful_ewma_checkpoint_recovery(spark, tmp_path):
     # T5: stop the query, append data, restart from the SAME checkpoint —
-    # per-key EWMA state must resume, not reset (exactly-once state store)
+    # the key's EWMA state must resume, not reset (exactly-once state store)
     from crypto_market_data_etl_spark.streaming.sinks import foreach_batch_parquet_sink
 
     in_path = str(tmp_path / "in")
@@ -148,7 +148,9 @@ def test_stateful_ewma_checkpoint_recovery(spark, tmp_path):
 
     def start():
         stream = _stream(spark, in_path).select("code", "ts_us", "value")
-        out = stateful_ewma(stream, key_col="code", ts_col="ts_us", value_col="value")
+        out = stateful_ewma_bucketed(
+            stream, key_col="code", ts_col="ts_us", value_col="value"
+        )
         return foreach_batch_parquet_sink(out, out_path, ckpt, output_mode="append").start()
 
     q = start()
@@ -171,14 +173,10 @@ def test_stateful_ewma_checkpoint_recovery(spark, tmp_path):
 
 
 def test_stateful_ewma_bucketed_checkpoint_recovery(spark, tmp_path):
-    """The bucketed form's ARRAY state (keys[], ewmas[]) must survive a
-    query restart from checkpoint — the state-encoder round-trip is the
-    novel risk vs the per-key scalar state."""
+    """The ARRAY state (keys[], ewmas[]) of a bucket holding two keys must
+    survive a query restart from checkpoint (state-encoder round-trip)."""
     from crypto_market_data_etl_spark.streaming.sinks import (
         foreach_batch_parquet_sink,
-    )
-    from crypto_market_data_etl_spark.streaming.stateful import (
-        stateful_ewma_bucketed,
     )
 
     in_path = str(tmp_path / "in")
@@ -245,7 +243,7 @@ def test_two_concurrent_queries_one_session(spark, tmp_path):
 
 def test_stateful_ofi_matches_batch_lag(spark, tmp_path):
     from crypto_market_data_etl_spark.operators.ewma import with_ofi
-    from crypto_market_data_etl_spark.streaming.stateful import stateful_ofi
+    from crypto_market_data_etl_spark.streaming.stateful import stateful_ofi_bucketed
 
     rows = [
         # code, ts_us, bp, bs, ap, asz
@@ -268,7 +266,7 @@ def test_stateful_ofi_matches_batch_lag(spark, tmp_path):
         spark.readStream.schema(df1.schema)
         .option("maxFilesPerTrigger", "1").parquet(in_path)
     )
-    q = run_to_memory(stateful_ofi(stream), "sofi", output_mode="append")
+    q = run_to_memory(stateful_ofi_bucketed(stream), "sofi", output_mode="append")
     try:
         got = {r.ts_us: r.ofi for r in spark.sql("SELECT * FROM sofi").collect()}
     finally:
@@ -279,11 +277,12 @@ def test_stateful_ofi_matches_batch_lag(spark, tmp_path):
 
 
 def test_stateful_ofi_bucketed_matches_per_key(spark, tmp_path):
-    """Bucketed OFI == per-key OFI over a multi-key, multi-batch replay:
-    same values, same NULL-on-first-ever-row, state carried per key even
-    when several keys collide into one bucket."""
+    """Bucketed OFI == the batch lag form (``with_ofi``) over a multi-key,
+    multi-batch replay: same values, same NULL-on-first-ever-row, state
+    carried per key across batches a key skips, even when several keys
+    collide into one bucket."""
+    from crypto_market_data_etl_spark.operators.ewma import with_ofi
     from crypto_market_data_etl_spark.streaming.stateful import (
-        stateful_ofi,
         stateful_ofi_bucketed,
     )
 
@@ -322,7 +321,10 @@ def test_stateful_ofi_bucketed_matches_per_key(spark, tmp_path):
         finally:
             q.stop()
 
-    a = replay(stateful_ofi, "ofi_pk", str(tmp_path / "a"))
+    a = with_ofi(
+        spark.createDataFrame([r for rows in batches for r in rows], schema),
+        ["code"], ["ts_us"],
+    ).orderBy("code", "ts_us").toPandas()
     b = replay(stateful_ofi_bucketed, "ofi_bk", str(tmp_path / "b"), n_buckets=2)
     assert a["code"].tolist() == b["code"].tolist()
     assert a["ts_us"].tolist() == b["ts_us"].tolist()
@@ -343,7 +345,7 @@ def test_stateful_dollar_bars_match_batch(spark, tmp_path):
     stream = _stream(spark, path).select(
         "code", "ts_us", F.round(F.col("value") * 100).cast("bigint").alias("cents")
     )
-    out = stateful_dollar_bars(stream, "code", "ts_us", "cents", bar_cents=1000)
+    out = stateful_dollar_bars_bucketed(stream, "code", "ts_us", "cents", bar_cents=1000)
     q = run_to_memory(out, "sbars", output_mode="append")
     try:
         got = {
@@ -378,7 +380,7 @@ def test_stateful_dollar_bars_passthrough_ohlc_matches_batch(spark, tmp_path):
         "code", "ts_us", "value",
         F.round(F.col("value") * 100).cast("bigint").alias("cents"),
     )
-    out = stateful_dollar_bars(
+    out = stateful_dollar_bars_bucketed(
         stream, "code", "ts_us", "cents", bar_cents=1000,
         passthrough_cols=["value"],
     )
@@ -500,7 +502,7 @@ def test_stateful_ewma_across_microbatches(spark, tmp_path):
     _write_batch(spark, path, series[:3])
     _write_batch(spark, path, series[3:])
     stream = _stream(spark, path).select("code", "ts_us", "value")
-    out = stateful_ewma(stream, key_col="code", ts_col="ts_us", value_col="value")
+    out = stateful_ewma_bucketed(stream, key_col="code", ts_col="ts_us", value_col="value")
     q = run_to_memory(out, "ewma_out", output_mode="append")
     try:
         got = (
@@ -515,14 +517,11 @@ def test_stateful_ewma_across_microbatches(spark, tmp_path):
 
 
 def test_stateful_ewma_bucketed_matches_per_key(spark, tmp_path):
-    """The bucket-grouped form (hash(key)%n grouping, grouped-ewm across
-    keys, array state) is bit-for-bit equal to the per-key form — including
-    keys that skip a micro-batch (state must survive untouched) and several
-    keys colliding into one bucket (n_buckets=2 over 7 keys)."""
-    from crypto_market_data_etl_spark.streaming.stateful import (
-        stateful_ewma_bucketed,
-    )
-
+    """The bucket-grouped EWMA (hash(key)%n grouping, grouped-ewm across
+    keys, array state) is bit-for-bit equal to the per-key pandas
+    ``ewm(adjust=False)`` recurrence over each key's whole series —
+    including keys that skip a micro-batch (state must survive untouched)
+    and several keys colliding into one bucket (n_buckets=2 over 7 keys)."""
     rng = np.random.default_rng(7)
     keys = list(range(7))
     batches = []
@@ -535,32 +534,33 @@ def test_stateful_ewma_bucketed_matches_per_key(spark, tmp_path):
                 rows.append((k, (b * 100 + k * 10 + i) * US, float(rng.integers(1, 100))))
         batches.append(rows)
 
-    def replay(fn, name, path, **kw):
-        for rows in batches:
-            _write_batch(spark, path, rows)
-        stream = _stream(spark, path).select("code", "ts_us", "value")
-        q = run_to_memory(fn(stream, key_col="code", **kw), name, output_mode="append")
-        try:
-            return (
-                spark.sql(f"SELECT * FROM {name} ORDER BY code, ts_us").toPandas()
-            )
-        finally:
-            q.stop()
-
-    a = replay(stateful_ewma, "ewma_pk", str(tmp_path / "a"))
-    b = replay(stateful_ewma_bucketed, "ewma_bk", str(tmp_path / "b"), n_buckets=2)
-    assert a["code"].tolist() == b["code"].tolist()
-    assert a["ts_us"].tolist() == b["ts_us"].tolist()
-    assert a["ewma"].tolist() == b["ewma"].tolist()  # exact, not approx
+    path = str(tmp_path / "in")
+    for rows in batches:
+        _write_batch(spark, path, rows)
+    stream = _stream(spark, path).select("code", "ts_us", "value")
+    out = stateful_ewma_bucketed(stream, key_col="code", n_buckets=2)
+    q = run_to_memory(out, "ewma_bk", output_mode="append")
+    try:
+        got = spark.sql("SELECT * FROM ewma_bk ORDER BY code, ts_us").toPandas()
+    finally:
+        q.stop()
+    want = pd.DataFrame(
+        [r for rows in batches for r in rows], columns=["code", "ts_us", "value"]
+    ).sort_values(["code", "ts_us"], ignore_index=True)
+    want["ewma"] = want.groupby("code")["value"].transform(
+        lambda v: v.ewm(alpha=0.8, adjust=False).mean()
+    )
+    assert got["code"].tolist() == want["code"].tolist()
+    assert got["ts_us"].tolist() == want["ts_us"].tolist()
+    assert got["ewma"].tolist() == want["ewma"].tolist()  # exact, not approx
 
 
 def test_stateful_per_key_multi_chunk_disorder(spark, tmp_path):
     """A single key whose micro-batch spans several Arrow chunks, written in
     REVERSED ts order (so the chunk iterator's arrival order maximally
     disagrees with event time): per-chunk processing with carried state
-    produced wrong recurrences here (the q28-at-sf0.1 mismatch); the fixed
-    per-key ops concat the group before sorting."""
-    from crypto_market_data_etl_spark.streaming.stateful import stateful_ewma
+    produced wrong recurrences here (the q28-at-sf0.1 mismatch); the
+    operators concat the group before sorting."""
 
     n = 25_000  # > 2 Arrow chunks at the 10k default
     rows = [(1, i * 1000, float((i * 31) % 97)) for i in range(n)]
@@ -573,7 +573,7 @@ def test_stateful_per_key_multi_chunk_disorder(spark, tmp_path):
     stream = (
         spark.readStream.schema(df.schema).option("maxFilesPerTrigger", "1").parquet(path)
     )
-    out = stateful_ewma(stream, key_col="code", ts_col="ts_us", value_col="value")
+    out = stateful_ewma_bucketed(stream, key_col="code", ts_col="ts_us", value_col="value")
     q = run_to_memory(out, "ewma_rev_chunks", output_mode="append")
     try:
         got = spark.sql(
@@ -620,12 +620,12 @@ def test_stateful_ewma_bucketed_multi_chunk(spark, tmp_path):
 
 
 def test_stateful_dollar_bars_bucketed_matches_per_key(spark, tmp_path):
-    """Bucketed streaming dollar bars == per-key form: same cum_cents/bar_num
-    trajectory (carried offsets per key), passthrough columns intact."""
-    from crypto_market_data_etl_spark.streaming.stateful import (
-        stateful_dollar_bars,
-        stateful_dollar_bars_bucketed,
-    )
+    """Bucketed streaming dollar bars == the batch ``dollar_bars`` operator
+    over a multi-key replay (keys skipping batches, two buckets): the
+    per-event cum_cents trajectory carries offsets per key, and the
+    passthrough price rebuilds the batch bars' OHLCV exactly."""
+    from crypto_market_data_etl_spark.operators.bars import dollar_bars
+    from crypto_market_data_etl_spark.operators.candles import ohlcv_aggs
 
     rng = np.random.default_rng(11)
     batches = []
@@ -638,28 +638,43 @@ def test_stateful_dollar_bars_bucketed_matches_per_key(spark, tmp_path):
                 rows.append((k, (b * 100 + i * 3 + k) * US, float(rng.integers(1, 500))))
         batches.append(rows)
 
-    def replay(fn, name, path, **kw):
-        for rows in batches:
-            _write_batch(spark, path, rows)
-        stream = _stream(spark, path).withColumn(
-            "cents", F.round(F.col("value") * 100).cast("bigint")
-        )
-        out = fn(
-            stream, key_col="code", ts_col="ts_us", notional_cents_col="cents",
-            bar_cents=50_000, passthrough_cols=["value"], **kw,
-        )
-        q = run_to_memory(out, name, output_mode="append")
-        try:
-            return spark.sql(f"SELECT * FROM {name} ORDER BY code, ts_us").toPandas()
-        finally:
-            q.stop()
-
-    a = replay(stateful_dollar_bars, "bars_pk", str(tmp_path / "a"))
-    b = replay(
-        stateful_dollar_bars_bucketed, "bars_bk", str(tmp_path / "b"), n_buckets=2
+    path = str(tmp_path / "in")
+    for rows in batches:
+        _write_batch(spark, path, rows)
+    stream = _stream(spark, path).withColumn(
+        "cents", F.round(F.col("value") * 100).cast("bigint")
     )
-    for col in ("code", "ts_us", "cents", "value", "cum_cents", "bar_num"):
-        assert a[col].tolist() == b[col].tolist(), col
+    out = stateful_dollar_bars_bucketed(
+        stream, key_col="code", ts_col="ts_us", notional_cents_col="cents",
+        bar_cents=50_000, passthrough_cols=["value"], n_buckets=2,
+    )
+    q = run_to_memory(out, "bars_bk", output_mode="append")
+    try:
+        got = spark.sql("SELECT * FROM bars_bk ORDER BY code, ts_us").toPandas()
+        streamed_bars = {
+            (r.code, r.bar_num): (r.open, r.high, r.low, r.close, r.n_trades, r.notional)
+            for r in spark.table("bars_bk")
+            .groupBy("code", "bar_num")
+            .agg(*ohlcv_aggs("value", "ts_us", [], volume_cents_col="cents"))
+            .withColumnRenamed("volume", "notional")
+            .collect()
+        }
+    finally:
+        q.stop()
+    all_rows = [r for rows in batches for r in rows]
+    want = pd.DataFrame(all_rows, columns=["code", "ts_us", "value"]).sort_values(
+        ["code", "ts_us"], ignore_index=True
+    )
+    assert got["code"].tolist() == want["code"].tolist()
+    assert got["value"].tolist() == want["value"].tolist()
+    cents = (want["value"] * 100).round().astype("int64")
+    assert got["cum_cents"].tolist() == cents.groupby(want["code"]).cumsum().tolist()
+    batch_df = spark.createDataFrame(all_rows, "code long, ts_us long, value double")
+    batch_bars = {
+        (r.code, r.bar_num): (r.open, r.high, r.low, r.close, r.n_trades, r.notional)
+        for r in dollar_bars(batch_df, ["code"], "ts_us", "value", 500.0).collect()
+    }
+    assert streamed_bars == batch_bars and len(batch_bars) > 6
 
 
 def test_stateful_ewma_bucketed_string_key(spark, tmp_path):
@@ -880,7 +895,7 @@ def test_stateful_ewma_string_key(spark, tmp_path):
     stream = (
         spark.readStream.schema(df.schema).option("maxFilesPerTrigger", "1").parquet(path)
     )
-    out = stateful_ewma(stream, key_col="code")
+    out = stateful_ewma_bucketed(stream, key_col="code")
     q = run_to_memory(out, "ewma_str_key", output_mode="append")
     try:
         rows = {(r.code, r.ts_us): r.ewma for r in spark.sql("SELECT * FROM ewma_str_key").collect()}
@@ -895,7 +910,9 @@ def test_stateful_asof_enrich_matches_batch(spark, tmp_path):
     """Streaming as-of enrichment == batch asof_join on the same replay,
     including a snapshot carried as state across micro-batch boundaries."""
     from crypto_market_data_etl_spark.operators.asof import asof_join
-    from crypto_market_data_etl_spark.streaming.stateful import stateful_asof_enrich
+    from crypto_market_data_etl_spark.streaming.stateful import (
+        stateful_asof_enrich_bucketed,
+    )
 
     tdir, sdir = str(tmp_path / "trades"), str(tmp_path / "snaps")
     t_schema = "code long, ts_us long, price double"
@@ -917,7 +934,7 @@ def test_stateful_asof_enrich_matches_batch(spark, tmp_path):
 
     tr = spark.readStream.schema(t_schema).option("maxFilesPerTrigger", "1").parquet(tdir)
     sn = spark.readStream.schema(s_schema).option("maxFilesPerTrigger", "1").parquet(sdir)
-    out = stateful_asof_enrich(tr, sn, key_col="code", ts_col="ts_us")
+    out = stateful_asof_enrich_bucketed(tr, sn, key_col="code", ts_col="ts_us")
     q = (
         out.writeStream.format("memory").queryName("asof_enrich")
         .outputMode("append").start()
@@ -954,12 +971,12 @@ def test_stateful_asof_enrich_matches_batch(spark, tmp_path):
 
 
 def test_stateful_asof_enrich_bucketed_matches_per_key(spark, tmp_path):
-    """Bucketed as-of enrich == per-key form over a multi-key randomized
-    replay with int64 payloads (validity transport), never-snapshotted keys
-    (left outer), a tolerance band, and cross-batch state carry — all keys
-    forced into 2 buckets."""
+    """Bucketed as-of enrich == the batch ``asof_join`` (same tolerance)
+    over a multi-key randomized replay with int64 payloads (validity
+    transport), never-snapshotted keys (left outer), a tolerance band, and
+    cross-batch state carry — all keys forced into 2 buckets."""
+    from crypto_market_data_etl_spark.operators.asof import asof_join
     from crypto_market_data_etl_spark.streaming.stateful import (
-        stateful_asof_enrich,
         stateful_asof_enrich_bucketed,
     )
 
@@ -1006,11 +1023,23 @@ def test_stateful_asof_enrich_bucketed_matches_per_key(spark, tmp_path):
         finally:
             q.stop()
 
-    a = replay(stateful_asof_enrich, "asof_pk", str(tmp_path / "a"))
     b = replay(
         stateful_asof_enrich_bucketed, "asof_bk", str(tmp_path / "b"), n_buckets=2
     )
-    assert list(a.columns) == list(b.columns)
+    a = (
+        asof_join(
+            spark.createDataFrame([r for rows in t_batches for r in rows], t_schema),
+            spark.createDataFrame([r for rows in s_batches for r in rows], s_schema),
+            on=["code"], left_ts="ts_us", right_ts="ts_us",
+            tolerance=50 * US, left_keys=["code", "ts_us"],
+        )
+        .select(*b.columns)
+        .orderBy("code", "ts_us", "seq")
+        .toPandas()
+    )
+    assert len(a) == len(b) == 45
+    # key 4's nine never-enriched trades, plus the stale-band rows
+    assert a["bid_r"].isna().sum() > 9
     for col in a.columns:
         av, bv = a[col].to_numpy(), b[col].to_numpy()
         both_na = pd.isna(a[col]).to_numpy() & pd.isna(b[col]).to_numpy()
@@ -1020,7 +1049,9 @@ def test_stateful_asof_enrich_bucketed_matches_per_key(spark, tmp_path):
 def test_stateful_asof_enrich_tolerance_and_equal_ts(spark, tmp_path):
     """Equal-ts snapshot is visible to its trade (<= semantics); stale
     snapshots beyond the tolerance band null out but state advances."""
-    from crypto_market_data_etl_spark.streaming.stateful import stateful_asof_enrich
+    from crypto_market_data_etl_spark.streaming.stateful import (
+        stateful_asof_enrich_bucketed,
+    )
 
     tdir, sdir = str(tmp_path / "trades"), str(tmp_path / "snaps")
     t_schema = "code long, ts_us long, price double"
@@ -1034,7 +1065,7 @@ def test_stateful_asof_enrich_tolerance_and_equal_ts(spark, tmp_path):
 
     tr = spark.readStream.schema(t_schema).parquet(tdir)
     sn = spark.readStream.schema(s_schema).parquet(sdir)
-    out = stateful_asof_enrich(
+    out = stateful_asof_enrich_bucketed(
         tr, sn, key_col="code", ts_col="ts_us", tolerance=3 * US
     )
     q = (
@@ -1059,7 +1090,9 @@ def test_stateful_asof_enrich_mixed_payload_dtypes(spark, tmp_path):
     silently rounded through Arrow's long-with-null float64), and a genuine
     NULL in a snapshot payload stays NULL (never conflated with the
     zero-fill transport)."""
-    from crypto_market_data_etl_spark.streaming.stateful import stateful_asof_enrich
+    from crypto_market_data_etl_spark.streaming.stateful import (
+        stateful_asof_enrich_bucketed,
+    )
 
     big = 2**60 + 1  # not representable in float64
     tdir, sdir = str(tmp_path / "trades"), str(tmp_path / "snaps")
@@ -1074,7 +1107,7 @@ def test_stateful_asof_enrich_mixed_payload_dtypes(spark, tmp_path):
 
     tr = spark.readStream.schema(t_schema).parquet(tdir)
     sn = spark.readStream.schema(s_schema).parquet(sdir)
-    out = stateful_asof_enrich(tr, sn, key_col="code", ts_col="ts_us")
+    out = stateful_asof_enrich_bucketed(tr, sn, key_col="code", ts_col="ts_us")
     q = (
         out.writeStream.format("memory").queryName("asof_mixed")
         .outputMode("append").start()
@@ -1096,7 +1129,9 @@ def test_stateful_asof_enrich_mixed_payload_dtypes(spark, tmp_path):
 def test_stateful_asof_enrich_big_int_state_across_batches(spark, tmp_path):
     """A >2^53 snapshot payload carried as STATE into a later micro-batch
     comes back exact (the state round-trip must not pass through float64)."""
-    from crypto_market_data_etl_spark.streaming.stateful import stateful_asof_enrich
+    from crypto_market_data_etl_spark.streaming.stateful import (
+        stateful_asof_enrich_bucketed,
+    )
 
     big = 2**61 + 3
     tdir, sdir = str(tmp_path / "trades"), str(tmp_path / "snaps")
@@ -1113,7 +1148,7 @@ def test_stateful_asof_enrich_big_int_state_across_batches(spark, tmp_path):
 
     tr = spark.readStream.schema(t_schema).option("maxFilesPerTrigger", "1").parquet(tdir)
     sn = spark.readStream.schema(s_schema).parquet(sdir)
-    out = stateful_asof_enrich(tr, sn, key_col="code", ts_col="ts_us")
+    out = stateful_asof_enrich_bucketed(tr, sn, key_col="code", ts_col="ts_us")
     q = (
         out.writeStream.format("memory").queryName("asof_bigstate")
         .outputMode("append").start()
@@ -1131,7 +1166,9 @@ def test_stateful_asof_enrich_array_payload_across_batches(spark, tmp_path):
     fills within a batch AND survives the cross-batch state round-trip as a
     list — a masked numpy assign would scatter its ELEMENTS across slots,
     and GroupState.update needs a plain list, not an ndarray."""
-    from crypto_market_data_etl_spark.streaming.stateful import stateful_asof_enrich
+    from crypto_market_data_etl_spark.streaming.stateful import (
+        stateful_asof_enrich_bucketed,
+    )
 
     tdir, sdir = str(tmp_path / "trades"), str(tmp_path / "snaps")
     t_schema = "code long, ts_us long, price double"
@@ -1150,7 +1187,7 @@ def test_stateful_asof_enrich_array_payload_across_batches(spark, tmp_path):
 
     tr = spark.readStream.schema(t_schema).option("maxFilesPerTrigger", "1").parquet(tdir)
     sn = spark.readStream.schema(s_schema).option("maxFilesPerTrigger", "1").parquet(sdir)
-    out = stateful_asof_enrich(tr, sn, key_col="code", ts_col="ts_us")
+    out = stateful_asof_enrich_bucketed(tr, sn, key_col="code", ts_col="ts_us")
     q = (
         out.writeStream.format("memory").queryName("asof_arraystate")
         .outputMode("append").start()
@@ -1171,9 +1208,10 @@ def test_stateful_asof_enrich_array_payload_across_batches(spark, tmp_path):
 
 
 def test_stateful_ewma_tws_matches_legacy_api(spark, tmp_path):
-    """transformWithStateInPandas tier == applyInPandasWithState tier ==
-    pandas ewm, with state carried across micro-batches. Needs RocksDB
-    (transformWithState rejects the HDFS-backed provider)."""
+    """transformWithStateInPandas tier == applyInPandasWithState tier
+    (``stateful_ewma_bucketed``) == pandas ewm, with state carried across
+    micro-batches. Needs RocksDB (transformWithState rejects the
+    HDFS-backed provider)."""
     from crypto_market_data_etl_spark.streaming.stateful import (
         ROCKSDB_PROVIDER,
         stateful_ewma_tws,
@@ -1185,6 +1223,14 @@ def test_stateful_ewma_tws_matches_legacy_api(spark, tmp_path):
     _write_batch(spark, path, series[:6])
     _write_batch(spark, path, series[6:])
     stream = _stream(spark, path).select("code", "ts_us", "value")
+    legacy = run_to_memory(
+        stateful_ewma_bucketed(stream, key_col="code", ts_col="ts_us", value_col="value"),
+        "ewma_legacy_out", output_mode="append",
+    )
+    try:
+        want = spark.sql("SELECT * FROM ewma_legacy_out ORDER BY code, ts_us").toPandas()
+    finally:
+        legacy.stop()
     out = stateful_ewma_tws(stream, key_col="code", ts_col="ts_us", value_col="value")
     prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
     spark.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
@@ -1203,7 +1249,8 @@ def test_stateful_ewma_tws_matches_legacy_api(spark, tmp_path):
                 .ewm(alpha=0.8, adjust=False).mean().tolist()
             )
             assert got["ewma"].tolist() == pytest.approx(expected * 2, rel=1e-12)
-            assert list(got.columns) == ["code", "ts_us", "value", "ewma"]
+            assert got["ewma"].tolist() == want["ewma"].tolist()
+            assert list(got.columns) == list(want.columns)
         finally:
             q.stop()
     finally:

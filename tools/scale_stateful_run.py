@@ -1,15 +1,18 @@
-"""Stateful-streaming scale rung: per-key vs bucket-grouped update forms.
+"""Stateful-streaming scale rung: the bucket-grouped EWMA on the
+key-cardinality axis.
 
-The s02 bench runs at sf0.1 (100k events, 1.5k keys); the bucketed rewrite's
-claim is about the KEY-CARDINALITY axis — ``applyInPandasWithState`` invokes
-the Python update once per grouping key per micro-batch, so the per-key
-form's cost is O(distinct keys x batches) interpreter calls while the
-bucketed form's is O(n_buckets x batches). This rung replays a synthetic
-keyed stream at a ladder of key cardinalities (same event volume) through
-BOTH forms of the stateful EWMA and prints one JSON line per run.
+The s02 bench runs at sf0.1 (100k events, 1.5k keys); the bucketed
+operator's claim is about KEY CARDINALITY — ``applyInPandasWithState``
+invokes the Python update once per grouping key per micro-batch, so
+grouping by ``hash(key) % n_buckets`` keeps that at O(n_buckets x batches)
+however many keys there are. This rung replays a synthetic keyed stream at a
+ladder of key cardinalities (same event volume) through
+``stateful_ewma_bucketed`` and prints one JSON line per run. Flat ev/s
+across the ladder is the expected shape (SCALE_r07: 247k/321k/305k at
+1.5k/10k/50k keys, where one group per key fell from 195k to 26k).
 
-Equality of the two forms is pytest-gated (bit-for-bit, see
-tests/test_streaming.py); this records WALLS only.
+Correctness is pytest-gated (tests/test_streaming.py); this records WALLS
+only.
 
 Usage: python tools/scale_stateful_run.py [--events 1000000]
            [--keys 1500,10000,50000] [--buckets 64] [--batches 4]
@@ -34,7 +37,6 @@ from crypto_market_data_etl_spark.session import (  # noqa: E402
     state_partitions,
 )
 from crypto_market_data_etl_spark.streaming.stateful import (  # noqa: E402
-    stateful_ewma,
     stateful_ewma_bucketed,
 )
 
@@ -65,17 +67,18 @@ def main() -> None:
             ev.repartition(files).write.parquet(src)
             schema = spark.read.parquet(src).schema
 
-            def run(fn, parts, **kw):
+            def run():
                 stream = (
                     spark.readStream.schema(schema)
                     .option("maxFilesPerTrigger", 2)
                     .parquet(src)
                 )
-                name = f"snk_{int(time.time() * 1000)}"
                 t0 = time.time()
-                with state_partitions(spark, parts):
+                with state_partitions(spark, 8):
                     q = (
-                        fn(stream, key_col="user_id", **kw)
+                        stateful_ewma_bucketed(
+                            stream, key_col="user_id", n_buckets=args.buckets
+                        )
                         .writeStream.format("noop")
                         .outputMode("append")
                         .start()
@@ -86,29 +89,20 @@ def main() -> None:
                     q.stop()
                 return time.time() - t0
 
-            for label, fn, parts, kw in [
-                ("per_key", stateful_ewma, 8, {}),
-                (
-                    "bucketed",
-                    stateful_ewma_bucketed,
-                    8,
-                    {"n_buckets": args.buckets},
+            best = min(run() for _ in range(args.repeats))
+            print(
+                json.dumps(
+                    {
+                        "job": "stateful_ewma_bucketed",
+                        "keys": n_keys,
+                        "events": args.events,
+                        "batches": args.batches,
+                        "sec": round(best, 2),
+                        "events_per_sec": int(args.events / best),
+                    }
                 ),
-            ]:
-                best = min(run(fn, parts, **kw) for _ in range(args.repeats))
-                print(
-                    json.dumps(
-                        {
-                            "job": f"stateful_ewma_{label}",
-                            "keys": n_keys,
-                            "events": args.events,
-                            "batches": args.batches,
-                            "sec": round(best, 2),
-                            "events_per_sec": int(args.events / best),
-                        }
-                    ),
-                    flush=True,
-                )
+                flush=True,
+            )
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
     spark.stop()
