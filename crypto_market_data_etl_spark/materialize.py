@@ -31,8 +31,10 @@ the DataFrames become unreferenced.
 
 from __future__ import annotations
 
+import itertools
 import logging
 import os
+import threading
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -53,6 +55,12 @@ _STRIP_WARNED = False
 #: internal tables). The handles are tiny (plan wrappers), and
 #: :func:`release_all` drains the list.
 _PERSISTED: list[DataFrame] = []
+
+#: plan-capture file sequence: one process-wide counter behind a lock, so
+#: concurrent materialize() calls (the thread-pooled plan builders) never
+#: draw the same number
+_CAPTURE_SEQ = itertools.count()
+_CAPTURE_LOCK = threading.Lock()
 
 
 def _strip_plan_stats(df: DataFrame) -> DataFrame:
@@ -139,7 +147,11 @@ def checkpoint_nostats(
 
 def _capture_plan(df: DataFrame) -> None:
     """When ``SPARK_GRAFT_PLAN_CAPTURE_DIR`` is set, dump the INPUT plan of
-    every materialize() call there (numbered, formatted explain).
+    every materialize() call there (formatted explain), one file per call
+    named ``materialize_<pid>_<seq>.txt``: the lock-guarded sequence keeps
+    concurrent calls from overwriting each other, and the pid keeps two
+    processes sharing a directory apart. Names sort in call order within a
+    process.
 
     Why: a checkpoint/persist truncates lineage, so a downstream
     ``explain()`` shows ``Scan ExistingRDD`` where the expensive subtree
@@ -151,16 +163,17 @@ def _capture_plan(df: DataFrame) -> None:
     if not cap_dir:
         return
     try:
-        import io
-        from contextlib import redirect_stdout
-
         os.makedirs(cap_dir, exist_ok=True)
-        n = len(os.listdir(cap_dir))
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        with open(os.path.join(cap_dir, f"materialize_{n:02d}.txt"), "w") as fh:
-            fh.write(buf.getvalue())
+        with _CAPTURE_LOCK:
+            n = next(_CAPTURE_SEQ)
+        # the string explain() would print, fetched directly: redirecting
+        # the process-wide sys.stdout is not safe from concurrent threads
+        plan = df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted"
+        )
+        name = f"materialize_{os.getpid()}_{n:04d}.txt"
+        with open(os.path.join(cap_dir, name), "w") as fh:
+            fh.write(plan)
     except Exception:  # pragma: no cover - capture must never break queries
         logger.warning("materialize plan capture failed", exc_info=True)
 

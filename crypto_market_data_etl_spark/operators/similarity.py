@@ -647,7 +647,6 @@ def _rerank_candidates(
     vec_col: str,
     k: int,
     q_vecs: DataFrame | None = None,
-    arrow: bool | None = None,
 ) -> DataFrame:
     """Exact cosine rerank of a distinct (q_id, n_id) candidate set.
 
@@ -660,28 +659,12 @@ def _rerank_candidates(
     result; found by tools/scale_ann_run.py's offset-id planted queries).
     Defaults to ``vecs`` for the self-join ANN form.
 
-    ``arrow`` (default OFF; ``SPARK_GRAFT_RERANK_ARROW=1`` flips the
-    default) swaps the per-pair JVM ``_dot`` fold for a ``mapInArrow``
-    :func:`_sweep_rows` kernel — the bit-exact FP-sequence replication from
-    the r15 sweep tiers, so every emitted sim is identical (pytest-pinned).
-
-    NOTE (r16, measured NEGATIVE at every probed shape — the tier stays
-    OFF; do not flip without new evidence): interleaved noop A/Bs via
-    tools/rerank_probe_r16.py show the kernel 1.5× slower at 200k pairs
-    (dim 64), 2.1× at 2M pairs, 2.6× at 500k pairs dim 256. Root cause:
-    the rerank is ROW-PAIRED — bytes crossing the Arrow boundary scale
-    with the work (2×dim doubles per pair), unlike the x05/x32 sweep
-    tiers whose n×k cross kernels move n+k vectors for n×k dots — and the
-    warm whole-stage-codegen fold already does ~17 ns/element, so there
-    is no arithmetic-intensity leverage for a copy to buy back. The arm
-    is kept (with its parity pytest) as the measured record. Whole-NULL
-    vectors route around the kernel with a NULL raw sim (expression-tier
-    parity); zero norms raise (DIVIDE_BY_ZERO loudness parity).
+    The scoring is the JVM ``_dot`` fold per candidate pair (expression
+    tier). An Arrow ``_sweep_rows`` kernel was measured 1.5-2.6× slower
+    here (r16): the rerank is ROW-PAIRED, so the bytes crossing the Arrow
+    boundary scale with the work (2×dim doubles per pair), unlike the
+    sweep tiers' n×k cross kernels that move n+k vectors for n×k dots.
     """
-    import os as _os
-
-    if arrow is None:
-        arrow = _os.environ.get("SPARK_GRAFT_RERANK_ARROW", "") == "1"
     q_vecs = vecs if q_vecs is None else q_vecs
     # norms ride the vector projections (one fold per vector) instead of
     # being re-folded per candidate pair — bit-identical, k-fold less work
@@ -695,60 +678,6 @@ def _rerank_candidates(
     )
     joined = cand.join(q, "q_id").join(n, "n_id")
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    if arrow:
-        from pyspark.sql import types as T
-
-        raw_schema = T.StructType(
-            [
-                joined.schema["q_id"],
-                joined.schema["n_id"],
-                T.StructField("__raw", T.DoubleType()),
-            ]
-        )
-        both = F.col("q_vec").isNotNull() & F.col("c_vec").isNotNull()
-        src = joined.filter(both).select(
-            "q_id", "n_id",
-            F.col("q_vec").cast("array<double>").alias("q_vec"),
-            F.col("c_vec").cast("array<double>").alias("c_vec"),
-            "__qn", "__cn",
-        )
-
-        def _pair_batches(it):
-            import numpy as np
-            import pyarrow as pa
-
-            for b in it:
-                rows = b.num_rows
-                if rows == 0:
-                    continue
-                Q = np.asarray(b.column(2).flatten(), dtype=np.float64).reshape(rows, -1)
-                C = np.asarray(b.column(3).flatten(), dtype=np.float64).reshape(rows, -1)
-                qn = np.asarray(b.column(4), dtype=np.float64)
-                cn = np.asarray(b.column(5), dtype=np.float64)
-                den = qn * cn
-                if (den == 0.0).any():
-                    # loudness parity with the expression tier's ANSI divide
-                    raise ArithmeticError(
-                        "_rerank_candidates: zero-norm vector in candidate "
-                        "pair (DIVIDE_BY_ZERO parity with the ANSI divide)"
-                    )
-                raw = _sweep_rows(Q, C) / den
-                yield pa.RecordBatch.from_arrays(
-                    [b.column(0), b.column(1), pa.array(raw, type=pa.float64())],
-                    names=["q_id", "n_id", "__raw"],
-                )
-
-        scored = src.mapInArrow(_pair_batches, schema=raw_schema).unionByName(
-            joined.filter(~both).select(
-                "q_id", "n_id", F.lit(None).cast("double").alias("__raw")
-            )
-        )
-        return (
-            scored.withColumn("sim", F.round(F.col("__raw"), 6))
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("q_id", "n_id", "rnk", "sim")
-        )
     sim = _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("__qn") * F.col("__cn"))
     return (
         joined.withColumn("sim", F.round(sim, 6))
@@ -2078,165 +2007,6 @@ def probe_cells_expr(
 #: actions. Past it, callers pass ``seed_mod`` or a sample (loudly).
 PQ_TRAIN_PROBE_CAP = 1_000_000
 
-#: residual IVFADC's per-(query, cell) LUT budget in float64 cells
-#: (~200 MB). The tables ride the mapInPandas CLOSURE — pickled and
-#: shipped per task — so the cap must trip well below the ~1-2 GB range
-#: where Spark's closure serialization itself starts failing opaquely;
-#: past it the loud error points at ivfpq_topk_batched (exact under
-#: query batching).
-RESIDUAL_LUT_CAP_DOUBLES = 25_000_000
-
-
-def opq_rotation_train(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    m: int = 8,
-    dim: int = 64,
-    center_vec: list[float] | None = None,
-):
-    """Train an OPQ-lite orthogonal rotation (Ge et al., "Optimized Product
-    Quantization", CVPR 2013 / TPAMI 2014 — the parametric 'eigenvalue
-    allocation' initialization, OPQ-P): returns a ``(dim, dim)`` numpy
-    orthogonal matrix ``R`` whose columns are the corpus PCA eigenvectors
-    PERMUTED so each of the ``m`` PQ blocks receives (near-)equal total
-    variance. Rotating vectors by ``x' = xR`` before PQ balances the
-    quantization error across sub-codebooks — on anisotropic corpora
-    (hashed-BoW text: a few dominant shared directions) the contiguous
-    slices PQ takes otherwise give some blocks all the variance and others
-    none, wasting half the code bits.
-
-    Distributed part: ONE corpus pass computes the exact second-moment
-    matrix (per-Arrow-batch ``V.T @ V`` partials + count/sum — a
-    ``dim x dim`` result, map-side, no shuffle of vectors). Driver part:
-    eigendecomposition of the ``dim x dim`` covariance + a greedy
-    allocation of eigen-directions to blocks balancing the log-variance
-    product (largest eigenvalue to the emptiest block; Ge et al. §IV-B).
-    Cost at 100 TB: one map-side pass and a 64x64 eigh — train it on the
-    same sample the PQ codebooks use and reuse ``R``.
-
-    Because cosine/L2 are rotation-invariant, applying ``R`` to the WHOLE
-    pipeline (corpus + queries, via :func:`rotate_vectors`) leaves exact
-    brute-force results unchanged (pytest-asserted) while every
-    downstream PQ/IVFADC stage — cells, residuals, codebooks — trains in
-    the rotated space. ``center_vec`` computes the covariance of the
-    centered-and-normalized assignment-space vectors (match the
-    pipeline's centering) without materializing them.
-    """
-    import numpy as np
-
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    mean_np = None if center_vec is None else np.asarray(center_vec, dtype=np.float64)
-
-    def partials(it):
-        n_acc = 0.0
-        s_acc = np.zeros(dim, dtype=np.float64)
-        ss_acc = np.zeros((dim, dim), dtype=np.float64)
-        for pdf in it:
-            if pdf.empty:
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            if mean_np is not None:
-                V = V - mean_np[None, :]
-            V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            n_acc += float(len(V))
-            s_acc += V.sum(axis=0)
-            ss_acc += V.T @ V
-        if n_acc:
-            yield pd.DataFrame(
-                {
-                    "n": [n_acc],
-                    "s": [s_acc.tolist()],
-                    "ss": [ss_acc.reshape(-1).tolist()],
-                }
-            )
-
-    part = df.select(vec_col).mapInPandas(
-        partials, schema="n double, s array<double>, ss array<double>"
-    )
-    # reduce the partials on the driver: ONE row per non-empty PARTITION
-    # (the iterator accumulates across its Arrow batches), each dim +
-    # dim^2 doubles — collected rows are bounded by partition count, not
-    # corpus size, so collect + numpy-sum is exact and driver memory stays
-    # flat at 100 TB. The collect avoids a dim^2-expression Catalyst agg —
-    # 4096 `sum(ss[i])` projections put analysis/codegen, not data, on the
-    # critical path (measured ~490 s at 400k x 64-dim for an agg whose
-    # input was ~200 rows; the collect form is seconds)
-    rows = part.collect()
-    if not rows or sum(r["n"] for r in rows) < 2:
-        raise ValueError("opq_rotation_train: need at least 2 non-NULL vectors")
-    n = float(sum(r["n"] for r in rows))
-    S = np.sum([np.asarray(r["s"], dtype=np.float64) for r in rows], axis=0)
-    SS = np.sum([np.asarray(r["ss"], dtype=np.float64) for r in rows], axis=0)
-    mu = S / n
-    cov = SS.reshape(dim, dim) / n - np.outer(mu, mu)
-    evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(-evals)
-    evals, evecs = evals[order], evecs[:, order]
-
-    # eigenvalue allocation, ROUND-based: each round deals one eigen-
-    # direction per block, the largest remaining eigenvalue to the block
-    # with the smallest accumulated log-variance product. (The naive
-    # "min-product among non-full blocks" greedy from the paper's prose
-    # breaks when eigenvalues are < 1 — unit-norm vectors guarantee that —
-    # because adding any eigenvalue LOWERS a block's product below the
-    # empty blocks' 1.0, so one block swallows the whole spectrum top
-    # until full; rounds keep block fills equal so the comparison is
-    # always like-for-like.)
-    dsub = dim // m
-    blocks: list[list[int]] = [[] for _ in range(m)]
-    logprod = np.zeros(m)
-    i = 0
-    for _ in range(dsub):
-        for b in sorted(range(m), key=lambda j: (logprod[j], j)):
-            blocks[b].append(i)
-            logprod[b] += float(np.log(max(evals[i], 1e-18)))
-            i += 1
-    perm = [i for blk in blocks for i in blk]
-    return np.ascontiguousarray(evecs[:, perm])  # (dim, dim), orthogonal
-
-
-def rotate_vectors(
-    df: DataFrame,
-    rotation,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Apply an orthogonal rotation to a vector column: ``x' = xR`` (one
-    broadcast matmul per Arrow batch, map-side, no shuffle). NULL vectors
-    pass through as NULL. Schema is preserved — downstream operators see
-    the same ``(id, vec)`` contract."""
-    import numpy as np
-    from pyspark.sql import types as T
-
-    R = np.asarray(rotation, dtype=np.float64)
-    schema = T.StructType(
-        [
-            T.StructField(id_col, T.LongType()),
-            T.StructField(vec_col, T.ArrayType(T.DoubleType())),
-        ]
-    )
-
-    def batches(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            mask = pdf[vec_col].notna()
-            out = [None] * len(pdf)
-            if mask.any():
-                V = np.array(pdf.loc[mask, vec_col].tolist(), dtype=np.float64)
-                W = V @ R
-                rows = list(W)
-                j = 0
-                for i, ok in enumerate(mask.to_numpy()):
-                    if ok:
-                        out[i] = rows[j]
-                        j += 1
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), vec_col: out})
-
-    return df.select(id_col, vec_col).mapInPandas(batches, schema=schema)
-
-
 def pq_train(
     df: DataFrame,
     id_col: str = "vec_id",
@@ -2326,7 +2096,7 @@ def pq_train(
     # every block's own job sequence — and therefore every FP op sequence —
     # is unchanged, so the codebooks are bit-identical to the sequential
     # form (pytest-asserted); only the submission overlaps. Measured on the
-    # x52/x59 plan builds (m=8, k=16, n_iters=2, sf0.001): ~8-9 s of
+    # x52/x55 plan builds (m=8, k=16, n_iters=2, sf0.001): ~8-9 s of
     # sequential job latency collapses to the longest single block. At
     # cluster scale the same overlap back-fills executors idled by each
     # block's small-agg tail.
@@ -2785,6 +2555,26 @@ def ivfpq_index(
     return corpus.select(id_col, vec_col).mapInPandas(batches, schema=schema)
 
 
+def _pack_code_cols(group_lens: list) -> list:
+    """LongType packing expressions for byte-wide PQ codes: group ``g``
+    packs ``codes[g*8 : g*8+group_lens[g]]`` big-endian, one byte per
+    code. Bit ops (``shiftleft | code``), NOT ``acc * 256 + x``: under
+    Spark 4's default ``spark.sql.ansi.enabled=true`` the arithmetic
+    form throws ARITHMETIC_OVERFLOW whenever a full 8-code group's
+    leading code has its top bit set (codebooks with 129–256 centroids)
+    — the sign bit is data here, and shifts don't overflow-check. The
+    numpy unpack side (arithmetic ``>>`` then ``& 255``) is
+    sign-agnostic by construction.
+    """
+    return [
+        F.expr(
+            f"aggregate(slice(codes, {g * 8 + 1}, {glen}), 0L, "
+            f"(acc, x) -> shiftleft(acc, 8) | cast(x AS bigint))"
+        ).alias(f"p{g}")
+        for g, glen in enumerate(group_lens)
+    ]
+
+
 def ivfpq_topk(
     index_df: DataFrame,
     queries: DataFrame,
@@ -2806,22 +2596,70 @@ def ivfpq_topk(
     coarse cells, ADC-scans ONLY the PQ codes in those cells, and the
     exact rerank scores the surviving ``shortlist`` against raw vectors.
 
+    Semantics (what a reference implementation must reproduce):
+
+    1. **Probe.** Per query, the ``n_probe`` cells with the highest
+       centroid cosine in the assignment space (``center_vec`` centers
+       it, as in :func:`ivfpq_index`); ties break to the lowest ``c_id``.
+    2. **Shortlist.** Every code in a probed cell is ADC-scored against
+       the query; self pairs (``n_id == q_id``, incl. ``assign_r > 1``
+       duplicates) are masked BEFORE the cut, so every slot holds a real
+       candidate. The cut keeps the first ``shortlist`` (cell, row)
+       scores by ``(dist, n_id)``; a multi-assigned row reached through
+       two probed cells may fill two slots and is then deduplicated.
+    3. **Rerank.** Exact cosine against the raw vectors, ranked by
+       ``(sim desc, n_id)``, top ``k``.
+
     Where the savings stack (vs :func:`pq_topk_rerank`, which ADC-scans
-    the WHOLE code table): the per-batch gather loop groups rows by
-    ``c_id`` and touches a cell only for the queries probing it, so the
-    ADC work drops from ``n_queries x n`` to
+    the WHOLE code table): a cell is touched only for the queries probing
+    it, so the ADC work drops from ``n_queries x n`` to
     ``~(n_probe / n_cells) x n_queries x n`` — and the rerank input is
     identical. Probe selection is driver-side numpy over the broadcast-
     small centroid table (``n_queries x n_cells`` cosines). The index
     (``index_df`` = :func:`ivfpq_index`) is build-once; queries stream
     against codes only.
 
+    Physical plan — one index scan regardless of probe depth:
+
+    - **Packed code transfer.** The per-row ``codes`` array<int> would
+      cross Arrow as a Python list per row (hundreds of millions of boxed
+      conversions at 12.8M × m16). The codes are packed JVM-side into
+      ``ceil(m/8)`` LongType columns (:func:`_pack_code_cols`, 8 one-byte
+      codes per long) and unpacked in numpy with vectorized shifts — the
+      Arrow transfer is zero-copy primitive columns. One byte per code
+      means every codebook must hold ≤ 256 centroids (``pq_train``
+      defaults to 16, the committed rungs use 64); a wider codebook is
+      refused loudly.
+    - **Cell-major layout + worker-side ADC tables.** The index is
+      repartitioned on ``c_id`` and sorted within partitions, so each
+      cell's rows arrive contiguously and its per-(query, cell) tables
+      are built once, next to the data, then discarded. The closure
+      carries only the query matrix, centroids and codebooks (a few
+      hundred KB), never an ``n_q x n_probe x m x k`` table tensor. The
+      repartition is one narrow shuffle of the packed codes (~24
+      bytes/row).
+    - **Per-partition shortlist fold + one global merge** (the
+      distributed top-k shape of REPOSE, ICDE 2021). Each partition folds
+      scores into per-query accumulators (vectorized lexsort prune on
+      ``(dist, n_id)``) and emits ONE Arrow-array row per (partition,
+      query): ≤ ``n_queries × n_partitions`` rows of ≤ ``shortlist``-long
+      arrays, a superset of the global top-``shortlist``. A
+      ``groupBy(q_id).applyInPandas`` concat+lexsort takes the global
+      cut — the same candidates cross the shuffle as a few thousand
+      packed arrays instead of a row per candidate into a ranking window.
+
+    Memory: per-partition accumulators are pruned whenever they exceed
+    ``max(1M, 2 × shortlist × n_queries)`` tuples, so a partition holds
+    O(shortlist × n_queries) candidate tuples, never its full scored set;
+    tables live one cell at a time (≤ n_queries × m × k doubles).
+
     Recall characteristics: on CLUSTERED corpora (the production regime)
     the coarse probe concentrates near-neighbors into few cells, so at
     equal shortlist the composition matches pq_rerank recall at a fraction
     of the cost; uniform vectors are the floor (neighbors spread across
     cells — raise ``n_probe``). Measured: tools/scale_ann_run.py --sweep,
-    SCALE_r08 ``ann`` section.
+    SCALE_r08 ``ann`` section; at the 6.4M/12.8M BoW rungs (SCALE_r13)
+    this scorer is the wall-clock path for deep probe/rerank configs.
 
     ``rerank_queries`` splits ADC space from scoring space (same contract
     as :func:`pq_topk_rerank`): for the FULLY-centered composition on
@@ -2829,8 +2667,8 @@ def ivfpq_topk(
     (``ivfpq_index(centered_corpus, centered_centroids, centered_books)``,
     no ``center_vec`` needed), query with centered ``queries``, and pass
     the raw frame as ``rerank_queries`` with the raw ``corpus`` — cells,
-    codes, and LUTs all see distinctive content; the returned metric stays
-    raw cosine.
+    codes, and tables all see distinctive content; the returned metric
+    stays raw cosine.
 
     ``residual=True`` queries a ``residual=True`` :func:`ivfpq_index` (true
     IVFADC): the ADC table is built per (query, probed cell) over the query
@@ -2838,9 +2676,7 @@ def ivfpq_topk(
     ``||q_a - (c + code)||^2``, comparable ACROSS cells because the
     per-cell constant stays in. ``coarse_centroids``/``codebooks``/
     ``center_vec`` must match the build (books from
-    :func:`coarse_residuals`). LUT cost rises from ``n_q x m x k`` to
-    ``n_q x n_probe x m x k`` (hard-capped — split query batches past it)
-    in exchange for codes that encode within-cell geometry.
+    :func:`coarse_residuals`).
 
     Measured on the 400k Zipf-BoW rung (``tools/ab_bow_residual.py``,
     interleaved best-of-3, SCALE_r09 ``ann.ab_bow_residual_400k``; centered
@@ -2881,6 +2717,14 @@ def ivfpq_topk(
     from pyspark.sql import types as T
 
     books, m = _pq_codebook_tensor(codebooks)
+    widest = max(b.shape[0] for b in books)
+    if widest > 256:
+        raise ValueError(
+            f"ivfpq_topk: a codebook holds {widest} centroids, but PQ codes "
+            f"are packed one byte per code (at most 256 centroids per "
+            f"block) — train with pq_train(k<=256)"
+        )
+
     cent_rows = _collect_small_side(coarse_centroids.orderBy("c_id"), "centroid")
     c_ids = np.array([r["c_id"] for r in cent_rows], dtype=np.int64)
     C = np.array([list(r["c_vec"]) for r in cent_rows], dtype=np.float64)
@@ -2894,15 +2738,14 @@ def ivfpq_topk(
     Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
     Qe = Qn if normalize else Q
 
-    # probe selection: top-n_probe cells per query (cosine, ties to the
-    # lowest c_id via stable argsort over -sim); with center_vec the probe
-    # runs in the same centered assignment space the index was built in
-    # (ADC/rerank below stay on raw vectors)
+    # probe selection: top-n_probe cells per query (cosine); with
+    # center_vec the probe runs in the same centered assignment space the
+    # index was built in (ADC/rerank below stay on raw vectors)
     Qa = Qn
     if center_vec is not None:
         Qc = Q - np.asarray(center_vec, dtype=np.float64)[None, :]
         Qa = Qc / np.maximum(np.linalg.norm(Qc, axis=1, keepdims=True), 1e-12)
-    sims = Qa @ Cn.T  # (nq, n_cells)
+    sims = Qa @ Cn.T
     n_take = min(n_probe, sims.shape[1])
     # full stable argsort (the centroid table is broadcast-small by
     # contract): ties at the probe boundary break to the lowest column =
@@ -2931,339 +2774,8 @@ def ivfpq_topk(
             )
         return out
 
-    if residual:
-        # true IVFADC: one LUT set per (probed cell, its queries) over the
-        # query residual q_a - c. Rows align with cell_to_q_np[cell], so the
-        # gather below indexes by LOCAL position. The per-cell constant
-        # ||q_a - c||^2 components stay in — distances are the genuine
-        # approximate ||q_a - (c + code)||^2, comparable across cells when
-        # the shortlist window merges candidates.
-        #
-        # LUT memory is n_q x n_probe x m x k doubles — n_probe x the
-        # non-residual path's tables, and the tensor ships to every task
-        # with the closure. Bound it loudly: past the cap, batch the query
-        # side (the tables are per-query-batch artifacts, so splitting
-        # queries is exact, not approximate).
-        k_max = max(b.shape[0] for b in books)
-        lut_cells = len(q_ids) * min(n_probe, len(c_ids)) * m * k_max
-        if lut_cells > RESIDUAL_LUT_CAP_DOUBLES:
-            raise ValueError(
-                f"ivfpq_topk(residual=True): per-(query, cell) ADC tables "
-                f"would hold {lut_cells} doubles "
-                f"(> {RESIDUAL_LUT_CAP_DOUBLES:.0e} cap, "
-                f"~{RESIDUAL_LUT_CAP_DOUBLES * 8 // 2**20} MB shipped in the "
-                f"mapInPandas closure) — use ivfpq_topk_batched (results are "
-                f"exact under query batching) or lower n_probe"
-            )
-        c_pos = {int(cid): i for i, cid in enumerate(c_ids)}
-        cell_luts = {
-            cell: _block_luts(Qa[qs] - C[c_pos[cell]][None, :])
-            for cell, qs in cell_to_q_np.items()
-        }
-        luts = None
-    else:
-        luts = _block_luts(Qe)  # (nq, k_b) per block
-
-    schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("n_id", T.LongType()),
-            T.StructField("dist", T.DoubleType()),
-        ]
-    )
-
-    def batches(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            out_q, out_n, out_d = [], [], []
-            for cell, grp in pdf.groupby("c_id"):
-                qs = cell_to_q_np.get(int(cell))
-                if qs is None:
-                    continue  # nobody probes this cell — the IVF saving
-                ids = grp[id_col].to_numpy()
-                codes = np.array(grp["codes"].tolist(), dtype=np.int64)
-                d = np.zeros((len(qs), len(ids)))
-                if residual:
-                    cl = cell_luts[int(cell)]  # rows already in qs order
-                    for b in range(m):
-                        d += cl[b][:, codes[:, b]]
-                else:
-                    for b in range(m):
-                        d += luts[b][qs][:, codes[:, b]]
-                kk = min(shortlist, d.shape[1])
-                sel = np.argpartition(d, kk - 1, axis=1)[:, :kk]
-                for row, qi in enumerate(qs):
-                    cols = sel[row]
-                    out_q.extend([q_ids[qi]] * len(cols))
-                    out_n.extend(ids[cols].tolist())
-                    out_d.extend(d[row, cols].tolist())
-            if out_q:
-                yield pd.DataFrame({"q_id": out_q, "n_id": out_n, "dist": out_d})
-
-    partial = index_df.mapInPandas(batches, schema=schema)
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("n_id"))
-    cand = (
-        partial.filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= shortlist)
-        # distinct: a multi-assigned index (ivfpq_index assign_r>1) can
-        # surface the same (q, n) from two probed cells with two ADC
-        # dists; the exact rerank must see it once. ≤ shortlist × n_q
-        # rows at this point — the exchange is noise.
-        .select("q_id", "n_id")
-        .distinct()
-    )
-    return _rerank_candidates(
-        cand, corpus, id_col, vec_col, k,
-        q_vecs=queries if rerank_queries is None else rerank_queries,
-    )
-
-
-def ivfpq_topk_batched(
-    index_df: DataFrame,
-    queries: DataFrame,
-    coarse_centroids: DataFrame,
-    codebooks: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_rows: int = 2048,
-    rerank_queries: DataFrame | None = None,
-    fused: bool = False,
-    **kwargs,
-) -> DataFrame:
-    """:func:`ivfpq_topk` over driver-chunked query batches — the form to
-    reach for when the residual path's per-(query, cell) ADC-table cap
-    trips (its error message points here): top-k is PER QUERY, so chunking
-    the query side and unioning results is exact, not approximate.
-
-    The query table is collected once (it is driver-side in ivfpq_topk
-    anyway, same ``_collect_small_side`` cap), id-chunked into
-    ``batch_rows`` slices, and each slice runs the full probe/ADC/rerank
-    pipeline; results union. At 100 TB this is also the natural service
-    shape: query batches stream against the build-once index at a bounded
-    per-batch table footprint. Extra cost vs one shot: one corpus-code
-    scan per chunk — size ``batch_rows`` to the LUT cap
-    (``RESIDUAL_LUT_CAP_DOUBLES / (n_probe * m * k)`` rows), not smaller.
-
-    ``fused=True`` runs each chunk through :func:`ivfpq_topk_fused`
-    (packed-code Arrow transfer + per-partition shortlist fusion — the
-    wall-clock path for deep probe/rerank configs at big N); results are
-    the same top-k either way."""
-    import math
-
-    inner = ivfpq_topk_fused if fused else ivfpq_topk
-    q_rows = _collect_small_side(queries.select(id_col, vec_col), "query")
-    if not q_rows:
-        return inner(
-            index_df, queries, coarse_centroids, codebooks, corpus,
-            id_col, vec_col, rerank_queries=rerank_queries, **kwargs,
-        )
-    spark = queries.sparkSession
-    schema = queries.select(id_col, vec_col).schema
-    out = None
-    for i in range(math.ceil(len(q_rows) / batch_rows)):
-        chunk = spark.createDataFrame(
-            q_rows[i * batch_rows : (i + 1) * batch_rows], schema
-        )
-        ids = {r[0] for r in q_rows[i * batch_rows : (i + 1) * batch_rows]}
-        rq = (
-            None
-            if rerank_queries is None
-            else rerank_queries.filter(F.col(id_col).isin(list(ids)))
-        )
-        part = inner(
-            index_df, chunk, coarse_centroids, codebooks, corpus,
-            id_col, vec_col, rerank_queries=rq, **kwargs,
-        )
-        out = part if out is None else out.unionByName(part)
-    return out
-
-
-def _pack_code_cols(group_lens: list) -> list:
-    """LongType packing expressions for byte-wide PQ codes: group ``g``
-    packs ``codes[g*8 : g*8+group_lens[g]]`` big-endian, one byte per
-    code. Bit ops (``shiftleft | code``), NOT ``acc * 256 + x``: under
-    Spark 4's default ``spark.sql.ansi.enabled=true`` the arithmetic
-    form throws ARITHMETIC_OVERFLOW whenever a full 8-code group's
-    leading code has its top bit set (codebooks with 129–256 centroids)
-    — the sign bit is data here, and shifts don't overflow-check. The
-    numpy unpack side (arithmetic ``>>`` then ``& 255``) is
-    sign-agnostic by construction.
-    """
-    return [
-        F.expr(
-            f"aggregate(slice(codes, {g * 8 + 1}, {glen}), 0L, "
-            f"(acc, x) -> shiftleft(acc, 8) | cast(x AS bigint))"
-        ).alias(f"p{g}")
-        for g, glen in enumerate(group_lens)
-    ]
-
-
-def ivfpq_topk_fused(
-    index_df: DataFrame,
-    queries: DataFrame,
-    coarse_centroids: DataFrame,
-    codebooks: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 8,
-    k: int = 10,
-    shortlist: int = 200,
-    normalize: bool = True,
-    center_vec: list[float] | None = None,
-    rerank_queries: DataFrame | None = None,
-    residual: bool = False,
-    adc_dtype: str = "float64",
-    merge: str = "arrays",
-) -> DataFrame:
-    """:func:`ivfpq_topk` with the ADC scan re-plumbed for wall clock —
-    same probe selection, same LUTs, same shortlist/rerank semantics
-    (pytest-asserted equal to ivfpq_topk on the committed fixtures; see
-    the KNOWN DIVERGENCE note below for the one regime where the two
-    paths legitimately differ), but physical changes that target exactly
-    where the big-N rungs spend their time:
-
-    1. **Packed code transfer.** The per-row ``codes`` array<int> column
-       crosses Arrow as a Python list per row, and
-       ``np.array(col.tolist())`` at 12.8M × m16 is hundreds of millions
-       of boxed conversions. Here the codes are packed JVM-side into
-       ``ceil(m/8)`` LongType columns (8 one-byte codes per long, a
-       whole-stage-codegen ``aggregate(slice(...))`` at scan time) and
-       unpacked in numpy with vectorized shifts — the Arrow transfer is
-       zero-copy primitive columns.
-    2. **Per-partition shortlist fusion + array-fold merge.** ivfpq_topk
-       emits up to ``min(shortlist, |cell∩batch|)`` rows per (probed
-       cell, query) — at deep-rerank configs (shortlist ≈ cell size)
-       that is nearly EVERY scored candidate shuffled into the ranking
-       window (~350M rows at the 12.8M/probe96/rerank6400 rung). Here
-       each partition folds scores into per-query accumulators
-       (vectorized lexsort prune, ``(dist, n_id)`` order — the reference
-       window's exact sort key, over the same post-self-filter
-       population) and emits ONE Arrow-array row per (partition, query):
-       ≤ ``n_queries × n_partitions`` rows of ≤ ``shortlist``-long
-       arrays, a strict superset of the global top-``shortlist``. A
-       ``groupBy(q_id).applyInPandas`` concat+lexsort replaces the
-       global row_number window entirely — the ``O(n_queries ×
-       n_partitions × shortlist)`` shuffled-row term that dominated
-       deep-shortlist configs is gone (the same candidates cross the
-       shuffle as a few thousand packed arrays).
-    3. **Vectorized emission.** ``np.repeat``/``np.concatenate`` replace
-       the per-row Python extend loop.
-
-    4. **Worker-side ADC tables + cell-major layout.** ivfpq_topk builds
-       every per-(query, probed cell) LUT on the driver and ships the
-       tensor in the mapInPandas closure — at deep probes that is a
-       ~200 MB broadcast per call AND the reason for
-       ``RESIDUAL_LUT_CAP_DOUBLES`` (whose escape hatch re-scans the
-       index once per query chunk). Here the closure carries only the
-       query matrix, centroids, and codebooks (a few hundred KB); the
-       index is repartitioned on ``c_id`` and sorted within partitions,
-       so each cell's rows arrive contiguously and its LUT is computed
-       once, next to the data, then discarded. No cap, no query
-       chunking: ONE index scan regardless of probe depth. The
-       repartition is one narrow shuffle of the packed codes (~24
-       bytes/row) — at 12.8M that is ~600 MB once, vs a second full
-       scan + 200 MB closure per extra query chunk on the reference
-       path.
-
-    ``adc_dtype="float32"`` halves LUT + accumulator memory bandwidth;
-    ADC dists are shortlist-selection ONLY (the rerank re-scores exactly,
-    same contract as :func:`ivfpq_topk`), so float32 can move a
-    same-distance tie at the shortlist boundary but recall is measured
-    indistinguishable (the committed rung A/Bs both dtypes).
-
-    Packing requires every codebook ≤ 256 centroids (one byte per code —
-    ``pq_train`` defaults k=64); larger books fall back to
-    :func:`ivfpq_topk` transparently.
-
-    Memory: per-partition accumulators are pruned whenever they exceed
-    ``max(1M, 2 × shortlist × n_queries)`` tuples, so a partition holds
-    O(shortlist × n_queries) candidate tuples, never its full scored set;
-    LUTs live one cell at a time (≤ n_queries × m × k doubles).
-
-    KNOWN DIVERGENCE (self-join queries at tight shortlists): this path
-    masks self pairs BEFORE its per-partition prune, so every shortlist
-    slot holds a real candidate. :func:`ivfpq_topk` instead lets a self
-    row occupy a slot in its per-cell ``argpartition`` and filters it
-    only AFTER the ranking window — so when a self query's ADC distance
-    lands in a cell fragment's top-``shortlist`` and the fragment has
-    more than ``shortlist`` members (the truncation binding), the
-    reference emits one fewer real candidate and the final top-k can
-    differ, with the fused result the better one (a real neighbor where
-    the reference burned the slot on the masked-out self row). The two
-    paths are therefore equal whenever queries are disjoint from the
-    index, or shortlists are not truncating — which covers every gated
-    oracle query — but NOT universally for self-join ANN; pinned by
-    ``test_fused_self_join_divergence_regime``.
-    """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    if merge not in ("arrays", "window"):
-        # a typo like "windows" would silently select the arrays path and
-        # invalidate any A/B that believed it was timing the window arm
-        raise ValueError(f"merge must be 'arrays' or 'window', got {merge!r}")
-
-    books, m = _pq_codebook_tensor(codebooks)
-    if any(b.shape[0] > 256 for b in books):
-        return ivfpq_topk(
-            index_df, queries, coarse_centroids, codebooks, corpus,
-            id_col, vec_col, n_probe=n_probe, k=k, shortlist=shortlist,
-            normalize=normalize, center_vec=center_vec,
-            rerank_queries=rerank_queries, residual=residual,
-        )
-    dt = np.float32 if adc_dtype == "float32" else np.float64
-
-    cent_rows = _collect_small_side(coarse_centroids.orderBy("c_id"), "centroid")
-    c_ids = np.array([r["c_id"] for r in cent_rows], dtype=np.int64)
-    C = np.array([list(r["c_vec"]) for r in cent_rows], dtype=np.float64)
-    if residual:
-        _check_residual_centroid_scale(C, "ivfpq_topk_fused(residual=True)")
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-
-    q_rows = _collect_small_side(queries.select(id_col, vec_col), "query")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    Qe = Qn if normalize else Q
-
-    Qa = Qn
-    if center_vec is not None:
-        Qc = Q - np.asarray(center_vec, dtype=np.float64)[None, :]
-        Qa = Qc / np.maximum(np.linalg.norm(Qc, axis=1, keepdims=True), 1e-12)
-    sims = Qa @ Cn.T
-    n_take = min(n_probe, sims.shape[1])
-    part = np.argsort(-sims, axis=1, kind="stable")[:, :n_take]
-    cell_to_q: dict[int, list[int]] = {}
-    for qi in range(len(q_ids)):
-        for ci in part[qi]:
-            cell_to_q.setdefault(int(c_ids[ci]), []).append(qi)
-    cell_to_q_np = {c: np.array(v, dtype=np.int64) for c, v in cell_to_q.items()}
-
-    dsub = Qe.shape[1] // m
-
-    def _block_luts(X):
-        out = []
-        for b in range(m):
-            sub = X[:, b * dsub : (b + 1) * dsub]
-            B = books[b]
-            out.append(
-                (
-                    (sub * sub).sum(axis=1)[:, None]
-                    - 2.0 * (sub @ B.T)
-                    + (B * B).sum(axis=1)[None, :]
-                ).astype(dt)
-            )
-        return out
-
-    # Worker-side LUT inputs: per probed cell the workers rebuild the
-    # per-(query, cell) residual tables from these three small arrays —
-    # the closure ships O(nq·dim + cells·dim + m·k·dsub) doubles instead
-    # of the O(nq · n_probe · m · k) LUT tensor ivfpq_topk broadcasts
-    # (the cap that forces it to chunk queries and re-scan the index).
+    # Worker-side table inputs: per probed cell the workers rebuild the
+    # per-(query, cell) residual tables from these small arrays
     c_pos = {int(cid): i for i, cid in enumerate(c_ids)}
     luts = None if residual else _block_luts(Qe)
 
@@ -3271,8 +2783,8 @@ def ivfpq_topk_fused(
     group_lens = [min(8, m - g * 8) for g in range(n_groups)]
     pack_cols = _pack_code_cols(group_lens)
     # cell-major layout: hash-repartition on c_id + in-partition sort
-    # makes each cell's rows contiguous in one partition, so its LUT is
-    # built exactly once and freed when the scan moves past it
+    # makes each cell's rows contiguous in one partition, so its tables
+    # are built exactly once and freed when the scan moves past it
     packed = (
         index_df.select(F.col(id_col), F.col("c_id"), *pack_cols)
         .repartition(F.col("c_id"))
@@ -3290,8 +2802,8 @@ def ivfpq_topk_fused(
     prune_at = max(1_000_000, 2 * shortlist * max(nq, 1))
 
     def _prune(qa, na, da, per_q):
-        """Exact per-query top-``per_q`` by (dist, n_id) — the ranking
-        window's sort key, vectorized over all queries at once."""
+        """Exact per-query top-``per_q`` by (dist, n_id), vectorized
+        over all queries at once."""
         o = np.lexsort((na, da, qa))
         qa, na, da = qa[o], na[o], da[o]
         starts = np.flatnonzero(np.r_[True, qa[1:] != qa[:-1]])
@@ -3305,7 +2817,7 @@ def ivfpq_topk_fused(
         acc_n: list[np.ndarray] = []
         acc_d: list[np.ndarray] = []
         held = 0
-        # per-cell residual LUTs, built HERE from the small shipped
+        # per-cell residual tables, built HERE from the small shipped
         # arrays. Cells arrive contiguously (repartition + sort above),
         # so a fragment-boundary memo of a few entries gives one build
         # per (cell, partition); the dict is cleared when it grows past
@@ -3335,7 +2847,7 @@ def ivfpq_topk_fused(
                 rows = order[s:e]
                 ids = ids_all[rows]
                 cc = codes[rows]
-                d = np.zeros((len(qs), len(ids)), dtype=dt)
+                d = np.zeros((len(qs), len(ids)))
                 if residual:
                     cl = lut_memo.get(cell)
                     if cl is None:
@@ -3350,14 +2862,10 @@ def ivfpq_topk_fused(
                         d += luts[b][qs][:, cc[:, b]]
                 qa_c = np.repeat(q_ids[qs], len(ids))
                 na_c = np.tile(ids, len(qs))
-                da_c = d.ravel().astype(np.float64, copy=False)
+                da_c = d.ravel()
                 # Self pairs (query vector present in the index, incl.
                 # assign_r>1 duplicates) are dropped HERE, before the
-                # prune, so a self row never burns a prune slot. NOTE:
-                # ivfpq_topk's per-cell argpartition DOES rank self rows
-                # (its filter runs post-window), so under a binding
-                # per-cell truncation the two paths legitimately diverge
-                # — see the KNOWN DIVERGENCE docstring note.
+                # prune, so a self row never burns a shortlist slot
                 sm = qa_c != na_c
                 if not sm.all():
                     qa_c, na_c, da_c = qa_c[sm], na_c[sm], da_c[sm]
@@ -3377,9 +2885,6 @@ def ivfpq_topk_fused(
                 np.concatenate(acc_q), np.concatenate(acc_n),
                 np.concatenate(acc_d), shortlist,
             )
-            if merge == "window":
-                yield pd.DataFrame({"q_id": qa, "n_id": na, "dist": da})
-                return
             # _prune's lexsort leaves qa grouped — emit ONE array row
             # per (partition, query): ≤ nq rows of ≤ shortlist-long
             # arrays per partition instead of nq × shortlist candidate
@@ -3397,40 +2902,12 @@ def ivfpq_topk_fused(
                 }
             )
 
-    if merge == "window":
-        # the pre-r14 physical form, kept for interleaved A/Bs: emit
-        # per-partition top-shortlist ROWS into a global ranking window
-        # (the self-pair mask inside `batches` applies to both forms, so
-        # window/arrays stay bit-identical)
-        row_schema = T.StructType(
-            [
-                T.StructField("q_id", T.LongType()),
-                T.StructField("n_id", T.LongType()),
-                T.StructField("dist", T.DoubleType()),
-            ]
-        )
-        partial = packed.mapInPandas(batches, schema=row_schema)
-        w = Window.partitionBy("q_id").orderBy(
-            F.col("dist").asc(), F.col("n_id")
-        )
-        cand = (
-            partial.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= shortlist)
-            .select("q_id", "n_id")
-            .distinct()
-        )
-        return _rerank_candidates(
-            cand, corpus, id_col, vec_col, k,
-            q_vecs=queries if rerank_queries is None else rerank_queries,
-        )
-
     partial = packed.mapInPandas(batches, schema=schema)
 
     def _merge(pdf):
         # Global top-``shortlist`` per query over the per-partition
-        # arrays — same population (self pairs already masked) and same
-        # (dist, n_id) order + post-rank distinct as the reference
-        # path's window, so the rerank sees identical survivors.
+        # arrays (self pairs already masked), cut by (dist, n_id), then
+        # deduplicated: a multi-assigned row can survive via two cells.
         na = np.concatenate([np.asarray(v, dtype=np.int64) for v in pdf["n_ids"]])
         da = np.concatenate([np.asarray(v, dtype=np.float64) for v in pdf["dists"]])
         top = np.lexsort((na, da))[:shortlist]

@@ -111,36 +111,9 @@ def q02_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = load_table(spark, sf_dir, "nation")
     region = load_table(spark, sf_dir, "region")
     revenue = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    # NOTE (r16, measured NEGATIVE — do not re-try without new evidence):
-    # pre-aggregating lineitem by orderkey before the orders join (guide
-    # §2.3) was prototyped behind SPARK_GRAFT_Q02_PREAGG and A/B'd at a 20×
-    # rung where the pruned orders projection (16 MB) exceeds the broadcast
-    # threshold, so both arms plan the real orderkey SortMergeJoin
-    # (tools/q02_rung_r16.py, interleaved fresh sessions, best-of-3 noop):
-    # pre-agg 1.922 s vs straight join 1.579 s best (ratio 1.22; reps mixed,
-    # never a win). Why it cannot win here: lineitem averages ~4 rows per
-    # order SCATTERED across map tasks, so map-side partial aggregation
-    # reduces almost nothing before the exchange, and the pre-agg row
-    # (orderkey, rev, cnt — 24 B) is no narrower than the projected
-    # lineitem row (orderkey, extendedprice, discount — 24 B): same shuffle
-    # bytes, plus a 3M-distinct-key hash aggregate on top. The arm was
-    # oracle-green at all three SFs (re-associated FP sum stable), so the
-    # blocker is performance, not correctness.
-    if os.environ.get("SPARK_GRAFT_Q02_PREAGG", "off") == "on":
-        li_pre = li.groupBy("l_orderkey").agg(
-            F.sum(revenue).alias("__rev"), F.count(F.lit(1)).alias("__cnt")
-        )
-        return (
-            li_pre.join(orders, li_pre.l_orderkey == orders.o_orderkey)
-            .join(customer, orders.o_custkey == customer.c_custkey)
-            .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey)
-            .join(F.broadcast(region), nation.n_regionkey == region.r_regionkey)
-            .groupBy("r_name", "n_name")
-            .agg(
-                F.round(F.sum("__rev"), 2).alias("revenue"),
-                F.sum("__cnt").alias("n_items"),
-            )
-        )
+    # pre-aggregating lineitem by orderkey before the orders join measured
+    # 1.22x slower at a 20x rung (r16): ~4 rows per order scattered across
+    # map tasks leave the partial aggregate nothing to reduce
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(customer, orders.o_custkey == customer.c_custkey)

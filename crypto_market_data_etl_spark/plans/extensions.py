@@ -2337,11 +2337,11 @@ WHERE n.nrm > 0 AND round(c.v / n.nrm, 6) <> 0.0
 # coarse cells -> fused one-pass index -> per-cell ADC gather -> exact
 # rerank) with every cell probed and an uncut shortlist must reproduce
 # brute-force cosine top-k EXACTLY — so the whole machinery (index build,
-# probe selection, LUT gather, shortlist window, rerank) is gated by the
-# same DuckDB oracle as x05, independent of any centroid/codebook float
-# noise (approximation quality is measured separately: SCALE ann sweeps).
-# The x47-max-score pattern: an optimized path proven invisible under its
-# parent's oracle.
+# probe selection, code packing, c_id repartition, per-partition
+# shortlist fold and merge, rerank) is gated by the same DuckDB oracle as
+# x05, independent of any centroid/codebook float noise (approximation
+# quality is measured separately: SCALE ann sweeps). The x47-max-score
+# pattern: an optimized path proven invisible under its parent's oracle.
 # --------------------------------------------------------------------------
 
 def _overlap2(spark: SparkSession, fa, fb):
@@ -2375,7 +2375,7 @@ def x52_ivfpq_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = embs.filter(F.col("vec_id") % QUERY_MOD == 0)
     # r16 (guide §2.6, VERDICT r15 #7): the coarse k-means and the PQ
     # codebook trainings are INDEPENDENT here (non-residual — the books
-    # train on raw sub-vectors, not on coarse residuals like x55/x59), and
+    # train on raw sub-vectors, not on coarse residuals like x55), and
     # each is a chain of driver-blocking eager jobs; submitting both from a
     # 2-thread pool overlaps one chain's small-agg tails with the other's
     # jobs. Each training's own job sequence — and FP op sequence — is
@@ -2614,40 +2614,6 @@ def x55_ivfpq_residual_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 # --------------------------------------------------------------------------
-# x59 fused-ADC degeneracy: ivfpq_topk_fused (packed-code Arrow transfer,
-# worker-side ADC tables over cell-major-sorted codes, per-partition
-# shortlist fusion — the wall-clock scorer the SCALE_r13 fusedwall rungs
-# measure at 3.4-5.7x ivfpq_topk) under exhaustive probe + uncut
-# shortlist must degenerate to EXACT brute-force top-k on x05's DuckDB
-# oracle — the x52/x53/x55 pattern, here gating every fused-path physical
-# change (packing/unpacking, the lexsort prune's (dist, n_id) order, the
-# c_id repartition) end-to-end, not just via pytest parity.
-# --------------------------------------------------------------------------
-
-def x59_ivfpq_fused_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.similarity import (
-        coarse_residuals,
-        ivfpq_index,
-        ivfpq_topk_fused,
-        kmeans_train,
-        pq_train,
-    )
-
-    embs = _embs(spark, sf_dir)
-    queries = embs.filter(F.col("vec_id") % QUERY_MOD == 0)
-    cents = kmeans_train(embs, centroid_filter=F.col("vec_id") % 50 == 1, n_iters=2)
-    books = pq_train(
-        coarse_residuals(embs, cents), vec_col="resid", m=8, k=16, n_iters=2, dim=DIM
-    )
-    idx = ivfpq_index(embs, cents, books, residual=True)
-    exhaustive = 10**9  # > any cell/corpus count: probe all, cut nothing
-    return ivfpq_topk_fused(
-        idx, queries, cents, books, embs,
-        n_probe=exhaustive, k=5, shortlist=exhaustive, residual=True,
-    )
-
-
-# --------------------------------------------------------------------------
 # x58 k-means|| seeding degeneracy: coarse cells from kmeans_parallel_init
 # (Bahmani et al., VLDB 2012 — distance-weighted oversampling, driver-side
 # greedy weighted k-means++ finisher) + Lloyd refinement, probing every
@@ -2778,7 +2744,6 @@ VARIANT_QUERIES = {
     "x56_hashed_embeddings_inrow": x56_hashed_embeddings_inrow,
     "x57_probe_cells_inrow": x57_probe_cells_inrow,
     "x58_ivf_kmpp_exhaustive": x58_ivf_kmpp_exhaustive,
-    "x59_ivfpq_fused_exhaustive": x59_ivfpq_fused_exhaustive,
 }
 
 VARIANT_ORACLES = {
@@ -2813,5 +2778,4 @@ VARIANT_ORACLES = {
     "x56_hashed_embeddings_inrow": X49_SQL,
     "x57_probe_cells_inrow": X57_SQL,
     "x58_ivf_kmpp_exhaustive": X05_SQL,
-    "x59_ivfpq_fused_exhaustive": X05_SQL,
 }

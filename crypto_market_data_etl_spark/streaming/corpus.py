@@ -383,7 +383,6 @@ def verify_neardup_batch(
     rows_per_band: int = 3,
     threshold: float = 0.7,
     corpus_index: CorpusVerifyIndex | None = None,
-    broadcast_candidates: bool = False,
     scratch_out: list | None = None,
 ) -> DataFrame:
     """Exact-verify a BATCH of gate-flagged candidate documents against the
@@ -406,22 +405,13 @@ def verify_neardup_batch(
     corpus shingles/bands are O(corpus) per call on the re-shingle path —
     pass ``corpus_index`` (a :class:`CorpusVerifyIndex`, built once) to
     amortize that pass across triggers; verdicts are bit-identical either
-    way (same comparators; pytest-asserted).
-
-    ``broadcast_candidates=True`` hints every candidate-derived join input
-    as the BROADCAST side so the corpus-side tables are never shuffled.
-    MEASURED NEGATIVE — leave False (the default): at the SCALE_r12
-    flagged-axis rung the forced-broadcast arm ran 2.6-3.1x SLOWER per
-    trigger than the un-hinted plan (50 flagged/trigger: 60.5 s vs
-    19.5 s) with walls GROWING across triggers, even after materializing
-    ``pairs``. AQE already broadcasts genuinely-small sides where it pays;
-    forcing the hint re-executes each broadcast side's subplan per join
-    site and pressures driver broadcast cleanup. Join strategy only —
-    verdicts are identical either way (pytest-asserted); the knob is kept
-    so the A/B stays reproducible.
+    way (same comparators; pytest-asserted). Join strategy is left to AQE:
+    forcing the candidate side to broadcast measured 2.6-3.1x slower per
+    trigger at the SCALE_r12 flagged-axis rung (broadcast subplans re-run
+    per join site).
 
     ``scratch_out``: the call materializes per-batch scratch tables (the
-    candidate shingles; ``pairs`` when the broadcast knob is on). On the
+    candidate shingles). On the
     persist path (non-local master) those blocks live until an explicit
     unpersist, so a per-trigger caller would grow storage unboundedly over
     a long-lived stream. Pass a list and the scratch frames are appended
@@ -456,13 +446,8 @@ def verify_neardup_batch(
     bands_s = lsh_bands(
         minhash_signatures(sh_s, id_col, n_hashes), id_col, n_hashes, rows_per_band
     )
-    # candidate-side broadcast hint (A/B knob, measured NEGATIVE — see
-    # the docstring): puts the candidate-derived input on the build side
-    # of every corpus-touching join. The default un-hinted plan lets AQE
-    # decide, which measured 2.6-3.1x faster per trigger
-    hint = F.broadcast if broadcast_candidates else (lambda df: df)
     pairs = (
-        hint(bands_s.select(F.col(id_col).alias("id_s"), "band_idx", "band_sig"))
+        bands_s.select(F.col(id_col).alias("id_s"), "band_idx", "band_sig")
         .join(
             bands_c.select(F.col(id_col).alias("id_c"), "band_idx", "band_sig"),
             ["band_idx", "band_sig"],
@@ -471,29 +456,17 @@ def verify_neardup_batch(
         .select("id_s", "id_c")
         .distinct()
     )
-    if broadcast_candidates:
-        # pairs feeds THREE consumers (inter twice-removed, jac, best);
-        # broadcast subplans are re-executed per join site, so without
-        # this the banded corpus join above would run once per consumer —
-        # measured 2.6x worse than the un-hinted shuffle-reuse plan.
-        # Materialized, the corpus band table is scanned exactly once per
-        # call and every downstream broadcast side is candidate-sized.
-        pairs = materialize(pairs, eager=True)
-        if scratch_out is not None:
-            scratch_out.append(pairs)
     sizes_s = sh_s.groupBy(id_col).agg(F.count(F.lit(1)).alias("n_s"))
     inter = (
-        hint(pairs.join(sh_s.select(F.col(id_col).alias("id_s"), "s"), "id_s"))
+        pairs.join(sh_s.select(F.col(id_col).alias("id_s"), "s"), "id_s")
         .join(sh_c.select(F.col(id_col).alias("id_c"), "s"), ["id_c", "s"])
         .groupBy("id_s", "id_c")
         .agg(F.count(F.lit(1)).alias("n_inter"))
     )
     jac = (
-        hint(
-            pairs.join(inter, ["id_s", "id_c"], "left")
-            .na.fill({"n_inter": 0})
-            .join(sizes_s.select(F.col(id_col).alias("id_s"), "n_s"), "id_s")
-        )
+        pairs.join(inter, ["id_s", "id_c"], "left")
+        .na.fill({"n_inter": 0})
+        .join(sizes_s.select(F.col(id_col).alias("id_s"), "n_s"), "id_s")
         .join(sizes_c.select(F.col(id_col).alias("id_c"), "n_c"), "id_c")
         .select(
             "id_s",
@@ -538,7 +511,6 @@ def stream_neardup_verified(
     checkpoint: str | None = None,
     query_name: str = "neardup_verified",
     reuse_corpus_index: bool = True,
-    broadcast_candidates: bool = False,
 ):
     """:func:`stream_neardup_flag` with the batch exact-verify arm WIRED:
     the gate's band-collision candidates are re-judged per micro-batch by
@@ -559,11 +531,7 @@ def stream_neardup_verified(
     reused every trigger (``reuse_corpus_index=True``, the default since
     r11) — the per-trigger corpus re-shingle the r10 docstring admitted to
     is gone; pass ``False`` only to A/B the re-shingle path (verdicts are
-    bit-identical — pytest + the SCALE stream_verify rung assert it).
-    ``broadcast_candidates`` forwards to :func:`verify_neardup_batch` —
-    keep the default False: forcing the candidate-side broadcast measured
-    2.6-3.1x slower per trigger than the AQE-chosen plan (committed
-    negative, SCALE_r12 stream_verify flagged-axis)."""
+    bit-identical — pytest + the SCALE stream_verify rung assert it)."""
     corpus_index = (
         CorpusVerifyIndex(
             corpus, id_col, text_col, shingle_n, n_hashes, rows_per_band
@@ -585,7 +553,6 @@ def stream_neardup_verified(
             flagged, corpus, id_col, text_col,
             shingle_n, n_hashes, rows_per_band, threshold,
             corpus_index=corpus_index,
-            broadcast_candidates=broadcast_candidates,
             scratch_out=scratch,
         )
         out = (
@@ -599,8 +566,8 @@ def stream_neardup_verified(
         try:
             sink(out, batch_id)
         finally:
-            # per-trigger scratch (candidate shingles; pairs/corpus
-            # shingles on the hinted / re-shingle arms): on the persist
+            # per-trigger scratch (candidate shingles; corpus shingles
+            # on the re-shingle arm): on the persist
             # path these would otherwise accumulate in _PERSISTED forever
             # over a long-lived stream — the sink has fully consumed `out`
             # by now, so the blocks are dead

@@ -292,40 +292,6 @@ def test_sign_lsh_family_sweep_null_vector_parity(spark, embs):
         assert sorted(map(tuple, sweep)) == sorted(map(tuple, expr)), name
 
 
-def test_rerank_arrow_tier_bit_parity(spark, embs, monkeypatch):
-    """r16 (VERDICT r15 #6): the env-gated Arrow rerank tier — _sweep_rows
-    over candidate pairs instead of the per-pair JVM fold — must emit the
-    IDENTICAL full output (ids, ranks, 6dp sims) across the ANN family,
-    including whole-NULL vectors (NULL sim routes around the kernel). It is
-    default-off (the x13 lesson: both vectors cross the Arrow boundary, a
-    loss at fixture pair counts; tools/rerank_probe_r16.py holds the
-    probe-scale evidence for when to flip it)."""
-    from crypto_market_data_etl_spark.operators.similarity import (
-        lsh_ann_multiprobe,
-        lsh_ann_bandor,
-    )
-
-    nul = spark.createDataFrame(
-        [(900001, None, 0)], "vec_id long, embedding array<float>, label int"
-    )
-    dfn = embs.unionByName(nul)
-    qs = dfn.filter((F.col("vec_id") % 25 == 0) | F.col("embedding").isNull())
-    # x13 (lsh_ann_topk) computes its sims inline, not via
-    # _rerank_candidates — the knob intentionally does not reach it
-    cases = [
-        ("x17", lambda: lsh_ann_multiprobe(dfn, qs, n_planes=6, k=3)),
-        ("x18", lambda: lsh_ann_bandor(
-            dfn, qs, planes_per_table=4, n_tables=3, k=3)),
-    ]
-    for name, fn in cases:
-        monkeypatch.setenv("SPARK_GRAFT_RERANK_ARROW", "1")
-        arrow = fn().collect()
-        monkeypatch.delenv("SPARK_GRAFT_RERANK_ARROW")
-        expr = fn().collect()
-        assert len(arrow) > 0, name
-        assert sorted(map(tuple, arrow)) == sorted(map(tuple, expr)), name
-
-
 def test_signature_sweep_id_exactness_past_2_53(spark):
     """r16 (ADVICE r15): the sweep must not corrupt ids > 2^53 when a NULL
     id shares the batch. The old mapInPandas form let Arrow widen
@@ -772,72 +738,6 @@ def test_pq_train_seed_edge_cases(spark):
         pq_train(df, m=m, k=kc, n_iters=1, dim=dim, seed_mod=3).collect()
     finally:
         sim.PQ_TRAIN_PROBE_CAP = old
-
-
-def test_opq_rotation_orthogonal_invariant_and_balanced(spark):
-    """OPQ-lite rotation invariants: (1) R is orthogonal; (2) brute cosine
-    top-k is IDENTICAL on rotated corpus+queries (rotation invariance — the
-    whole-pipeline-rotation trick is exact); (3) eigenvalue allocation
-    balances per-block variance on an anisotropic corpus where contiguous
-    slices are maximally unbalanced; (4) deterministic; (5) NULL vectors
-    pass through rotate_vectors as NULL."""
-    import numpy as np
-
-    from crypto_market_data_etl_spark.operators.similarity import (
-        cosine_topk_np,
-        opq_rotation_train,
-        rotate_vectors,
-    )
-
-    rng = np.random.default_rng(11)
-    dim, m, n = 8, 2, 300
-    # anisotropic: dims 0..3 get 10x the stddev of dims 4..7, so the
-    # contiguous split (block0 = dims 0-3) holds ~100x block1's variance
-    scales = np.array([10.0, 8.0, 6.0, 5.0, 1.0, 0.8, 0.6, 0.5])
-    X = rng.normal(size=(n, dim)) * scales
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-    R = opq_rotation_train(df, m=m, dim=dim)
-    assert np.allclose(R @ R.T, np.eye(dim), atol=1e-9)  # (1)
-    R2 = opq_rotation_train(df, m=m, dim=dim)
-    assert np.allclose(R, R2)  # (4)
-
-    # (3): block variances balanced vs the contiguous split
-    Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    W = Xn @ R
-    dsub = dim // m
-    var_rot = [W[:, b * dsub:(b + 1) * dsub].var(axis=0).sum() for b in range(m)]
-    var_raw = [Xn[:, b * dsub:(b + 1) * dsub].var(axis=0).sum() for b in range(m)]
-    assert max(var_rot) / min(var_rot) < max(var_raw) / min(var_raw) / 3
-
-    # (2): exact top-k unchanged under whole-pipeline rotation
-    qX = rng.normal(size=(5, dim)) * scales
-    qdf = spark.createDataFrame(
-        [(1000 + i, [float(v) for v in qX[i]]) for i in range(5)],
-        "vec_id long, embedding array<double>",
-    )
-    def topk_sets(corpus_df, q_df):
-        out: dict[int, set] = {}
-        for r in cosine_topk_np(corpus_df, q_df, k=3).collect():
-            out.setdefault(r["q_id"], set()).add(r["n_id"])
-        return out
-
-    assert topk_sets(df, qdf) == topk_sets(
-        rotate_vectors(df, R), rotate_vectors(qdf, R)
-    )
-
-    # (5): NULL passthrough
-    nulls = spark.createDataFrame(
-        [(1, [1.0] * dim), (2, None)], "vec_id long, embedding array<double>"
-    )
-    out = {r.vec_id: r.embedding for r in rotate_vectors(nulls, R).collect()}
-    assert out[2] is None and out[1] is not None
-
-    # dim % m guard
-    with pytest.raises(ValueError, match="divisible"):
-        opq_rotation_train(df, m=3, dim=dim)
 
 
 def test_pq_encode_decode_and_adc(spark):
@@ -2455,6 +2355,41 @@ def test_materialize_mode_knob(spark, monkeypatch):
         out.unpersist()
 
 
+def test_materialize_plan_capture_concurrent_calls_distinct_files(
+    spark, monkeypatch, tmp_path
+):
+    """Threads materializing at once (x52's _overlap2 runs two training
+    chains that both call materialize) must leave one capture file each:
+    naming by directory size let concurrent calls draw the same number."""
+    import sys
+    import threading
+
+    from crypto_market_data_etl_spark.materialize import materialize
+
+    monkeypatch.setenv("SPARK_GRAFT_PLAN_CAPTURE_DIR", str(tmp_path))
+    n_threads = 6  # more than the session's 4 cores
+    start = threading.Barrier(n_threads, timeout=60)
+
+    def run(n):
+        start.wait()
+        materialize(spark.range(n).selectExpr("id * 2 AS x"))
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in range(n_threads)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    files = list(tmp_path.iterdir())
+    assert len(files) == n_threads
+    assert all(f.read_text().strip() for f in files)
+
+
 def test_materialize_release_all_frees_persist_mode_tables(spark, monkeypatch):
     """Cluster-mode lifecycle hook: persisted tables are tracked and
     release_all() unpersists them; the localCheckpoint path registers
@@ -2731,69 +2666,21 @@ def test_probe_cells_expr_matches_rank_rule(spark):
                 assert r.cells.index(1) < r.cells.index(3)
 
 
-def test_ivfpq_topk_batched_equals_unbatched(spark):
-    """Query-chunked ivfpq_topk (the residual LUT-cap escape hatch) is
-    EXACT: per-query top-k is independent of which batch a query rides in,
-    so tiny batches must reproduce the one-shot result bit-for-bit — on
-    both the residual and plain paths."""
+def test_ivfpq_topk_matches_numpy_reference(spark):
+    """ivfpq_topk (packed-code Arrow transfer, cell-major worker-side ADC
+    tables, per-partition shortlist fold + global merge) must reproduce
+    the numpy IVFADC+R reference (tests/ivfadc_reference.py) on the plain
+    and residual paths, across multi-group packing (m=16 -> two packed
+    longs), multi-assignment dedup, and a tiny shortlist that makes the
+    per-partition prune boundary bind."""
     import numpy as np
+
+    from tests.ivfadc_reference import assert_matches_reference, ivfadc_r_reference
 
     from crypto_market_data_etl_spark.operators.similarity import (
         coarse_residuals,
         ivfpq_index,
         ivfpq_topk,
-        ivfpq_topk_batched,
-        kmeans_train,
-        pq_train,
-    )
-
-    rng = np.random.default_rng(31)
-    dim, m, kc, n = 16, 4, 8, 240
-    centers = rng.normal(size=(5, dim))
-    X = centers[np.arange(n) % 5] + 0.2 * rng.normal(size=(n, dim))
-    X = X / np.linalg.norm(X, axis=1, keepdims=True)  # assignment-space fixture
-    df = spark.createDataFrame(
-        [(i, [float(v) for v in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-    cents = kmeans_train(df, centroid_filter=F.col("vec_id") % 40 == 1, n_iters=2)
-    books = pq_train(
-        coarse_residuals(df, cents), vec_col="resid", m=m, k=kc, n_iters=2, dim=dim
-    )
-    idx = ivfpq_index(df, cents, books, residual=True).localCheckpoint()
-    qs = spark.createDataFrame(
-        [(10_000 + i, [float(v) for v in X[i * 29]]) for i in range(7)],
-        "vec_id long, embedding array<double>",
-    )
-    one = ivfpq_topk(
-        idx, qs, cents, books, df, n_probe=3, k=4, shortlist=60, residual=True
-    ).collect()
-    batched = ivfpq_topk_batched(
-        idx, qs, cents, books, df, batch_rows=2,
-        n_probe=3, k=4, shortlist=60, residual=True,
-    ).collect()
-    key = lambda r: (r.q_id, r.rnk, r.n_id, r.sim)  # noqa: E731
-    assert sorted(map(key, batched)) == sorted(map(key, one))
-    assert len(one) > 0
-
-
-def test_ivfpq_topk_fused_equals_reference(spark):
-    """The fused ADC scorer (packed-code Arrow transfer + per-partition
-    shortlist fusion) is a PHYSICAL variant of ivfpq_topk: same probe
-    selection, same LUTs, same (dist, n_id) shortlist order — the final
-    reranked top-k must be bit-identical on both the plain and residual
-    paths, across multi-group packing (m=16 -> two packed longs),
-    multi-assignment dedup, and the query-batched wrapper. The float32
-    ADC arm re-ranks exactly, so its top-k matches on this margin-rich
-    fixture too."""
-    import numpy as np
-
-    from crypto_market_data_etl_spark.operators.similarity import (
-        coarse_residuals,
-        ivfpq_index,
-        ivfpq_topk,
-        ivfpq_topk_batched,
-        ivfpq_topk_fused,
         kmeans_train,
         pq_train,
     )
@@ -2812,10 +2699,15 @@ def test_ivfpq_topk_fused_equals_reference(spark):
         [(10_000 + i, [float(v) for v in X[i * 31]]) for i in range(9)],
         "vec_id long, embedding array<double>",
     )
-    key = lambda r: (r.q_id, r.rnk, r.n_id, round(r.sim, 9))  # noqa: E731
 
-    # m=4 (one packed long, partial group) and m=16 (two full groups)
-    for m, residual, assign_r in ((4, True, 1), (16, False, 1), (4, True, 2)):
+    # m=4 (one packed long, partial group) and m=16 (two full groups);
+    # the last case's shortlist of 5 binds the per-partition prune
+    for m, residual, assign_r, k, shortlist in (
+        (4, True, 1, 4, 60),
+        (16, False, 1, 4, 60),
+        (4, True, 2, 4, 60),
+        (4, True, 1, 3, 5),
+    ):
         if residual:
             books = pq_train(
                 coarse_residuals(df, cents), vec_col="resid",
@@ -2826,39 +2718,47 @@ def test_ivfpq_topk_fused_equals_reference(spark):
         idx = ivfpq_index(
             df, cents, books, residual=residual, assign_r=assign_r
         ).localCheckpoint()
-        kw = dict(n_probe=3, k=4, shortlist=60, residual=residual)
-        ref = sorted(map(key, ivfpq_topk(
-            idx, qs, cents, books, df, **kw).collect()))
+        kw = dict(n_probe=3, k=k, shortlist=shortlist, residual=residual)
+        ref = ivfadc_r_reference(idx, qs, cents, books, df, **kw)
         assert ref
-        fused = sorted(map(key, ivfpq_topk_fused(
-            idx, qs, cents, books, df, **kw).collect()))
-        assert fused == ref, (m, residual, assign_r)
-        f32 = sorted(map(key, ivfpq_topk_fused(
-            idx, qs, cents, books, df, adc_dtype="float32", **kw).collect()))
-        assert f32 == ref, (m, residual, assign_r)
-        # the pre-r14 window merge is kept as a physical A/B arm — both
-        # merge strategies must stay bit-identical to the reference
-        win = sorted(map(key, ivfpq_topk_fused(
-            idx, qs, cents, books, df, merge="window", **kw).collect()))
-        assert win == ref, (m, residual, assign_r)
-        if m == 4 and residual and assign_r == 1:
-            bat = sorted(map(key, ivfpq_topk_batched(
-                idx, qs, cents, books, df, batch_rows=2, fused=True, **kw
-            ).collect()))
-            assert bat == ref
+        assert_matches_reference(
+            ivfpq_topk(idx, qs, cents, books, df, **kw).collect(), ref
+        )
 
-    # tiny shortlist exercises the per-partition prune boundary: fused
-    # emits per-partition top-shortlist, a superset of the global one
-    books = pq_train(
-        coarse_residuals(df, cents), vec_col="resid", m=4, k=8, n_iters=2,
-        dim=dim,
+
+def test_ivfpq_topk_refuses_wide_codebook(spark):
+    """PQ codes travel one byte per code, so a codebook with more than
+    256 centroids is refused loudly instead of being scored some other
+    way."""
+    import numpy as np
+
+    from crypto_market_data_etl_spark.operators.similarity import (
+        ivfpq_index,
+        ivfpq_topk,
     )
-    idx = ivfpq_index(df, cents, books, residual=True).localCheckpoint()
-    kw = dict(n_probe=3, k=3, shortlist=5, residual=True)
-    ref = sorted(map(key, ivfpq_topk(idx, qs, cents, books, df, **kw).collect()))
-    fused = sorted(map(key, ivfpq_topk_fused(
-        idx, qs, cents, books, df, **kw).collect()))
-    assert fused == ref
+
+    rng = np.random.default_rng(7)
+    dim, m, kb, n = 8, 2, 257, 40
+    X = rng.normal(size=(n, dim))
+    df = spark.createDataFrame(
+        [(i, [float(v) for v in X[i]]) for i in range(n)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [float(v) for v in X[0] / np.linalg.norm(X[0])])],
+        "c_id long, c_vec array<double>",
+    )
+    books = spark.createDataFrame(
+        [
+            (b, c, [float(x) for x in v])
+            for b in range(m)
+            for c, v in enumerate(rng.normal(size=(kb, dim // m)))
+        ],
+        "block int, c_id int, c_vec array<double>",
+    )
+    idx = ivfpq_index(df, cents, books)
+    with pytest.raises(ValueError, match="256"):
+        ivfpq_topk(idx, df.limit(2), cents, books, df, n_probe=1, k=2)
 
 
 def test_fused_pack_sign_bit_roundtrip(spark):
@@ -2908,28 +2808,24 @@ def test_fused_pack_sign_bit_roundtrip(spark):
 
 
 def test_fused_wide_codebooks_and_self_match_parity(spark):
-    """Two fused-vs-reference parity regressions from the r13 audit:
+    """Two regressions from the r13 audit, now pinned against the numpy
+    IVFADC+R reference:
 
     (1) codebooks with >128 centroids — real PQ codes land in 128–255,
-    so a full 8-code group packs into the long's sign bit; pre-fix the
-    fused path threw ARITHMETIC_OVERFLOW under default ANSI before any
-    row was scored.
+    so a full 8-code group packs into the long's sign bit; before the
+    bit-op packing the scorer threw ARITHMETIC_OVERFLOW under default
+    ANSI before any row was scored.
 
-    (2) queries that ARE index vectors (self-join ANN) at a tight
-    shortlist — self pairs must be masked BEFORE the per-partition
-    prune so a self row never burns a prune slot. NOTE this asserts
-    parity on THIS fixture (multi-partition index, non-binding per-cell
-    truncation), not a universal invariant: when a cell fragment larger
-    than ``shortlist`` ranks a self row in its top-shortlist, ivfpq_topk
-    (which filters self rows only AFTER its window) legitimately emits
-    one fewer real candidate and the paths diverge — that regime is
-    pinned by ``test_fused_self_join_divergence_regime``."""
+    (2) queries that ARE index vectors (self-join ANN) at tight
+    shortlists over a multi-partition index — self pairs are masked
+    before the cut, so a self row never burns a shortlist slot."""
     import numpy as np
+
+    from tests.ivfadc_reference import assert_matches_reference, ivfadc_r_reference
 
     from crypto_market_data_etl_spark.operators.similarity import (
         ivfpq_index,
         ivfpq_topk,
-        ivfpq_topk_fused,
         kmeans_train,
     )
 
@@ -2967,48 +2863,43 @@ def test_fused_wide_codebooks_and_self_match_parity(spark):
         [(10_000 + i, [float(v) for v in X[i * 37]]) for i in range(8)],
         "vec_id long, embedding array<double>",
     )
-    key = lambda r: (r.q_id, r.rnk, r.n_id, round(r.sim, 9))  # noqa: E731
     kw = dict(n_probe=3, k=4, shortlist=40)
-    ref = sorted(map(key, ivfpq_topk(idx, qs, cents, books, df, **kw).collect()))
+    ref = ivfadc_r_reference(idx, qs, cents, books, df, **kw)
     assert ref
-    fused = sorted(map(key, ivfpq_topk_fused(
-        idx, qs, cents, books, df, **kw).collect()))
-    assert fused == ref
+    assert_matches_reference(
+        ivfpq_topk(idx, qs, cents, books, df, **kw).collect(), ref
+    )
 
     # (2) self-join queries at tight shortlists (boundary-sensitive)
     self_qs = df.filter(F.col("vec_id") % 45 == 2)
     assert self_qs.count() == 8
     for shortlist in (3, 5, 11):
         kw = dict(n_probe=3, k=3, shortlist=shortlist)
-        ref = sorted(map(key, ivfpq_topk(
-            idx, self_qs, cents, books, df, **kw).collect()))
+        ref = ivfadc_r_reference(idx, self_qs, cents, books, df, **kw)
         assert ref
-        fused = sorted(map(key, ivfpq_topk_fused(
-            idx, self_qs, cents, books, df, **kw).collect()))
-        assert fused == ref, shortlist
+        assert_matches_reference(
+            ivfpq_topk(idx, self_qs, cents, books, df, **kw).collect(), ref
+        )
 
 
 def test_fused_self_join_divergence_regime(spark):
-    """Pin the KNOWN DIVERGENCE documented on :func:`ivfpq_topk_fused`:
-    self-join queries against a single-partition index whose one cell is
-    far larger than the shortlist (the per-cell truncation BINDING).
+    """Pin the self-masked-before-cut semantics where they matter:
+    self-join queries against one coarse cell far larger than the
+    shortlist, so the cut BINDS and a self row would land inside it.
 
-    ivfpq_topk ranks self rows in its per-cell argpartition and filters
-    them only after the ranking window, so a self query whose ADC dist
-    lands in the cell's top-``shortlist`` burns a slot and the reference
-    emits one fewer real candidate. The fused path masks self pairs
-    before its prune, so every slot holds a real candidate. Asserted:
-    (1) fused returns no self pairs and exactly k real neighbors per
-    query; (2) fused's candidate coverage is never below the
-    reference's; (3) the divergence is REAL — at least one tight
-    shortlist produces different top-k sets (if this stops diverging,
-    the paths' semantics changed: re-read the docstring note)."""
+    Asserted: (1) ivfpq_topk equals the numpy reference that masks self
+    rows BEFORE the cut, at every tight shortlist; (2) it returns no self
+    pairs and exactly k real neighbors per query; (3) the fixture is
+    sensitive — masking AFTER the cut (a self row burns a slot) yields a
+    different top-k at some shortlist, so (1) tells the two semantics
+    apart."""
     import numpy as np
+
+    from tests.ivfadc_reference import assert_matches_reference, ivfadc_r_reference
 
     from crypto_market_data_etl_spark.operators.similarity import (
         ivfpq_index,
         ivfpq_topk,
-        ivfpq_topk_fused,
     )
 
     rng = np.random.default_rng(41)
@@ -3019,9 +2910,7 @@ def test_fused_self_join_divergence_regime(spark):
         [(i, [float(v) for v in X[i]]) for i in range(n)],
         "vec_id long, embedding array<double>",
     )
-    # ONE coarse cell -> every vector lands in it; coalesce(1) keeps the
-    # whole cell in a single partition so the fused per-partition prune
-    # and the reference per-cell argpartition see the identical fragment
+    # ONE coarse cell -> every vector lands in it
     cents = spark.createDataFrame(
         [(0, [float(v) for v in X.mean(axis=0)])], "c_id long, c_vec array<double>"
     )
@@ -3034,36 +2923,28 @@ def test_fused_self_join_divergence_regime(spark):
         ],
         "block int, c_id int, c_vec array<double>",
     )
-    idx = ivfpq_index(df, cents, books).coalesce(1).localCheckpoint()
+    idx = ivfpq_index(df, cents, books).localCheckpoint()
     self_qs = df.filter(F.col("vec_id") % 36 == 5)  # 5 index vectors
-    key = lambda r: (r.q_id, r.rnk, r.n_id)  # noqa: E731
     diverged = False
     for shortlist in (3, 5, 8, 12):
         kw = dict(n_probe=1, k=3, shortlist=shortlist)
-        fused = ivfpq_topk_fused(idx, self_qs, cents, books, df, **kw).collect()
-        ref = ivfpq_topk(idx, self_qs, cents, books, df, **kw).collect()
-        # fused: no self pairs, k real neighbors for every query
-        assert all(r.q_id != r.n_id for r in fused)
+        got = ivfpq_topk(idx, self_qs, cents, books, df, **kw).collect()
+        ref = ivfadc_r_reference(idx, self_qs, cents, books, df, **kw)
+        assert_matches_reference(got, ref)
+        assert all(r.q_id != r.n_id for r in got)
         per_q = {}
-        for r in fused:
+        for r in got:
             per_q.setdefault(r.q_id, []).append(r)
+        assert len(per_q) == 5
         assert all(len(v) == 3 for v in per_q.values()), shortlist
-        assert all(r.q_id != r.n_id for r in ref)
-        assert len(fused) >= len(ref), shortlist
-        if sorted(map(key, fused)) != sorted(map(key, ref)):
-            diverged = True
-    assert diverged, (
-        "self-join tight-shortlist regime no longer diverges — the "
-        "documented ivfpq_topk/fused semantics changed"
-    )
-    # merge= is validated at entry: a typo like "windows" must raise, not
-    # silently select the arrays path (would invalidate an A/B run)
-    import pytest
-
-    with pytest.raises(ValueError, match="merge"):
-        ivfpq_topk_fused(
-            idx, self_qs, cents, books, df, n_probe=1, k=3, merge="windows"
+        late = ivfadc_r_reference(
+            idx, self_qs, cents, books, df, mask_self_before_cut=False, **kw
         )
+        diverged |= late != ref
+    assert diverged, (
+        "no tight shortlist puts a self row inside the cut — the fixture "
+        "no longer exercises the self-masked-before-cut semantics"
+    )
 
 
 def test_ivfpq_multi_assignment(spark):

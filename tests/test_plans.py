@@ -24,22 +24,6 @@ def test_q02_dimension_joins_broadcast(spark):
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
 
 
-def test_q02_preagg_arm_bit_equal_and_default_off(spark, monkeypatch):
-    """r16: the orderkey pre-aggregate arm (kept behind SPARK_GRAFT_Q02_PREAGG
-    for the measured-negative record — see the NOTE in q02) must produce
-    identical rows to the default broadcast arm, and the DEFAULT plan must
-    not contain it."""
-    monkeypatch.setenv("SPARK_GRAFT_Q02_PREAGG", "on")
-    on_rows = sorted(map(tuple, core.q02_revenue_by_nation(spark, SF_SMOKE).collect()))
-    monkeypatch.delenv("SPARK_GRAFT_Q02_PREAGG")
-    off_rows = sorted(map(tuple, core.q02_revenue_by_nation(spark, SF_SMOKE).collect()))
-    assert on_rows == off_rows and len(on_rows) > 0
-    default_opt = core.q02_revenue_by_nation(
-        spark, SF_SMOKE
-    )._jdf.queryExecution().optimizedPlan().toString()
-    assert "Aggregate [l_orderkey" not in default_opt
-
-
 def test_q09_asof_is_equi_join_not_nested_loop(spark):
     plan = _plan(core.q09_flagship(spark, SF_SMOKE))
     # the band condition must NOT degrade to a nested-loop/cartesian join

@@ -1623,24 +1623,6 @@ def test_verify_neardup_corpus_index_path_oracle_equal(spark):
         else:
             assert abs(a.best_jaccard - b.best_jaccard) < 1e-12
 
-    # the broadcast_candidates A/B knob (r12, committed perf negative —
-    # kept for reproducibility) is join-strategy-only: verdicts identical
-    via_bcast = {
-        r.doc_id: r
-        for r in verify_neardup_batch(
-            cands, None, rows_per_band=1, corpus_index=idx,
-            broadcast_candidates=True,
-        ).collect()
-    }
-    for d in (1, 2, 3):
-        a, b = via_index[d], via_bcast[d]
-        assert a.best_match == b.best_match
-        assert a.verified == b.verified
-        if a.best_jaccard is None:
-            assert b.best_jaccard is None
-        else:
-            assert abs(a.best_jaccard - b.best_jaccard) < 1e-12
-
     # knob drift refused: an index built at rows_per_band=1 cannot serve a
     # rows_per_band=3 verify (stale bands would silently change verdicts)
     with _pt.raises(ValueError, match="rebuild the index"):

@@ -258,27 +258,6 @@ def main() -> None:
             d = json.loads(line)
             if "job" in d:
                 ann["sweep_bow_400k_m16"]["jobs"][d.pop("job")] = d
-    ann["sweep_bow_400k_opq"] = {
-        "note": (
-            "--bow --vectors 400000 --cells 632 --assign-r 2 --opq "
-            "--tiers crivfpq2_m8 — the rotation lever in isolation: "
-            "OPQ-lite eigenvalue-balanced rotation before the identical "
-            "m8 pipeline (brute is rotation-invariant, so recall deltas "
-            "are pure codebook-quality effects)"
-        ),
-        "jobs": {},
-    }
-    stdout = run([
-        sys.executable, "tools/scale_ann_run.py", "--sweep",
-        "--vectors", "400000", "--queries", "200", "--bow",
-        "--cells", "632", "--assign-r", "2", "--opq",
-        "--tiers", "crivfpq2_m8",
-    ])
-    for line in stdout.splitlines():
-        if line.strip().startswith("{"):
-            d = json.loads(line)
-            if "job" in d:
-                ann["sweep_bow_400k_opq"]["jobs"][d.pop("job")] = d
     ann["sweep_bow_1m6"] = {
         "note": (
             "--bow --vectors 1600000 --cells 1265 --assign-r 2 --tiers "
@@ -351,9 +330,7 @@ def main() -> None:
         "note": (
             "--bow --vectors 6400000 --cells 2530 --assign-r 2 --m 16 "
             "--tiers crivfpq2_m16 — m16 doubles code bytes per vector "
-            "(16 vs 8), halving per-block quantization error; deep rungs "
-            "past the residual LUT cap run exact query-batched "
-            "(ivfpq_topk_batched)"
+            "(16 vs 8), halving per-block quantization error"
         ),
         "jobs": {},
     }

@@ -153,33 +153,6 @@ def main() -> None:
         "code-capacity lever the r10 verdict asked to measure.",
     )
     ap.add_argument(
-        "--fused",
-        action="store_true",
-        help="add _fused64/_fused32 twins of each crivfpq{r} deep-probe "
-        "tier (ivfpq_topk_fused: packed-code Arrow transfer + "
-        "per-partition shortlist fusion) — the wall-crossover arm of the "
-        "r12 verdict ask #4; results are the same top-k (pytest parity)",
-    )
-    ap.add_argument(
-        "--fused-only",
-        action="store_true",
-        dest="fused_only",
-        help="with --fused: run ONLY the _fused64/_fused32 twins of each "
-        "crivfpq{r} tier, skipping the ivfpq_topk reference arm — the "
-        "biggest-N crossover rungs (25.6M) can't afford the reference "
-        "wall and its result is already bit-parity-pinned by pytest + "
-        "the smaller-N interleaves",
-    )
-    ap.add_argument(
-        "--opq",
-        action="store_true",
-        help="train an OPQ-lite rotation (PCA + eigenvalue-balanced block "
-        "allocation, Ge et al. CVPR 2013) on the centered corpus and "
-        "rotate corpus+queries BEFORE the pipeline — exact for brute "
-        "(rotation-invariant), re-balances variance across PQ blocks for "
-        "every downstream codebook. Tier names gain an 'opq_' prefix.",
-    )
-    ap.add_argument(
         "--bow",
         action="store_true",
         help="vectors = hashed_bow_embeddings of the Zipf corpus "
@@ -219,33 +192,6 @@ def main() -> None:
             .localCheckpoint()
         )
         queries.count()
-
-    if args.opq:
-        # whole-pipeline rotation: exact for brute (cosine is rotation-
-        # invariant; pytest-asserted), variance-balanced blocks for every
-        # downstream PQ. Trained on the centered-normalized space (where
-        # the residual codebooks live), applied to the raw vectors once.
-        from crypto_market_data_etl_spark.operators.similarity import (
-            embedding_mean as _emean,
-            opq_rotation_train,
-            rotate_vectors,
-        )
-
-        t0 = time.time()
-        _rot = opq_rotation_train(
-            corpus, m=args.m, dim=DIM, center_vec=_emean(corpus)
-        )
-        corpus = rotate_vectors(corpus, _rot).repartition(32).localCheckpoint()
-        corpus.count()
-        queries = rotate_vectors(queries, _rot).localCheckpoint()
-        queries.count()
-        print(
-            json.dumps(
-                {"job": "opq_rotation_build", "sec": round(time.time() - t0, 2),
-                 "m": args.m}
-            ),
-            flush=True,
-        )
 
     if args.sweep:
         _sweep(spark, corpus, queries, args)
@@ -928,82 +874,30 @@ def _sweep(spark, corpus, queries, args) -> None:
             )
             # deep-probe rungs (128+/3200+): the r10 committed negatives say
             # probes/shortlist bind at 6.4M, so the ladder extends to where
-            # the scan budget (0.5% of brute bytes) actually runs out. Past
-            # the residual LUT cap (probe x m x k x queries doubles) the
-            # rung runs through ivfpq_topk_batched — exact under query
-            # batching, batch_rows sized to the cap as its docstring says.
-            from crypto_market_data_etl_spark.operators.similarity import (
-                RESIDUAL_LUT_CAP_DOUBLES,
-                ivfpq_topk_batched,
-                ivfpq_topk_fused,
-            )
-
+            # the scan budget (0.5% of brute bytes) actually runs out
             for n_probe, shortlist in (
                 (8, 400), (16, 400), (32, 400), (64, 1600), (96, 1600),
                 (96, 6400), (128, 3200), (192, 3200), (256, 6400),
             ):
-                lut = args.queries * n_probe * mm * 64
-                over_cap = lut > RESIDUAL_LUT_CAP_DOUBLES
-                if over_cap:
-                    batch = max(1, RESIDUAL_LUT_CAP_DOUBLES // (n_probe * mm * 64))
-                    fn = (
-                        lambda p=n_probe, sl=shortlist, b=batch: ivfpq_topk_batched(
-                            cres_idx_r, queries, trained_cen, books_cres,
-                            corpus, n_probe=p, k=args.k, shortlist=sl,
-                            center_vec=bow_mean, residual=True, batch_rows=b,
-                        )
-                    )
-                else:
-                    fn = (
+                name = (
+                    f"crivfpq{args.assign_r}_m{mm}k64_probe{n_probe}"
+                    f"_rerank{shortlist}"
+                )
+                configs.append(
+                    (
+                        name,
                         lambda p=n_probe, sl=shortlist: ivfpq_topk(
                             cres_idx_r, queries, trained_cen, books_cres,
                             corpus, n_probe=p, k=args.k, shortlist=sl,
                             center_vec=bow_mean, residual=True,
-                        )
+                        ),
                     )
-                if not args.fused_only:
-                    configs.append(
-                        (
-                            f"crivfpq{args.assign_r}_m{mm}k64_probe{n_probe}"
-                            f"_rerank{shortlist}",
-                            fn,
-                        )
-                    )
-                    reg_scan(
-                        f"crivfpq{args.assign_r}_m{mm}k64_probe{n_probe}"
-                        f"_rerank{shortlist}",
-                        index=cres_idx_r, cents=trained_cen, n_probe=n_probe,
-                        center=bow_mean, shortlist=shortlist, m_bytes=mm,
-                    )
-                if not args.fused:
-                    continue
-                for dt_tag, dt_name in (("64", "float64"), ("32", "float32")):
-                    # Fused arms ALWAYS run unbatched: the LUT-doubles
-                    # cap only exists for ivfpq_topk's driver-built
-                    # tensor; ivfpq_topk_fused builds LUTs worker-side
-                    # with no cap, and batching it re-shuffles + scans
-                    # the full index once per query chunk — which
-                    # understates the fused win at exactly the deep
-                    # probes the rung exists to measure (r13 ADVICE).
-                    ffn = (
-                        lambda p=n_probe, sl=shortlist,
-                        d=dt_name: ivfpq_topk_fused(
-                            cres_idx_r, queries, trained_cen, books_cres,
-                            corpus, n_probe=p, k=args.k, shortlist=sl,
-                            center_vec=bow_mean, residual=True,
-                            adc_dtype=d,
-                        )
-                    )
-                    fname = (
-                        f"crivfpq{args.assign_r}_m{mm}k64_probe{n_probe}"
-                        f"_rerank{shortlist}_fused{dt_tag}"
-                    )
-                    configs.append((fname, ffn))
-                    reg_scan(
-                        fname, index=cres_idx_r, cents=trained_cen,
-                        n_probe=n_probe, center=bow_mean,
-                        shortlist=shortlist, m_bytes=mm,
-                    )
+                )
+                reg_scan(
+                    name, index=cres_idx_r, cents=trained_cen,
+                    n_probe=n_probe, center=bow_mean,
+                    shortlist=shortlist, m_bytes=mm,
+                )
 
     if prefixes is not None:
         skipped = [n for n, _ in configs if not n.startswith(prefixes)]

@@ -79,12 +79,7 @@ def _stream_rows(spark, corpus, trigger: int, n_flagged: int, n_clean: int,
 
 def run_path(spark, corpus, *, reuse_index: bool, n_flagged: int,
              n_clean: int, n_triggers: int, threshold: float,
-             broadcast_cand: bool = False, flagged_mod: int = 997) -> dict:
-    # broadcast_cand default matches the shipped operator default (False —
-    # the forced-broadcast arm is a measured negative, 2.6-3.1x slower and
-    # maxResultSize-fatal at flagged=500); only the flagged-axis A/B loop
-    # passes True explicitly. Keeping them aligned means the legacy
-    # volume-axis loop below measures the same arm SCALE_r12 inherited.
+             flagged_mod: int = 997) -> dict:
     from crypto_market_data_etl_spark.streaming.corpus import (
         stream_neardup_verified,
     )
@@ -119,7 +114,6 @@ def run_path(spark, corpus, *, reuse_index: bool, n_flagged: int,
         stream, corpus, sink, threshold=threshold, watermark="0 seconds",
         checkpoint=ckpt, query_name="scale_verify",
         reuse_corpus_index=reuse_index,
-        broadcast_candidates=broadcast_cand,
     )
     trigger_walls = []
     try:
@@ -143,7 +137,6 @@ def run_path(spark, corpus, *, reuse_index: bool, n_flagged: int,
     rows_per_trigger = n_flagged + n_clean
     return {
         "path": "index" if reuse_index else "reshingle",
-        "broadcast_cand": broadcast_cand,
         "clean_per_trigger": n_clean,
         "flagged_per_trigger": n_flagged,
         "triggers": n_triggers,
@@ -192,37 +185,34 @@ def main() -> None:
             spark, corpus, reuse_index=True, n_flagged=5, n_clean=500,
             n_triggers=2, threshold=args.threshold, flagged_mod=97,
         )
-        for bcast in (False, True):
-            rungs = []
-            for n_flagged in axis:
-                r = run_path(
-                    spark, corpus, reuse_index=True, n_flagged=n_flagged,
-                    n_clean=n_clean, n_triggers=args.triggers,
-                    threshold=args.threshold, broadcast_cand=bcast,
-                    flagged_mod=97,
-                )
-                r["corpus_docs"] = args.corpus
-                rungs.append(r)
-                print(json.dumps(r), flush=True)
-            by = {r["flagged_per_trigger"]: r for r in rungs}
-            floor = by.get(0)
-            summary = {
-                "job": "summary_flagged_axis",
-                "broadcast_cand": bcast,
-                "corpus_docs": args.corpus,
-                "clean_per_trigger": n_clean,
-                "per_trigger_s_by_flagged": {
-                    str(f): by[f]["per_trigger_s"] for f in axis
-                },
+        rungs = []
+        for n_flagged in axis:
+            r = run_path(
+                spark, corpus, reuse_index=True, n_flagged=n_flagged,
+                n_clean=n_clean, n_triggers=args.triggers,
+                threshold=args.threshold, flagged_mod=97,
+            )
+            r["corpus_docs"] = args.corpus
+            rungs.append(r)
+            print(json.dumps(r), flush=True)
+        by = {r["flagged_per_trigger"]: r for r in rungs}
+        floor = by.get(0)
+        summary = {
+            "job": "summary_flagged_axis",
+            "corpus_docs": args.corpus,
+            "clean_per_trigger": n_clean,
+            "per_trigger_s_by_flagged": {
+                str(f): by[f]["per_trigger_s"] for f in axis
+            },
+        }
+        if floor is not None:
+            summary["floor_per_trigger_s"] = floor["per_trigger_s"]
+            summary["verify_share_by_flagged"] = {
+                str(f): round(by[f]["per_trigger_s"] - floor["per_trigger_s"], 3)
+                for f in axis
+                if f
             }
-            if floor is not None:
-                summary["floor_per_trigger_s"] = floor["per_trigger_s"]
-                summary["verify_share_by_flagged"] = {
-                    str(f): round(by[f]["per_trigger_s"] - floor["per_trigger_s"], 3)
-                    for f in axis
-                    if f
-                }
-            print(json.dumps(summary), flush=True)
+        print(json.dumps(summary), flush=True)
         spark.stop()
         return
 
