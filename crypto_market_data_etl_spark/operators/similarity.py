@@ -6,12 +6,19 @@ Two physical tiers, chosen by measurement (see the numbers in each docstring):
   Python, bit-reproducible against the DuckDB oracle — but the fold is
   interpreted per element (~1 µs per 64-dim dot), so it's for
   candidate-bounded work (reranks, small query sets).
-- **Arrow+BLAS tier** (``mapInPandas`` + numpy matmul): ~100x more dot
-  throughput; the batch shape (matrix x matrix per Arrow batch) is the right
-  physical design for corpus-scale assignment/scoring. Float results can
-  differ from the fold in the last bits (BLAS reordering), so oracle-checked
-  queries stay on the expression tier and the numpy tier is equivalence-
-  tested with tolerance.
+- **Arrow tier** (``mapInArrow`` + numpy): ~100x more dot throughput; one
+  matrix x matrix product per Arrow batch is the right physical design for
+  corpus-scale assignment/scoring. The sweeps (:func:`_sweep_cross`) replay
+  the fold's FP sequence bit-exactly and back the oracle-checked defaults;
+  the BLAS kernels can differ in the last bits and are equivalence-tested.
+
+Every vector kernel crosses the JVM/numpy boundary the same way: workers
+decode a list column into a length-checked matrix (:func:`_vector_matrix`)
+and emit list columns (:func:`_list_column`), the driver collects its small
+side through the same decode (:func:`_collect_vectors`), and ids and
+pass-through columns stay the original Arrow arrays — an int64 id past 2^53
+survives a NULL id in its batch. Wrong-length vectors, and NULL vectors
+where a kernel has no NULL route, raise a ValueError naming the operator.
 
 Extension surface (BASELINE.json): approximate-nearest-neighbor primitives.
 
@@ -26,10 +33,10 @@ Extension surface (BASELINE.json): approximate-nearest-neighbor primitives.
   from md5(plane, dim) — deterministic, reproducible in the DuckDB oracle,
   and multiplication-free in spirit (sign flips).
 
-Dot products run as ``zip_with`` + ``aggregate`` higher-order functions —
-JVM-side columnar fold, no Python. For very wide embeddings a Pandas-UDF
-(numpy dot) variant wins; at dim=64 the HOF fold is faster than Arrow
-round-trips.
+Expression-tier dot products run as ``zip_with`` + ``aggregate``
+higher-order functions — JVM-side columnar fold, no Python. Row-paired
+reranks stay there (:func:`_rerank_candidates` measures why); n x k
+cross kernels go through the Arrow path.
 """
 
 from __future__ import annotations
@@ -171,7 +178,7 @@ def cosine_topk(
     Output: (q_id, n_id, rnk, sim). Ties broken by neighbor id.
 
     Default physical tier (r15, guide §4.2): the corpus streams through
-    ``mapInPandas``; each Arrow batch scores against the collected query
+    ``mapInArrow``; each Arrow batch scores against the collected query
     matrix with the bit-exact fold replication :func:`_sweep_cross` (norms
     ride the rows from Spark expressions) and emits only the batch's
     top-``k``-with-margin candidate rows per query — so the final ranking
@@ -189,10 +196,12 @@ def cosine_topk(
     when the DataFrame is BUILT, not when it executes — queries are small by
     contract, and the operator's centroid/materialize siblings already
     resolve eagerly; pass ``exact_arrow=False`` for a fully lazy plan.
-    Whole-NULL vectors are handled identically to the expression tier;
-    element-level NULLs inside a non-null array are out of contract (dense
-    embeddings — same caveat as the BLAS tier). A zero-norm vector raises
-    (DIVIDE_BY_ZERO parity with the expression tier's ANSI divide).
+    Whole-NULL vectors are handled identically to the expression tier
+    (ranked last), and so are NULL corpus ids (the ``q_id != n_id`` filter
+    drops them); element-level NULLs inside a non-null array are out of
+    contract (dense embeddings — same caveat as the BLAS tier). A zero-norm
+    vector raises (DIVIDE_BY_ZERO parity with the expression tier's ANSI
+    divide), and so does a vector whose length differs from the queries'.
     """
     from .dedup import spread_small_input
 
@@ -205,33 +214,24 @@ def cosine_topk(
     from pyspark.sql import types as T
 
     _int_types = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    q_rows = None
+    q_side = None
     if (
         exact_arrow
         and isinstance(queries.schema[id_col].dataType, _int_types)
         and isinstance(corpus.schema[id_col].dataType, _int_types)
     ):
-        try:
-            q_rows = _collect_small_side(q_proj, "cosine_topk query")
-        except ValueError:
-            q_rows = None  # query side above the cap: expression tier below
-        if q_rows is not None and any(
-            r["q_id"] is None or r["q_vec"] is None or r["q_norm"] is None
-            for r in q_rows
-        ):
-            # NULL query vector/id/norm: the expression tier ranks its NULL
-            # sims without crashing — fall back to it (exact equivalence)
-            q_rows = None
-    if q_rows is not None:
-        import numpy as np
-
-        q_ids = np.array([r["q_id"] for r in q_rows], dtype=np.int64)
-        Q_mat = (
-            np.array([list(r["q_vec"]) for r in q_rows], dtype=np.float64)
-            if q_rows
-            else np.zeros((0, 1))
+        # None when the query side is above the collect cap or carries a
+        # NULL id/vector/norm: the expression tier below ranks those
+        # without crashing (exact equivalence)
+        q_side = _collect_vectors(
+            q_proj, "q_id", "q_vec", "cosine_topk query", "q_norm", optional=True
         )
-        q_norms = np.array([r["q_norm"] for r in q_rows], dtype=np.float64)
+    if q_side is not None:
+        import numpy as np
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        q_ids, Q_mat, q_norms = q_side
         if (q_norms == 0.0).any():
             # loudness parity: the expression tier's sim divide raises
             # DIVIDE_BY_ZERO under Spark 4 default ANSI for a zero-norm
@@ -254,18 +254,33 @@ def cosine_topk(
                 T.StructField("__raw", T.DoubleType()),
             ]
         )
+        q_type = to_arrow_type(q_proj.schema["q_id"].dataType)
+
+        def _cands(id_arr, rows, qj, raw):
+            # TRUE nulls for the NULL-vector route, not NaN — the rank
+            # orders NULL last / NaN first
+            return pa.RecordBatch.from_pydict({
+                "q_id": pa.array(q_ids[qj]).cast(q_type),
+                "n_id": id_arr.take(rows),
+                "__raw": pa.nulls(len(rows), pa.float64()) if raw is None else raw,
+            })
 
         def _topk_batches(it):
-            for pdf in it:
-                if pdf.empty or len(q_ids) == 0:
+            for batch in it:
+                if batch.num_rows == 0 or len(q_ids) == 0:
                     continue
-                na = pdf["c_vec"].isna().to_numpy()
-                frames = []
-                if (~na).any():
-                    sub = pdf[~na]
-                    ids = sub["n_id"].to_numpy()
-                    V = np.array(sub["c_vec"].tolist(), dtype=np.float64)
-                    cn = sub["c_norm"].to_numpy(dtype=np.float64)
+                id_arr = batch.column(0)
+                live, V = _vector_matrix(
+                    batch.column(1), "cosine_topk", Q_mat.shape[1], allow_null=True
+                )
+                # NULL corpus ids never rank: the exact tier's q_id != n_id
+                # filter drops them before the window
+                has_id = np.asarray(id_arr.is_valid())
+                ids = np.asarray(id_arr.fill_null(0), dtype=np.int64)
+                rows = np.flatnonzero(live)
+                V, rows = V[has_id[rows]], rows[has_id[rows]]
+                if len(rows):
+                    cn = np.asarray(batch.column(2), dtype=np.float64)[rows]
                     if (cn == 0.0).any():
                         # loudness parity with the expression tier's ANSI
                         # divide (see the query-norm guard above)
@@ -274,10 +289,8 @@ def cosine_topk(
                             "(DIVIDE_BY_ZERO parity with the expression "
                             "tier's ANSI divide)"
                         )
-                    raw = _sweep_cross(V, Q_mat) / np.multiply.outer(
-                        cn, q_norms
-                    )
-                    self_m = ids[:, None] == q_ids[None, :]
+                    raw = _sweep_cross(V, Q_mat) / np.multiply.outer(cn, q_norms)
+                    self_m = ids[rows][:, None] == q_ids[None, :]
                     # selection copy: self pairs can never rank (the exact
                     # tier filters them pre-window), NaN ranks FIRST under
                     # Spark's NaN-is-largest ordering → treat as +inf here
@@ -291,41 +304,20 @@ def cosine_topk(
                     else:
                         keep = ~self_m
                     ri, qj = np.nonzero(keep)
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "q_id": q_ids[qj],
-                                "n_id": ids[ri],
-                                "__raw": raw[ri, qj],
-                            }
-                        )
-                    )
-                if na.any():
+                    yield _cands(id_arr, rows[ri], qj, raw[ri, qj])
+                nul = np.flatnonzero(~live & has_id)
+                if len(nul):
                     # NULL corpus vectors: the exact tier ranks their NULL
                     # sims LAST (they only reach top-k in degenerate <k
                     # corpora) — and among themselves they tie on sim, so
                     # only the k SMALLEST n_ids per batch can ever survive
                     # the global (sim desc, n_id asc) window: emit just
                     # those with NULL raw (bounded, not |nulls| × |queries|)
-                    nul_ids = np.sort(pdf["n_id"][na].to_numpy())[: k + 1]
-                    nri, nqj = np.nonzero(
-                        nul_ids[:, None] != q_ids[None, :]
-                    )
-                    frames.append(
-                        pd.DataFrame(
-                            {
-                                "q_id": q_ids[nqj],
-                                "n_id": nul_ids[nri],
-                                # object column: TRUE nulls, not NaN — the
-                                # rank orders NULL last / NaN first
-                                "__raw": [None] * len(nri),
-                            }
-                        )
-                    )
-                if frames:
-                    yield pd.concat(frames, ignore_index=True)
+                    nul = nul[np.argsort(ids[nul], kind="stable")][: k + 1]
+                    nri, nqj = np.nonzero(ids[nul][:, None] != q_ids[None, :])
+                    yield _cands(id_arr, nul[nri], nqj, None)
 
-        cand = c.mapInPandas(_topk_batches, schema=cand_schema)
+        cand = c.mapInArrow(_topk_batches, schema=cand_schema)
         return (
             cand.withColumn("sim", F.round(F.col("__raw"), 6))
             .withColumn("rnk", F.row_number().over(w))
@@ -413,15 +405,11 @@ def _signature_sweep(
     slicing contract as :func:`bucket_signature` (each plane's dot is an
     independent fold, so slicing cannot change any bit).
 
-    Physical form (r16): ``mapInArrow``, not ``mapInPandas``. The id (and
-    carried vector) columns pass through as the ORIGINAL Arrow arrays —
-    an int64 id column with a NULL in the batch keeps its validity bitmap
-    instead of widening to float64 (the pandas hop silently rounded any
-    |id| > 2^53 co-batched with a NULL id — ADVICE r15), and the vectors
-    decode zero-copy (``drop_null().flatten()`` + reshape) instead of
-    through per-row Python lists. The dot kernel and every emitted bit are
-    unchanged: the same float64 values reach the same :func:`_sweep_cross`
-    FP sequence (float32 inputs widen exactly, as before).
+    Physical form: the module's Arrow vector path. The id (and carried
+    vector) columns pass through as the ORIGINAL Arrow arrays, so an int64
+    id co-batched with a NULL id stays exact, and the vectors decode
+    through :func:`_vector_matrix` — a vector that does not hold exactly
+    ``dim`` elements raises.
     """
     import numpy as np
     from pyspark.sql import types as T
@@ -444,35 +432,18 @@ def _signature_sweep(
             if n == 0:
                 continue
             vec = batch.column(1)
-            na = np.asarray(vec.is_null())
-            buckets = np.empty(n, dtype=object)
-            if (~na).any():
-                # zero-copy decode: non-null rows' elements are contiguous
-                # after drop_null(); float32 → float64 widening is exact,
-                # so this equals the expression tier's cast("double")
-                flat = np.asarray(vec.drop_null().flatten(), dtype=np.float64)
-                n_live = int((~na).sum())
-                if flat.size != n_live * dim:
-                    # a blind reshape would merge two short vectors into
-                    # one row and hand every later row a shifted vector
-                    raise ValueError(
-                        f"_signature_sweep: {n_live} non-NULL vectors hold "
-                        f"{flat.size} elements, expected {dim} each"
-                    )
-                V = flat.reshape(n_live, dim)
+            live, V = _vector_matrix(vec, "_signature_sweep", dim, allow_null=True)
+            buckets = np.full(n, "0" * n_planes, dtype=object)
+            if len(V):
                 dots = _sweep_cross(V, P_mat)
                 bits = (dots > 0) | np.isnan(dots)
                 chars = np.where(bits, "1", "0")
-                buckets[~na] = ["".join(row) for row in chars]
-            buckets[na] = "0" * n_planes
-            cols = [batch.column(0)]
-            names = [id_col]
+                buckets[live] = ["".join(row) for row in chars]
+            out = {id_col: batch.column(0)}
             if carry_vec:
-                cols.append(vec)
-                names.append(vec_col)
-            cols.append(pa.array(buckets, type=pa.string()))
-            names.append(out_col)
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+                out[vec_col] = vec
+            out[out_col] = pa.array(buckets, type=pa.string())
+            yield pa.RecordBatch.from_pydict(out)
 
     return src.mapInArrow(_batches, schema=out_schema)
 
@@ -598,48 +569,6 @@ def lsh_ann_topk(
     )
 
 
-def lsh_signatures_np(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 16,
-    dim: int = 64,
-    offset: int = 0,
-) -> DataFrame:
-    """Sign-LSH signatures, Arrow+BLAS tier: one (batch x dim)@(dim x planes)
-    matmul per Arrow batch instead of n_planes interpreted HOF folds per row.
-
-    Same deterministic hyperplane family as :func:`bucket_signature`, so the
-    bitstrings agree with the expression tier (a flip needs |dot| within BLAS
-    reordering error of 0, ~1e-12 relative — not observed on real data;
-    asserted exactly in tests at smoke scale). Measured at 500k x 64-dim,
-    12 planes: the expression tier needs one fold per plane per row (~6M
-    interpreted folds); this is two matmuls. Output: (id, bucket).
-    """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    P = np.array(
-        hyperplane_weights(offset + n_planes, dim)[offset:], dtype=np.float64
-    ).T  # (dim, planes)
-    schema = T.StructType(
-        [T.StructField(id_col, T.LongType()), T.StructField("bucket", T.StringType())]
-    )
-    zero, one = ord("0"), ord("1")
-
-    def batches(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            bits = (V @ P) > 0  # (b, planes)
-            chars = np.where(bits, one, zero).astype(np.uint8)
-            buckets = [row.tobytes().decode("ascii") for row in chars]
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), "bucket": buckets})
-
-    return df.mapInPandas(batches, schema=schema)
-
-
 def _rerank_candidates(
     cand: DataFrame,
     vecs: DataFrame,
@@ -696,7 +625,6 @@ def lsh_ann_multiprobe(
     dim: int = 64,
     k: int = 3,
     probe_hamming: int = 1,
-    numpy_sig: bool = False,
     exact_arrow: bool = True,
 ) -> DataFrame:
     """Multi-probe sign-LSH ANN: probe the query's bucket AND its Hamming-1
@@ -710,7 +638,7 @@ def lsh_ann_multiprobe(
     :func:`lsh_ann_topk` semantics.
 
     Measured at 500k x 64-dim corpus, 1000 planted near-dup queries
-    (cos≈0.99), 12 planes, numpy_sig: probe=0 finds 64% of planted pairs in
+    (cos≈0.99), 12 planes: probe=0 finds 64% of planted pairs in
     top-10; Hamming-1 probing lifts that to 92% for ~1.5x the wall time.
 
     Default signature tier (r15 batch 9): :func:`_signature_sweep` —
@@ -718,25 +646,22 @@ def lsh_ann_multiprobe(
     literal-tree construction cost (interleaved sf0.1 A/B: 0.80-0.85×;
     signature-only through Arrow, vectors never cross the boundary — the
     rerank reads them from ``df`` directly). ``exact_arrow=False`` keeps
-    the expression arm; ``numpy_sig`` remains the BLAS (non-oracle-exact)
-    arm and takes precedence.
+    the expression arm.
 
     Output: (q_id, n_id, rnk, sim), ties by neighbor id.
     """
     if queries is None:
         queries = df
-    if numpy_sig or exact_arrow:
+    if exact_arrow:
         # default tier (r15 batch 9): sweep signatures — bit-identical
         # buckets to the expression tier without its literal-tree
-        # construction cost (see _signature_sweep); numpy_sig stays the
-        # BLAS (non-oracle-exact) arm and takes precedence
-        sig_fn = lsh_signatures_np if numpy_sig else _signature_sweep
-        corpus = sig_fn(df, id_col, vec_col, n_planes, dim).withColumnRenamed(
-            id_col, "n_id"
-        )
-        qt = sig_fn(queries, id_col, vec_col, n_planes, dim).withColumnRenamed(
-            id_col, "q_id"
-        )
+        # construction cost (see _signature_sweep)
+        corpus = _signature_sweep(
+            df, id_col, vec_col, n_planes, dim
+        ).withColumnRenamed(id_col, "n_id")
+        qt = _signature_sweep(
+            queries, id_col, vec_col, n_planes, dim
+        ).withColumnRenamed(id_col, "q_id")
     else:
         sig = bucket_signature(vec_col, n_planes, dim)
         corpus = df.select(F.col(id_col).alias("n_id"), sig.alias("bucket"))
@@ -773,7 +698,6 @@ def lsh_ann_bandor(
     n_tables: int = 3,
     dim: int = 64,
     k: int = 3,
-    numpy_sig: bool = False,
     exact_arrow: bool = True,
 ) -> DataFrame:
     """Band-OR sign-LSH ANN: L independent hash tables; a pair is a candidate
@@ -787,8 +711,8 @@ def lsh_ann_bandor(
     volume is high enough to amortize the L× index, else prefer
     :func:`lsh_ann_multiprobe`. Output: (q_id, n_id, rnk, sim).
 
-    Measured at 500k x 64-dim, 1000 planted near-dup queries (cos≈0.99),
-    numpy_sig: 3 tables x 8 planes finds 98.2% in top-10 (21s local[32]);
+    Measured at 500k x 64-dim, 1000 planted near-dup queries (cos≈0.99):
+    3 tables x 8 planes finds 98.2% in top-10 (21s local[32]);
     4 x 8 finds 99.5% (19s) — vs 64% for one 12-plane table.
 
     **Which knob for GENERAL k-NN (tail recall)?** Near-dup retrieval
@@ -823,22 +747,20 @@ def lsh_ann_bandor(
     Arrow pass computes every table's planes, bit-identical to the
     expression arm's per-table offset signatures (interleaved sf0.1 A/B:
     0.65-0.68×; signature-only, vectors never cross the boundary).
-    ``exact_arrow=False`` keeps the expression arm; ``numpy_sig`` remains
-    the BLAS (non-oracle-exact) arm and takes precedence.
+    ``exact_arrow=False`` keeps the expression arm.
     """
     if queries is None:
         queries = df
 
-    if numpy_sig or exact_arrow:
-        # ONE pass computes every table's planes, then in-plan substring
-        # slices — numpy_sig via the BLAS matmul tier, the default (r15
-        # batch 9) via the bit-exact sweep (each plane's fold is
-        # independent, so slicing the full-family bitstring equals the
-        # expression arm's per-table offset signatures)
-        sig_fn = lsh_signatures_np if numpy_sig else _signature_sweep
-
+    if exact_arrow:
+        # ONE sweep pass (r15 batch 9) computes every table's planes, then
+        # in-plan substring slices (each plane's fold is independent, so
+        # slicing the full-family bitstring equals the expression arm's
+        # per-table offset signatures)
         def tabled(side: DataFrame, out_id: str) -> DataFrame:
-            full = sig_fn(side, id_col, vec_col, planes_per_table * n_tables, dim)
+            full = _signature_sweep(
+                side, id_col, vec_col, planes_per_table * n_tables, dim
+            )
             slices = F.array(
                 *[
                     F.struct(
@@ -953,7 +875,7 @@ def embedding_neardup_pairs(
     # literal-tree construction cost; norms/sims stay JVM folds on the
     # carried vector, so every emitted value is bit-identical either way.
     if exact_arrow:
-        # input spread BEFORE the sweep: a mapInPandas projection's
+        # input spread BEFORE the sweep: a mapInArrow projection's
         # parallelism is its input split count, so a single-row-group input
         # would run the signature sweep + the per-vector norm fold as ONE
         # task before materialize (the same gap the expression arm's spread
@@ -1270,10 +1192,15 @@ def ivf_ann_topk(
 NP_TIER_MAX_COLLECT = 1_000_000
 
 
-def _collect_small_side(df: DataFrame, what: str, cap: int | None = None):
+def _collect_small_side(
+    df: DataFrame, what: str, cap: int | None = None, arrow: bool = False
+):
+    """Capped driver collect of a small-by-contract side: Rows (for literal
+    builders such as :func:`probe_cells_expr`), or a ``pyarrow.Table``."""
     if cap is None:
         cap = NP_TIER_MAX_COLLECT  # resolved at call time: tunable/testable
-    rows = df.limit(cap + 1).collect()
+    capped = df.limit(cap + 1)
+    rows = capped.toArrow() if arrow else capped.collect()
     if len(rows) > cap:
         raise ValueError(
             f"{what} side exceeds the numpy-tier driver-collect cap "
@@ -1282,6 +1209,104 @@ def _collect_small_side(df: DataFrame, what: str, cap: int | None = None):
             "lsh_ann_topk) or raise NP_TIER_MAX_COLLECT deliberately"
         )
     return rows
+
+
+def _vector_matrix(col, what, dim=None, allow_null=False, dtype="float64"):
+    """Worker-side decode of a ``list<float|double>`` Arrow column →
+    ``(live, M)``: the non-NULL-row mask and those rows as a zero-copy
+    ``(n_live, dim)`` matrix (float32 widens exactly). Each row must hold
+    exactly ``dim`` elements (``None``: the first row's count) — checked
+    per row, not per batch total. Wrong lengths, and NULL vectors unless
+    ``allow_null``, raise a ValueError naming ``what``."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    live = np.asarray(col.is_valid())
+    if col.null_count:
+        if not allow_null:
+            raise ValueError(f"{what}: NULL vector (no NULL route; filter them first)")
+        col = col.drop_null()
+    lens = np.asarray(pc.list_value_length(col))
+    if dim is None:
+        dim = int(lens[0]) if len(lens) else 0
+    if (lens != dim).any():
+        bad = lens[lens != dim][0]
+        raise ValueError(f"{what}: a vector holds {bad} elements, expected {dim} each")
+    return live, np.asarray(col.flatten(), dtype=dtype).reshape(len(col), dim)
+
+
+def _list_column(values, offsets=None):
+    """Inverse of :func:`_vector_matrix`: an ``(n, dim)`` matrix, or flat
+    ``values`` cut at ``offsets``, as an Arrow list column."""
+    import numpy as np
+    import pyarrow as pa
+
+    if offsets is None:
+        offsets = np.arange(values.shape[0] + 1) * values.shape[1]
+    return pa.ListArray.from_arrays(
+        pa.array(np.asarray(offsets, dtype=np.int32)),
+        pa.array(np.ascontiguousarray(values).ravel()),
+    )
+
+
+def _collect_vectors(df, id_col, vec_col, what, *extra, dim=None, optional=False):
+    """Driver-side collect through Arrow under :data:`NP_TIER_MAX_COLLECT`:
+    ``(int64 ids, (n, dim) matrix, *extra columns)`` in row order, vectors
+    checked like the workers'. A NULL value raises a ValueError naming
+    ``what`` — or, with ``optional``, returns None (as does a side over the
+    cap) for callers that fall back to their expression tier."""
+    import numpy as np
+
+    try:
+        tbl = _collect_small_side(df.select(id_col, vec_col, *extra), what, arrow=True)
+    except ValueError:
+        if optional:
+            return None
+        raise
+    cols = [c.combine_chunks() for c in tbl.columns]
+    if any(c.null_count for c in cols):
+        if optional:
+            return None
+        raise ValueError(f"{what}: NULL id or vector on the collected side")
+    _, M = _vector_matrix(cols[1], what, dim)
+    return (np.asarray(cols[0], dtype=np.int64), M, *map(np.asarray, cols[2:]))
+
+
+def _collect_centroids(centroids: DataFrame, what: str):
+    """``(c_ids, C)`` of a ``(c_id, c_vec)`` table in ``c_id`` order; an
+    empty table raises."""
+    c_ids, C = _collect_vectors(
+        centroids.orderBy("c_id"), "c_id", "c_vec", f"{what} centroid"
+    )
+    if not len(c_ids):
+        raise ValueError(f"{what}: the centroid table is empty")
+    return c_ids, C
+
+
+def _unit_rows(X, what: str | None = None):
+    """Rows of ``X`` at unit L2 norm. Without ``what`` the norm is floored
+    at 1e-12 (a zero row scores 0 everywhere); with it a zero row raises a
+    ValueError naming ``what`` instead of going NaN into a plausible code,
+    cell or rank."""
+    import numpy as np
+
+    norms = np.linalg.norm(X, axis=1, keepdims=True)
+    if what is None:
+        return X / np.maximum(norms, 1e-12)
+    if (norms == 0.0).any():
+        raise ValueError(f"{what}: zero-norm vector cannot be unit-normalized")
+    return X / norms
+
+
+def _top_cells(S, n: int):
+    """Column indices of each row's ``n`` largest scores, best first."""
+    import numpy as np
+
+    if n == 1:
+        return S.argmax(axis=1)[:, None]
+    part = np.argpartition(-S, n - 1, axis=1)[:, :n]
+    order = np.take_along_axis(-S, part, axis=1).argsort(axis=1)
+    return np.take_along_axis(part, order, axis=1)
 
 
 def _sweep_rows(A, B):
@@ -1328,43 +1353,34 @@ def assign_centroids_np(
     rows through a window); this computes each Arrow batch as one
     (batch x dim)@(dim x centroids) BLAS matmul with a local argpartition —
     no row explosion at all. Appends ``c_id`` (top-1) or explodes n probes.
+    The ``df`` columns pass through as their original Arrow arrays; a NULL
+    or wrong-length vector raises (no NULL route: filter first).
     """
     import numpy as np
+    import pyarrow as pa
     from pyspark.sql import types as T
 
-    cent_rows = _collect_small_side(centroids.orderBy("c_id"), "centroid")
-    c_ids = np.array([r["c_id"] for r in cent_rows], dtype=np.int64)
-    C = np.array([list(r["c_vec"]) for r in cent_rows], dtype=np.float64)
-    Cn = (
-        C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    ).T  # (dim, m); floored like the expression tiers for zero-norm centroids
+    c_ids, C = _collect_centroids(centroids, "assign_centroids_np")
+    Cn = _unit_rows(C).T  # (dim, m); floored like the expression tiers
     n = min(n, len(c_ids))  # probing every cell == exhaustive, not an error
 
     schema = T.StructType(list(df.schema.fields) + [T.StructField("c_id", T.LongType())])
 
     def batches(it):
-        for pdf in it:
-            if pdf.empty:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            _, V = _vector_matrix(
+                batch.column(vec_col), "assign_centroids_np", C.shape[1]
+            )
             # floor like the centroid side: a zero-norm row otherwise goes
             # NaN and argmaxes silently to candidate 0 (r10 ADVICE)
-            V = V / np.maximum(np.linalg.norm(V, axis=1, keepdims=True), 1e-12)
-            sims = V @ Cn  # (b, m)
-            if n == 1:
-                idx = sims.argmax(axis=1)[:, None]
-            else:
-                part = np.argpartition(-sims, n - 1, axis=1)[:, :n]
-                order = np.take_along_axis(-sims, part, axis=1).argsort(axis=1)
-                idx = np.take_along_axis(part, order, axis=1)
-            frames = []
-            for j in range(idx.shape[1]):
-                out = pdf.copy()
-                out["c_id"] = c_ids[idx[:, j]]
-                frames.append(out)
-            yield pd.concat(frames, ignore_index=True)
+            idx = _top_cells(_unit_rows(V) @ Cn, n)  # (b, n)
+            if n > 1:  # probe-major: every row with its best cell, then its 2nd, ...
+                batch = batch.take(np.tile(np.arange(batch.num_rows), n))
+            yield batch.append_column("c_id", pa.array(c_ids[idx.T.ravel()]))
 
-    return df.mapInPandas(batches, schema=schema)
+    return df.mapInArrow(batches, schema=schema)
 
 
 def cosine_topk_np(
@@ -1380,50 +1396,66 @@ def cosine_topk_np(
     in one matmul and emits only its LOCAL top-k per query (partial top-k
     combine); a final rank over queries x k x n_batches rows is negligible.
     Same output contract as :func:`cosine_topk` (sim rounded 6dp; last-bit
-    BLAS drift possible vs the expression tier).
+    BLAS drift possible vs the expression tier). NULL corpus ids never rank
+    (as in :func:`cosine_topk`); a NULL, wrong-length or zero-norm vector
+    raises.
     """
+    q_ids, Q = _collect_vectors(queries, id_col, vec_col, "cosine_topk_np query")
+    Qn = _unit_rows(Q, "cosine_topk_np query").T  # (dim, nq)
+    return _partial_topk(
+        corpus.select(id_col, vec_col),
+        lambda V: -(_unit_rows(V, "cosine_topk_np") @ Qn).T,  # -sims (nq, b)
+        "cosine_topk_np", Q.shape[1], q_ids, k, "sim", sign=-1.0,
+    )
+
+
+def _partial_topk(frame, score, what, width, q_ids, k, col, sign=1.0, dtype="float64"):
+    """The partial top-k combine of :func:`cosine_topk_np` and
+    :func:`pq_topk`. Per Arrow batch of ``frame`` (id, vector) each query
+    keeps its ``k+1`` rows of lowest ``score(X)`` (an ``(nq, n)`` matrix;
+    the +1 absorbs the query matching itself), emitted as
+    ``col = sign * score``; one rank per query over those partials then
+    drops self pairs and orders the 6dp-rounded ``col`` (ascending for
+    ``sign > 0``), ties by ``n_id``. NULL ids never rank."""
     import numpy as np
+    import pyarrow as pa
     from pyspark.sql import types as T
 
-    q_rows = _collect_small_side(queries.select(id_col, vec_col), "query")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    Qn = (Q / np.linalg.norm(Q, axis=1, keepdims=True)).T  # (dim, nq)
+    def batches(it):
+        for batch in it:
+            if batch.num_rows == 0 or len(q_ids) == 0:
+                continue
+            id_arr = batch.column(0)
+            _, X = _vector_matrix(batch.column(1), what, width, dtype=dtype)
+            rows = np.flatnonzero(np.asarray(id_arr.is_valid()))
+            if not len(rows):
+                continue
+            D = score(X[rows])
+            kk = min(k + 1, D.shape[1])
+            qi = np.repeat(np.arange(len(q_ids)), kk)
+            ri = np.argpartition(D, kk - 1, axis=1)[:, :kk].ravel()
+            yield pa.RecordBatch.from_pydict({
+                "q_id": q_ids[qi],
+                "n_id": id_arr.take(rows[ri]).cast(pa.int64()),
+                col: sign * D[qi, ri],
+            })
 
     schema = T.StructType(
         [
             T.StructField("q_id", T.LongType()),
             T.StructField("n_id", T.LongType()),
-            T.StructField("sim", T.DoubleType()),
+            T.StructField(col, T.DoubleType()),
         ]
     )
-
-    def batches(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            sims = V @ Qn  # (b, nq)
-            kk = min(k + 1, sims.shape[0])  # +1 absorbs a query matching itself
-            part = np.argpartition(-sims, kk - 1, axis=0)[:kk]  # (kk, nq)
-            out = {"q_id": [], "n_id": [], "sim": []}
-            for qi in range(sims.shape[1]):
-                rows = part[:, qi]
-                out["q_id"].extend([q_ids[qi]] * len(rows))
-                out["n_id"].extend(ids[rows].tolist())
-                out["sim"].extend(sims[rows, qi].tolist())
-            yield pd.DataFrame(out)
-
-    partial = corpus.mapInPandas(batches, schema=schema)
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
+    order = F.col(col).asc() if sign > 0 else F.col(col).desc()
+    w = Window.partitionBy("q_id").orderBy(order, F.col("n_id"))
     return (
-        partial.filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("sim", F.round("sim", 6))
+        frame.mapInArrow(batches, schema=schema)
+        .filter(F.col("q_id") != F.col("n_id"))
+        .withColumn(col, F.round(col, 6))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
-        .select("q_id", "n_id", "rnk", "sim")
+        .select("q_id", "n_id", "rnk", col)
     )
 
 
@@ -1629,7 +1661,7 @@ def kmeans_parallel_init(
     draw (hash of ``id × round-salt`` — reproducible cross-run, no RNG
     state; the sandbox-wide determinism contract). Candidates accumulate
     (expected ``l`` per round; collected under the
-    :func:`_collect_small_side` cap — loud, never silent).
+    :data:`NP_TIER_MAX_COLLECT` cap — loud, never silent).
 
     Driver part: one more distributed pass weights each candidate by the
     corpus mass it attracts (argmax-cosine counts), then a GREEDY weighted
@@ -1657,8 +1689,13 @@ def kmeans_parallel_init(
     share one materialization; the cache is freed before the next round,
     so peak extra storage is one corpus+d copy. Run it on the same
     embedding SAMPLE kmeans_train trains on and reuse the centroids.
+
+    Rows with a NULL vector, or a NULL id (a candidate is named by its
+    source id), are filtered out before seeding; a wrong-length vector
+    raises.
     """
     import numpy as np
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     if k < 1:
@@ -1667,42 +1704,39 @@ def kmeans_parallel_init(
     vecs = df.select(
         F.col(id_col).cast("long").alias(id_col),
         F.col(vec_col).cast("array<double>").alias(vec_col),
-    ).filter(F.col(vec_col).isNotNull())
+    ).filter(F.col(vec_col).isNotNull() & F.col(id_col).isNotNull())
 
     def _dmin_pass(seed_mat: "np.ndarray"):
         """Append d = 1 - max-cosine-to-seed per row (one matmul/batch)."""
-        Sn = (
-            seed_mat
-            / np.maximum(np.linalg.norm(seed_mat, axis=1, keepdims=True), 1e-12)
-        ).T
+        Sn = _unit_rows(seed_mat).T
 
         schema = T.StructType(
             list(vecs.schema.fields) + [T.StructField("d", T.DoubleType())]
         )
 
         def batches(it):
-            for pdf in it:
-                if pdf.empty:
+            for batch in it:
+                if batch.num_rows == 0:
                     continue
-                V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-                Vn = V / np.maximum(
-                    np.linalg.norm(V, axis=1, keepdims=True), 1e-12
+                _, V = _vector_matrix(
+                    batch.column(vec_col), "kmeans_parallel_init", Sn.shape[0]
                 )
-                out = pdf.copy()
-                out["d"] = 1.0 - (Vn @ Sn).max(axis=1)
-                yield out
+                d = 1.0 - (_unit_rows(V) @ Sn).max(axis=1)
+                yield batch.append_column("d", pa.array(d))
 
-        return vecs.mapInPandas(batches, schema=schema)
+        return vecs.mapInArrow(batches, schema=schema)
 
-    first = vecs.orderBy(id_col).limit(1).collect()
-    if not first:
+    first_id, first_vec = _collect_vectors(
+        vecs.orderBy(id_col).limit(1), id_col, vec_col, "kmeans_parallel_init"
+    )
+    if not len(first_id):
         raise ValueError(
             "kmeans_parallel_init: corpus has no non-NULL vectors"
         )
-    cand_ids = [int(first[0][id_col])]
-    cand_vecs = [list(first[0][vec_col])]
+    cand_ids = [int(first_id[0])]
+    cand_vecs = [first_vec[0]]
     for r in range(rounds):
-        S = np.array(cand_vecs, dtype=np.float64)
+        S = np.stack(cand_vecs)
         # persist the d-frame: the cost agg materializes the matmul pass
         # ONCE and the Bernoulli candidate filter re-scans the cache — not
         # a second corpus compute (r10 ADVICE: unpersisted, the real cost
@@ -1719,25 +1753,24 @@ def kmeans_parallel_init(
             p = F.least(
                 F.lit(1.0), F.lit(float(l)) * F.col("d") / F.lit(float(cost))
             )
-            picked = _collect_small_side(
-                with_d.filter(draw < p * 1_000_000_000).select(id_col, vec_col),
-                "kmeans|| candidate",
+            picked_ids, picked_vecs = _collect_vectors(
+                with_d.filter(draw < p * 1_000_000_000),
+                id_col, vec_col, "kmeans|| candidate", dim=S.shape[1],
             )
         finally:
             with_d.unpersist()
         seen = set(cand_ids)
-        for row in picked:
-            i = int(row[id_col])
+        for i, v in zip(picked_ids.tolist(), picked_vecs):
             if i not in seen:
                 seen.add(i)
                 cand_ids.append(i)
-                cand_vecs.append(list(row[vec_col]))
+                cand_vecs.append(v)
 
     # weight candidates by attracted corpus mass (argmax cosine, ties to
     # the earliest candidate — assign_centroids_np's argmax rule)
     spark = df.sparkSession
     cand_df = spark.createDataFrame(
-        [(i, cid, v) for i, (cid, v) in enumerate(zip(cand_ids, cand_vecs))],
+        [(i, cid, v.tolist()) for i, (cid, v) in enumerate(zip(cand_ids, cand_vecs))],
         schema="c_id long, src_id long, c_vec array<double>",
     )
     assigned = assign_centroids_np(vecs, cand_df, id_col=id_col, vec_col=vec_col)
@@ -1749,8 +1782,7 @@ def kmeans_parallel_init(
     # greedy weighted k-means++ over the candidate set (driver, numpy);
     # picks are vectorized lexsorts — primary score desc, ties to lowest
     # source id (deterministic: candidates are strictly id-dedup'd)
-    C = np.array(cand_vecs, dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    Cn = _unit_rows(np.stack(cand_vecs))
     n_cand = len(cand_ids)
     ids_arr = np.array(cand_ids, dtype=np.int64)
 
@@ -1769,7 +1801,7 @@ def kmeans_parallel_init(
         dmin = np.minimum(dmin, 1.0 - Cn @ Cn[best])
 
     return spark.createDataFrame(
-        [(j, cand_vecs[i]) for j, i in enumerate(chosen)],
+        [(j, cand_vecs[i].tolist()) for j, i in enumerate(chosen)],
         schema="c_id long, c_vec array<double>",
     )
 
@@ -2079,7 +2111,7 @@ def pq_train(
                 break
             except ValueError as e:
                 # only the empty-seed miss is retryable; anything else
-                # (e.g. the _collect_small_side cap) re-raises immediately
+                # (e.g. the NP_TIER_MAX_COLLECT cap) re-raises immediately
                 if "no seed rows" not in str(e) or residue == 2:
                     raise
         w = Window.orderBy("c_id")
@@ -2136,17 +2168,49 @@ def _pq_codebook_tensor(codebooks: DataFrame):
     """(blocks-sorted numpy tensor list, m) from a (block, c_id, c_vec)
     frame — per-block (k_b, dsub) arrays (k_b may differ if clusters
     emptied)."""
+    blocks, M = _collect_vectors(
+        codebooks.orderBy("block", "c_id"), "block", "c_vec", "codebook"
+    )
+    if not len(blocks):
+        raise ValueError("pq codebook table is empty")
+    m = int(blocks.max()) + 1
+    books = [M[blocks == b] for b in range(m)]
+    for b, book in enumerate(books):
+        if not len(book):
+            raise ValueError(f"pq codebook block {b} is empty")
+    return books, m
+
+
+def _pq_codes(X, books):
+    """PQ encoder shared by :func:`pq_encode` and :func:`ivfpq_index`: per
+    block, the L2-nearest codebook centroid of each row of ``X`` →
+    ``(n, m)`` int32 codes."""
     import numpy as np
 
-    rows = _collect_small_side(codebooks.orderBy("block", "c_id"), "codebook")
-    m = max(r["block"] for r in rows) + 1
-    books = []
-    for b in range(m):
-        vecs = [list(r["c_vec"]) for r in rows if r["block"] == b]
-        if not vecs:
-            raise ValueError(f"pq codebook block {b} is empty")
-        books.append(np.array(vecs, dtype=np.float64))
-    return books, m
+    dsub = X.shape[1] // len(books)
+    codes = np.empty((len(X), len(books)), dtype=np.int32)
+    for b, B in enumerate(books):
+        sub = X[:, b * dsub : (b + 1) * dsub]  # (n, dsub)
+        # ||x - c||^2 = ||x||^2 - 2 x.c + ||c||^2; ||x||^2 constant per row
+        d = -2.0 * (sub @ B.T) + (B * B).sum(axis=1)[None, :]
+        codes[:, b] = d.argmin(axis=1)
+    return codes
+
+
+def _pq_luts(X, books):
+    """ADC table builder shared by :func:`pq_topk` and :func:`ivfpq_topk`:
+    per block, the squared L2 from each row of ``X`` to every codebook
+    centroid → list of m arrays ``(len(X), k_b)``."""
+    dsub = X.shape[1] // len(books)
+    out = []
+    for b, B in enumerate(books):
+        sub = X[:, b * dsub : (b + 1) * dsub]  # (n, dsub)
+        out.append(
+            (sub * sub).sum(axis=1)[:, None]
+            - 2.0 * (sub @ B.T)
+            + (B * B).sum(axis=1)[None, :]
+        )
+    return out
 
 
 def pq_encode(
@@ -2159,12 +2223,15 @@ def pq_encode(
     """Encode vectors to PQ codes: ``(id, codes array<int>)`` — per block,
     the L2-nearest centroid's dense id. One Arrow+numpy pass with the
     broadcast codebook tensor; ``normalize=True`` unit-normalizes first so
-    ADC L2 ordering matches the cosine ordering the other ANN tiers use.
+    ADC L2 ordering matches the cosine ordering the other ANN tiers use
+    (a zero vector then raises — it has no direction to encode). A NULL
+    or wrong-length vector raises.
     """
-    import numpy as np
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     books, m = _pq_codebook_tensor(codebooks)
+    dim = m * books[0].shape[1]
     schema = T.StructType(
         [
             T.StructField(id_col, T.LongType()),
@@ -2173,25 +2240,18 @@ def pq_encode(
     )
 
     def batches(it):
-        for pdf in it:
-            if pdf.empty:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            _, V = _vector_matrix(batch.column(1), "pq_encode", dim)
             if normalize:
-                V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            dsub = V.shape[1] // m
-            codes = np.empty((len(V), m), dtype=np.int32)
-            for b in range(m):
-                sub = V[:, b * dsub : (b + 1) * dsub]  # (n, dsub)
-                C = books[b]  # (k_b, dsub)
-                # ||x - c||^2 = ||x||^2 - 2 x.c + ||c||^2; ||x||^2 constant per row
-                d = -2.0 * (sub @ C.T) + (C * C).sum(axis=1)[None, :]
-                codes[:, b] = d.argmin(axis=1)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "codes": list(codes)}
-            )
+                V = _unit_rows(V, "pq_encode")
+            yield pa.RecordBatch.from_pydict({
+                id_col: batch.column(0).cast(pa.int64()),
+                "codes": _list_column(_pq_codes(V, books)),
+            })
 
-    return df.mapInPandas(batches, schema=schema)
+    return df.select(id_col, vec_col).mapInArrow(batches, schema=schema)
 
 
 def pq_topk(
@@ -2238,62 +2298,26 @@ def pq_topk(
     smaller.
     """
     import numpy as np
-    from pyspark.sql import types as T
 
     books, m = _pq_codebook_tensor(codebooks)
-    q_rows = _collect_small_side(queries.select(id_col, vec_col), "query")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    if normalize:
-        Q = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-    dsub = Q.shape[1] // m
-    # LUT[qi][b] = squared L2 from the query's b-th sub-vector to each centroid
-    luts = []
-    for b in range(m):
-        sub = Q[:, b * dsub : (b + 1) * dsub]  # (nq, dsub)
-        C = books[b]
-        luts.append(
-            (sub * sub).sum(axis=1)[:, None]
-            - 2.0 * (sub @ C.T)
-            + (C * C).sum(axis=1)[None, :]
-        )  # (nq, k_b)
-
-    schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("n_id", T.LongType()),
-            T.StructField("dist", T.DoubleType()),
-        ]
+    q_ids, Q = _collect_vectors(
+        queries, id_col, vec_col, "pq_topk query", dim=m * books[0].shape[1]
     )
+    if normalize:
+        Q = _unit_rows(Q, "pq_topk query")
+    # LUT[b][qi] = squared L2 from the query's b-th sub-vector to each centroid
+    luts = _pq_luts(Q, books)
 
-    def batches(it):
-        for pdf in it:
-            if pdf.empty:
-                continue
-            ids = pdf[id_col].to_numpy()
-            codes = np.array(pdf["codes"].tolist(), dtype=np.int64)  # (n, m)
-            # dists (nq, n): gather each block's LUT column by the code
-            d = np.zeros((len(q_ids), len(ids)))
-            for b in range(m):
-                d += luts[b][:, codes[:, b]]
-            kk = min(k + 1, d.shape[1])
-            part = np.argpartition(d, kk - 1, axis=1)[:, :kk]  # (nq, kk)
-            out = {"q_id": [], "n_id": [], "dist": []}
-            for qi in range(len(q_ids)):
-                rows = part[qi]
-                out["q_id"].extend([q_ids[qi]] * len(rows))
-                out["n_id"].extend(ids[rows].tolist())
-                out["dist"].extend(d[qi, rows].tolist())
-            yield pd.DataFrame(out)
+    def adc(codes):
+        # dists (nq, n): gather each block's LUT column by the code
+        d = np.zeros((len(q_ids), len(codes)))
+        for b in range(m):
+            d += luts[b][:, codes[:, b]]
+        return d
 
-    partial = codes_df.mapInPandas(batches, schema=schema)
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("n_id"))
-    return (
-        partial.filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("dist", F.round("dist", 6))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "n_id", "rnk", "dist")
+    return _partial_topk(
+        codes_df.select(id_col, "codes"), adc, "pq_topk", m, q_ids, k, "dist",
+        dtype="int64",
     )
 
 
@@ -2397,12 +2421,12 @@ def coarse_residuals(
     ~4.6-norm centroids: recall 0.93 plain → 0.32 residual at probe32,
     non-monotone in probes). Means of unit vectors have norm ≤ 1, so a
     table with ``max ||c|| > 2`` is provably not assignment-space and is
-    refused loudly."""
+    refused loudly. A NULL or wrong-length vector raises."""
     import numpy as np
+    import pyarrow as pa
     from pyspark.sql import types as T
 
-    cent_rows = _collect_small_side(coarse_centroids.orderBy("c_id"), "centroid")
-    C = np.array([list(r["c_vec"]) for r in cent_rows], dtype=np.float64)
+    _, C = _collect_centroids(coarse_centroids, "coarse_residuals")
     _check_residual_centroid_scale(C, "coarse_residuals")
     Cn = (C / np.linalg.norm(C, axis=1, keepdims=True)).T  # (dim, n_cells)
     mean_np = None if center_vec is None else np.asarray(center_vec, dtype=np.float64)
@@ -2415,17 +2439,18 @@ def coarse_residuals(
     )
 
     def batches(it):
-        for pdf in it:
-            if pdf.empty:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            _, V = _vector_matrix(batch.column(1), "coarse_residuals", C.shape[1])
             A = V if mean_np is None else V - mean_np[None, :]
-            A = A / np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
+            A = _unit_rows(A)
             pos = (A @ Cn).argmax(axis=1)
-            R = A - C[pos]
-            yield pd.DataFrame({id_col: pdf[id_col].to_numpy(), out: list(R)})
+            yield pa.RecordBatch.from_pydict({
+                id_col: batch.column(0).cast(pa.int64()), out: _list_column(A - C[pos])
+            })
 
-    return df.select(id_col, vec_col).mapInPandas(batches, schema=schema)
+    return df.select(id_col, vec_col).mapInArrow(batches, schema=schema)
 
 
 def ivfpq_index(
@@ -2446,7 +2471,7 @@ def ivfpq_index(
     (:func:`pq_encode` semantics: per block, the L2-nearest centroid of the
     unit-normalized vector).
 
-    Fusing assignment + encoding into a single ``mapInPandas`` scan avoids
+    Fusing assignment + encoding into a single ``mapInArrow`` scan avoids
     the second corpus pass AND the id-on-id join the two-operator
     composition would shuffle — the build-once artifact for
     :func:`ivfpq_topk` is 1 scan, 0 shuffles. At 100 TB the raw vectors
@@ -2478,18 +2503,22 @@ def ivfpq_index(
     center_vec) to :func:`ivfpq_topk`, whose ADC tables then shift by each
     probed cell's centroid. ``normalize`` is ignored for the code space in
     this mode (assignment-space unit vectors are what the residual is taken
-    against)."""
+    against).
+
+    A NULL or wrong-length vector raises, and so does a zero vector wherever
+    its unit normalization is used (no center_vec, or normalized codes) —
+    it would otherwise be coded ``[0, …, 0]`` in cell ``c_ids[0]``."""
     import numpy as np
+    import pyarrow as pa
     from pyspark.sql import types as T
 
     books, m = _pq_codebook_tensor(codebooks)
-    cent_rows = _collect_small_side(coarse_centroids.orderBy("c_id"), "centroid")
-    c_ids = np.array([r["c_id"] for r in cent_rows], dtype=np.int64)
-    C = np.array([list(r["c_vec"]) for r in cent_rows], dtype=np.float64)
+    c_ids, C = _collect_centroids(coarse_centroids, "ivfpq_index")
     if residual:
         _check_residual_centroid_scale(C, "ivfpq_index(residual=True)")
     Cn = (C / np.linalg.norm(C, axis=1, keepdims=True)).T  # (dim, n_cells)
     mean_np = None if center_vec is None else np.asarray(center_vec, dtype=np.float64)
+    uses_unit = mean_np is None or (normalize and not residual)
 
     schema = T.StructType(
         [
@@ -2501,58 +2530,34 @@ def ivfpq_index(
 
     r = min(max(1, assign_r), len(c_ids))
 
-    def _encode(E):
-        dsub = E.shape[1] // m
-        codes = np.empty((len(E), m), dtype=np.int32)
-        for b in range(m):
-            sub = E[:, b * dsub : (b + 1) * dsub]
-            B = books[b]
-            d = -2.0 * (sub @ B.T) + (B * B).sum(axis=1)[None, :]
-            codes[:, b] = d.argmin(axis=1)
-        return codes
-
     def batches(it):
-        for pdf in it:
-            if pdf.empty:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            V = np.array(pdf[vec_col].tolist(), dtype=np.float64)
-            Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
-            A = Vn if mean_np is None else V - mean_np[None, :]
-            if mean_np is not None:
-                A = A / np.maximum(np.linalg.norm(A, axis=1, keepdims=True), 1e-12)
-            S = A @ Cn
-            if r == 1:
-                idx = S.argmax(axis=1)[:, None]
-            else:
-                part = np.argpartition(-S, r - 1, axis=1)[:, :r]
-                order = np.take_along_axis(-S, part, axis=1).argsort(axis=1)
-                idx = np.take_along_axis(part, order, axis=1)  # (n, r) desc sim
-            frames = []
+            _, V = _vector_matrix(batch.column(1), "ivfpq_index", C.shape[1])
+            Vn = _unit_rows(V, "ivfpq_index") if uses_unit else None
+            A = Vn if mean_np is None else _unit_rows(V - mean_np[None, :])
+            idx = _top_cells(A @ Cn, r)  # (n, r) desc sim
+            codes = []
             for j in range(r):
-                pos = idx[:, j]
                 if residual:
                     # each copy's code against ITS OWN cell: the copy found
                     # via cell c must rank under c's ADC tables
-                    E = A - C[pos]
+                    codes.append(_pq_codes(A - C[idx[:, j]], books))
                 elif j == 0:
-                    E = Vn if normalize else V
+                    codes.append(_pq_codes(Vn if normalize else V, books))
                 else:
-                    frames.append(
-                        frames[0].assign(c_id=c_ids[pos])  # same code, new cell
-                    )
-                    continue
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            id_col: pdf[id_col].to_numpy(),
-                            "c_id": c_ids[pos],
-                            "codes": list(_encode(E)),
-                        }
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
+                    codes.append(codes[0])  # same code, new cell
+            ids = batch.column(0).cast(pa.int64())
+            if r > 1:  # copy-major: every row in its best cell, then its 2nd, ...
+                ids = ids.take(np.tile(np.arange(batch.num_rows), r))
+            yield pa.RecordBatch.from_pydict({
+                id_col: ids,
+                "c_id": c_ids[idx.T.ravel()],
+                "codes": _list_column(np.concatenate(codes)),
+            })
 
-    return corpus.select(id_col, vec_col).mapInPandas(batches, schema=schema)
+    return corpus.select(id_col, vec_col).mapInArrow(batches, schema=schema)
 
 
 def _pack_code_cols(group_lens: list) -> list:
@@ -2711,9 +2716,16 @@ def ivfpq_topk(
     every residual ``≈ −c`` and recall craters non-monotonically (0.93 →
     0.32 on the clustered fixture before the guard).
 
+    Input contracts: index rows with a NULL id or cell are skipped (they
+    can never join the rerank); NULL or wrong-length codes, a NULL or
+    wrong-length query vector, and a zero query vector wherever its unit
+    normalization is used raise a ValueError.
+
     Output: the exact tiers' ``(q_id, n_id, rnk, sim)`` contract.
     """
     import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
     from pyspark.sql import types as T
 
     books, m = _pq_codebook_tensor(codebooks)
@@ -2725,17 +2737,21 @@ def ivfpq_topk(
             f"block) — train with pq_train(k<=256)"
         )
 
-    cent_rows = _collect_small_side(coarse_centroids.orderBy("c_id"), "centroid")
-    c_ids = np.array([r["c_id"] for r in cent_rows], dtype=np.int64)
-    C = np.array([list(r["c_vec"]) for r in cent_rows], dtype=np.float64)
+    c_ids, C = _collect_centroids(coarse_centroids, "ivfpq_topk")
     if residual:
         _check_residual_centroid_scale(C, "ivfpq_topk(residual=True)")
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
 
-    q_rows = _collect_small_side(queries.select(id_col, vec_col), "query")
-    q_ids = np.array([r[0] for r in q_rows], dtype=np.int64)
-    Q = np.array([list(r[1]) for r in q_rows], dtype=np.float64)
-    Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+    q_ids, Q = _collect_vectors(
+        queries, id_col, vec_col, "ivfpq_topk query", dim=C.shape[1]
+    )
+    # the unit query probes (without center_vec) and feeds plain normalized
+    # ADC; where it is used, a zero query raises instead of going NaN
+    Qn = (
+        _unit_rows(Q, "ivfpq_topk query")
+        if center_vec is None or (normalize and not residual)
+        else None
+    )
     Qe = Qn if normalize else Q
 
     # probe selection: top-n_probe cells per query (cosine); with
@@ -2744,7 +2760,7 @@ def ivfpq_topk(
     Qa = Qn
     if center_vec is not None:
         Qc = Q - np.asarray(center_vec, dtype=np.float64)[None, :]
-        Qa = Qc / np.maximum(np.linalg.norm(Qc, axis=1, keepdims=True), 1e-12)
+        Qa = _unit_rows(Qc)
     sims = Qa @ Cn.T
     n_take = min(n_probe, sims.shape[1])
     # full stable argsort (the centroid table is broadcast-small by
@@ -2758,35 +2774,22 @@ def ivfpq_topk(
             cell_to_q.setdefault(int(c_ids[ci]), []).append(qi)
     cell_to_q_np = {c: np.array(v, dtype=np.int64) for c, v in cell_to_q.items()}
 
-    dsub = Qe.shape[1] // m
-
-    def _block_luts(X):
-        """Per-block squared-L2 tables from row vectors X to every centroid:
-        list of m arrays (len(X), k_b)."""
-        out = []
-        for b in range(m):
-            sub = X[:, b * dsub : (b + 1) * dsub]
-            B = books[b]
-            out.append(
-                (sub * sub).sum(axis=1)[:, None]
-                - 2.0 * (sub @ B.T)
-                + (B * B).sum(axis=1)[None, :]
-            )
-        return out
-
     # Worker-side table inputs: per probed cell the workers rebuild the
     # per-(query, cell) residual tables from these small arrays
     c_pos = {int(cid): i for i, cid in enumerate(c_ids)}
-    luts = None if residual else _block_luts(Qe)
+    luts = None if residual else _pq_luts(Qe, books)
 
     n_groups = (m + 7) // 8
     group_lens = [min(8, m - g * 8) for g in range(n_groups)]
     pack_cols = _pack_code_cols(group_lens)
     # cell-major layout: hash-repartition on c_id + in-partition sort
     # makes each cell's rows contiguous in one partition, so its tables
-    # are built exactly once and freed when the scan moves past it
+    # are built exactly once and freed when the scan moves past it. The
+    # code count rides along: packing cannot tell a short code from zeros
     packed = (
-        index_df.select(F.col(id_col), F.col("c_id"), *pack_cols)
+        index_df.select(
+            F.col(id_col), F.col("c_id"), F.size("codes").alias("__m"), *pack_cols
+        )
         .repartition(F.col("c_id"))
         .sortWithinPartitions("c_id")
     )
@@ -2823,15 +2826,26 @@ def ivfpq_topk(
         # per (cell, partition); the dict is cleared when it grows past
         # the handful a batch boundary can straddle.
         lut_memo: dict[int, list] = {}
-        for pdf in it:
-            if pdf.empty:
+        for batch in it:
+            # NULL ids / cells can never reach a candidate (the rerank
+            # joins on id, the probes on c_id)
+            ok = pc.and_(batch.column(0).is_valid(), batch.column(1).is_valid())
+            if ok.false_count:
+                batch = batch.filter(ok)
+            if batch.num_rows == 0:
                 continue
-            cid_arr = pdf["c_id"].to_numpy()
-            ids_all = pdf[id_col].to_numpy()
-            codes = np.empty((len(pdf), m), dtype=np.int64)
+            n_codes = batch.column(2)
+            if n_codes.null_count or (np.asarray(n_codes) != m).any():
+                raise ValueError(
+                    f"ivfpq_topk: NULL or wrong-length codes in the index "
+                    f"(expected {m} codes per row)"
+                )
+            cid_arr = np.asarray(batch.column(1), dtype=np.int64)
+            ids_all = np.asarray(batch.column(0), dtype=np.int64)
+            codes = np.empty((batch.num_rows, m), dtype=np.int64)
             bpos = 0
             for g, glen in enumerate(group_lens):
-                v = pdf[f"p{g}"].to_numpy()
+                v = np.asarray(batch.column(3 + g))
                 for j in range(glen):
                     codes[:, bpos + j] = (v >> (8 * (glen - 1 - j))) & 255
                 bpos += glen
@@ -2853,7 +2867,7 @@ def ivfpq_topk(
                     if cl is None:
                         if len(lut_memo) > 16:
                             lut_memo.clear()
-                        cl = _block_luts(Qa[qs] - C[c_pos[cell]][None, :])
+                        cl = _pq_luts(Qa[qs] - C[c_pos[cell]][None, :], books)
                         lut_memo[cell] = cl
                     for b in range(m):
                         d += cl[b][:, cc[:, b]]
@@ -2893,16 +2907,14 @@ def ivfpq_topk(
             # rows into a global ranking window — the O(nq × partitions
             # × shortlist) term that dominated deep-shortlist configs.
             starts = np.flatnonzero(np.r_[True, qa[1:] != qa[:-1]])
-            ends = np.r_[starts[1:], len(qa)]
-            yield pd.DataFrame(
-                {
-                    "q_id": qa[starts],
-                    "n_ids": [na[s:e] for s, e in zip(starts, ends)],
-                    "dists": [da[s:e] for s, e in zip(starts, ends)],
-                }
-            )
+            offsets = np.r_[starts, len(qa)]
+            yield pa.RecordBatch.from_pydict({
+                "q_id": qa[starts],
+                "n_ids": _list_column(na, offsets),
+                "dists": _list_column(da, offsets),
+            })
 
-    partial = packed.mapInPandas(batches, schema=schema)
+    partial = packed.mapInArrow(batches, schema=schema)
 
     def _merge(pdf):
         # Global top-``shortlist`` per query over the per-partition
@@ -3069,28 +3081,24 @@ def semantic_dedup(
         from pyspark.sql import types as T
 
         _int_types = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-        cent_rows = None
+        cents_np = None
         if exact_arrow and isinstance(df.schema[id_col].dataType, _int_types):
-            try:
-                cent_rows = _collect_small_side(
-                    _cents_a(cent_proj).orderBy("c_id"), "semantic_dedup centroid"
-                )
-            except ValueError:
-                cent_rows = None  # too many centroids: expression tier below
-            if cent_rows is not None and not cent_rows:
+            # None above the collect cap (too many centroids) or on a NULL
+            # centroid row: the expression tier below handles both
+            cents_np = _collect_vectors(
+                _cents_a(cent_proj).orderBy("c_id"), "c_id", "__ca",
+                "semantic_dedup centroid", "__cn", optional=True,
+            )
+            if cents_np is not None and not len(cents_np[0]):
                 raise ValueError(_empty_centroids_msg)
-            if cent_rows is not None and any(
-                r["c_id"] is None or r["__ca"] is None for r in cent_rows
-            ):
-                cent_rows = None  # NULL centroid row: expression tier handles it
-        if cent_rows is None and cent_side is None:
+        if cents_np is None and cent_side is None:
             # sweep declined (centroid side above the driver-collect cap):
             # fall back to the distributed expression tier, which needs the
             # materialized + emptiness-guarded centroid table after all
             cent_side = materialize(cent_proj)
             if cent_side.isEmpty():
                 raise ValueError(_empty_centroids_msg)
-        if cent_rows is not None:
+        if cents_np is not None:
             # Arrow sweep tier (r15, guide §4.2): the n×k assignment dots are
             # the operator's dominant cost (measured on x32: ~70 s task-run
             # at sf0.1, ~1 µs per interpreted fold element). The sweep
@@ -3109,10 +3117,9 @@ def semantic_dedup(
             # which remains both the >cap fallback and the
             # exact_arrow=False arm.
             import numpy as np
+            import pyarrow as pa
 
-            c_id_arr = np.array([int(r["c_id"]) for r in cent_rows], dtype=np.int64)
-            C_mat = np.array([list(r["__ca"]) for r in cent_rows], dtype=np.float64)
-            c_norms = np.array([r["__cn"] for r in cent_rows], dtype=np.float64)
+            c_id_arr, C_mat, c_norms = cents_np
             min_cid = int(c_id_arr.min())
             cand_margin = 2 * 10.0 ** (-round_dp)
             # the sweep wants few LARGE Arrow batches (its parallelism axis
@@ -3139,19 +3146,24 @@ def semantic_dedup(
                 ]
             )
 
+            def _cands(batch, rows, cids, raw):
+                return pa.RecordBatch.from_pydict({
+                    id_col: batch.column(0).take(rows),
+                    "ev": batch.column(1).take(rows),
+                    "c_id": pa.array(cids).cast(batch.column(0).type),
+                    "__raw": pa.nulls(len(rows), pa.float64()) if raw is None else raw,
+                })
+
             def _assign_batches(it):
-                for pdf in it:
-                    if pdf.empty:
-                        continue
-                    na = pdf["__va"].isna().to_numpy()
-                    frames = []
-                    if (~na).any():
-                        sub = pdf[~na]
-                        V = np.array(sub["__va"].tolist(), dtype=np.float64)
-                        vn = sub["__vn"].to_numpy(dtype=np.float64)
-                        raw = _sweep_cross(V, C_mat) / np.multiply.outer(
-                            vn, c_norms
-                        )
+                for batch in it:
+                    live, V = _vector_matrix(
+                        batch.column(2), "semantic_dedup", C_mat.shape[1],
+                        allow_null=True,
+                    )
+                    rows = np.flatnonzero(live)
+                    if len(rows):
+                        vn = np.asarray(batch.column(3), dtype=np.float64)[rows]
+                        raw = _sweep_cross(V, C_mat) / np.multiply.outer(vn, c_norms)
                         r_np = np.round(raw, round_dp)
                         mx = r_np.max(axis=1, keepdims=True)
                         # NaN sims (NaN vector data) stay candidates: Spark's
@@ -3159,36 +3171,17 @@ def semantic_dedup(
                         # like the expression tier
                         keep = (r_np >= mx - cand_margin) | np.isnan(r_np)
                         ri, cj = np.nonzero(keep)
-                        frames.append(
-                            pd.DataFrame(
-                                {
-                                    id_col: sub[id_col].to_numpy()[ri],
-                                    "ev": sub["ev"].to_numpy()[ri],
-                                    "c_id": c_id_arr[cj],
-                                    "__raw": raw[ri, cj],
-                                }
-                            )
-                        )
-                    if na.any():
+                        yield _cands(batch, rows[ri], c_id_arr[cj], raw[ri, cj])
+                    if not live.all():
                         # whole-vector NULLs: the expression tier's sims are
                         # all NULL there and max_by's struct ordering falls
                         # to the -c_id tiebreak — the SMALLEST c_id wins
                         # (with the NULL ev riding along). One candidate row
                         # with a NULL __raw reproduces that ordering.
-                        sub = pdf[na]
-                        frames.append(
-                            pd.DataFrame(
-                                {
-                                    id_col: sub[id_col],
-                                    "ev": sub["ev"],
-                                    "c_id": np.full(len(sub), min_cid, dtype=np.int64),
-                                    "__raw": pd.array([None] * len(sub), dtype="float64"),
-                                }
-                            )
-                        )
-                    yield pd.concat(frames, ignore_index=True)
+                        nul = np.flatnonzero(~live)
+                        yield _cands(batch, nul, np.full(len(nul), min_cid), None)
 
-            cand_rows = vecs_sw.mapInPandas(_assign_batches, schema=cand_schema)
+            cand_rows = vecs_sw.mapInArrow(_assign_batches, schema=cand_schema)
             assign = (
                 cand_rows.groupBy(id_col)
                 .agg(
@@ -3280,6 +3273,7 @@ def semantic_dedup(
         # threshold - 10^-dp can round up to the threshold), then Spark's
         # own Round expression applies the exact cut.
         import numpy as np
+        import pyarrow as pa
         from pyspark.sql import types as T
 
         margin = threshold - 10.0 ** (-round_dp)
@@ -3289,14 +3283,16 @@ def semantic_dedup(
         )
 
         def _verdict_batches(it):
-            for pdf in it:
-                if pdf.empty:
+            for batch in it:
+                if batch.num_rows == 0:
                     continue
-                Ev = np.array(pdf["ev"].tolist(), dtype=np.float64)
-                Rv = np.array(pdf["rv"].tolist(), dtype=np.float64)
-                denom = pdf["__n"].to_numpy(dtype=np.float64) * pdf[
-                    "__rn"
-                ].to_numpy(dtype=np.float64)
+                _, Ev = _vector_matrix(batch.column(1), "semantic_dedup verdict")
+                _, Rv = _vector_matrix(
+                    batch.column(2), "semantic_dedup verdict", Ev.shape[1]
+                )
+                denom = np.asarray(batch.column(3), dtype=np.float64) * np.asarray(
+                    batch.column(4), dtype=np.float64
+                )
                 if (denom == 0.0).any():
                     # loudness parity: the expression tier's pair_sim divide
                     # raises DIVIDE_BY_ZERO under Spark 4 default ANSI for a
@@ -3311,19 +3307,18 @@ def semantic_dedup(
                 # NaN raws must reach Spark: its NaN-is-largest comparison
                 # semantics make round(NaN) >= threshold TRUE, exactly like
                 # the expression tier's filter on the folded sim
-                m = (raw >= margin) | np.isnan(raw)
-                yield pd.DataFrame(
-                    {id_col: pdf[id_col][m], "__raw": raw[m]}
+                m = np.flatnonzero((raw >= margin) | np.isnan(raw))
+                yield pa.RecordBatch.from_pydict(
+                    {id_col: batch.column(0).take(m), "__raw": raw[m]}
                 )
 
         dropped = (
             # NULL ev/rv pairs can never drop a row in the expression tier
             # (NULL pair_sim fails the >= filter) — excluding them here is
-            # that exact behavior, and keeps None out of the numpy batch
-            # (np.array over a list/None mix raises)
+            # that exact behavior, and leaves the sweep no NULL vectors
             pairs.filter(F.col("ev").isNotNull() & F.col("rv").isNotNull())
             .select(id_col, "ev", "rv", "__n", "__rn")
-            .mapInPandas(_verdict_batches, schema=raw_schema)
+            .mapInArrow(_verdict_batches, schema=raw_schema)
             .filter(F.round(F.col("__raw"), round_dp) >= threshold)
             .select(id_col)
             .distinct()

@@ -20,7 +20,6 @@ from crypto_market_data_etl_spark.operators.similarity import (
     lsh_ann_bandor,
     lsh_ann_multiprobe,
     lsh_buckets,
-    lsh_signatures_np,
 )
 from crypto_market_data_etl_spark.schemas import load_table
 from tests.conftest import SF_SMOKE
@@ -334,33 +333,179 @@ def test_signature_sweep_id_exactness_past_2_53(spark):
 
 def test_signature_sweep_rejects_wrong_length_vectors(spark):
     """Two length-4 vectors at dim=8 hold exactly one row's worth of
-    elements: the sweep must refuse them, not reshape them into one
-    merged vector and bucket the wrong data."""
+    elements, and so do a 4- and a 12-element vector at dim=8 as two rows:
+    the sweep must refuse both, not reshape them into merged or shifted
+    vectors and bucket the wrong data."""
     from crypto_market_data_etl_spark.operators.similarity import _signature_sweep
 
+    for rows in ([(1, [1.0] * 4), (2, [0.5] * 4)], [(1, [1.0] * 4), (2, [0.5] * 12)]):
+        df = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        ).coalesce(1)  # one Arrow batch: the element total divides evenly by dim
+        with pytest.raises(Exception, match="expected 8 each"):
+            _signature_sweep(df, "vec_id", "embedding", 4, 8).collect()
+
+
+# --------------------------------------------------------------------------
+# The Arrow vector path contract: every vector kernel, fed ONE Arrow batch
+# holding an int64 id past 2^53 next to a NULL id, a NULL vector, and
+# wrong-length vectors
+# --------------------------------------------------------------------------
+
+BIG_ID = (1 << 60) + 12345  # float64 rounds it to 1152921504606859264
+_VP_VECS = {
+    1: [1.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0],
+    None: [0.0, 0.0, 1.0, 1.0, 0.0, 0.0, 0.0, 0.0],
+    BIG_ID: [0.0, 0.0, 0.0, 0.0, 1.0, 1.0, 0.0, 0.0],
+    BIG_ID + 1: [0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 1.0, 1.0],
+    7: [1.0, 1.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0],  # exact copy of id 1
+}
+
+
+def _vp_frame(spark, extra=()):
+    return spark.createDataFrame(
+        list(_VP_VECS.items()) + list(extra), "vec_id long, embedding array<double>"
+    ).coalesce(1)  # one Arrow batch: the NULL id and the big ids co-batch
+
+
+def _vp_kernel(name, spark, df, exact=True):
+    from crypto_market_data_etl_spark.operators import similarity as sim
+
+    h = 0.5 ** 0.5
+    cents = spark.createDataFrame(
+        [(0, [h, h] + [0.0] * 6), (BIG_ID, [0.0] * 4 + [h, h, 0.0, 0.0])],
+        "c_id long, c_vec array<double>",
+    )
+    # m=8 one-dim blocks with centroids {0, 1}: the 0/1 test vectors are
+    # their own codes
+    books = spark.createDataFrame(
+        [(b, c, [float(c)]) for b in range(8) for c in range(2)],
+        "block int, c_id int, c_vec array<double>",
+    )
+    codes = df.select("vec_id", F.col("embedding").cast("array<int>").alias("codes"))
+    qs = df.filter(F.col("vec_id").isin(1, BIG_ID))
+    return {
+        "cosine_topk": lambda: sim.cosine_topk(df, qs, k=5, exact_arrow=exact),
+        "assign_centroids_np": lambda: sim.assign_centroids_np(df, cents),
+        "cosine_topk_np": lambda: sim.cosine_topk_np(df, qs, k=3),
+        "kmeans_parallel_init": lambda: sim.kmeans_parallel_init(df, k=4, rounds=2),
+        "pq_encode": lambda: sim.pq_encode(df, books),
+        "pq_topk": lambda: sim.pq_topk(codes, qs, books, k=3),
+        "coarse_residuals": lambda: sim.coarse_residuals(df, cents),
+        "ivfpq_index": lambda: sim.ivfpq_index(df, cents, books),
+        "ivfpq_topk": lambda: sim.ivfpq_topk(
+            codes.withColumn("c_id", F.lit(0).cast("long")), qs, cents, books, df,
+            n_probe=2, k=3, shortlist=10,
+        ),
+        "semantic_dedup": lambda: sim.semantic_dedup(
+            df, centroid_filter=F.col("vec_id").isin(1, BIG_ID), exact_arrow=exact
+        ),
+        "_signature_sweep": lambda: (
+            sim._signature_sweep(df, "vec_id", "embedding", 4, 8)
+            if exact
+            else df.select("vec_id", bucket_signature("embedding", 4, 8).alias("b"))
+        ),
+    }[name]().collect()
+
+
+#: each kernel's NULL-vector route: "raise" (a ValueError naming the
+#: operator), "expression" (the expression tier's answer — ranked last /
+#: smallest c_id / all-zeros bucket) or "filtered" (dropped before seeding)
+_VP_NULL_ROUTE = {
+    "cosine_topk": "expression",
+    "assign_centroids_np": "raise",
+    "cosine_topk_np": "raise",
+    "kmeans_parallel_init": "filtered",
+    "pq_encode": "raise",
+    "pq_topk": "raise",
+    "coarse_residuals": "raise",
+    "ivfpq_index": "raise",
+    "ivfpq_topk": "raise",
+    "semantic_dedup": "expression",
+    "_signature_sweep": "expression",
+}
+
+
+def _sorted_rows(rows):
+    return sorted(map(tuple, rows), key=repr)
+
+
+@pytest.mark.parametrize("name", list(_VP_NULL_ROUTE))
+def test_vector_path_ids_nulls_and_lengths(spark, name):
+    """The one Arrow vector path, per kernel: an id past 2^53 sharing the
+    batch with a NULL id comes back exact; a NULL vector takes the
+    kernel's documented route or raises a ValueError naming it; wrong-
+    length vectors — a 4 and a 12 at dim 8, whose total divides evenly —
+    raise."""
+    clean = _vp_frame(spark)
+    out = _vp_kernel(name, spark, clean)
+    if name == "kmeans_parallel_init":
+        # big ids that collide in float64 must stay two candidates; the
+        # NULL-id row cannot seed (a seed is named by its source id)
+        assert sorted(list(r.c_vec) for r in out) == sorted(
+            _VP_VECS[i] for i in (1, BIG_ID, BIG_ID + 1)
+        )
+    else:
+        ints = {v for row in out for v in row if type(v) is int}
+        assert BIG_ID in ints and int(float(BIG_ID)) not in ints
+
+    nulls = _vp_frame(spark, [(2, None)])
+    route = _VP_NULL_ROUTE[name]
+    if route == "raise":
+        with pytest.raises(Exception, match=f"{name}: NULL"):
+            _vp_kernel(name, spark, nulls)
+    elif route == "filtered":
+        assert _sorted_rows(_vp_kernel(name, spark, nulls)) == _sorted_rows(out)
+    else:
+        for df in (clean, nulls):
+            assert _sorted_rows(_vp_kernel(name, spark, df)) == _sorted_rows(
+                _vp_kernel(name, spark, df, exact=False)
+            )
+
+    wrong = _vp_frame(spark, [(5, [1.0] * 4), (6, [1.0] * 12)])
+    with pytest.raises(Exception, match=f"{name}: .*(expected 8|wrong-length)"):
+        _vp_kernel(name, spark, wrong)
+
+
+def test_unit_normalizing_kernels_refuse_zero_vectors(spark):
+    """A zero vector has no direction: the kernels that unit-normalize
+    without a floor must refuse it, not code it [0, ..., 0] in cell
+    c_ids[0] or rank it first with a NULL sim."""
+    from crypto_market_data_etl_spark.operators import similarity as sim
+
     df = spark.createDataFrame(
-        [(1, [1.0] * 4), (2, [0.5] * 4)], "vec_id long, embedding array<double>"
-    ).coalesce(1)  # one Arrow batch: the element total divides evenly by dim
-    with pytest.raises(Exception, match="expected 8 each"):
-        _signature_sweep(df, "vec_id", "embedding", 4, 8).collect()
-
-
-def test_numpy_signatures_match_expression_tier(spark, embs):
-    expr_sig = {
-        r.vec_id: r.b
-        for r in embs.select(
-            "vec_id", bucket_signature("embedding", 12, 64).alias("b")
-        ).collect()
+        [(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0] * 4), (3, [0.0, 1.0, 0.0, 0.0])],
+        "vec_id long, embedding array<double>",
+    )
+    cents = spark.createDataFrame(
+        [(0, [1.0, 0.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0, 0.0])],
+        "c_id long, c_vec array<double>",
+    )
+    books = spark.createDataFrame(
+        [(b, c, [float(c)]) for b in range(4) for c in range(2)],
+        "block int, c_id int, c_vec array<double>",
+    )
+    zero_q = df.filter(F.col("vec_id") == 2)
+    ok_q = df.filter(F.col("vec_id") == 1)
+    index = df.filter(F.col("vec_id") != 2).select(
+        "vec_id", F.lit(0).cast("long").alias("c_id"),
+        F.col("embedding").cast("array<int>").alias("codes"),
+    )
+    cases = {
+        "pq_encode": lambda: sim.pq_encode(df, books),
+        "ivfpq_index": lambda: sim.ivfpq_index(df, cents, books),
+        "cosine_topk_np": lambda: sim.cosine_topk_np(df, ok_q, k=2),
+        "cosine_topk_np query": lambda: sim.cosine_topk_np(df, zero_q, k=2),
+        "pq_topk query": lambda: sim.pq_topk(index, zero_q, books, k=2),
+        "ivfpq_topk query": lambda: sim.ivfpq_topk(
+            index, zero_q, cents, books, df, n_probe=2, k=2
+        ),
     }
-    np_sig = {r.vec_id: r.bucket for r in lsh_signatures_np(embs, n_planes=12).collect()}
-    assert expr_sig == np_sig
-
-
-def test_bandor_numpy_matches_expression_tier(spark, embs):
-    qs = embs.filter(F.col("vec_id") % 25 == 0)
-    a = {(r.q_id, r.rnk): r.n_id for r in lsh_ann_bandor(embs, qs).collect()}
-    b = {(r.q_id, r.rnk): r.n_id for r in lsh_ann_bandor(embs, qs, numpy_sig=True).collect()}
-    assert a == b and len(a) > 0
+    for what, run in cases.items():
+        with pytest.raises(Exception, match=f"{what}: zero-norm"):
+            run().collect()
+    # the documented floor stays: a zero row assigns deterministically
+    assert sim.coarse_residuals(df, cents).count() == 3
 
 
 def test_multiprobe_matches_exact_on_identical_vectors(spark, embs):

@@ -57,13 +57,13 @@ def test_x02_candidates_via_equi_join(spark):
 def test_x05_broadcasts_query_side_only(spark):
     # brute-force top-k: the corpus side must never shuffle before scoring.
     # r15 sweep tier: the query side is driver-collected into the
-    # MapInPandas closure, the corpus streams straight into it — no join
+    # MapInArrow closure, the corpus streams straight into it — no join
     # node at all, and the only Exchange is the per-query rank window over
     # the bounded candidate set
     plan = _plan(extensions.x05_embedding_topk(spark, SF_SMOKE))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
-    scoring = plan.split("MapInPandas")[-1]  # below = corpus side
+    scoring = plan.split("MapInArrow")[-1]  # below = corpus side
     assert "Exchange" not in scoring.split("Scan parquet")[0]
     # the expression-tier arm keeps the broadcast-queries shape
     from crypto_market_data_etl_spark.operators.similarity import cosine_topk

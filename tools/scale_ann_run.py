@@ -216,6 +216,9 @@ def main() -> None:
     tiers = [
         ("ann_brute_np", lambda: cosine_topk_np(corpus, queries, k=args.k)),
         (
+            # "_np" names the retired BLAS signature arm; kept so committed
+            # SCALE_r0x rows stay comparable (signatures now come from the
+            # bit-exact sweep)
             "ann_bandor_3x8_np",
             lambda: lsh_ann_bandor(
                 corpus,
@@ -224,7 +227,6 @@ def main() -> None:
                 n_tables=3,
                 dim=DIM,
                 k=args.k,
-                numpy_sig=True,
             ),
         ),
         (
@@ -449,7 +451,7 @@ def _sweep(spark, corpus, queries, args) -> None:
                     f"bandor_{n_tables}x{planes}",
                     lambda nt=n_tables, b=planes: lsh_ann_bandor(
                         corpus, queries, planes_per_table=b, n_tables=nt,
-                        dim=DIM, k=args.k, numpy_sig=True,
+                        dim=DIM, k=args.k,
                     ),
                 )
             )
