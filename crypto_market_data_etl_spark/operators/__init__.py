@@ -25,7 +25,6 @@ from .similarity import (  # noqa: F401
     ann_recall,
     assign_centroids_np,
     cosine_topk,
-    cosine_topk_np,
     embedding_neardup_pairs,
     ivf_ann_topk,
     lsh_ann_bandor,

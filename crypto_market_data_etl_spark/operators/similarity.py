@@ -1,16 +1,22 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two physical tiers, chosen by measurement (see the numbers in each docstring):
+One physical tier per operator, chosen by measurement (see the numbers in
+each docstring). Two physical forms exist in the module:
 
-- **Expression tier** (``zip_with`` + ``aggregate`` HOF fold): JVM-side, no
-  Python, bit-reproducible against the DuckDB oracle — but the fold is
-  interpreted per element (~1 µs per 64-dim dot), so it's for
-  candidate-bounded work (reranks, small query sets).
-- **Arrow tier** (``mapInArrow`` + numpy): ~100x more dot throughput; one
+- **Expression form** (``zip_with`` + ``aggregate`` HOF fold, :func:`_dot`):
+  JVM-side, no Python, bit-reproducible against the DuckDB oracle — but
+  the fold is interpreted per element (~1 µs per 64-dim dot), so it serves
+  candidate-bounded, row-paired work (reranks, norms, small probe sets)
+  and :func:`lsh_ann_topk`'s signatures, where it measured faster.
+- **Arrow form** (``mapInArrow`` + numpy): ~100x more dot throughput; one
   matrix x matrix product per Arrow batch is the right physical design for
-  corpus-scale assignment/scoring. The sweeps (:func:`_sweep_cross`) replay
-  the fold's FP sequence bit-exactly and back the oracle-checked defaults;
-  the BLAS kernels can differ in the last bits and are equivalence-tested.
+  corpus-scale n x k assignment and scoring. The sweeps
+  (:func:`_sweep_cross`, :func:`_sweep_rows`) replay the fold's FP
+  sequence bit-exactly and back the oracle-checked operators: where BLAS
+  does the n x k product (:func:`cosine_topk`, :func:`ivf_index`) it only
+  picks candidates within two rounding quanta of the cut, and the sweep
+  recomputes those exactly. The kernels with no oracle
+  (:func:`assign_centroids_np`, the PQ family) use BLAS as is.
 
 Every vector kernel crosses the JVM/numpy boundary the same way: workers
 decode a list column into a length-checked matrix (:func:`_vector_matrix`)
@@ -23,9 +29,9 @@ where a kernel has no NULL route, raise a ValueError naming the operator.
 Extension surface (BASELINE.json): approximate-nearest-neighbor primitives.
 
 - :func:`cosine_topk` — brute-force cosine top-k of a bounded query set
-  against the corpus. The query side is broadcast (it is small by contract);
-  the corpus streams through — no shuffle of the big side at all. This is the
-  exactness baseline; cost O(|Q| x |corpus| x dim).
+  against the corpus. The query side is collected into every task (it is
+  small by contract); the corpus streams through — no shuffle of the big
+  side at all. This is the exactness baseline; cost O(|Q| x |corpus| x dim).
 - :func:`lsh_buckets` — random-hyperplane (sign) LSH: each vector gets a
   b-bit bucket signature; near neighbors collide with high probability.
   Candidate generation = equi-join on the bucket — the 100 TB path (per-
@@ -33,10 +39,8 @@ Extension surface (BASELINE.json): approximate-nearest-neighbor primitives.
   from md5(plane, dim) — deterministic, reproducible in the DuckDB oracle,
   and multiplication-free in spirit (sign flips).
 
-Expression-tier dot products run as ``zip_with`` + ``aggregate``
-higher-order functions — JVM-side columnar fold, no Python. Row-paired
-reranks stay there (:func:`_rerank_candidates` measures why); n x k
-cross kernels go through the Arrow path.
+Row-paired reranks stay on the expression form (:func:`_rerank_candidates`
+measures why); n x k cross kernels go through the Arrow path.
 """
 
 from __future__ import annotations
@@ -171,173 +175,146 @@ def cosine_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 5,
-    exact_arrow: bool = True,
 ) -> DataFrame:
-    """Exact cosine top-k per query vector (brute force, broadcast queries).
+    """Exact cosine top-k per query vector (brute force, collected queries).
 
     Output: (q_id, n_id, rnk, sim). Ties broken by neighbor id.
 
-    Default physical tier (r15, guide §4.2): the corpus streams through
-    ``mapInArrow``; each Arrow batch scores against the collected query
-    matrix with the bit-exact fold replication :func:`_sweep_cross` (norms
-    ride the rows from Spark expressions) and emits only the batch's
-    top-``k``-with-margin candidate rows per query — so the final ranking
-    window sees O(partitions × k) rows per query instead of the WHOLE
-    n×q cross product, and the per-pair dots run at numpy speed instead
-    of ~1 µs/element interpreted folds. Rounding and the rank itself stay
-    in Spark expressions (same ``round``/``row_number`` as the expression
-    tier), and the candidate margin is two rounding quanta, so the output
-    is identical to the expression tier (pytest-asserted). The expression
-    tier remains the fallback when the query side exceeds the driver-
-    collect cap / carries NULL query vectors / has non-integral id types,
-    and the ``exact_arrow=False`` arm.
+    Physical form: the corpus streams through ``mapInArrow``; each Arrow
+    batch scores against the collected query matrix with one BLAS matmul
+    that only PICKS candidates — the batch's top ``k`` per query plus
+    everything within two rounding quanta of the ``k``-th — and the picked
+    pairs' cosines are recomputed with the bit-exact fold replay
+    :func:`_sweep_rows`, corpus norms included. The
+    final ranking window sees O(partitions × k) rows per query instead of
+    the WHOLE n×q cross product, at BLAS speed. Rounding and the rank
+    itself stay in Spark expressions (6dp ``round``, ``row_number`` by
+    (sim desc, n_id)), so the output equals the ``_dot`` fold form —
+    cross join, ``q_id != n_id`` filter, rounded sim, rank — bit for bit
+    (pytest-asserted).
 
-    Sweep-tier contract notes: the query side is resolved (driver-collected)
-    when the DataFrame is BUILT, not when it executes — queries are small by
-    contract, and the operator's centroid/materialize siblings already
-    resolve eagerly; pass ``exact_arrow=False`` for a fully lazy plan.
-    Whole-NULL vectors are handled identically to the expression tier
-    (ranked last), and so are NULL corpus ids (the ``q_id != n_id`` filter
-    drops them); element-level NULLs inside a non-null array are out of
-    contract (dense embeddings — same caveat as the BLAS tier). A zero-norm
-    vector raises (DIVIDE_BY_ZERO parity with the expression tier's ANSI
-    divide), and so does a vector whose length differs from the queries'.
+    Contract notes: the query side is collected to the driver when the
+    DataFrame is BUILT, not when it executes — queries are small by
+    contract, and a side over :data:`NP_TIER_MAX_COLLECT` raises. Ids pass
+    through as their Arrow values (any orderable type: strings too), and
+    the self pair is masked by native equality. A NULL query id returns no
+    rows; a NULL query vector returns the ``k`` smallest non-NULL corpus
+    ids other than its own with a NULL sim, and NULL corpus vectors rank
+    last with a NULL sim (both as the fold's NULL sims order); NULL corpus
+    ids never rank. Element-level NULLs inside a non-null array are out of
+    contract (dense embeddings). A zero-norm vector raises (its cosine has
+    no value; the fold's ANSI divide raises DIVIDE_BY_ZERO), and so does a
+    vector whose length differs from the queries'.
     """
-    from .dedup import spread_small_input
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql import types as T
 
-    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
-    q_proj = with_norm(queries, vec_col, "q_norm").select(
+    q_proj = with_norm(
+        queries.filter(F.col(id_col).isNotNull()), vec_col, "q_norm"
+    ).select(
         F.col(id_col).alias("q_id"),
         F.col(vec_col).cast("array<double>").alias("q_vec"),
         "q_norm",
     )
-    from pyspark.sql import types as T
-
-    _int_types = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    q_side = None
-    if (
-        exact_arrow
-        and isinstance(queries.schema[id_col].dataType, _int_types)
-        and isinstance(corpus.schema[id_col].dataType, _int_types)
-    ):
-        # None when the query side is above the collect cap or carries a
-        # NULL id/vector/norm: the expression tier below ranks those
-        # without crashing (exact equivalence)
-        q_side = _collect_vectors(
-            q_proj, "q_id", "q_vec", "cosine_topk query", "q_norm", optional=True
+    q_tbl = _collect_small_side(q_proj, "cosine_topk query", arrow=True)
+    q_id_arr, q_vec, q_norm = (c.combine_chunks() for c in q_tbl.columns)
+    q_live, Q_mat = _vector_matrix(q_vec, "cosine_topk query", allow_null=True)
+    q_ids = q_id_arr.to_numpy(zero_copy_only=False)  # native values, no NULLs
+    live_q, null_q = np.flatnonzero(q_live), np.flatnonzero(~q_live)
+    q_norms = np.asarray(q_norm, dtype=np.float64)[q_live]
+    if (q_norms == 0.0).any():
+        # a silent inf/NaN here would rank garbage first
+        raise ArithmeticError(
+            "cosine_topk query: zero-norm vector (cosine is undefined; the "
+            "fold's ANSI divide raises DIVIDE_BY_ZERO)"
         )
-    if q_side is not None:
-        import numpy as np
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_type
-
-        q_ids, Q_mat, q_norms = q_side
-        if (q_norms == 0.0).any():
-            # loudness parity: the expression tier's sim divide raises
-            # DIVIDE_BY_ZERO under Spark 4 default ANSI for a zero-norm
-            # query; a silent inf/NaN here would rank garbage first
-            raise ArithmeticError(
-                "cosine_topk: zero-norm query vector (DIVIDE_BY_ZERO parity "
-                "with the expression tier's ANSI divide)"
-            )
-        cand_margin = 2e-6  # two quanta of the 6dp sim rounding below
-        c = with_norm(corpus, vec_col, "c_norm").select(
-            F.col(id_col).alias("n_id"),
-            F.col(vec_col).cast("array<double>").alias("c_vec"),
-            "c_norm",
-        )
-        id_field = c.schema["n_id"]
-        cand_schema = T.StructType(
-            [
-                q_proj.schema["q_id"],
-                id_field,
-                T.StructField("__raw", T.DoubleType()),
-            ]
-        )
-        q_type = to_arrow_type(q_proj.schema["q_id"].dataType)
-
-        def _cands(id_arr, rows, qj, raw):
-            # TRUE nulls for the NULL-vector route, not NaN — the rank
-            # orders NULL last / NaN first
-            return pa.RecordBatch.from_pydict({
-                "q_id": pa.array(q_ids[qj]).cast(q_type),
-                "n_id": id_arr.take(rows),
-                "__raw": pa.nulls(len(rows), pa.float64()) if raw is None else raw,
-            })
-
-        def _topk_batches(it):
-            for batch in it:
-                if batch.num_rows == 0 or len(q_ids) == 0:
-                    continue
-                id_arr = batch.column(0)
-                live, V = _vector_matrix(
-                    batch.column(1), "cosine_topk", Q_mat.shape[1], allow_null=True
-                )
-                # NULL corpus ids never rank: the exact tier's q_id != n_id
-                # filter drops them before the window
-                has_id = np.asarray(id_arr.is_valid())
-                ids = np.asarray(id_arr.fill_null(0), dtype=np.int64)
-                rows = np.flatnonzero(live)
-                V, rows = V[has_id[rows]], rows[has_id[rows]]
-                if len(rows):
-                    cn = np.asarray(batch.column(2), dtype=np.float64)[rows]
-                    if (cn == 0.0).any():
-                        # loudness parity with the expression tier's ANSI
-                        # divide (see the query-norm guard above)
-                        raise ArithmeticError(
-                            "cosine_topk: zero-norm corpus vector "
-                            "(DIVIDE_BY_ZERO parity with the expression "
-                            "tier's ANSI divide)"
-                        )
-                    raw = _sweep_cross(V, Q_mat) / np.multiply.outer(cn, q_norms)
-                    self_m = ids[rows][:, None] == q_ids[None, :]
-                    # selection copy: self pairs can never rank (the exact
-                    # tier filters them pre-window), NaN ranks FIRST under
-                    # Spark's NaN-is-largest ordering → treat as +inf here
-                    r_sel = np.round(raw, 6)
-                    r_sel = np.where(np.isnan(r_sel), np.inf, r_sel)
-                    r_sel = np.where(self_m, -np.inf, r_sel)
-                    b = r_sel.shape[0]
-                    if b > k:
-                        thr = np.partition(r_sel, b - k, axis=0)[b - k, :]
-                        keep = (r_sel >= thr - cand_margin) & ~self_m
-                    else:
-                        keep = ~self_m
-                    ri, qj = np.nonzero(keep)
-                    yield _cands(id_arr, rows[ri], qj, raw[ri, qj])
-                nul = np.flatnonzero(~live & has_id)
-                if len(nul):
-                    # NULL corpus vectors: the exact tier ranks their NULL
-                    # sims LAST (they only reach top-k in degenerate <k
-                    # corpora) — and among themselves they tie on sim, so
-                    # only the k SMALLEST n_ids per batch can ever survive
-                    # the global (sim desc, n_id asc) window: emit just
-                    # those with NULL raw (bounded, not |nulls| × |queries|)
-                    nul = nul[np.argsort(ids[nul], kind="stable")][: k + 1]
-                    nri, nqj = np.nonzero(ids[nul][:, None] != q_ids[None, :])
-                    yield _cands(id_arr, nul[nri], nqj, None)
-
-        cand = c.mapInArrow(_topk_batches, schema=cand_schema)
-        return (
-            cand.withColumn("sim", F.round(F.col("__raw"), 6))
-            .withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("q_id", "n_id", "rnk", "sim")
-        )
-    q = F.broadcast(q_proj)
-    # spread the corpus side: the |Q| x |corpus| sim computation is map-side
-    # (broadcast queries), so its parallelism IS the corpus split count — a
-    # single-row-group input serializes the whole scoring pass through one
-    # task (r15 profile: the entire x05 compute ran as 1 task). No-op once
-    # the corpus has >= defaultParallelism splits.
-    c = with_norm(spread_small_input(corpus), vec_col, "c_norm").select(
-        F.col(id_col).alias("n_id"), F.col(vec_col).alias("c_vec"), "c_norm"
+    dim = Q_mat.shape[1] if len(live_q) else None
+    # a pair whose cosine is a full 6dp quantum below the batch's k-th best
+    # rounds strictly below k others and cannot rank; two quanta also
+    # cover BLAS's last-bit drift
+    cand_margin = 2e-6
+    c = corpus.select(
+        F.col(id_col).alias("n_id"),
+        F.col(vec_col).cast("array<double>").alias("c_vec"),
     )
-    sim = _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("q_norm") * F.col("c_norm"))
+    cand_schema = T.StructType(
+        [q_proj.schema["q_id"], c.schema["n_id"], T.StructField("__raw", T.DoubleType())]
+    )
+
+    def _cands(id_arr, rows, qpos, raw):
+        # TRUE nulls for the NULL-vector routes, not NaN — the rank orders
+        # NULL last / NaN first
+        return pa.RecordBatch.from_pydict({
+            "q_id": q_id_arr.take(qpos),
+            "n_id": id_arr.take(rows),
+            "__raw": pa.nulls(len(rows), pa.float64()) if raw is None else raw,
+        })
+
+    def _null_pairs(id_arr, rows, qpos):
+        # every pair here has a NULL sim, and NULL sims tie: per query only
+        # its k smallest n_ids other than its own can survive the global
+        # (sim desc, n_id) window — emit just those, k rows per query
+        if not len(rows) or not len(qpos):
+            return None
+        rows = rows[np.asarray(pc.sort_indices(id_arr.take(rows)))]
+        other = id_arr.take(rows).to_numpy(zero_copy_only=False)[:, None] != q_ids[qpos]
+        ri, qj = np.nonzero(other & (np.cumsum(other, axis=0) <= k))
+        return _cands(id_arr, rows[ri], qpos[qj], None)
+
+    def _topk_batches(it):
+        for batch in it:
+            if batch.num_rows == 0 or len(q_ids) == 0:
+                continue
+            id_arr = batch.column(0)
+            live, V = _vector_matrix(
+                batch.column(1), "cosine_topk", dim, allow_null=True
+            )
+            # NULL corpus ids never rank: the fold's q_id != n_id filter
+            # drops them before the window
+            has_id = np.asarray(id_arr.is_valid())
+            rows = np.flatnonzero(live)
+            V, rows = V[has_id[rows]], rows[has_id[rows]]
+            if len(rows) and len(live_q):
+                cn = np.sqrt(_sweep_rows(V, V))  # with_norm's value, bit for bit
+                if (cn == 0.0).any():
+                    raise ArithmeticError(
+                        "cosine_topk: zero-norm corpus vector (cosine is "
+                        "undefined; the fold's ANSI divide raises "
+                        "DIVIDE_BY_ZERO)"
+                    )
+                # BLAS scores (queries x rows) only pick the candidates;
+                # self pairs can never rank, NaN ranks FIRST under Spark's
+                # NaN-is-largest ordering → treat as +inf here
+                sel = (Q_mat @ V.T) / np.multiply.outer(q_norms, cn)
+                ids = id_arr.take(rows).to_numpy(zero_copy_only=False)
+                self_m = q_ids[live_q][:, None] == ids[None, :]
+                sel[np.isnan(sel)] = np.inf
+                sel[self_m] = -np.inf
+                b = sel.shape[1]
+                if b > k:
+                    thr = np.partition(sel, b - k, axis=1)[:, b - k : b - k + 1]
+                    keep = (sel >= thr - cand_margin) & ~self_m
+                else:
+                    keep = ~self_m
+                qj, ri = np.nonzero(keep)
+                raw = _sweep_rows(V[ri], Q_mat[qj]) / (cn[ri] * q_norms[qj])
+                yield _cands(id_arr, rows[ri], live_q[qj], raw)
+            # NULL sims: NULL corpus vectors against the live queries, and
+            # every id'd corpus row against the NULL-vector queries
+            for n_rows, qpos in (
+                (np.flatnonzero(~live & has_id), live_q),
+                (np.flatnonzero(has_id), null_q),
+            ):
+                out = _null_pairs(id_arr, n_rows, qpos)
+                if out is not None:
+                    yield out
+
+    w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
     return (
-        c.crossJoin(q)
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("sim", F.round(sim, 6))
+        c.mapInArrow(_topk_batches, schema=cand_schema)
+        .withColumn("sim", F.round(F.col("__raw"), 6))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("q_id", "n_id", "rnk", "sim")
@@ -383,10 +360,13 @@ def _signature_sweep(
     carry_vec: bool = False,
     out_col: str = "bucket",
 ) -> DataFrame:
-    """Sign-LSH signatures, Arrow sweep tier — bit-identical buckets to
-    :func:`bucket_signature` with none of its construction or codegen cost.
+    """Sign-LSH signatures through the Arrow sweep — bit-identical buckets
+    to :func:`bucket_signature` with none of its construction or codegen
+    cost. The signature tier of :func:`lsh_buckets`,
+    :func:`lsh_ann_multiprobe`, :func:`lsh_ann_bandor` and
+    :func:`embedding_neardup_pairs`.
 
-    The expression tier pays twice per call: the ``n_planes × dim`` literal
+    The expression form pays twice per call: the ``n_planes × dim`` literal
     tree costs seconds of driver-side py4j round-trips just to BUILD
     (measured on x06, r15 batch 6: 1.5-3.5 s at 16×64), then an oversized
     whole-stage-codegen method at exec. Here the planes live in a numpy
@@ -394,9 +374,9 @@ def _signature_sweep(
     (:func:`_sweep_cross`), and a sign decision on a bit-identical dot is
     bit-identical. NaN dots emit '1' (Spark's ``NaN > 0`` is true under its
     NaN-is-largest ordering) and a whole-NULL vector emits the all-zeros
-    bucket (every plane's ``when`` falls through to '0') — exactly the
-    expression tier; element-level NULLs inside a non-null array are out of
-    contract (dense embeddings — same caveat as the BLAS tier).
+    bucket (every plane's ``when`` falls through to '0') — exactly
+    :func:`bucket_signature`; element-level NULLs inside a non-null array
+    are out of contract (dense embeddings).
 
     ``carry_vec`` passes the original vector column through the Arrow
     boundary unchanged so downstream norms/sims stay JVM-fold expressions —
@@ -454,7 +434,6 @@ def lsh_buckets(
     vec_col: str = "embedding",
     n_planes: int = 16,
     dim: int = 64,
-    exact_arrow: bool = True,
 ) -> DataFrame:
     """Sign-LSH bucket signature per vector: (id, bucket, n_in_bucket).
 
@@ -468,41 +447,28 @@ def lsh_buckets(
     the join back is broadcast when the bucket space is provably small — so
     the big side never shuffles at all.
 
-    Default signature tier (r15): Arrow sweep. The expression form pays
-    TWICE for its n_planes × dim literal tree — seconds of driver-side
-    py4j round-trips just BUILDING the 16 × 64-literal expressions on every
-    call, then an oversized whole-stage-codegen method for the fold
-    (measured on x06: 1.5-3.5 s build + erratic 0.5-4 s exec). The sweep
-    keeps the planes in a numpy closure and replicates the fold's exact FP
-    sequence (:func:`_sweep_cross`); a sign decision on a bit-identical dot
-    is bit-identical, so buckets are unchanged (pytest + oracle). The
-    expression tier stays as the ``exact_arrow=False`` arm. Whole-NULL
-    vectors bucket to the all-zeros string like the expression tier's NULL
-    dots; element-level NULLs inside a non-null array are out of contract
-    (dense embeddings — same caveat as the BLAS tier).
+    Signatures (r15): :func:`_signature_sweep`. The :func:`bucket_signature`
+    expression form pays TWICE for its n_planes × dim literal tree —
+    seconds of driver-side py4j round-trips just BUILDING the 16 × 64-literal
+    expressions on every call, then an oversized whole-stage-codegen method
+    for the fold (measured on x06: 1.5-3.5 s build + erratic 0.5-4 s exec).
+    The sweep keeps the planes in a numpy closure and replicates the fold's
+    exact FP sequence (:func:`_sweep_cross`); a sign decision on a
+    bit-identical dot is bit-identical, so buckets equal the expression
+    form's (pytest + oracle). Whole-NULL vectors bucket to the all-zeros
+    string like the expression form's NULL dots; element-level NULLs inside
+    a non-null array are out of contract (dense embeddings).
     """
-    from .dedup import spread_small_input
-
     # materialized once: both the count aggregate and the join probe read the
     # signature projection (n_planes x dim folds per row) — without this
     # the probe side recomputes every signature a second time.
-    if exact_arrow:
-        # NOTE (r16, measured): spread_small_input before this sweep is
-        # 1.47× SLOWER interleaved at sf0.1 (0.618 → 0.911 s best-of-3×3)
-        # — the repartition exchange costs more than 32-way signature
-        # parallelism saves on a 2k-row fixture, and unlike x14 there is
-        # no carried vector/norm fold to parallelize. Do not re-add
-        # without a single-split mid-size probe showing it wins.
-        out = materialize(_signature_sweep(df, id_col, vec_col, n_planes, dim))
-    else:
-        # expression tier; input SPREAD first: the signature projection is
-        # the heavy stage and its parallelism is the input split count (r15
-        # profile: single-task at sf0.1); no-op at production split counts.
-        out = materialize(
-            spread_small_input(df).select(
-                F.col(id_col), bucket_signature(vec_col, n_planes, dim).alias("bucket")
-            )
-        )
+    # NOTE (r16, measured): spread_small_input before this sweep is 1.47×
+    # SLOWER interleaved at sf0.1 (0.618 → 0.911 s best-of-3×3) — the
+    # repartition exchange costs more than 32-way signature parallelism
+    # saves on a 2k-row fixture, and unlike x14 there is no carried
+    # vector/norm fold to parallelize. Do not re-add without a single-split
+    # mid-size probe showing it wins.
+    out = materialize(_signature_sweep(df, id_col, vec_col, n_planes, dim))
     counts = out.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_in_bucket"))
     if n_planes <= 20:  # <= 1M distinct buckets -> tens of MB broadcast, tops
         counts = F.broadcast(counts)
@@ -625,7 +591,6 @@ def lsh_ann_multiprobe(
     dim: int = 64,
     k: int = 3,
     probe_hamming: int = 1,
-    exact_arrow: bool = True,
 ) -> DataFrame:
     """Multi-probe sign-LSH ANN: probe the query's bucket AND its Hamming-1
     neighbor buckets (each single-bit flip), then exact-rerank candidates.
@@ -641,32 +606,22 @@ def lsh_ann_multiprobe(
     (cos≈0.99), 12 planes: probe=0 finds 64% of planted pairs in
     top-10; Hamming-1 probing lifts that to 92% for ~1.5x the wall time.
 
-    Default signature tier (r15 batch 9): :func:`_signature_sweep` —
-    bit-identical buckets without the expression tier's n_planes × dim
-    literal-tree construction cost (interleaved sf0.1 A/B: 0.80-0.85×;
-    signature-only through Arrow, vectors never cross the boundary — the
-    rerank reads them from ``df`` directly). ``exact_arrow=False`` keeps
-    the expression arm.
+    Signatures (r15 batch 9): :func:`_signature_sweep` — bit-identical
+    buckets without :func:`bucket_signature`'s n_planes × dim literal-tree
+    construction cost (interleaved sf0.1 A/B: 0.80-0.85×; signature-only
+    through Arrow, vectors never cross the boundary — the rerank reads them
+    from ``df`` directly).
 
     Output: (q_id, n_id, rnk, sim), ties by neighbor id.
     """
     if queries is None:
         queries = df
-    if exact_arrow:
-        # default tier (r15 batch 9): sweep signatures — bit-identical
-        # buckets to the expression tier without its literal-tree
-        # construction cost (see _signature_sweep)
-        corpus = _signature_sweep(
-            df, id_col, vec_col, n_planes, dim
-        ).withColumnRenamed(id_col, "n_id")
-        qt = _signature_sweep(
-            queries, id_col, vec_col, n_planes, dim
-        ).withColumnRenamed(id_col, "q_id")
-    else:
-        sig = bucket_signature(vec_col, n_planes, dim)
-        corpus = df.select(F.col(id_col).alias("n_id"), sig.alias("bucket"))
-        # stage the signature once (expression trees recompute inlined subtrees)
-        qt = queries.select(F.col(id_col).alias("q_id"), sig.alias("bucket"))
+    corpus = _signature_sweep(
+        df, id_col, vec_col, n_planes, dim
+    ).withColumnRenamed(id_col, "n_id")
+    qt = _signature_sweep(
+        queries, id_col, vec_col, n_planes, dim
+    ).withColumnRenamed(id_col, "q_id")
 
     def flip(i: int):
         bit = F.substring("bucket", i + 1, 1)
@@ -698,7 +653,6 @@ def lsh_ann_bandor(
     n_tables: int = 3,
     dim: int = 64,
     k: int = 3,
-    exact_arrow: bool = True,
 ) -> DataFrame:
     """Band-OR sign-LSH ANN: L independent hash tables; a pair is a candidate
     if it collides in ANY table, then exact rerank.
@@ -734,8 +688,8 @@ def lsh_ann_bandor(
     ========  ===========  ============  ==============
 
     For tail recall ≥ 0.8 use ≥16 tables x 4 planes — and note the honest
-    conclusion in the cost column: at ≤100k vectors the Arrow+BLAS brute
-    tier (:func:`cosine_topk_np`) is cheaper than ANY config reaching it,
+    conclusion in the cost column: at ≤100k vectors Arrow brute force
+    (:func:`cosine_topk`) is cheaper than ANY config reaching it,
     because b=4 buckets hold n/16 of the corpus and the candidate rerank
     approaches brute force. Sign-LSH earns its keep for near-dup retrieval
     (top rows), for corpora with real cluster structure, or when the
@@ -743,57 +697,38 @@ def lsh_ann_bandor(
     general k-NN at this scale, prefer brute or :func:`ivf_ann_topk`
     (probe-fraction curve in its docstring).
 
-    Default signature tier (r15 batch 9): :func:`_signature_sweep` — ONE
-    Arrow pass computes every table's planes, bit-identical to the
-    expression arm's per-table offset signatures (interleaved sf0.1 A/B:
-    0.65-0.68×; signature-only, vectors never cross the boundary).
-    ``exact_arrow=False`` keeps the expression arm.
+    Signatures (r15 batch 9): :func:`_signature_sweep` — ONE Arrow pass
+    computes every table's planes, bit-identical to per-table offset
+    :func:`bucket_signature` columns (interleaved sf0.1 A/B: 0.65-0.68×;
+    signature-only, vectors never cross the boundary).
     """
     if queries is None:
         queries = df
 
-    if exact_arrow:
-        # ONE sweep pass (r15 batch 9) computes every table's planes, then
-        # in-plan substring slices (each plane's fold is independent, so
-        # slicing the full-family bitstring equals the expression arm's
-        # per-table offset signatures)
-        def tabled(side: DataFrame, out_id: str) -> DataFrame:
-            full = _signature_sweep(
-                side, id_col, vec_col, planes_per_table * n_tables, dim
-            )
-            slices = F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"),
-                        F.substring(
-                            "bucket", t * planes_per_table + 1, planes_per_table
-                        ).alias("sig"),
-                    )
-                    for t in range(n_tables)
-                ]
-            )
-            return full.select(
-                F.col(id_col).alias(out_id), F.explode(slices).alias("b")
-            ).select(out_id, "b.tbl", "b.sig")
-
-        corpus = tabled(df, "n_id")
-        q = tabled(queries, "q_id")
-    else:
-        sigs = F.array(
+    # ONE sweep pass computes every table's planes, then in-plan substring
+    # slices (each plane's fold is independent, so slicing the full-family
+    # bitstring equals the per-table offset signatures)
+    def tabled(side: DataFrame, out_id: str) -> DataFrame:
+        full = _signature_sweep(
+            side, id_col, vec_col, planes_per_table * n_tables, dim
+        )
+        slices = F.array(
             *[
                 F.struct(
                     F.lit(t).alias("tbl"),
-                    bucket_signature(vec_col, planes_per_table, dim, offset=t * planes_per_table).alias("sig"),
+                    F.substring(
+                        "bucket", t * planes_per_table + 1, planes_per_table
+                    ).alias("sig"),
                 )
                 for t in range(n_tables)
             ]
         )
-        corpus = df.select(F.col(id_col).alias("n_id"), F.explode(sigs).alias("b")).select(
-            "n_id", "b.tbl", "b.sig"
-        )
-        q = queries.select(F.col(id_col).alias("q_id"), F.explode(sigs).alias("b")).select(
-            "q_id", "b.tbl", "b.sig"
-        )
+        return full.select(
+            F.col(id_col).alias(out_id), F.explode(slices).alias("b")
+        ).select(out_id, "b.tbl", "b.sig")
+
+    corpus = tabled(df, "n_id")
+    q = tabled(queries, "q_id")
     cand = (
         q.join(corpus, ["tbl", "sig"])
         .filter(F.col("q_id") != F.col("n_id"))
@@ -831,7 +766,6 @@ def embedding_neardup_pairs(
     dim: int = 64,
     threshold: float = 0.9,
     max_bucket_size: int | None = None,
-    exact_arrow: bool = True,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs via LSH candidates.
 
@@ -851,11 +785,12 @@ def embedding_neardup_pairs(
     ``id_a < id_b`` for in-cap buckets) — no driver-side pre-count, no
     second pass over the embeddings. See ``operators.skew``.
 
-    Default signature tier (r15 batch 9): :func:`_signature_sweep` with the
-    vector carried through (both arms materialize, so the sweep's saving is
-    pure signature construction + codegen: interleaved sf0.1 A/B 0.59-0.61×).
-    Norms/sims stay JVM-fold expressions — every emitted value bit-identical
-    to the ``exact_arrow=False`` expression arm (pytest + oracle).
+    Signatures (r15 batch 9): :func:`_signature_sweep` with the vector
+    carried through (against materialized :func:`bucket_signature` columns
+    the sweep's saving is pure signature construction + codegen:
+    interleaved sf0.1 A/B 0.59-0.61×). Norms/sims stay JVM-fold
+    expressions, so every emitted value is bit-identical to the expression
+    form's (pytest + oracle).
     """
     from .skew import (
         DEFAULT_MAX_BUCKET_SIZE,
@@ -869,35 +804,18 @@ def embedding_neardup_pairs(
 
     # both self-join sides read the signature projection — materialize once,
     # deployment-aware (materialize.py). Norms ride the same materialized
-    # table (one fold per vector, not two per candidate pair — bit-identical).
-    # Default tier (r15 batch 9): sweep signatures (see _signature_sweep) —
-    # bit-identical buckets without the expression tier's n_planes × dim
-    # literal-tree construction cost; norms/sims stay JVM folds on the
-    # carried vector, so every emitted value is bit-identical either way.
-    if exact_arrow:
-        # input spread BEFORE the sweep: a mapInArrow projection's
-        # parallelism is its input split count, so a single-row-group input
-        # would run the signature sweep + the per-vector norm fold as ONE
-        # task before materialize (the same gap the expression arm's spread
-        # guards); no-op at production split counts (ADVICE r15)
-        t = materialize(
-            _signature_sweep(
-                spread_small_input(df), id_col, vec_col, n_planes, dim,
-                carry_vec=True,
-            ).withColumn("__norm", F.sqrt(_dot(F.col(vec_col), F.col(vec_col))))
-        )
-    else:
-        sig = bucket_signature(vec_col, n_planes, dim)
-        # input spread so the n_planes x dim HOF projection parallelizes on
-        # single-split inputs (no-op at scale)
-        t = materialize(
-            spread_small_input(df).select(
-                F.col(id_col),
-                F.col(vec_col),
-                sig.alias("bucket"),
-                F.sqrt(_dot(F.col(vec_col), F.col(vec_col))).alias("__norm"),
-            )
-        )
+    # table (one fold per vector, not two per candidate pair — bit-identical)
+    # on the carried vector. Input spread BEFORE the sweep: a mapInArrow
+    # projection's parallelism is its input split count, so a
+    # single-row-group input would run the signature sweep + the per-vector
+    # norm fold as ONE task before materialize; no-op at production split
+    # counts (ADVICE r15)
+    t = materialize(
+        _signature_sweep(
+            spread_small_input(df), id_col, vec_col, n_planes, dim,
+            carry_vec=True,
+        ).withColumn("__norm", F.sqrt(_dot(F.col(vec_col), F.col(vec_col))))
+    )
     sim = _dot(F.col("va"), F.col("vb")) / (F.col("__na") * F.col("__nb"))
     if max_bucket_size > 0:
         ra, rb = ranked_pair_sides(t, ["bucket"], id_col, max_bucket_size)
@@ -938,10 +856,23 @@ def ivf_index(
     center_vec: list[float] | None = None,
     assign_r: int = 1,
 ) -> DataFrame:
-    """Build the exact-IVF inverted file ONCE: ``(c_id, n_id, n_vec)`` —
-    each corpus vector tagged with its nearest centroid (Arrow+BLAS
-    assignment, :func:`assign_centroids_np` semantics; ``center_vec``
-    moves the assignment into centered space, vectors stored raw).
+    """Build the exact-IVF inverted file ONCE: ``(n_id, n_vec, c_id)`` —
+    each corpus vector tagged with its nearest centroid by the IVF cell
+    rule (6dp-rounded cosine in assignment space, both norms floored at
+    1e-12, ties to the lowest ``c_id``) — the rule :func:`ivf_ann_topk`'s
+    query probes and :func:`probe_cells_expr` apply, so a vector and its
+    exact duplicate always meet in one cell. ``center_vec`` moves the
+    assignment into centered space; vectors are stored raw.
+
+    Physical form: one ``mapInArrow`` pass. A BLAS matmul per Arrow batch
+    only PRE-FILTERS the cells (every cell within two rounding quanta of
+    the row's ``assign_r``-th best: BLAS drifts in the last bits, far below
+    a quantum); the candidates' cosines are then recomputed with the
+    bit-exact fold replay (:func:`_sweep_rows`), and the rounding and the
+    pick run in Spark's own ``round`` and ``sort_array`` — so the cells
+    equal the expression rule's bit for bit (pytest-asserted on a 6dp
+    near-tie), at BLAS cost plus a few candidate dots per row. A NULL or
+    wrong-length vector raises.
 
     This is the build/query split the raw-vector tier was missing (the
     PQ tier always had it via :func:`ivfpq_index`): persist this table
@@ -956,13 +887,66 @@ def ivf_index(
     r× index size). Pass ``dedup_candidates=True`` to
     :func:`ivf_ann_topk` when querying such an index: a neighbor probed
     through two of its cells must be ranked once, not twice."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    c_ids, C = _collect_centroids(centroids.select("c_id", "c_vec"), "ivf_index")
+    c_norm = np.maximum(np.sqrt(_sweep_rows(C, C)), 1e-12)  # the fold's norm
+    r = min(max(1, assign_r), len(c_ids))
+    mean = None if center_vec is None else np.asarray(center_vec, dtype=np.float64)
     side = df.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
-    cents = centroids.select("c_id", "c_vec")
-    r = max(1, assign_r)
-    if center_vec is not None:
-        side = center_embeddings(side, list(center_vec), "n_vec", "__av")
-        return assign_centroids_np(side, cents, "n_id", "__av", n=r).drop("__av")
-    return assign_centroids_np(side, cents, "n_id", "n_vec", n=r)
+    cand = T.StructType(
+        [
+            T.StructField("raw", T.DoubleType()),
+            T.StructField("cj", T.LongType()),
+            T.StructField("c_id", T.LongType()),
+        ]
+    )
+    schema = T.StructType(
+        list(side.schema.fields) + [T.StructField("__cand", T.ArrayType(cand))]
+    )
+
+    def batches(it):
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            _, V = _vector_matrix(batch.column(1), "ivf_index", C.shape[1])
+            if mean is not None:
+                V = V - mean  # the centering zip_with, op for op
+            vn = np.maximum(np.sqrt(_sweep_rows(V, V)), 1e-12)
+            S = (V @ C.T) / np.multiply.outer(vn, c_norm)
+            kth = -np.partition(-S, r - 1, axis=1)[:, r - 1 : r]
+            # NaN sims (NaN data) stay candidates: Spark orders NaN largest
+            keep = (S >= kth - 2e-6) | np.isnan(S)
+            ri, cj = np.nonzero(keep)  # row-major: each row's cells contiguous
+            raw = _sweep_rows(V[ri], C[cj]) / (vn[ri] * c_norm[cj])
+            offsets = np.concatenate([[0], np.cumsum(keep.sum(axis=1))])
+            cells = pa.StructArray.from_arrays(
+                [pa.array(raw), pa.array(cj), pa.array(c_ids[cj])],
+                names=["raw", "cj", "c_id"],
+            )
+            yield batch.append_column(
+                "__cand",
+                pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), cells),
+            )
+
+    # best first by (rounded sim desc, c_id asc): the key struct carries
+    # -cj, the centroid's position in the c_id-ordered table
+    ranked = F.sort_array(
+        F.transform(
+            "__cand",
+            lambda c: F.struct(
+                F.round(c["raw"], 6).alias("r"), (-c["cj"]).alias("nc"), c["c_id"]
+            ),
+        ),
+        asc=False,
+    )
+    return (
+        side.mapInArrow(batches, schema=schema)
+        .select("n_id", "n_vec", F.explode(F.slice(ranked, 1, r)).alias("__c"))
+        .select("n_id", "n_vec", F.col("__c.c_id").alias("c_id"))
+    )
 
 
 def ivf_ann_topk(
@@ -973,7 +957,6 @@ def ivf_ann_topk(
     n_probe: int = 2,
     k: int = 3,
     centroid_filter=None,
-    numpy_assign: bool = False,
     centroids: DataFrame | None = None,
     center: bool | str = False,
     center_vec: list[float] | None = None,
@@ -982,10 +965,16 @@ def ivf_ann_topk(
 ) -> DataFrame:
     """IVF-style ANN: inverted file over centroid cells + multi-probe rerank.
 
-    Index build: every vector is assigned to its nearest centroid (argmin
-    cosine distance) — one broadcast of the centroid set, one pass, giving
-    the inverted lists as a (centroid_id, vector) table. Query: probe the
-    ``n_probe`` nearest cells and rerank exactly within them.
+    Index build: :func:`ivf_index` — every vector is filed into its
+    nearest cell (one Arrow pass), giving the inverted lists as a
+    ``(c_id, n_id, n_vec)`` table. Query: probe the ``n_probe`` nearest
+    cells and rerank exactly within them. Corpus and probes share one cell
+    rule (6dp-rounded cosine, ties to the lowest ``c_id`` — the rule
+    :func:`probe_cells_expr` shares), so the result is oracle-exact at any
+    ``n_probe``. Without ``index=`` the call builds that index inline and
+    then runs exactly the prebuilt-index path: inline means
+    :func:`ivf_index` plus probes. A NULL corpus vector raises (the
+    :func:`ivf_index` contract) rather than being filed into some cell.
 
     Centroids here are a deterministic sample of the corpus
     (``centroid_filter``, default ``id % 50 == 1``) so the whole pipeline is
@@ -1107,6 +1096,8 @@ def ivf_ann_topk(
     if mean is not None and centroids is None:
         cent_src = center_embeddings(cent_src, mean, "c_vec")
     cents = F.broadcast(cent_src)
+    if index is None:
+        index = ivf_index(df, cent_src, id_col, vec_col, center_vec=mean)
 
     def nearest_cells(side: DataFrame, sid: str, svec: str, n: int) -> DataFrame:
         av = F.col(svec)  # assignment-space vector; scoring stays on svec
@@ -1126,41 +1117,9 @@ def ivf_ann_topk(
             .drop("c_vec", "c_sim", "c_rnk")
         )
 
-    corpus_side = df.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
     query_side = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
-    if index is not None:
-        # prebuilt inverted file (ivf_index): the corpus is never touched
-        inv = index.select("c_id", "n_id", "n_vec")
-        if numpy_assign:
-            if mean is not None:
-                qi = center_embeddings(query_side, mean, "q_vec", "__av")
-                probes = assign_centroids_np(
-                    qi, cent_src, "q_id", "__av", n=n_probe
-                ).drop("__av")
-            else:
-                probes = assign_centroids_np(
-                    query_side, cent_src, "q_id", "q_vec", n=n_probe
-                )
-        else:
-            probes = nearest_cells(query_side, "q_id", "q_vec", n_probe)
-    elif numpy_assign:
-        # Arrow+BLAS tier: the corpus-wide assignment is the dominant cost.
-        # Centered assignment rides a temp column so scoring stays raw.
-        if mean is not None:
-            ci = center_embeddings(corpus_side, mean, "n_vec", "__av")
-            qi = center_embeddings(query_side, mean, "q_vec", "__av")
-            inv = assign_centroids_np(ci, cent_src, "n_id", "__av", n=1).drop("__av")
-            probes = assign_centroids_np(
-                qi, cent_src, "q_id", "__av", n=n_probe
-            ).drop("__av")
-        else:
-            inv = assign_centroids_np(corpus_side, cent_src, "n_id", "n_vec", n=1)
-            probes = assign_centroids_np(
-                query_side, cent_src, "q_id", "q_vec", n=n_probe
-            )
-    else:
-        inv = nearest_cells(corpus_side, "n_id", "n_vec", 1)
-        probes = nearest_cells(query_side, "q_id", "q_vec", n_probe)
+    inv = index.select("c_id", "n_id", "n_vec")
+    probes = nearest_cells(query_side, "q_id", "q_vec", n_probe)
     sim = _dot(F.col("q_vec"), F.col("n_vec")) / (
         F.sqrt(_dot(F.col("q_vec"), F.col("q_vec")))
         * F.sqrt(_dot(F.col("n_vec"), F.col("n_vec")))
@@ -1205,8 +1164,9 @@ def _collect_small_side(
         raise ValueError(
             f"{what} side exceeds the numpy-tier driver-collect cap "
             f"({cap} rows): this side is broadcast as a dense matrix and must "
-            "be small by contract — use the expression tier (cosine_topk / "
-            "lsh_ann_topk) or raise NP_TIER_MAX_COLLECT deliberately"
+            "be small by contract — split it into batches under the cap, use "
+            "an ANN operator (lsh_ann_topk / ivf_ann_topk), or raise "
+            "NP_TIER_MAX_COLLECT deliberately"
         )
     return rows
 
@@ -1249,38 +1209,31 @@ def _list_column(values, offsets=None):
     )
 
 
-def _collect_vectors(df, id_col, vec_col, what, *extra, dim=None, optional=False):
-    """Driver-side collect through Arrow under :data:`NP_TIER_MAX_COLLECT`:
-    ``(int64 ids, (n, dim) matrix, *extra columns)`` in row order, vectors
-    checked like the workers'. A NULL value raises a ValueError naming
-    ``what`` — or, with ``optional``, returns None (as does a side over the
-    cap) for callers that fall back to their expression tier."""
-    import numpy as np
-
-    try:
-        tbl = _collect_small_side(df.select(id_col, vec_col, *extra), what, arrow=True)
-    except ValueError:
-        if optional:
-            return None
-        raise
-    cols = [c.combine_chunks() for c in tbl.columns]
-    if any(c.null_count for c in cols):
-        if optional:
-            return None
+def _collect_vectors(df, id_col, vec_col, what, dim=None):
+    """Driver-side collect through Arrow under :data:`NP_TIER_MAX_COLLECT`
+    (a larger side raises): ``(ids, (n, dim) matrix)`` in row order,
+    vectors checked like the workers'. Ids keep their native values —
+    int64 stays exact, strings stay strings; callers that emit a LongType
+    id cast. A NULL id or vector raises a ValueError naming ``what``."""
+    tbl = _collect_small_side(df.select(id_col, vec_col), what, arrow=True)
+    ids, vecs = (c.combine_chunks() for c in tbl.columns)
+    if ids.null_count or vecs.null_count:
         raise ValueError(f"{what}: NULL id or vector on the collected side")
-    _, M = _vector_matrix(cols[1], what, dim)
-    return (np.asarray(cols[0], dtype=np.int64), M, *map(np.asarray, cols[2:]))
+    _, M = _vector_matrix(vecs, what, dim)
+    return ids.to_numpy(zero_copy_only=False), M
 
 
 def _collect_centroids(centroids: DataFrame, what: str):
-    """``(c_ids, C)`` of a ``(c_id, c_vec)`` table in ``c_id`` order; an
-    empty table raises."""
+    """``(int64 c_ids, C)`` of a ``(c_id, c_vec)`` table in ``c_id`` order;
+    an empty table raises."""
+    import numpy as np
+
     c_ids, C = _collect_vectors(
         centroids.orderBy("c_id"), "c_id", "c_vec", f"{what} centroid"
     )
     if not len(c_ids):
         raise ValueError(f"{what}: the centroid table is empty")
-    return c_ids, C
+    return np.asarray(c_ids, dtype=np.int64), C
 
 
 def _unit_rows(X, what: str | None = None):
@@ -1310,7 +1263,7 @@ def _top_cells(S, n: int):
 
 
 def _sweep_rows(A, B):
-    """Row-paired dot products replicating the expression-tier ``_dot`` fold
+    """Row-paired dot products replicating the ``_dot`` fold
     BIT-EXACTLY: the fold computes ``acc = ((0.0 + a0*b0) + a1*b1) + ...`` —
     one correctly-rounded IEEE multiply and one add per element, in element
     order.  This sweep performs the identical op sequence per row (numpy
@@ -1330,7 +1283,7 @@ def _sweep_rows(A, B):
 def _sweep_cross(V, C):
     """All-pairs variant of :func:`_sweep_rows`: ``acc[i, j]`` accumulates
     ``V[i, d] * C[j, d]`` over ``d`` in element order — the exact FP sequence
-    of one expression-tier fold per (row, centroid) pair."""
+    of one ``_dot`` fold per (row, centroid) pair."""
     import numpy as np
 
     acc = np.zeros((V.shape[0], C.shape[0]), dtype=np.float64)
@@ -1361,7 +1314,7 @@ def assign_centroids_np(
     from pyspark.sql import types as T
 
     c_ids, C = _collect_centroids(centroids, "assign_centroids_np")
-    Cn = _unit_rows(C).T  # (dim, m); floored like the expression tiers
+    Cn = _unit_rows(C).T  # (dim, m); floored like the expression cell rule
     n = min(n, len(c_ids))  # probing every cell == exhaustive, not an error
 
     schema = T.StructType(list(df.schema.fields) + [T.StructField("c_id", T.LongType())])
@@ -1381,82 +1334,6 @@ def assign_centroids_np(
             yield batch.append_column("c_id", pa.array(c_ids[idx.T.ravel()]))
 
     return df.mapInArrow(batches, schema=schema)
-
-
-def cosine_topk_np(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Brute-force cosine top-k, Arrow+BLAS tier.
-
-    Each Arrow batch of the corpus scores against the broadcast query matrix
-    in one matmul and emits only its LOCAL top-k per query (partial top-k
-    combine); a final rank over queries x k x n_batches rows is negligible.
-    Same output contract as :func:`cosine_topk` (sim rounded 6dp; last-bit
-    BLAS drift possible vs the expression tier). NULL corpus ids never rank
-    (as in :func:`cosine_topk`); a NULL, wrong-length or zero-norm vector
-    raises.
-    """
-    q_ids, Q = _collect_vectors(queries, id_col, vec_col, "cosine_topk_np query")
-    Qn = _unit_rows(Q, "cosine_topk_np query").T  # (dim, nq)
-    return _partial_topk(
-        corpus.select(id_col, vec_col),
-        lambda V: -(_unit_rows(V, "cosine_topk_np") @ Qn).T,  # -sims (nq, b)
-        "cosine_topk_np", Q.shape[1], q_ids, k, "sim", sign=-1.0,
-    )
-
-
-def _partial_topk(frame, score, what, width, q_ids, k, col, sign=1.0, dtype="float64"):
-    """The partial top-k combine of :func:`cosine_topk_np` and
-    :func:`pq_topk`. Per Arrow batch of ``frame`` (id, vector) each query
-    keeps its ``k+1`` rows of lowest ``score(X)`` (an ``(nq, n)`` matrix;
-    the +1 absorbs the query matching itself), emitted as
-    ``col = sign * score``; one rank per query over those partials then
-    drops self pairs and orders the 6dp-rounded ``col`` (ascending for
-    ``sign > 0``), ties by ``n_id``. NULL ids never rank."""
-    import numpy as np
-    import pyarrow as pa
-    from pyspark.sql import types as T
-
-    def batches(it):
-        for batch in it:
-            if batch.num_rows == 0 or len(q_ids) == 0:
-                continue
-            id_arr = batch.column(0)
-            _, X = _vector_matrix(batch.column(1), what, width, dtype=dtype)
-            rows = np.flatnonzero(np.asarray(id_arr.is_valid()))
-            if not len(rows):
-                continue
-            D = score(X[rows])
-            kk = min(k + 1, D.shape[1])
-            qi = np.repeat(np.arange(len(q_ids)), kk)
-            ri = np.argpartition(D, kk - 1, axis=1)[:, :kk].ravel()
-            yield pa.RecordBatch.from_pydict({
-                "q_id": q_ids[qi],
-                "n_id": id_arr.take(rows[ri]).cast(pa.int64()),
-                col: sign * D[qi, ri],
-            })
-
-    schema = T.StructType(
-        [
-            T.StructField("q_id", T.LongType()),
-            T.StructField("n_id", T.LongType()),
-            T.StructField(col, T.DoubleType()),
-        ]
-    )
-    order = F.col(col).asc() if sign > 0 else F.col(col).desc()
-    w = Window.partitionBy("q_id").orderBy(order, F.col("n_id"))
-    return (
-        frame.mapInArrow(batches, schema=schema)
-        .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn(col, F.round(col, 6))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select("q_id", "n_id", "rnk", col)
-    )
 
 
 def lsh_candidates(
@@ -2266,8 +2143,8 @@ def pq_topk(
     """Asymmetric-distance (ADC) top-k over PQ codes: per query one
     ``(m x k)`` table of sub-distances to every centroid, then each code's
     score is ``sum_b table[b, code_b]`` — a table gather, no vector math
-    per corpus row. Arrow batches emit their LOCAL top-k per query (the
-    ``cosine_topk_np`` partial-combine shape); output
+    per corpus row. Arrow batches emit their LOCAL top-k per query (a
+    partial top-k combine); output
     ``(q_id, n_id, rnk, dist)`` ranked by ascending quantized L2 (=
     descending cosine on normalized inputs). Approximate: exact for the
     quantized representation (tested against explicit reconstruction),
@@ -2298,26 +2175,61 @@ def pq_topk(
     smaller.
     """
     import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
 
     books, m = _pq_codebook_tensor(codebooks)
     q_ids, Q = _collect_vectors(
         queries, id_col, vec_col, "pq_topk query", dim=m * books[0].shape[1]
     )
+    q_ids = np.asarray(q_ids, dtype=np.int64)
     if normalize:
         Q = _unit_rows(Q, "pq_topk query")
     # LUT[b][qi] = squared L2 from the query's b-th sub-vector to each centroid
     luts = _pq_luts(Q, books)
 
-    def adc(codes):
-        # dists (nq, n): gather each block's LUT column by the code
-        d = np.zeros((len(q_ids), len(codes)))
-        for b in range(m):
-            d += luts[b][:, codes[:, b]]
-        return d
+    # partial top-k combine: per Arrow batch each query keeps its k+1
+    # lowest-distance codes (the +1 absorbs the query matching itself); one
+    # rank per query over those partials drops self pairs and orders the
+    # 6dp-rounded dist, ties by n_id. NULL ids never rank.
+    def batches(it):
+        for batch in it:
+            if batch.num_rows == 0 or len(q_ids) == 0:
+                continue
+            id_arr = batch.column(0)
+            _, codes = _vector_matrix(batch.column(1), "pq_topk", m, dtype="int64")
+            rows = np.flatnonzero(np.asarray(id_arr.is_valid()))
+            if not len(rows):
+                continue
+            # dists (nq, n): gather each block's LUT column by the code
+            d = np.zeros((len(q_ids), len(rows)))
+            for b in range(m):
+                d += luts[b][:, codes[rows, b]]
+            kk = min(k + 1, d.shape[1])
+            qi = np.repeat(np.arange(len(q_ids)), kk)
+            ri = np.argpartition(d, kk - 1, axis=1)[:, :kk].ravel()
+            yield pa.RecordBatch.from_pydict({
+                "q_id": q_ids[qi],
+                "n_id": id_arr.take(rows[ri]).cast(pa.int64()),
+                "dist": d[qi, ri],
+            })
 
-    return _partial_topk(
-        codes_df.select(id_col, "codes"), adc, "pq_topk", m, q_ids, k, "dist",
-        dtype="int64",
+    schema = T.StructType(
+        [
+            T.StructField("q_id", T.LongType()),
+            T.StructField("n_id", T.LongType()),
+            T.StructField("dist", T.DoubleType()),
+        ]
+    )
+    w = Window.partitionBy("q_id").orderBy(F.col("dist"), F.col("n_id"))
+    return (
+        codes_df.select(id_col, "codes")
+        .mapInArrow(batches, schema=schema)
+        .filter(F.col("q_id") != F.col("n_id"))
+        .withColumn("dist", F.round("dist", 6))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+        .select("q_id", "n_id", "rnk", "dist")
     )
 
 
@@ -2428,7 +2340,7 @@ def coarse_residuals(
 
     _, C = _collect_centroids(coarse_centroids, "coarse_residuals")
     _check_residual_centroid_scale(C, "coarse_residuals")
-    Cn = (C / np.linalg.norm(C, axis=1, keepdims=True)).T  # (dim, n_cells)
+    Cn = _unit_rows(C).T  # (dim, n_cells); floored like assign_centroids_np
     mean_np = None if center_vec is None else np.asarray(center_vec, dtype=np.float64)
 
     schema = T.StructType(
@@ -2516,7 +2428,7 @@ def ivfpq_index(
     c_ids, C = _collect_centroids(coarse_centroids, "ivfpq_index")
     if residual:
         _check_residual_centroid_scale(C, "ivfpq_index(residual=True)")
-    Cn = (C / np.linalg.norm(C, axis=1, keepdims=True)).T  # (dim, n_cells)
+    Cn = _unit_rows(C).T  # (dim, n_cells); floored like assign_centroids_np
     mean_np = None if center_vec is None else np.asarray(center_vec, dtype=np.float64)
     uses_unit = mean_np is None or (normalize and not residual)
 
@@ -2683,8 +2595,8 @@ def ivfpq_topk(
     ``center_vec`` must match the build (books from
     :func:`coarse_residuals`).
 
-    Measured on the 400k Zipf-BoW rung (``tools/ab_bow_residual.py``,
-    interleaved best-of-3, SCALE_r09 ``ann.ab_bow_residual_400k``; centered
+    Measured on the 400k Zipf-BoW rung (a one-off interleaved best-of-3
+    A/B, SCALE_r09 ``ann.ab_bow_residual_400k``; centered
     assignment space, m8k64):
 
     ===========================  =========  ===========================
@@ -2740,11 +2652,12 @@ def ivfpq_topk(
     c_ids, C = _collect_centroids(coarse_centroids, "ivfpq_topk")
     if residual:
         _check_residual_centroid_scale(C, "ivfpq_topk(residual=True)")
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    Cn = _unit_rows(C)  # floored like assign_centroids_np
 
     q_ids, Q = _collect_vectors(
         queries, id_col, vec_col, "ivfpq_topk query", dim=C.shape[1]
     )
+    q_ids = np.asarray(q_ids, dtype=np.int64)
     # the unit query probes (without center_vec) and feeds plain normalized
     # ADC; where it is used, a zero query raises instead of going NaN
     Qn = (
@@ -2942,22 +2855,21 @@ def semantic_dedup(
     centroid_filter=None,
     max_reps: int = 256,
     round_dp: int = 6,
-    numpy_assign: bool = False,
     center_vec: list[float] | None = None,
     center: bool | str = False,
-    exact_arrow: bool = True,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): cluster embeddings, then inside each cluster drop any
     member whose cosine similarity to a lower-id cluster-mate reaches
     ``threshold`` — the deterministic form of keep-one-per-epsilon-ball.
 
-    Pipeline (all declarative, no driver loops):
+    Pipeline (no driver loops beyond the small centroid collect):
 
-    1. **Assignment** — broadcast the centroid set (``centroid_filter``
-       selects deterministic seeds; production feeds :func:`kmeans_step`
-       output), argmax cosine per vector. Map-side O(n·k): the corpus never
-       shuffles for this step.
+    1. **Assignment** — the centroid set (``centroid_filter`` selects
+       deterministic seeds; production feeds :func:`kmeans_step` output) is
+       collected to the driver, and each vector takes its argmax cosine
+       (rounded to ``round_dp``, ties to the lowest ``c_id``). Map-side
+       O(n·k): the corpus never shuffles for this step.
     2. **Representatives** — the ``max_reps`` smallest-id members of each
        cluster. Every member is compared ONLY against lower-id
        representatives, so per-cluster work is |cluster|·max_reps, never
@@ -2968,20 +2880,20 @@ def semantic_dedup(
        threshold; emitted as a ``keep`` flag for every input row (callers
        filter, or audit the drops).
 
-    Output: ``(id_col, cluster_id, keep)``. Exact cosine (expression-tier
-    fold, rounded to ``round_dp``) — oracle-reproducible; the Arrow+BLAS
-    tier (:func:`assign_centroids_np`) swaps into step 1 at corpus scale.
+    Output: ``(id_col, cluster_id, keep)``. Exact cosine, rounded to
+    ``round_dp`` — oracle-reproducible: both dot-heavy steps run as Arrow
+    sweeps that replicate the ``_dot`` fold bit-exactly (see the inline
+    notes), so the output equals the fold form of all three steps
+    (pytest-asserted). Ids may be any orderable type. A NULL-vector
+    centroid scores NULL, as in the fold: it never beats a non-NULL
+    cosine, and a NULL-vector row goes to the smallest ``c_id``.
 
-    Scale: one broadcast (centroids), one shuffle on ``cluster_id`` for the
-    rep join, one shuffle back on id for the verdict anti-join. The rep
-    ranking is a window on ``cluster_id`` — bounded by the k-means
-    granularity the caller controls (more centroids = smaller clusters).
-
-    ``numpy_assign`` swaps step 1 for :func:`assign_centroids_np` — the
-    Arrow+BLAS tier (one matmul per Arrow batch; measured 35x on corpus-
-    scale assignment). Within-cluster verification stays on the exact
-    expression tier either way, so claimed drops are never BLAS-rounded;
-    only the cluster boundary can drift on a near-tie (equivalence-tested).
+    Scale: one small-side collect (centroids; over
+    :data:`NP_TIER_MAX_COLLECT` rows it raises), one shuffle on
+    ``cluster_id`` for the rep join, one shuffle back on id for the verdict
+    anti-join. The rep ranking is a window on ``cluster_id`` — bounded by
+    the k-means granularity the caller controls (more centroids = smaller
+    clusters).
 
     ``center_vec`` moves step 1 (assignment ONLY) into mean-centered space
     — the shared-component fix (:func:`center_embeddings`): on hashed-BoW
@@ -2996,248 +2908,148 @@ def semantic_dedup(
     :func:`shared_component_ratio` and centers iff it clears
     :data:`CENTER_AUTO_RATIO` (same contract as :func:`ivf_ann_topk`).
     """
-    from .dedup import spread_small_input
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql import types as T
 
     if centroid_filter is None:
         centroid_filter = F.col(id_col) % 50 == 1
-    # spread: the n x k assignment scoring below is map-side (broadcast
-    # centroids), so its parallelism is the corpus split count — single-
-    # row-group inputs serialized it through 1-2 tasks (r15 profile);
-    # no-op at production split counts
-    vecs = spread_small_input(df).select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("ev")
-    )
-    # the centroid side must be resolved for the assignment anyway (it is
-    # broadcast / driver-collected), so the empty-set guard rides ONE
-    # materialization of it — no separate probe scan, no rebuilt subtree.
-    # Without the guard an empty centroid set returns ZERO rows from the
-    # inner assignment join and a keep-filter caller silently drops the
-    # whole corpus instead of learning its filter matched nothing.
-    # (r15: the sweep tier collects the centroid side to the driver anyway,
-    # so there the collect itself IS the materialization and the empty
-    # guard — the localCheckpoint + isEmpty jobs only run for the tiers
-    # that keep the centroids distributed.)
-    _empty_centroids_msg = (
-        "semantic_dedup: centroid_filter selected no rows — every input "
-        "row needs a cluster; pass a filter that matches this corpus's "
-        "ids (or feed kmeans_step output)"
-    )
-    cent_proj = df.filter(centroid_filter).select(
-        F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
-    )
-    cent_side = None
-    if numpy_assign or not exact_arrow:
-        cent_side = materialize(cent_proj)
-        if cent_side.isEmpty():
-            raise ValueError(_empty_centroids_msg)
     if center_vec is None:
         if center == "auto":
             ratio, probed_mean = shared_component_ratio(df, vec_col)
             center_vec = probed_mean if ratio > CENTER_AUTO_RATIO else None
         elif center:
             center_vec = embedding_mean(df, vec_col)
-    m_lit = (
-        None
-        if center_vec is None
-        else F.array(*[F.lit(float(x)) for x in center_vec])
+    # assignment-space vectors: centered when center_vec is given (the
+    # verdict sim below always stays on the raw `ev`). Both the assign-
+    # space vector and its floored norm are computed ONCE per row on each
+    # side (r15), never per (vector, centroid) pair. The floor keeps a
+    # vector equal to the corpus mean (centered to zero) at sim 0.0, so it
+    # falls to the lowest c_id instead of NULLing its cluster.
+    ev_a = F.col("ev")
+    cv_a = F.col(vec_col).cast("array<double>")
+    if center_vec is not None:
+        m_lit = F.array(*[F.lit(float(x)) for x in center_vec])
+        ev_a = F.zip_with(ev_a, m_lit, lambda x, y: x - y)
+        cv_a = F.zip_with(cv_a, m_lit, lambda x, y: x - y)
+    cents = (
+        df.filter(centroid_filter)
+        .select(F.col(id_col).alias("c_id"), cv_a.alias("__ca"))
+        .withColumn(
+            "__cn",
+            F.greatest(F.sqrt(_dot(F.col("__ca"), F.col("__ca"))), F.lit(1e-12)),
+        )
     )
-    if numpy_assign:
-        if m_lit is not None:
-            vecs_a = vecs.withColumn(
-                "__av", F.zip_with(F.col("ev"), m_lit, lambda x, y: x - y)
-            )
-            cent_a = center_embeddings(
-                cent_side.select(
-                    "c_id", F.col("c_vec").cast("array<double>").alias("c_vec")
+    # the collect IS the centroid side's materialization, so the empty-set
+    # guard rides it. Without the guard an empty centroid set assigns no
+    # row, and a keep-filter caller silently drops the whole corpus instead
+    # of learning its filter matched nothing.
+    c_tbl = _collect_small_side(
+        cents.orderBy("c_id"), "semantic_dedup centroid", arrow=True
+    )
+    c_id_arr, c_vec, c_norm = (c.combine_chunks() for c in c_tbl.columns)
+    # a NULL-vector centroid scores NULL against every row, as in the fold:
+    # it loses to any non-NULL sim and only wins the all-NULL tiebreak of
+    # the NULL route below, so the sweep scores the live centroids alone
+    # (positions c_pos in the c_id-ordered table)
+    c_live, C_mat = _vector_matrix(c_vec, "semantic_dedup centroid", allow_null=True)
+    c_pos = np.flatnonzero(c_live)
+    c_norms = c_norm.to_numpy(zero_copy_only=False)[c_pos]
+    if not len(c_id_arr):
+        raise ValueError(
+            "semantic_dedup: centroid_filter selected no rows — every input "
+            "row needs a cluster; pass a filter that matches this corpus's "
+            "ids (or feed kmeans_step output)"
+        )
+
+    # Assignment sweep (r15): the n×k assignment dots are the
+    # operator's dominant cost (measured on x32: ~70 s task-run at sf0.1 as
+    # interpreted folds, ~1 µs per element). The sweep computes the SAME
+    # raw cosines bit-exactly (see _sweep_cross — identical per-pair FP op
+    # sequence; norms are NOT replicated: __vn rides the row from the Spark
+    # expression built below and the collected centroid rows carry the
+    # Spark-computed __cn). Python emits only CANDIDATE winners per vector —
+    # every centroid whose numpy-rounded sim is within two rounding quanta
+    # of the row max (numpy half-even and Spark HALF_UP can disagree by at
+    # most one quantum, so the true winner is always in this superset) —
+    # and the FINAL rounded argmax runs in Spark's max_by/Round
+    # expressions: no Python replication of decimal-rounding semantics
+    # anywhere. Ties go to the lowest c_id through its position __cj in the
+    # c_id-ordered centroid table, which works for any id type.
+    cand_margin = 2 * 10.0 ** (-round_dp)
+    # the sweep wants few LARGE Arrow batches (its parallelism axis is
+    # numpy rows inside the batch), so it reads the un-spread input
+    vecs = df.select(
+        F.col(id_col), F.col(vec_col).cast("array<double>").alias("ev")
+    ).select(
+        F.col(id_col), "ev", ev_a.alias("__va")
+    ).withColumn(
+        "__vn",
+        F.greatest(F.sqrt(_dot(F.col("__va"), F.col("__va"))), F.lit(1e-12)),
+    )
+    cand_schema = T.StructType(
+        [
+            df.schema[id_col],
+            T.StructField("ev", T.ArrayType(T.DoubleType())),
+            # cluster_id keeps the id column's type
+            T.StructField("c_id", df.schema[id_col].dataType),
+            T.StructField("__cj", T.LongType()),
+            T.StructField("__raw", T.DoubleType()),
+        ]
+    )
+
+    def _cands(batch, rows, cj, raw):
+        return pa.RecordBatch.from_pydict({
+            id_col: batch.column(0).take(rows),
+            "ev": batch.column(1).take(rows),
+            "c_id": c_id_arr.take(pa.array(cj)).cast(batch.column(0).type),
+            "__cj": pa.array(cj, pa.int64()),
+            "__raw": pa.nulls(len(rows), pa.float64()) if raw is None else raw,
+        })
+
+    def _assign_batches(it):
+        for batch in it:
+            swept = np.asarray(batch.column(2).is_valid()) & bool(len(c_pos))
+            rows = np.flatnonzero(swept)
+            if len(rows):
+                _, V = _vector_matrix(
+                    batch.column(2), "semantic_dedup", C_mat.shape[1], allow_null=True
+                )
+                vn = np.asarray(batch.column(3), dtype=np.float64)[rows]
+                raw = _sweep_cross(V, C_mat) / np.multiply.outer(vn, c_norms)
+                r_np = np.round(raw, round_dp)
+                mx = r_np.max(axis=1, keepdims=True)
+                # NaN sims (NaN vector data) stay candidates: Spark's
+                # NaN-is-largest max_by ordering decides, as in the fold
+                keep = (r_np >= mx - cand_margin) | np.isnan(r_np)
+                ri, cj = np.nonzero(keep)
+                yield _cands(batch, rows[ri], c_pos[cj], raw[ri, cj])
+            if not swept.all():
+                # whole-vector NULLs (or no live centroid): the fold's sims
+                # are all NULL there and the ordering falls to the tiebreak
+                # — the SMALLEST c_id wins (with the NULL ev riding along).
+                # One candidate row with a NULL __raw reproduces that.
+                nul = np.flatnonzero(~swept)
+                yield _cands(batch, nul, np.zeros(len(nul), dtype=np.int64), None)
+
+    assign = (
+        vecs.mapInArrow(_assign_batches, schema=cand_schema)
+        .groupBy(id_col)
+        .agg(
+            F.max_by(
+                F.struct(F.col("c_id"), F.col("ev")),
+                F.struct(
+                    F.round(F.col("__raw"), round_dp),
+                    (-F.col("__cj")).alias("__nc"),
                 ),
-                list(center_vec),
-                "c_vec",
-            )
-            assign = assign_centroids_np(vecs_a, cent_a, id_col, "__av", n=1).select(
-                F.col(id_col), "ev", F.col("c_id").alias("cluster_id")
-            )
-        else:
-            assign = assign_centroids_np(vecs, cent_side, id_col, "ev", n=1).select(
-                F.col(id_col), "ev", F.col("c_id").alias("cluster_id")
-            )
-    else:
-        # assignment-space vectors: centered when center_vec is given (the
-        # verdict sim below always stays on the raw `ev`). Both the assign-
-        # space vector and its floored norm are precomputed PER ROW on each
-        # side (r15): the old per-pair form re-centered and re-folded both
-        # self-dots for every one of the n*k pairs — k-fold redundant work
-        # on the corpus side; same expression bits, so sims are unchanged.
-        ev_a = F.col("ev")
-        cv_a = F.col("c_vec").cast("array<double>")
-        if m_lit is not None:
-            ev_a = F.zip_with(ev_a, m_lit, lambda x, y: x - y)
-            cv_a = F.zip_with(cv_a, m_lit, lambda x, y: x - y)
-        def _cents_a(side):
-            return side.select("c_id", cv_a.alias("__ca")).withColumn(
-                "__cn",
-                F.greatest(F.sqrt(_dot(F.col("__ca"), F.col("__ca"))), F.lit(1e-12)),
-            )
-
-        from pyspark.sql import types as T
-
-        _int_types = (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-        cents_np = None
-        if exact_arrow and isinstance(df.schema[id_col].dataType, _int_types):
-            # None above the collect cap (too many centroids) or on a NULL
-            # centroid row: the expression tier below handles both
-            cents_np = _collect_vectors(
-                _cents_a(cent_proj).orderBy("c_id"), "c_id", "__ca",
-                "semantic_dedup centroid", "__cn", optional=True,
-            )
-            if cents_np is not None and not len(cents_np[0]):
-                raise ValueError(_empty_centroids_msg)
-        if cents_np is None and cent_side is None:
-            # sweep declined (centroid side above the driver-collect cap):
-            # fall back to the distributed expression tier, which needs the
-            # materialized + emptiness-guarded centroid table after all
-            cent_side = materialize(cent_proj)
-            if cent_side.isEmpty():
-                raise ValueError(_empty_centroids_msg)
-        if cents_np is not None:
-            # Arrow sweep tier (r15, guide §4.2): the n×k assignment dots are
-            # the operator's dominant cost (measured on x32: ~70 s task-run
-            # at sf0.1, ~1 µs per interpreted fold element). The sweep
-            # computes the SAME raw cosines bit-exactly (see _sweep_cross —
-            # identical per-pair FP op sequence; norms are NOT replicated:
-            # __vn rides the row from the Spark expression built below and
-            # the collected centroid rows carry the Spark-computed __cn).
-            # Python emits only CANDIDATE winners per vector — every
-            # centroid whose numpy-rounded sim is within two rounding quanta
-            # of the row max (numpy half-even and Spark HALF_UP can disagree
-            # by at most one quantum, so the true winner is always in this
-            # superset) — and the FINAL rounded argmax runs in the same
-            # max_by/Round expressions as the expression tier: no Python
-            # replication of decimal-rounding semantics anywhere. Output is
-            # therefore identical to the expression tier (pytest-asserted),
-            # which remains both the >cap fallback and the
-            # exact_arrow=False arm.
-            import numpy as np
-            import pyarrow as pa
-
-            c_id_arr, C_mat, c_norms = cents_np
-            min_cid = int(c_id_arr.min())
-            cand_margin = 2 * 10.0 ** (-round_dp)
-            # the sweep wants few LARGE Arrow batches (its parallelism axis
-            # is numpy rows inside the batch), so it reads the un-spread
-            # input — the 32-way spread exists for the expression tier's
-            # per-row fold parallelism and would only shrink batches here
-            vecs_sw = df.select(
-                F.col(id_col), F.col(vec_col).cast("array<double>").alias("ev")
-            ).select(
-                F.col(id_col), "ev", ev_a.alias("__va")
-            ).withColumn(
-                "__vn",
-                F.greatest(F.sqrt(_dot(F.col("__va"), F.col("__va"))), F.lit(1e-12)),
-            )
-            id_field = vecs_sw.schema[id_col]
-            cand_schema = T.StructType(
-                [
-                    id_field,
-                    T.StructField("ev", T.ArrayType(T.DoubleType())),
-                    # cluster_id inherits the id column's (integral) type,
-                    # exactly like the expression tier's c_id passthrough
-                    T.StructField("c_id", df.schema[id_col].dataType),
-                    T.StructField("__raw", T.DoubleType()),
-                ]
-            )
-
-            def _cands(batch, rows, cids, raw):
-                return pa.RecordBatch.from_pydict({
-                    id_col: batch.column(0).take(rows),
-                    "ev": batch.column(1).take(rows),
-                    "c_id": pa.array(cids).cast(batch.column(0).type),
-                    "__raw": pa.nulls(len(rows), pa.float64()) if raw is None else raw,
-                })
-
-            def _assign_batches(it):
-                for batch in it:
-                    live, V = _vector_matrix(
-                        batch.column(2), "semantic_dedup", C_mat.shape[1],
-                        allow_null=True,
-                    )
-                    rows = np.flatnonzero(live)
-                    if len(rows):
-                        vn = np.asarray(batch.column(3), dtype=np.float64)[rows]
-                        raw = _sweep_cross(V, C_mat) / np.multiply.outer(vn, c_norms)
-                        r_np = np.round(raw, round_dp)
-                        mx = r_np.max(axis=1, keepdims=True)
-                        # NaN sims (NaN vector data) stay candidates: Spark's
-                        # NaN-is-largest max_by ordering decides, exactly
-                        # like the expression tier
-                        keep = (r_np >= mx - cand_margin) | np.isnan(r_np)
-                        ri, cj = np.nonzero(keep)
-                        yield _cands(batch, rows[ri], c_id_arr[cj], raw[ri, cj])
-                    if not live.all():
-                        # whole-vector NULLs: the expression tier's sims are
-                        # all NULL there and max_by's struct ordering falls
-                        # to the -c_id tiebreak — the SMALLEST c_id wins
-                        # (with the NULL ev riding along). One candidate row
-                        # with a NULL __raw reproduces that ordering.
-                        nul = np.flatnonzero(~live)
-                        yield _cands(batch, nul, np.full(len(nul), min_cid), None)
-
-            cand_rows = vecs_sw.mapInArrow(_assign_batches, schema=cand_schema)
-            assign = (
-                cand_rows.groupBy(id_col)
-                .agg(
-                    F.max_by(
-                        F.struct(F.col("c_id"), F.col("ev")),
-                        F.struct(
-                            F.round(F.col("__raw"), round_dp),
-                            (-F.col("c_id")).alias("__nc"),
-                        ),
-                    ).alias("__best")
-                )
-                .select(
-                    F.col(id_col),
-                    F.col("__best.ev").alias("ev"),
-                    F.col("__best.c_id").alias("cluster_id"),
-                )
-            )
-        else:
-            # zero-norm guard (a vector exactly equal to the corpus mean
-            # centers to the zero vector): floor both denominators like
-            # nearest_cells — sims become 0.0 and max_by falls to the lowest
-            # c_id, matching the numpy tier's NaN-argmax behavior instead of
-            # NULLing the cluster
-            vecs_a = vecs.select(
-                F.col(id_col), "ev", ev_a.alias("__va"),
-            ).withColumn(
-                "__vn",
-                F.greatest(F.sqrt(_dot(F.col("__va"), F.col("__va"))), F.lit(1e-12)),
-            )
-            cents_a = F.broadcast(_cents_a(cent_side))
-            c_sim = F.round(
-                _dot(F.col("__va"), F.col("__ca")) / (F.col("__vn") * F.col("__cn")),
-                round_dp,
-            )
-            # argmax as a hash agg, not a rank window: max_by with the ordering
-            # struct (sim, -c_id) picks the same (best sim, smallest c_id)
-            # winner, but partial-aggregates MAP-SIDE — the n*k cross product
-            # collapses to n rows before the shuffle, where the window form
-            # shuffled and sorted all n*k rows (measured on x32: the exchange
-            # shrinks k-fold and the per-partition sort disappears)
-            assign = (
-                vecs_a.join(cents_a)
-                .withColumn("__c_sim", c_sim)
-                .groupBy(id_col)
-                .agg(
-                    F.max_by(
-                        F.struct(F.col("c_id"), F.col("ev")),
-                        F.struct(F.col("__c_sim"), (-F.col("c_id")).alias("__nc")),
-                    ).alias("__best")
-                )
-                .select(
-                    F.col(id_col),
-                    F.col("__best.ev").alias("ev"),
-                    F.col("__best.c_id").alias("cluster_id"),
-                )
-            )
+            ).alias("__best")
+        )
+        .select(
+            F.col(id_col),
+            F.col("__best.ev").alias("ev"),
+            F.col("__best.c_id").alias("cluster_id"),
+        )
+    )
     # both the member side and the rep side re-read the assignment (k dot
     # products per vector) — materialize once (deployment-aware). The RAW
     # verdict norm rides the materialized table too: the member-vs-rep pair
@@ -3264,78 +3076,57 @@ def semantic_dedup(
     pairs = assign.join(reps, "cluster_id").filter(
         F.col("__rep_id") < F.col(id_col)
     )
-    if exact_arrow:
-        # Arrow sweep for the member×rep verdict dots (same contract as the
-        # assignment sweep: _sweep_rows replicates the fold bit-exactly, the
-        # norms are the Spark-computed __n/__rn riding the joined row, and
-        # the threshold decision stays in Spark — the sweep only PRE-FILTERS
-        # with a slack of one rounding quantum (no raw value below
-        # threshold - 10^-dp can round up to the threshold), then Spark's
-        # own Round expression applies the exact cut.
-        import numpy as np
-        import pyarrow as pa
-        from pyspark.sql import types as T
+    # Verdict sweep for the member×rep dots (same contract as the assignment
+    # sweep: _sweep_rows replicates the fold bit-exactly, the norms are the
+    # Spark-computed __n/__rn riding the joined row, and the threshold
+    # decision stays in Spark — the sweep only PRE-FILTERS with a slack of
+    # one rounding quantum (no raw value below threshold - 10^-dp can round
+    # up to the threshold), then Spark's own Round expression applies the
+    # exact cut.
+    margin = threshold - 10.0 ** (-round_dp)
+    raw_schema = T.StructType(
+        [df.schema[id_col], T.StructField("__raw", T.DoubleType())]
+    )
 
-        margin = threshold - 10.0 ** (-round_dp)
-        id_field = df.schema[id_col]
-        raw_schema = T.StructType(
-            [id_field, T.StructField("__raw", T.DoubleType())]
-        )
+    def _verdict_batches(it):
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            _, Ev = _vector_matrix(batch.column(1), "semantic_dedup verdict")
+            _, Rv = _vector_matrix(
+                batch.column(2), "semantic_dedup verdict", Ev.shape[1]
+            )
+            denom = np.asarray(batch.column(3), dtype=np.float64) * np.asarray(
+                batch.column(4), dtype=np.float64
+            )
+            if (denom == 0.0).any():
+                # a silent NaN here would DROP the row (NaN >= threshold is
+                # true in Spark)
+                raise ArithmeticError(
+                    "semantic_dedup verdict: zero-norm vector in a member/rep "
+                    "pair (cosine is undefined; the fold's ANSI divide raises "
+                    "DIVIDE_BY_ZERO)"
+                )
+            raw = _sweep_rows(Ev, Rv) / denom
+            # NaN raws must reach Spark: its NaN-is-largest comparison
+            # semantics make round(NaN) >= threshold TRUE, as for the fold
+            m = np.flatnonzero((raw >= margin) | np.isnan(raw))
+            yield pa.RecordBatch.from_pydict(
+                {id_col: batch.column(0).take(m), "__raw": raw[m]}
+            )
 
-        def _verdict_batches(it):
-            for batch in it:
-                if batch.num_rows == 0:
-                    continue
-                _, Ev = _vector_matrix(batch.column(1), "semantic_dedup verdict")
-                _, Rv = _vector_matrix(
-                    batch.column(2), "semantic_dedup verdict", Ev.shape[1]
-                )
-                denom = np.asarray(batch.column(3), dtype=np.float64) * np.asarray(
-                    batch.column(4), dtype=np.float64
-                )
-                if (denom == 0.0).any():
-                    # loudness parity: the expression tier's pair_sim divide
-                    # raises DIVIDE_BY_ZERO under Spark 4 default ANSI for a
-                    # zero-norm member/rep — a silent NaN here would instead
-                    # DROP the row (NaN >= threshold is true in Spark)
-                    raise ArithmeticError(
-                        "semantic_dedup verdict: zero-norm vector in a "
-                        "member/rep pair (DIVIDE_BY_ZERO parity with the "
-                        "expression tier's ANSI divide)"
-                    )
-                raw = _sweep_rows(Ev, Rv) / denom
-                # NaN raws must reach Spark: its NaN-is-largest comparison
-                # semantics make round(NaN) >= threshold TRUE, exactly like
-                # the expression tier's filter on the folded sim
-                m = np.flatnonzero((raw >= margin) | np.isnan(raw))
-                yield pa.RecordBatch.from_pydict(
-                    {id_col: batch.column(0).take(m), "__raw": raw[m]}
-                )
-
-        dropped = (
-            # NULL ev/rv pairs can never drop a row in the expression tier
-            # (NULL pair_sim fails the >= filter) — excluding them here is
-            # that exact behavior, and leaves the sweep no NULL vectors
-            pairs.filter(F.col("ev").isNotNull() & F.col("rv").isNotNull())
-            .select(id_col, "ev", "rv", "__n", "__rn")
-            .mapInArrow(_verdict_batches, schema=raw_schema)
-            .filter(F.round(F.col("__raw"), round_dp) >= threshold)
-            .select(id_col)
-            .distinct()
-            .withColumn("__dropped", F.lit(True))
-        )
-    else:
-        pair_sim = F.round(
-            _dot(F.col("ev"), F.col("rv")) / (F.col("__n") * F.col("__rn")),
-            round_dp,
-        )
-        dropped = (
-            pairs.withColumn("__sim", pair_sim)
-            .filter(F.col("__sim") >= threshold)
-            .select(id_col)
-            .distinct()
-            .withColumn("__dropped", F.lit(True))
-        )
+    dropped = (
+        # a NULL ev/rv pair has a NULL fold sim, which never passes the >=
+        # filter — excluding those pairs here is that exact behavior, and
+        # leaves the sweep no NULL vectors
+        pairs.filter(F.col("ev").isNotNull() & F.col("rv").isNotNull())
+        .select(id_col, "ev", "rv", "__n", "__rn")
+        .mapInArrow(_verdict_batches, schema=raw_schema)
+        .filter(F.round(F.col("__raw"), round_dp) >= threshold)
+        .select(id_col)
+        .distinct()
+        .withColumn("__dropped", F.lit(True))
+    )
     return assign.join(dropped, id_col, "left").select(
         F.col(id_col),
         "cluster_id",

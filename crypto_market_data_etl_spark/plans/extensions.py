@@ -2402,10 +2402,10 @@ def x52_ivfpq_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
 # space (the shared-component fix for hashed-BoW-like corpora — see
 # center_embeddings) probing every cell must still reproduce brute-force
 # cosine top-k on RAW vectors under x05's oracle: centering may only move
-# vectors between cells, never touch the returned metric. Runs the
-# Arrow+BLAS assignment tier — at the exhaustive point cell choice is
-# irrelevant, so the float-noise-prone step is provably out of the result
-# path and the numpy tier gets oracle coverage it otherwise can't have.
+# vectors between cells, never touch the returned metric. At the
+# exhaustive point cell choice is irrelevant, so this covers the centered
+# Arrow pass of ivf_index end to end; the cells themselves are pinned to
+# the expression rule by x15 and the unit tests.
 # --------------------------------------------------------------------------
 
 def x53_ivf_centered_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2415,7 +2415,7 @@ def x53_ivf_centered_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = embs.filter(F.col("vec_id") % QUERY_MOD == 0)
     return ivf_ann_topk(
         embs, queries, n_probe=10**9, k=5,
-        center=True, numpy_assign=True,
+        center=True,
         centroid_filter=F.col("vec_id") % 50 == 1,
     )
 
@@ -2635,7 +2635,7 @@ def x58_ivf_kmpp_exhaustive(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeds = kmeans_parallel_init(embs, k=16, rounds=2)
     cents = kmeans_train(embs, init=seeds, n_iters=2)
     return ivf_ann_topk(
-        embs, queries, n_probe=10**9, k=5, centroids=cents, numpy_assign=True
+        embs, queries, n_probe=10**9, k=5, centroids=cents
     )
 
 

@@ -319,41 +319,19 @@ def test_domain_mixture_sample_deterministic_and_flattening(spark):
     assert a == b
 
 
-def test_semantic_dedup_numpy_assign_equivalent(spark):
-    from crypto_market_data_etl_spark.operators.similarity import semantic_dedup
-    from crypto_market_data_etl_spark.schemas import load_table
-    from tests.conftest import SF_SMOKE
-
-    embs = load_table(spark, SF_SMOKE, "embeddings")
-    expr = semantic_dedup(embs).orderBy("vec_id").collect()
-    blas = semantic_dedup(embs, numpy_assign=True).orderBy("vec_id").collect()
-    # the operator's contract (docstring): keep verdicts agree; cluster_id
-    # MAY drift on a near-tie between the rounded expression argmax and the
-    # unrounded BLAS argmax, so strict cluster equality would flake across
-    # BLAS builds. Assert the verdict, and that boundary drift stays rare.
-    assert [(r.vec_id, r.keep) for r in expr] == [
-        (r.vec_id, r.keep) for r in blas
-    ]
-    drift = sum(
-        1 for a, b in zip(expr, blas) if a.cluster_id != b.cluster_id
-    )
-    assert drift <= len(expr) * 0.01
-
-
-def test_semantic_dedup_exact_arrow_bit_parity(spark):
-    """The r15 Arrow-sweep tier must be IDENTICAL to the expression tier —
-    not tolerance-equal like the BLAS tier: the sweep replicates the fold's
-    exact FP sequence (_sweep_cross/_sweep_rows), norms ride the rows from
-    Spark expressions, and rounding/argmax/threshold stay in Spark. Full
-    output equality on every column, plain and centered."""
-    from pyspark.sql import functions as F
-
+def test_semantic_dedup_matches_fold_reference(spark):
+    """The r15 Arrow sweeps must be IDENTICAL to the ``_dot`` fold form of
+    assignment and verdict — not tolerance-equal: the sweeps replicate the
+    fold's exact FP sequence (_sweep_cross/_sweep_rows), norms ride the
+    rows from Spark expressions, and rounding/argmax/threshold stay in
+    Spark. Full output equality on every column, plain and centered."""
     from crypto_market_data_etl_spark.operators.similarity import (
         embedding_mean,
         semantic_dedup,
     )
     from crypto_market_data_etl_spark.schemas import load_table
     from tests.conftest import SF_SMOKE
+    from tests.fold_reference import semantic_dedup_fold
 
     embs = load_table(spark, SF_SMOKE, "embeddings")
     mean = [round(v, 6) for v in embedding_mean(embs)]
@@ -362,36 +340,60 @@ def test_semantic_dedup_exact_arrow_bit_parity(spark):
         {"center_vec": mean},
         {"threshold": 0.8, "max_reps": 3},
     ):
-        sweep = semantic_dedup(embs, exact_arrow=True, **kwargs).collect()
-        expr = semantic_dedup(embs, exact_arrow=False, **kwargs).collect()
+        sweep = semantic_dedup(embs, **kwargs).collect()
+        expr = semantic_dedup_fold(embs, **kwargs).collect()
         assert sorted(map(tuple, sweep)) == sorted(map(tuple, expr)), kwargs
 
 
 def test_semantic_dedup_sweep_edge_regimes(spark):
-    """Review-flagged sweep-tier edges: a whole-NULL embedding row must flow
-    through (NULL ev/rv pairs pre-filtered exactly like the expression
-    tier's NULL pair_sim), and an IntegerType id column must keep its type
-    on cluster_id in both tiers."""
+    """Inputs beside the dense long-id case, each against the fold form: a
+    whole-NULL embedding row must flow through (NULL ev/rv pairs
+    pre-filtered exactly like the fold's NULL pair_sim), an IntegerType id
+    column must keep its type on cluster_id, string ids cluster and
+    tie-break by their own ordering, and NULL-vector centroids score NULL
+    instead of failing the centroid collect."""
     from pyspark.sql import functions as F
 
     from crypto_market_data_etl_spark.operators.similarity import semantic_dedup
+    from tests.fold_reference import semantic_dedup_fold
 
     rows = [(i, [float(i % 7) + 0.1 * d for d in range(8)]) for i in range(60)]
     rows.append((60, None))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     cf = F.col("vec_id") % 10 == 1
-    sweep = semantic_dedup(df, centroid_filter=cf, exact_arrow=True).collect()
-    expr = semantic_dedup(df, centroid_filter=cf, exact_arrow=False).collect()
+    sweep = semantic_dedup(df, centroid_filter=cf).collect()
+    expr = semantic_dedup_fold(df, centroid_filter=cf).collect()
     assert sorted(map(tuple, sweep)) == sorted(map(tuple, expr))
     assert len(sweep) == 61  # the NULL-vector row is present, keep=true
     i32 = spark.createDataFrame(rows[:60], "vec_id long, embedding array<double>")
     i32 = i32.withColumn("vec_id", F.col("vec_id").cast("int"))
-    t_sweep = semantic_dedup(i32, centroid_filter=cf, exact_arrow=True)
-    t_expr = semantic_dedup(i32, centroid_filter=cf, exact_arrow=False)
+    t_sweep = semantic_dedup(i32, centroid_filter=cf)
+    t_expr = semantic_dedup_fold(i32, centroid_filter=cf)
     assert t_sweep.schema == t_expr.schema
     assert sorted(map(tuple, t_sweep.collect())) == sorted(
         map(tuple, t_expr.collect())
     )
+    # string ids: "s7" sorts after "s60", so id order is not numeric order
+    strs = df.withColumn("vec_id", F.concat(F.lit("s"), F.col("vec_id").cast("string")))
+    scf = F.col("vec_id").endswith("1")
+    s_sweep = semantic_dedup(strs, centroid_filter=scf)
+    s_expr = semantic_dedup_fold(strs, centroid_filter=scf)
+    assert s_sweep.schema == s_expr.schema
+    s_rows = s_sweep.collect()
+    assert sorted(map(tuple, s_rows), key=repr) == sorted(
+        map(tuple, s_expr.collect()), key=repr
+    )
+    assert len(s_rows) == 61 and not all(r.keep for r in s_rows)
+    # NULL-vector centroids: c_id 1 (the smallest) scores NULL, so it takes
+    # only the NULL-vector rows; with every centroid NULL, every row does
+    nul = spark.createDataFrame(
+        [(1, None)] + rows[2:], "vec_id long, embedding array<double>"
+    )
+    for ncf in (cf, F.col("vec_id").isin(1, 60)):
+        n_sweep = semantic_dedup(nul, centroid_filter=ncf).collect()
+        n_expr = semantic_dedup_fold(nul, centroid_filter=ncf).collect()
+        assert sorted(map(tuple, n_sweep)) == sorted(map(tuple, n_expr))
+        assert {r.cluster_id for r in n_sweep if r.vec_id in (1, 60)} == {1}
 
 
 def test_sweep_dots_bit_identical_to_expression_fold(spark):

@@ -23,6 +23,11 @@ from crypto_market_data_etl_spark.operators.similarity import (
 )
 from crypto_market_data_etl_spark.schemas import load_table
 from tests.conftest import SF_SMOKE
+from tests.fold_reference import (
+    cosine_topk_fold,
+    ivf_ann_topk_fold,
+    semantic_dedup_fold,
+)
 
 
 @pytest.fixture(scope="module")
@@ -123,77 +128,139 @@ def test_cosine_topk_finds_identical_vector(spark, embs):
     assert out[0].n_id == 777_777 and abs(out[0].sim - 1.0) < 1e-6
 
 
-def test_lsh_buckets_exact_arrow_bit_parity(spark, embs):
-    """The r15 sweep signature tier must produce IDENTICAL buckets to the
-    expression tier: sign decisions on bit-exact dots need no margin at all.
-    Full-output equality, both plane widths used by the gated queries."""
-    from crypto_market_data_etl_spark.operators.similarity import lsh_buckets
+def _bucket_signature_sweep(
+    df, id_col, vec_col, n_planes, dim, offset=0, carry_vec=False, out_col="bucket"
+):
+    """Stand-in for ``_signature_sweep`` built from the ``bucket_signature``
+    expression: same arguments, same output columns."""
+    cols = [F.col(id_col)] + ([F.col(vec_col)] if carry_vec else [])
+    return df.select(
+        *cols, bucket_signature(vec_col, n_planes, dim, offset).alias(out_col)
+    )
 
+
+def _with_expression_signatures(monkeypatch, fn):
+    """``fn()`` collected with the sign-LSH family's signatures computed by
+    the ``bucket_signature`` expression instead of the Arrow sweep."""
+    from crypto_market_data_etl_spark.operators import similarity as sim
+
+    with monkeypatch.context() as m:
+        m.setattr(sim, "_signature_sweep", _bucket_signature_sweep)
+        return fn().collect()
+
+
+def test_lsh_buckets_sweep_bit_parity(spark, embs, monkeypatch):
+    """The r15 sweep signatures must produce IDENTICAL buckets to the
+    ``bucket_signature`` expression: sign decisions on bit-exact dots need
+    no margin at all. Full-output equality, both plane widths used by the
+    gated queries."""
     for planes in (6, 16):
-        sweep = lsh_buckets(embs, n_planes=planes, exact_arrow=True).collect()
-        expr = lsh_buckets(embs, n_planes=planes, exact_arrow=False).collect()
+        sweep = lsh_buckets(embs, n_planes=planes).collect()
+        expr = _with_expression_signatures(
+            monkeypatch, lambda: lsh_buckets(embs, n_planes=planes)
+        )
         assert sorted(map(tuple, sweep)) == sorted(map(tuple, expr)), planes
 
 
-def test_cosine_topk_exact_arrow_bit_parity(spark, embs):
-    """The r15 sweep tier must equal the expression tier on the FULL output
+def test_cosine_topk_matches_fold_reference(spark, embs):
+    """The r15 sweep must equal the ``_dot`` fold form on the FULL output
     (ids, ranks AND rounded sims) — it replicates the fold bit-exactly and
     only pre-selects candidates with a 2-quantum margin; the rank and the
     rounding run in the same Spark expressions either way. Covers k larger
     than the corpus (every row a candidate) and tiny-k."""
     qs = embs.filter(F.col("vec_id") % 7 == 0)
     for corpus, kk in ((embs, 5), (embs, 1), (embs.limit(4), 10)):
-        sweep = cosine_topk(corpus, qs, k=kk, exact_arrow=True).collect()
-        expr = cosine_topk(corpus, qs, k=kk, exact_arrow=False).collect()
+        sweep = cosine_topk(corpus, qs, k=kk).collect()
+        expr = cosine_topk_fold(corpus, qs, k=kk).collect()
         assert sorted(map(tuple, sweep)) == sorted(map(tuple, expr)), kk
 
 
 def test_cosine_topk_sweep_edge_regimes(spark):
-    """Review-flagged sweep-tier edges: NULL query vectors fall back to the
-    expression tier; NULL corpus vectors rank identically (bounded
-    emission); zero-norm vectors raise in BOTH tiers (the expression tier's
-    ANSI DIVIDE_BY_ZERO, the sweep's explicit parity guard)."""
-    import pytest
-
+    """Inputs beside the dense long-id case, each against the fold form:
+    NULL query vectors (the k smallest other ids, NULL sim), NULL corpus
+    vectors (ranked last, bounded emission), a NULL-id query (no rows),
+    string ids (native self-mask and ordering); zero-norm vectors raise in
+    both (the fold's ANSI DIVIDE_BY_ZERO, the sweep's explicit guard)."""
     rows = [(i, [float(i % 7) + 0.1 * d for d in range(8)]) for i in range(40)]
-    rows.append((40, None))
+    rows += [(40, None), (None, [1.0] * 8)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    for qfilter in (F.col("vec_id").isin(1, 40), F.col("vec_id") == 1):
-        qs = df.filter(qfilter)
-        sweep = cosine_topk(df, qs, k=3, exact_arrow=True).collect()
-        expr = cosine_topk(df, qs, k=3, exact_arrow=False).collect()
-        assert sorted(map(tuple, sweep)) == sorted(map(tuple, expr))
+    sdf = df.withColumn("vec_id", F.concat(F.lit("v"), F.col("vec_id").cast("string")))
+    cases = [
+        (df, F.col("vec_id").isin(1, 40)),
+        (df, F.col("vec_id") == 1),
+        (df, F.col("vec_id").isNull() | (F.col("vec_id") == 3)),
+        (sdf, F.col("vec_id").isin("v1", "v40", "v5")),
+    ]
+    for corpus, qfilter in cases:
+        qs = corpus.filter(qfilter)
+        sweep = cosine_topk(corpus, qs, k=3).collect()
+        expr = cosine_topk_fold(corpus, qs, k=3).collect()
+        assert len(sweep) > 0
+        assert sorted(map(tuple, sweep), key=repr) == sorted(
+            map(tuple, expr), key=repr
+        )
+    assert cosine_topk(df, df.filter(F.col("vec_id").isNull()), k=3).count() == 0
     z = spark.createDataFrame(
         [(0, [1.0] * 8), (1, [0.0] * 8), (2, [2.0] * 8)],
         "vec_id long, embedding array<double>",
     )
-    for exact in (True, False):
+    for topk in (cosine_topk, cosine_topk_fold):
         with pytest.raises(Exception, match="DIVIDE_BY_ZERO|zero-norm"):
-            cosine_topk(
-                z, z.filter(F.col("vec_id") == 0), k=2, exact_arrow=exact
-            ).collect()
+            topk(z, z.filter(F.col("vec_id") == 0), k=2).collect()
 
 
-def test_cosine_topk_np_matches_expression_tier(spark, embs):
-    from crypto_market_data_etl_spark.operators.similarity import cosine_topk_np
+def test_ivf_matches_fold_reference(spark, embs):
+    """Inline ``ivf_ann_topk`` (``ivf_index`` plus the cell rule for the
+    query probes) equals the fold form that files the corpus by the same
+    cell rule. The near-tie fixture pins the rule's 6dp rounding: a BLAS
+    argmax files ``[1, 0]`` into cell 2 (cosine 0.7000003 beats 0.7000001)
+    and a 1-probe query for its exact duplicate then probes cell 1 and
+    misses it; the rounded rule ties the two cells and picks c_id 1."""
+    import math
 
-    qs = embs.filter(F.col("vec_id") < 5)
-    a = {(r.q_id, r.rnk): r.n_id for r in cosine_topk(embs, qs, k=4).collect()}
-    b = {(r.q_id, r.rnk): r.n_id for r in cosine_topk_np(embs, qs, k=4).collect()}
-    assert a == b
-
-
-def test_ivf_numpy_assign_matches_expression_tier(spark, embs):
-    from crypto_market_data_etl_spark.operators.similarity import ivf_ann_topk
+    from crypto_market_data_etl_spark.operators.similarity import (
+        ivf_ann_topk,
+        ivf_index,
+    )
+    from tests.fold_reference import nearest_cells_fold
 
     qs = embs.filter(F.col("vec_id") % 50 == 0)
     flt = F.col("vec_id") % 20 == 1
-    a = {(r.q_id, r.rnk): r.n_id
-         for r in ivf_ann_topk(embs, qs, n_probe=2, k=3, centroid_filter=flt).collect()}
-    b = {(r.q_id, r.rnk): r.n_id
-         for r in ivf_ann_topk(embs, qs, n_probe=2, k=3, centroid_filter=flt,
-                               numpy_assign=True).collect()}
+    cents = embs.filter(flt).select(
+        F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_vec")
+    )
+    a = {(r.q_id, r.rnk): (r.n_id, r.sim)
+         for r in ivf_ann_topk_fold(embs, qs, cents, n_probe=2, k=3).collect()}
+    b = {(r.q_id, r.rnk): (r.n_id, r.sim)
+         for r in ivf_ann_topk(
+             embs, qs, n_probe=2, k=3, centroid_filter=flt
+         ).collect()}
     assert a == b
+
+    def unit(c):
+        return [c, math.sqrt(1 - c * c)]
+
+    tie = spark.createDataFrame(
+        [(1, unit(0.7000001)), (2, unit(0.7000003)), (3, [0.0, 0.0]),
+         (4, [-1.0, 0.0])],
+        "c_id long, c_vec array<double>",
+    )
+    corpus = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (11, [0.0, 1.0]), (12, [0.0, 0.0]), (13, [0.3, 0.2])],
+        "vec_id long, embedding array<float>",
+    )
+    side = corpus.select(F.col("vec_id").alias("n_id"), F.col("embedding").alias("n_vec"))
+    for r, mean in ((1, None), (2, None), (3, None), (2, [0.1, -0.2])):
+        got = ivf_index(corpus, tie, center_vec=mean, assign_r=r)
+        want = nearest_cells_fold(side, "n_id", "n_vec", tie, r, mean)
+        assert sorted(got.select("n_id", "c_id").collect()) == sorted(
+            want.select("n_id", "c_id").collect()
+        )
+    dup = spark.createDataFrame([(20, [1.0, 0.0])], "vec_id long, embedding array<float>")
+    hit = ivf_ann_topk(
+        corpus.filter(F.col("vec_id") != 12), dup, n_probe=1, k=1, centroids=tie
+    ).collect()
+    assert [(h.n_id, h.sim) for h in hit] == [(10, 1.0)]
 
 
 def test_lsh_buckets_shape(spark, embs):
@@ -231,41 +298,40 @@ def test_bandor_recall_dominates_one_table(spark, embs):
     assert r_or.recall >= r_one.recall
 
 
-def test_sign_lsh_family_exact_arrow_bit_parity(spark, embs):
-    """r15 batch 9: the _signature_sweep tier propagated to the sign-LSH
-    family must equal the expression tier on the FULL output (ids, ranks,
-    rounded sims / thresholds) — sign decisions on bit-exact dots need no
-    margin, and norms/sims stay JVM folds either way. Covers the gated
-    shapes: x14 (8 planes, capped + uncapped), x17 (multi-probe, 6 planes),
-    x18 (band-OR 4×3)."""
+def test_sign_lsh_family_sweep_bit_parity(spark, embs, monkeypatch):
+    """r15 batch 9: the sign-LSH family on _signature_sweep must equal the
+    same operators on ``bucket_signature`` expressions on the FULL output
+    (ids, ranks, rounded sims / thresholds) — sign decisions on bit-exact
+    dots need no margin, and norms/sims stay JVM folds either way. Covers
+    the gated shapes: x14 (8 planes, capped + uncapped), x17 (multi-probe,
+    6 planes), x18 (band-OR 4×3)."""
     from crypto_market_data_etl_spark.operators.similarity import (
         embedding_neardup_pairs,
     )
 
     qs = embs.filter(F.col("vec_id") % 25 == 0)
     cases = [
-        ("x14", lambda ea: embedding_neardup_pairs(
-            embs, n_planes=8, threshold=0.25, exact_arrow=ea)),
-        ("x14_capped", lambda ea: embedding_neardup_pairs(
-            embs, n_planes=2, threshold=0.0, max_bucket_size=5, exact_arrow=ea)),
-        ("x17", lambda ea: lsh_ann_multiprobe(
-            embs, qs, n_planes=6, k=3, exact_arrow=ea)),
-        ("x17_p0", lambda ea: lsh_ann_multiprobe(
-            embs, qs, n_planes=6, k=3, probe_hamming=0, exact_arrow=ea)),
-        ("x18", lambda ea: lsh_ann_bandor(
-            embs, qs, planes_per_table=4, n_tables=3, k=3, exact_arrow=ea)),
+        ("x14", lambda: embedding_neardup_pairs(
+            embs, n_planes=8, threshold=0.25)),
+        ("x14_capped", lambda: embedding_neardup_pairs(
+            embs, n_planes=2, threshold=0.0, max_bucket_size=5)),
+        ("x17", lambda: lsh_ann_multiprobe(embs, qs, n_planes=6, k=3)),
+        ("x17_p0", lambda: lsh_ann_multiprobe(
+            embs, qs, n_planes=6, k=3, probe_hamming=0)),
+        ("x18", lambda: lsh_ann_bandor(
+            embs, qs, planes_per_table=4, n_tables=3, k=3)),
     ]
     for name, fn in cases:
-        sweep = fn(True).collect()
-        expr = fn(False).collect()
+        sweep = fn().collect()
+        expr = _with_expression_signatures(monkeypatch, fn)
         assert len(sweep) > 0, name
         assert sorted(map(tuple, sweep)) == sorted(map(tuple, expr)), name
 
 
-def test_sign_lsh_family_sweep_null_vector_parity(spark, embs):
-    """A whole-NULL vector buckets to the all-zeros string in both tiers
-    (sweep pre-handles it; the expression tier's NULL dots fall to '0'),
-    and downstream NULL norms/sims rank/filter identically."""
+def test_sign_lsh_family_sweep_null_vector_parity(spark, embs, monkeypatch):
+    """A whole-NULL vector buckets to the all-zeros string in both forms
+    (the sweep pre-handles it; ``bucket_signature``'s NULL dots fall to
+    '0'), and downstream NULL norms/sims rank/filter identically."""
     from crypto_market_data_etl_spark.operators.similarity import (
         embedding_neardup_pairs,
     )
@@ -279,15 +345,13 @@ def test_sign_lsh_family_sweep_null_vector_parity(spark, embs):
     dfn = embs.unionByName(nul)
     qs = dfn.filter((F.col("vec_id") % 25 == 0) | F.col("embedding").isNull())
     for name, fn in [
-        ("x14", lambda ea: embedding_neardup_pairs(
-            dfn, n_planes=8, threshold=0.25, exact_arrow=ea)),
-        ("x17", lambda ea: lsh_ann_multiprobe(
-            dfn, qs, n_planes=6, k=3, exact_arrow=ea)),
-        ("x18", lambda ea: lsh_ann_bandor(
-            dfn, qs, planes_per_table=4, n_tables=3, k=3, exact_arrow=ea)),
+        ("x14", lambda: embedding_neardup_pairs(dfn, n_planes=8, threshold=0.25)),
+        ("x17", lambda: lsh_ann_multiprobe(dfn, qs, n_planes=6, k=3)),
+        ("x18", lambda: lsh_ann_bandor(
+            dfn, qs, planes_per_table=4, n_tables=3, k=3)),
     ]:
-        sweep = fn(True).collect()
-        expr = fn(False).collect()
+        sweep = fn().collect()
+        expr = _with_expression_signatures(monkeypatch, fn)
         assert sorted(map(tuple, sweep)) == sorted(map(tuple, expr)), name
 
 
@@ -368,7 +432,7 @@ def _vp_frame(spark, extra=()):
     ).coalesce(1)  # one Arrow batch: the NULL id and the big ids co-batch
 
 
-def _vp_kernel(name, spark, df, exact=True):
+def _vp_kernel(name, spark, df, reference=False):
     from crypto_market_data_etl_spark.operators import similarity as sim
 
     h = 0.5 ** 0.5
@@ -385,9 +449,10 @@ def _vp_kernel(name, spark, df, exact=True):
     codes = df.select("vec_id", F.col("embedding").cast("array<int>").alias("codes"))
     qs = df.filter(F.col("vec_id").isin(1, BIG_ID))
     return {
-        "cosine_topk": lambda: sim.cosine_topk(df, qs, k=5, exact_arrow=exact),
+        "cosine_topk": lambda: (cosine_topk_fold if reference else sim.cosine_topk)(
+            df, qs, k=5
+        ),
         "assign_centroids_np": lambda: sim.assign_centroids_np(df, cents),
-        "cosine_topk_np": lambda: sim.cosine_topk_np(df, qs, k=3),
         "kmeans_parallel_init": lambda: sim.kmeans_parallel_init(df, k=4, rounds=2),
         "pq_encode": lambda: sim.pq_encode(df, books),
         "pq_topk": lambda: sim.pq_topk(codes, qs, books, k=3),
@@ -397,24 +462,21 @@ def _vp_kernel(name, spark, df, exact=True):
             codes.withColumn("c_id", F.lit(0).cast("long")), qs, cents, books, df,
             n_probe=2, k=3, shortlist=10,
         ),
-        "semantic_dedup": lambda: sim.semantic_dedup(
-            df, centroid_filter=F.col("vec_id").isin(1, BIG_ID), exact_arrow=exact
-        ),
+        "semantic_dedup": lambda: (
+            semantic_dedup_fold if reference else sim.semantic_dedup
+        )(df, centroid_filter=F.col("vec_id").isin(1, BIG_ID)),
         "_signature_sweep": lambda: (
-            sim._signature_sweep(df, "vec_id", "embedding", 4, 8)
-            if exact
-            else df.select("vec_id", bucket_signature("embedding", 4, 8).alias("b"))
-        ),
+            _bucket_signature_sweep if reference else sim._signature_sweep
+        )(df, "vec_id", "embedding", 4, 8),
     }[name]().collect()
 
 
 #: each kernel's NULL-vector route: "raise" (a ValueError naming the
-#: operator), "expression" (the expression tier's answer — ranked last /
+#: operator), "expression" (the expression form's answer — ranked last /
 #: smallest c_id / all-zeros bucket) or "filtered" (dropped before seeding)
 _VP_NULL_ROUTE = {
     "cosine_topk": "expression",
     "assign_centroids_np": "raise",
-    "cosine_topk_np": "raise",
     "kmeans_parallel_init": "filtered",
     "pq_encode": "raise",
     "pq_topk": "raise",
@@ -459,7 +521,7 @@ def test_vector_path_ids_nulls_and_lengths(spark, name):
     else:
         for df in (clean, nulls):
             assert _sorted_rows(_vp_kernel(name, spark, df)) == _sorted_rows(
-                _vp_kernel(name, spark, df, exact=False)
+                _vp_kernel(name, spark, df, reference=True)
             )
 
     wrong = _vp_frame(spark, [(5, [1.0] * 4), (6, [1.0] * 12)])
@@ -494,8 +556,8 @@ def test_unit_normalizing_kernels_refuse_zero_vectors(spark):
     cases = {
         "pq_encode": lambda: sim.pq_encode(df, books),
         "ivfpq_index": lambda: sim.ivfpq_index(df, cents, books),
-        "cosine_topk_np": lambda: sim.cosine_topk_np(df, ok_q, k=2),
-        "cosine_topk_np query": lambda: sim.cosine_topk_np(df, zero_q, k=2),
+        "cosine_topk": lambda: sim.cosine_topk(df, ok_q, k=2),
+        "cosine_topk query": lambda: sim.cosine_topk(df, zero_q, k=2),
         "pq_topk query": lambda: sim.pq_topk(index, zero_q, books, k=2),
         "ivfpq_topk query": lambda: sim.ivfpq_topk(
             index, zero_q, cents, books, df, n_probe=2, k=2
@@ -564,9 +626,7 @@ def test_kmeans_train_matches_numpy_reference(spark):
 
     # trained centroids drop into the IVF index via the centroids override
     cents = kmeans_train(df, centroid_filter=F.col("vec_id") % 10 == 1, n_iters=2)
-    out = ivf_ann_topk(
-        df, df.limit(5), n_probe=2, k=3, centroids=cents, numpy_assign=True
-    ).collect()
+    out = ivf_ann_topk(df, df.limit(5), n_probe=2, k=3, centroids=cents).collect()
     assert len(out) > 0
     assert all(r.q_id != r.n_id for r in out)
 
@@ -1195,13 +1255,12 @@ def test_centered_assignment_space(spark):
         (r.q_id, r.rnk, r.n_id, r.sim) for r in cosine_topk(df, qs, k=4).collect()
     )
 
-    # (2) centered + exhaustive == brute, both tiers
-    for tier in (False, True):
-        got = ivf_ann_topk(
-            df, qs, n_probe=10**9, k=4, center=True, numpy_assign=tier,
-            centroid_filter=F.col("vec_id") % 40 == 1,
-        ).collect()
-        assert sorted((r.q_id, r.rnk, r.n_id, r.sim) for r in got) == exact, tier
+    # (2) centered + exhaustive == brute
+    got = ivf_ann_topk(
+        df, qs, n_probe=10**9, k=4, center=True,
+        centroid_filter=F.col("vec_id") % 40 == 1,
+    ).collect()
+    assert sorted((r.q_id, r.rnk, r.n_id, r.sim) for r in got) == exact
 
     # (3) composed IVF+PQ, centered coarse quantizer, exhaustive == brute
     mean = embedding_mean(df)
@@ -1422,12 +1481,8 @@ def test_ivf_prebuilt_index(spark):
     # raw space
     cents = kmeans_train(df, centroid_filter=F.col("vec_id") % 40 == 1, n_iters=2)
     idx = ivf_index(df, cents).localCheckpoint()
-    inline = ivf_ann_topk(
-        df, qs, n_probe=3, k=4, centroids=cents, numpy_assign=True
-    )
-    prebuilt = ivf_ann_topk(
-        df, qs, n_probe=3, k=4, centroids=cents, numpy_assign=True, index=idx
-    )
+    inline = ivf_ann_topk(df, qs, n_probe=3, k=4, centroids=cents)
+    prebuilt = ivf_ann_topk(df, qs, n_probe=3, k=4, centroids=cents, index=idx)
     assert rows(prebuilt) == rows(inline)
 
     # centered space (same center_vec threaded through build and query)
@@ -1440,12 +1495,10 @@ def test_ivf_prebuilt_index(spark):
     )
     idx_c = ivf_index(df, cents_c, center_vec=mean).localCheckpoint()
     inline_c = ivf_ann_topk(
-        df, qs, n_probe=3, k=4, centroids=cents_c, center_vec=mean,
-        numpy_assign=True,
+        df, qs, n_probe=3, k=4, centroids=cents_c, center_vec=mean
     )
     prebuilt_c = ivf_ann_topk(
-        df, qs, n_probe=3, k=4, centroids=cents_c, center_vec=mean,
-        numpy_assign=True, index=idx_c,
+        df, qs, n_probe=3, k=4, centroids=cents_c, center_vec=mean, index=idx_c
     )
     assert rows(prebuilt_c) == rows(inline_c)
 
@@ -1471,8 +1524,8 @@ def test_ivf_prebuilt_index(spark):
 def test_semantic_dedup_centered_assignment(spark):
     """semantic_dedup(center_vec=...): the verdict metric is untouched —
     an exact planted duplicate lands in its source's cluster (identical
-    vector → identical centered vector) and is dropped at raw sim 1.0 on
-    BOTH assignment tiers. (Cluster-balance lift on shared-component
+    vector → identical centered vector) and is dropped at raw sim 1.0.
+    (Cluster-balance lift on shared-component
     corpora is pinned in test_centered_assignment_space; the full centered
     pipeline is oracle-gated by x54.)"""
     import numpy as np
@@ -1491,24 +1544,22 @@ def test_semantic_dedup_centered_assignment(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     mean = [round(v, 6) for v in embedding_mean(df)]
 
-    for tier in (False, True):
-        out = {
-            r.vec_id: (r.cluster_id, r.keep)
-            for r in semantic_dedup(
-                df,
-                threshold=0.99,
-                centroid_filter=F.col("vec_id") % 30 == 1,
-                max_reps=256,
-                center_vec=mean,
-                numpy_assign=tier,
-            ).collect()
-        }
-        assert len(out) == n + 4
-        for i in range(4):
-            src, dup = out[i * 17], out[1000 + i]
-            # identical vector -> identical centered vector -> same cluster,
-            # and the higher-id copy is dropped at raw sim 1.0
-            assert dup[0] == src[0] and dup[1] is False, (tier, i)
+    out = {
+        r.vec_id: (r.cluster_id, r.keep)
+        for r in semantic_dedup(
+            df,
+            threshold=0.99,
+            centroid_filter=F.col("vec_id") % 30 == 1,
+            max_reps=256,
+            center_vec=mean,
+        ).collect()
+    }
+    assert len(out) == n + 4
+    for i in range(4):
+        src, dup = out[i * 17], out[1000 + i]
+        # identical vector -> identical centered vector -> same cluster,
+        # and the higher-id copy is dropped at raw sim 1.0
+        assert dup[0] == src[0] and dup[1] is False, i
 
 
 def test_parse_image_header_known_bytes():
@@ -2437,18 +2488,17 @@ def test_leakage_safe_splits_never_straddle_clusters(spark):
 
 def test_np_tier_collect_cap_raises_on_oversized_side(spark, embs):
     from crypto_market_data_etl_spark.operators import similarity as sim
-    from crypto_market_data_etl_spark.operators.similarity import cosine_topk_np
 
     qs = embs.limit(8)
     orig = sim.NP_TIER_MAX_COLLECT
     sim.NP_TIER_MAX_COLLECT = 4  # force the miswired-caller path
     try:
         with pytest.raises(ValueError, match="driver-collect cap"):
-            cosine_topk_np(embs, qs, k=2)
+            cosine_topk(embs, qs, k=2)
     finally:
         sim.NP_TIER_MAX_COLLECT = orig
-    # under the cap the tier works unchanged
-    assert cosine_topk_np(embs, qs.limit(2), k=2).count() > 0
+    # under the cap the operator works unchanged
+    assert cosine_topk(embs, qs.limit(2), k=2).count() > 0
 
 
 def test_simhash_pairs_rejects_bits_over_63(spark):
@@ -3231,15 +3281,19 @@ def test_ivf_index_multi_assignment_dedup(spark):
 
 def test_zero_norm_centroid_is_floored(spark):
     """A zero-norm centroid row must rank at sim 0 deterministically in
-    every assignment tier — probe_cells_expr (stream gate), nearest_cells
-    (expression tier via ivf_ann_topk), assign_centroids_np (numpy tier) —
-    not poison the ordering with Inf/NaN. All three tiers must agree."""
+    every centroid assignment — probe_cells_expr (stream gate),
+    nearest_cells (ivf_ann_topk's query probes), assign_centroids_np, and
+    the coarse quantizers of coarse_residuals, ivfpq_index and ivfpq_topk
+    — not poison the ordering with Inf/NaN. All of them must agree."""
     import numpy as np
 
     from crypto_market_data_etl_spark.operators.similarity import (
         _collect_small_side,
         assign_centroids_np,
+        coarse_residuals,
         ivf_ann_topk,
+        ivfpq_index,
+        ivfpq_topk,
         probe_cells_expr,
     )
 
@@ -3284,11 +3338,51 @@ def test_zero_norm_centroid_is_floored(spark):
         assert top1_np[i] == exp[0]
         assert not any(np.isnan(c) or c < 0 for c in probe[i])
 
-    # expression tier end-to-end: nearest_cells must not NaN-corrupt ranks
+    # end-to-end: nearest_cells must not NaN-corrupt ranks
     qs = df.filter("vec_id = 0").select(
         (F.col("vec_id") + 100).alias("vec_id"), "embedding"
     )
-    out = ivf_ann_topk(
-        df, qs, n_probe=3, k=2, centroids=cents, numpy_assign=False
-    ).collect()
+    out = ivf_ann_topk(df, qs, n_probe=3, k=2, centroids=cents).collect()
     assert len(out) == 2 and out[0].sim is not None
+
+    # the IVF-PQ coarse quantizers, on unit-scale centroids (the residual
+    # scale contract; same directions, so the same expected ranks)
+    unit = {c: np.asarray(v) / max(np.linalg.norm(v), 1e-12) for c, v in cvecs.items()}
+    cents_u = spark.createDataFrame(
+        [(c, [float(x) for x in v]) for c, v in unit.items()],
+        "c_id long, c_vec array<double>",
+    )
+    books = spark.createDataFrame(
+        [(b, c, [float(c)]) for b in range(dim) for c in range(2)],
+        "block int, c_id int, c_vec array<double>",
+    )
+    top1 = {i: expected(X[i])[0] for i in range(6)}
+    got = {r.vec_id: r.c_id for r in ivfpq_index(df, cents_u, books).collect()}
+    assert got == top1
+    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
+    for r in coarse_residuals(df, cents_u).collect():
+        assert np.allclose(r.resid, Xn[r.vec_id] - unit[top1[r.vec_id]]), r.vec_id
+    # ivfpq_topk's probe: one marker row per cell, so the only candidate a
+    # 1-probe query returns names the cell it probed. Query 6 points away
+    # from both real centroids, so its best cell is the zero one (sim 0).
+    away = -(unit[0] + unit[1])
+    q6 = spark.createDataFrame(
+        [(6, [float(v) for v in away])], "vec_id long, embedding array<double>"
+    )
+    top1[6] = expected(away)[0]
+    assert top1[6] == 2
+    marker = spark.createDataFrame(
+        [(1000 + c, c, [0] * dim) for c in cvecs],
+        "vec_id long, c_id long, codes array<int>",
+    )
+    marker_vecs = spark.createDataFrame(
+        [(1000 + c, [1.0] * dim) for c in cvecs], "vec_id long, embedding array<double>"
+    )
+    probed = {
+        r.q_id: r.n_id - 1000
+        for r in ivfpq_topk(
+            marker, df.unionByName(q6), cents_u, books, marker_vecs,
+            n_probe=1, k=1, shortlist=10,
+        ).collect()
+    }
+    assert probed == top1

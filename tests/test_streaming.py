@@ -1711,7 +1711,7 @@ def test_ivfpq_warm_retrain_equals_cold_and_recovers_drift(spark):
     from crypto_market_data_etl_spark.operators.similarity import (
         ann_recall,
         coarse_residuals,
-        cosine_topk_np,
+        cosine_topk,
         ivfpq_index,
         ivfpq_topk,
         kmeans_train,
@@ -1777,7 +1777,7 @@ def test_ivfpq_warm_retrain_equals_cold_and_recovers_drift(spark):
         )
     ]
     queries = spark.createDataFrame(q_rows, "vec_id long, embedding array<double>")
-    exact = cosine_topk_np(merged, queries, k=5).localCheckpoint()
+    exact = cosine_topk(merged, queries, k=5).localCheckpoint()
 
     def recall(idx, cents, books):
         approx = ivfpq_topk(

@@ -363,12 +363,13 @@ def main() -> None:
     ann["ab_bow_residual_400k"] = {
         "inherited": "unchanged code path — see SCALE_r10.json "
         "ab_bow_residual_400k (residual codes +1-2 recall pts at equal "
-        "config; tools/ab_bow_residual.py re-runs it on demand)"
+        "config; the one-off A/B tool that measured it is in git history)"
     }
     ann["ab_kmpp_seeding_400k"] = {
         "inherited": "unchanged code path — see SCALE_r10.json "
         "ab_kmpp_seeding_400k (recall wash on uniform-mass BoW, cell "
-        "balance p99 -16%; tools/ab_kmpp_seeding.py re-runs it on demand)"
+        "balance p99 -16%; the one-off A/B tool that measured it is in "
+        "git history)"
     }
     ann["ivfpq_400k"] = {
         "inherited": "unchanged code path — see SCALE_r10.json ivfpq_400k "

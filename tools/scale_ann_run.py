@@ -27,7 +27,6 @@ from pyspark.sql import functions as F  # noqa: E402
 from crypto_market_data_etl_spark.operators.similarity import (  # noqa: E402
     ann_recall,
     cosine_topk,
-    cosine_topk_np,
     ivf_ann_topk,
     lsh_ann_bandor,
 )
@@ -213,12 +212,15 @@ def main() -> None:
     planted = exact.filter((F.col("rnk") == 1) & planted_pred).count()
     print(json.dumps({"job": "ann_planted_top1", "hit": planted, "of": args.queries}), flush=True)
 
+    # the "_np" tier names are the retired BLAS arms (brute top-k and
+    # signatures); kept so committed SCALE_r0x rows stay comparable.
+    # cosine_topk and ivf_index still do their n x k products in BLAS (it
+    # picks the candidates the exact replay then scores), and the brute
+    # tier matched the retired arm's wall at 1.6M x 200 queries; band-OR
+    # signatures now come from the bit-exact sweep.
     tiers = [
-        ("ann_brute_np", lambda: cosine_topk_np(corpus, queries, k=args.k)),
+        ("ann_brute_np", lambda: cosine_topk(corpus, queries, k=args.k)),
         (
-            # "_np" names the retired BLAS signature arm; kept so committed
-            # SCALE_r0x rows stay comparable (signatures now come from the
-            # bit-exact sweep)
             "ann_bandor_3x8_np",
             lambda: lsh_ann_bandor(
                 corpus,
@@ -237,7 +239,6 @@ def main() -> None:
                 n_probe=4,
                 k=args.k,
                 centroid_filter=F.col("vec_id") % 400 == 1,
-                numpy_assign=True,
             ),
         ),
     ]
@@ -418,7 +419,7 @@ def _sweep(spark, corpus, queries, args) -> None:
     seed_filter = F.col("vec_id") % seed_mod == 1
 
     t0 = time.time()
-    exact = cosine_topk_np(corpus, queries, k=args.k).localCheckpoint()
+    exact = cosine_topk(corpus, queries, k=args.k).localCheckpoint()
     n_exact = exact.count()
     brute_cold = round(time.time() - t0, 2)
     planted_pred = F.col("n_id") == F.col("q_id") - args.vectors
@@ -440,7 +441,7 @@ def _sweep(spark, corpus, queries, args) -> None:
 
     def brute_once() -> float:
         t0 = time.time()
-        cosine_topk_np(corpus, queries, k=args.k).localCheckpoint().count()
+        cosine_topk(corpus, queries, k=args.k).localCheckpoint().count()
         return round(time.time() - t0, 2)
 
     configs: list[tuple[str, object]] = []
@@ -463,7 +464,6 @@ def _sweep(spark, corpus, queries, args) -> None:
                     lambda p=n_probe: ivf_ann_topk(
                         corpus, queries, n_probe=p, k=args.k,
                         centroid_filter=seed_filter,
-                        numpy_assign=True,
                     ),
                 )
             )
@@ -491,7 +491,7 @@ def _sweep(spark, corpus, queries, args) -> None:
                     f"ivf_km4_{n_cells}c_probe{n_probe}",
                     lambda p=n_probe: ivf_ann_topk(
                         corpus, queries, n_probe=p, k=args.k,
-                        centroids=trained, numpy_assign=True,
+                        centroids=trained,
                     ),
                 )
             )
@@ -532,7 +532,6 @@ def _sweep(spark, corpus, queries, args) -> None:
                         lambda p=n_probe: ivf_ann_topk(
                             corpus, queries, n_probe=p, k=args.k,
                             centroids=trained_cen, center_vec=bow_mean,
-                            numpy_assign=True,
                         ),
                     )
                 )

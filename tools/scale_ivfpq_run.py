@@ -41,7 +41,7 @@ from scale_ann_run import DIM, _vec  # noqa: E402
 
 from crypto_market_data_etl_spark.operators.similarity import (  # noqa: E402
     ann_recall,
-    cosine_topk_np,
+    cosine_topk,
     ivfpq_index,
     ivfpq_topk,
     kmeans_train,
@@ -86,7 +86,7 @@ def main() -> None:
     queries.count()
 
     t0 = time.time()
-    exact = cosine_topk_np(corpus, queries, k=args.k).localCheckpoint()
+    exact = cosine_topk(corpus, queries, k=args.k).localCheckpoint()
     exact.count()
     brute_wall = time.time() - t0
     planted_pred = F.col("n_id") == F.col("q_id") - args.vectors

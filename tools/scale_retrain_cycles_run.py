@@ -31,7 +31,7 @@ end-to-end).
 
 Recall protocol: planted near-dup queries per regime (base + each
 cycle's drift), exact reference recomputed over the merged corpus at
-every cycle boundary (``cosine_topk_np``), recall@k per regime per
+every cycle boundary (``cosine_topk``), recall@k per regime per
 cycle. Deterministic fixtures (hash-derived vectors) — recalls
 reproduce bit-for-bit; walls are one-shot build costs.
 
@@ -56,7 +56,7 @@ from crypto_market_data_etl_spark.operators.similarity import (  # noqa: E402
     PQ_TRAIN_PROBE_CAP,
     ann_recall,
     coarse_residuals,
-    cosine_topk_np,
+    cosine_topk,
     ivfpq_index,
     ivfpq_topk,
     kmeans_train,
@@ -170,7 +170,7 @@ def main() -> None:
         nq = queries.count()
 
         t0 = time.time()
-        exact = cosine_topk_np(merged, queries, k=args.k).localCheckpoint()
+        exact = cosine_topk(merged, queries, k=args.k).localCheckpoint()
         exact.count()
         _emit(f"brute_exact_c{cycle}", sec=round(time.time() - t0, 2),
               queries=nq, corpus=n_merged)
@@ -268,7 +268,7 @@ def main() -> None:
           cells=cents_c.count(), corpus=n_merged, lloyd_iters=3)
 
     queries = all_queries.localCheckpoint()
-    exact = cosine_topk_np(merged, queries, k=args.k).localCheckpoint()
+    exact = cosine_topk(merged, queries, k=args.k).localCheckpoint()
     exact.count()
     for probe in (int(p) for p in args.probes.split(",")):
         t0 = time.time()

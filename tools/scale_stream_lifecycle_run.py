@@ -71,7 +71,7 @@ from crypto_market_data_etl_spark.operators.similarity import (  # noqa: E402
     PQ_TRAIN_PROBE_CAP,
     ann_recall,
     coarse_residuals,
-    cosine_topk_np,
+    cosine_topk,
     ivfpq_index,
     ivfpq_topk,
     kmeans_train,
@@ -195,7 +195,7 @@ def main() -> None:
         """One serving sample: exact reference over the CURRENT corpus,
         then the approximate query through the given artifacts."""
         t0 = time.time()
-        exact = cosine_topk_np(corpus_now, queries, k=args.k).localCheckpoint()
+        exact = cosine_topk(corpus_now, queries, k=args.k).localCheckpoint()
         exact.count()
         approx = ivfpq_topk(
             idx_df, queries, c, b, corpus_now,

@@ -15,7 +15,7 @@ drift-regime recall separately: decay must show on drift queries while
 the base regime stays intact.
 
 Everything recall-side is deterministic (hash-derived vectors, exact
-reference via ``cosine_topk_np``); walls are one-shot build costs, same
+reference via ``cosine_topk``); walls are one-shot build costs, same
 protocol as the committed index_build rows in SCALE_r10/r11.
 
 Prints one JSON line per job. Usage:
@@ -41,7 +41,7 @@ from crypto_market_data_etl_spark.operators.similarity import (  # noqa: E402
     PQ_TRAIN_PROBE_CAP,
     ann_recall,
     coarse_residuals,
-    cosine_topk_np,
+    cosine_topk,
     ivfpq_index,
     ivfpq_topk,
     kmeans_train,
@@ -224,7 +224,7 @@ def main() -> None:
     nq = queries.count()
 
     t0 = time.time()
-    exact = cosine_topk_np(merged, queries, k=args.k).localCheckpoint()
+    exact = cosine_topk(merged, queries, k=args.k).localCheckpoint()
     exact.count()
     _emit("brute_exact_reference", sec=round(time.time() - t0, 2), queries=nq)
     is_drift_q = F.col("q_id") >= 20_000_000
