@@ -1,13 +1,13 @@
-"""Capture .explain('formatted') for queries into plans/r16/.
+"""Write .explain('formatted') for queries into an output dir, one
+``<query>.txt`` each.
 
-Unlike r15_plans.py, this also captures the INPUT subplan of every
-materialize() call made while building each query (via
-SPARK_GRAFT_PLAN_CAPTURE_DIR — see materialize._capture_plan): a
-localCheckpoint truncates lineage, so the top-level explain alone shows
-`Scan ExistingRDD` where the expensive subtree used to be (VERDICT r15
-"what's wrong #1" — the x02/x21/x38 in-row signature stage was invisible).
+Each file also carries the INPUT subplan of every materialize() call made
+while building the query (via SPARK_GRAFT_PLAN_CAPTURE_DIR — see
+materialize._capture_plan): a localCheckpoint truncates lineage, so the
+top-level explain alone shows `Scan ExistingRDD` where the expensive subtree
+used to be (e.g. the x02/x21/x38 in-row signature stage).
 
-Usage: python tools/r16_plans.py before|after [query ...]
+Usage: python tools/plan_dump.py OUTDIR [query ...]
 """
 
 from __future__ import annotations
@@ -24,21 +24,19 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
-    tag = sys.argv[1]
+    outdir = sys.argv[1]
     from crypto_market_data_etl_spark.session import get_spark
 
-    spark = get_spark(app_name=f"r16_plans_{tag}")
+    spark = get_spark(app_name="plan_dump")
     from crypto_market_data_etl_spark import plans
 
     qs = plans.all_queries()
     qs.update(plans.variant_queries())
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    outdir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                          "plans", "r16")
     os.makedirs(outdir, exist_ok=True)
     for name in names:
-        cap = tempfile.mkdtemp(prefix=f"r16_plan_cap_{name}_")
+        cap = tempfile.mkdtemp(prefix=f"plan_cap_{name}_")
         os.environ["SPARK_GRAFT_PLAN_CAPTURE_DIR"] = cap
         try:
             df = qs[name](spark, sf_dir)
@@ -56,9 +54,10 @@ def main() -> None:
                 )
         shutil.rmtree(cap, ignore_errors=True)
         text = "".join(parts)
-        with open(os.path.join(outdir, f"{name}_{tag}.txt"), "w") as fh:
+        path = os.path.join(outdir, f"{name}.txt")
+        with open(path, "w") as fh:
             fh.write(text)
-        print(f"wrote {name}_{tag}.txt ({len(text)} chars)")
+        print(f"wrote {path} ({len(text)} chars)")
     spark.stop()
 
 

@@ -374,7 +374,8 @@ def main() -> None:
     ann["ivfpq_400k"] = {
         "inherited": "unchanged code path — see SCALE_r10.json ivfpq_400k "
         "(probe4+rerank400 bit-identical to the full-scan PQ point at a "
-        "fraction of the wall; tools/scale_ivfpq_run.py re-runs it)"
+        "fraction of the wall; the one-off rung tool that measured it is "
+        "in git history)"
     }
     artifact["ann"] = ann
 
