@@ -10,12 +10,15 @@ each docstring). Two physical forms exist in the module:
   and :func:`lsh_ann_topk`'s signatures, where it measured faster.
 - **Arrow form** (``mapInArrow`` + numpy): ~100x more dot throughput; one
   matrix x matrix product per Arrow batch is the right physical design for
-  corpus-scale n x k assignment and scoring. The sweeps
-  (:func:`_sweep_cross`, :func:`_sweep_rows`) replay the fold's FP
-  sequence bit-exactly and back the oracle-checked operators: where BLAS
-  does the n x k product (:func:`cosine_topk`, :func:`ivf_index`) it only
-  picks candidates within two rounding quanta of the cut, and the sweep
-  recomputes those exactly. The kernels with no oracle
+  corpus-scale n x k assignment and scoring. :func:`_sweep_rows` replays
+  the fold's FP sequence bit-exactly and backs the oracle-checked
+  operators: BLAS does their n x k product but only picks candidates
+  within two rounding quanta of the cut, and the sweep recomputes those
+  exactly — in :func:`cosine_topk`, and in :func:`_assign_cells`, the one
+  kernel of the IVF cell rule, shared by :func:`ivf_index`,
+  :func:`ivf_ann_topk`'s query probes and :func:`semantic_dedup`'s
+  clustering. The all-pairs :func:`_sweep_cross` backs only
+  :func:`_signature_sweep`'s sign decisions. The kernels with no oracle
   (:func:`assign_centroids_np`, the PQ family) use BLAS as is.
 
 Every vector kernel crosses the JVM/numpy boundary the same way: workers
@@ -66,6 +69,10 @@ def _dot(a, b):
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
+
+
+#: Decimal places of every rounded cosine, mean and normalized cell here.
+_ROUND_DP = 6
 
 
 def _once(expr, fn):
@@ -234,7 +241,7 @@ def cosine_topk(
     # a pair whose cosine is a full 6dp quantum below the batch's k-th best
     # rounds strictly below k others and cannot rank; two quanta also
     # cover BLAS's last-bit drift
-    cand_margin = 2e-6
+    cand_margin = 2 * 10.0**-_ROUND_DP
     c = corpus.select(
         F.col(id_col).alias("n_id"),
         F.col(vec_col).cast("array<double>").alias("c_vec"),
@@ -314,7 +321,7 @@ def cosine_topk(
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
     return (
         c.mapInArrow(_topk_batches, schema=cand_schema)
-        .withColumn("sim", F.round(F.col("__raw"), 6))
+        .withColumn("sim", F.round(F.col("__raw"), _ROUND_DP))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("q_id", "n_id", "rnk", "sim")
@@ -528,7 +535,7 @@ def lsh_ann_topk(
     return (
         a.join(b, "bucket")
         .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("sim", F.round(sim, 6))
+        .withColumn("sim", F.round(sim, _ROUND_DP))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("q_id", "n_id", "rnk", "sim")
@@ -575,7 +582,7 @@ def _rerank_candidates(
     w = Window.partitionBy("q_id").orderBy(F.col("sim").desc(), F.col("n_id"))
     sim = _dot(F.col("q_vec"), F.col("c_vec")) / (F.col("__qn") * F.col("__cn"))
     return (
-        joined.withColumn("sim", F.round(sim, 6))
+        joined.withColumn("sim", F.round(sim, _ROUND_DP))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("q_id", "n_id", "rnk", "sim")
@@ -841,7 +848,7 @@ def embedding_neardup_pairs(
         )
         joined = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
     return (
-        joined.withColumn("sim", F.round(sim, 6))
+        joined.withColumn("sim", F.round(sim, _ROUND_DP))
         .filter(F.col("sim") >= threshold)
         .select("id_a", "id_b", "sim")
         .distinct()
@@ -860,19 +867,25 @@ def ivf_index(
     each corpus vector tagged with its nearest centroid by the IVF cell
     rule (6dp-rounded cosine in assignment space, both norms floored at
     1e-12, ties to the lowest ``c_id``) — the rule :func:`ivf_ann_topk`'s
-    query probes and :func:`probe_cells_expr` apply, so a vector and its
-    exact duplicate always meet in one cell. ``center_vec`` moves the
-    assignment into centered space; vectors are stored raw.
+    query probes, :func:`semantic_dedup`'s clustering and
+    :func:`probe_cells_expr` apply, so a vector and its exact duplicate
+    always meet in one cell. ``center_vec`` moves the assignment into
+    centered space; vectors are stored raw. ``c_id`` keeps the centroid
+    table's own type.
 
-    Physical form: one ``mapInArrow`` pass. A BLAS matmul per Arrow batch
-    only PRE-FILTERS the cells (every cell within two rounding quanta of
-    the row's ``assign_r``-th best: BLAS drifts in the last bits, far below
-    a quantum); the candidates' cosines are then recomputed with the
-    bit-exact fold replay (:func:`_sweep_rows`), and the rounding and the
-    pick run in Spark's own ``round`` and ``sort_array`` — so the cells
+    Physical form: one ``mapInArrow`` pass (:func:`_assign_cells`, the
+    one batch implementation of the cell rule). A BLAS matmul per Arrow
+    batch only PRE-FILTERS the cells (every cell within two rounding
+    quanta of the row's ``assign_r``-th best: BLAS drifts in the last bits,
+    far below a quantum); the candidates' cosines are then recomputed with
+    the bit-exact fold replay (:func:`_sweep_rows`), and the rounding and
+    the pick run in Spark's own ``round`` and ``sort_array`` — so the cells
     equal the expression rule's bit for bit (pytest-asserted on a 6dp
-    near-tie), at BLAS cost plus a few candidate dots per row. A NULL or
-    wrong-length vector raises.
+    near-tie), at BLAS cost plus a few candidate dots per row. NULLs take
+    the rule's own route: a NULL vector scores NULL against every cell, so
+    it is filed into the first ``assign_r`` cells in ``c_id`` order, and a
+    NULL-vector centroid scores NULL, so it never beats a non-NULL cosine.
+    A wrong-length vector raises.
 
     This is the build/query split the raw-vector tier was missing (the
     PQ tier always had it via :func:`ivfpq_index`): persist this table
@@ -887,65 +900,87 @@ def ivf_index(
     r× index size). Pass ``dedup_candidates=True`` to
     :func:`ivf_ann_topk` when querying such an index: a neighbor probed
     through two of its cells must be ranked once, not twice."""
+    side = df.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
+    cells = _collect_cells(centroids, "ivf_index")
+    return _assign_cells(side, cells, center_vec, max(1, assign_r), "ivf_index")
+
+
+def _assign_cells(side, cells, center_vec, r, what):
+    """An ``(id, vector)`` ``side`` with a ``c_id`` column appended,
+    exploded over each row's ``r`` nearest of the collected ``cells``
+    (:func:`_collect_cells`, ``r`` clamped to their count) by the IVF cell
+    rule — :func:`ivf_index`'s docstring has the rule, its NULL route and
+    the physical form. ``what`` names the operator in the errors."""
     import numpy as np
     import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    c_ids, C = _collect_centroids(centroids.select("c_id", "c_vec"), "ivf_index")
+    c_ids, live, C = cells
+    r = min(r, len(c_ids))
     c_norm = np.maximum(np.sqrt(_sweep_rows(C, C)), 1e-12)  # the fold's norm
-    r = min(max(1, assign_r), len(c_ids))
+    c_row = np.cumsum(live) - 1  # a live cell's row of C
     mean = None if center_vec is None else np.asarray(center_vec, dtype=np.float64)
-    side = df.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
     cand = T.StructType(
         [
             T.StructField("raw", T.DoubleType()),
             T.StructField("cj", T.LongType()),
-            T.StructField("c_id", T.LongType()),
+            T.StructField("c_id", from_arrow_type(c_ids.type)),
         ]
     )
-    schema = T.StructType(
-        list(side.schema.fields) + [T.StructField("__cand", T.ArrayType(cand))]
-    )
+    cands = T.StructField("__cand", T.ArrayType(cand))
+    schema = T.StructType(side.schema.fields + [cands])
 
     def batches(it):
         for batch in it:
             if batch.num_rows == 0:
                 continue
-            _, V = _vector_matrix(batch.column(1), "ivf_index", C.shape[1])
-            if mean is not None:
-                V = V - mean  # the centering zip_with, op for op
-            vn = np.maximum(np.sqrt(_sweep_rows(V, V)), 1e-12)
-            S = (V @ C.T) / np.multiply.outer(vn, c_norm)
+            col = batch.column(1)
+            valid = np.asarray(col.is_valid())
+            v_row = np.cumsum(valid) - 1
+            # a NULL vector on either side scores NULL: -inf to the pre-filter
+            # (kept if it can reach the top r), NULL to the pick (last, by c_id)
+            S = np.full((batch.num_rows, len(c_ids)), -np.inf)
+            if valid.any() and live.any():
+                _, V = _vector_matrix(col, what, C.shape[1], allow_null=True)
+                if mean is not None:
+                    V = V - mean  # the centering zip_with, op for op
+                vn = np.maximum(np.sqrt(_sweep_rows(V, V)), 1e-12)
+                S[np.ix_(valid, live)] = (V @ C.T) / np.multiply.outer(vn, c_norm)
             kth = -np.partition(-S, r - 1, axis=1)[:, r - 1 : r]
             # NaN sims (NaN data) stay candidates: Spark orders NaN largest
-            keep = (S >= kth - 2e-6) | np.isnan(S)
+            keep = (S >= kth - 2 * 10.0**-_ROUND_DP) | np.isnan(S)
             ri, cj = np.nonzero(keep)  # row-major: each row's cells contiguous
-            raw = _sweep_rows(V[ri], C[cj]) / (vn[ri] * c_norm[cj])
+            swept = valid[ri] & live[cj]
+            raw = np.zeros(len(ri))
+            if swept.any():
+                vr, cr = v_row[ri[swept]], c_row[cj[swept]]
+                raw[swept] = _sweep_rows(V[vr], C[cr]) / (vn[vr] * c_norm[cr])
             offsets = np.concatenate([[0], np.cumsum(keep.sum(axis=1))])
-            cells = pa.StructArray.from_arrays(
-                [pa.array(raw), pa.array(cj), pa.array(c_ids[cj])],
+            cand_arr = pa.StructArray.from_arrays(
+                [pa.array(raw, mask=~swept), pa.array(cj), c_ids.take(pa.array(cj))],
                 names=["raw", "cj", "c_id"],
             )
             yield batch.append_column(
                 "__cand",
-                pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), cells),
+                pa.ListArray.from_arrays(pa.array(offsets, pa.int32()), cand_arr),
             )
 
-    # best first by (rounded sim desc, c_id asc): the key struct carries
-    # -cj, the centroid's position in the c_id-ordered table
+    # best first by (rounded sim desc — NULL last, c_id asc): the key struct
+    # carries -cj, the centroid's position in the c_id-ordered table
     ranked = F.sort_array(
         F.transform(
             "__cand",
             lambda c: F.struct(
-                F.round(c["raw"], 6).alias("r"), (-c["cj"]).alias("nc"), c["c_id"]
+                F.round(c["raw"], _ROUND_DP).alias("r"), (-c["cj"]).alias("nc"), c["c_id"]
             ),
         ),
         asc=False,
     )
     return (
         side.mapInArrow(batches, schema=schema)
-        .select("n_id", "n_vec", F.explode(F.slice(ranked, 1, r)).alias("__c"))
-        .select("n_id", "n_vec", F.col("__c.c_id").alias("c_id"))
+        .select(*side.columns, F.explode(F.slice(ranked, 1, r)).alias("__c"))
+        .select(*side.columns, F.col("__c.c_id").alias("c_id"))
     )
 
 
@@ -970,11 +1005,14 @@ def ivf_ann_topk(
     ``(c_id, n_id, n_vec)`` table. Query: probe the ``n_probe`` nearest
     cells and rerank exactly within them. Corpus and probes share one cell
     rule (6dp-rounded cosine, ties to the lowest ``c_id`` — the rule
-    :func:`probe_cells_expr` shares), so the result is oracle-exact at any
+    :func:`probe_cells_expr` shares) and one kernel (:func:`_assign_cells`
+    on one centroid collect per call), so the result is oracle-exact at any
     ``n_probe``. Without ``index=`` the call builds that index inline and
     then runs exactly the prebuilt-index path: inline means
-    :func:`ivf_index` plus probes. A NULL corpus vector raises (the
-    :func:`ivf_index` contract) rather than being filed into some cell.
+    :func:`ivf_index` plus probes. A NULL vector takes the rule's NULL
+    route: a NULL corpus vector is filed into the first cell in ``c_id``
+    order (with a NULL sim it ranks last, as in :func:`cosine_topk`), and
+    a NULL query vector probes the first ``n_probe`` cells.
 
     Centroids here are a deterministic sample of the corpus
     (``centroid_filter``, default ``id % 50 == 1``) so the whole pipeline is
@@ -1086,40 +1124,20 @@ def ivf_ann_topk(
     # explicit (c_id, c_vec) centroid table (e.g. kmeans_train output, in
     # assignment space) overrides the sampled-from-corpus default (raw
     # corpus rows — centered here when the assignment space is centered)
-    cent_src = (
-        centroids.select("c_id", "c_vec")
-        if centroids is not None
-        else df.filter(centroid_filter).select(
+    if centroids is None:
+        centroids = df.filter(centroid_filter).select(
             F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
         )
-    )
-    if mean is not None and centroids is None:
-        cent_src = center_embeddings(cent_src, mean, "c_vec")
-    cents = F.broadcast(cent_src)
-    if index is None:
-        index = ivf_index(df, cent_src, id_col, vec_col, center_vec=mean)
-
-    def nearest_cells(side: DataFrame, sid: str, svec: str, n: int) -> DataFrame:
-        av = F.col(svec)  # assignment-space vector; scoring stays on svec
         if mean is not None:
-            m_lit = F.array(*[F.lit(float(x)) for x in mean])
-            av = F.zip_with(av, m_lit, lambda x, y: x - y)
-        sim = _dot(av, F.col("c_vec")) / (
-            F.greatest(F.sqrt(_dot(av, av)), F.lit(1e-12))
-            * F.greatest(F.sqrt(_dot(F.col("c_vec"), F.col("c_vec"))), F.lit(1e-12))
-        )
-        w = Window.partitionBy(sid).orderBy(F.col("c_sim").desc(), F.col("c_id"))
-        return (
-            side.crossJoin(cents)
-            .withColumn("c_sim", F.round(sim, 6))
-            .withColumn("c_rnk", F.row_number().over(w))
-            .filter(F.col("c_rnk") <= n)
-            .drop("c_vec", "c_sim", "c_rnk")
-        )
-
+            centroids = center_embeddings(centroids, mean, "c_vec")
+    # one centroid collect for the corpus (inline index) and the probes
+    cells = _collect_cells(centroids, "ivf_ann_topk")
+    if index is None:
+        corpus = df.select(F.col(id_col).alias("n_id"), F.col(vec_col).alias("n_vec"))
+        index = _assign_cells(corpus, cells, mean, 1, "ivf_index")
     query_side = queries.select(F.col(id_col).alias("q_id"), F.col(vec_col).alias("q_vec"))
     inv = index.select("c_id", "n_id", "n_vec")
-    probes = nearest_cells(query_side, "q_id", "q_vec", n_probe)
+    probes = _assign_cells(query_side, cells, mean, n_probe, "ivf_ann_topk")
     sim = _dot(F.col("q_vec"), F.col("n_vec")) / (
         F.sqrt(_dot(F.col("q_vec"), F.col("q_vec")))
         * F.sqrt(_dot(F.col("n_vec"), F.col("n_vec")))
@@ -1128,7 +1146,7 @@ def ivf_ann_topk(
     probed = (
         probes.join(inv, "c_id")
         .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("sim", F.round(sim, 6))
+        .withColumn("sim", F.round(sim, _ROUND_DP))
         .select("q_id", "n_id", "sim")
     )
     if dedup_candidates:
@@ -1223,17 +1241,34 @@ def _collect_vectors(df, id_col, vec_col, what, dim=None):
     return ids.to_numpy(zero_copy_only=False), M
 
 
+def _collect_cells(centroids: DataFrame, what: str):
+    """``(c_ids, live, C)`` of a ``(c_id, c_vec)`` table in ``c_id`` order,
+    collected through :func:`_collect_small_side`: the ids as their native
+    Arrow array, the non-NULL-vector mask, and those vectors as a matrix.
+    An empty table raises: every row needs a cell, and a keep-filter
+    caller of :func:`semantic_dedup` would otherwise silently drop the
+    whole corpus instead of learning its filter matched nothing."""
+    cents = centroids.select("c_id", "c_vec").orderBy("c_id")
+    tbl = _collect_small_side(cents, f"{what} centroid", arrow=True)
+    c_ids, c_vec = (c.combine_chunks() for c in tbl.columns)
+    if not len(c_ids):
+        raise ValueError(
+            f"{what}: the centroid table has no rows — pass a centroid_filter "
+            "that matches this corpus's ids, or a non-empty centroid table"
+        )
+    live, C = _vector_matrix(c_vec, f"{what} centroid", allow_null=True)
+    return c_ids, live, C
+
+
 def _collect_centroids(centroids: DataFrame, what: str):
-    """``(int64 c_ids, C)`` of a ``(c_id, c_vec)`` table in ``c_id`` order;
-    an empty table raises."""
+    """:func:`_collect_cells` as ``(int64 c_ids, C)``, for the kernels with
+    no NULL route: a NULL id or vector raises."""
     import numpy as np
 
-    c_ids, C = _collect_vectors(
-        centroids.orderBy("c_id"), "c_id", "c_vec", f"{what} centroid"
-    )
-    if not len(c_ids):
-        raise ValueError(f"{what}: the centroid table is empty")
-    return np.asarray(c_ids, dtype=np.int64), C
+    c_ids, live, C = _collect_cells(centroids, what)
+    if c_ids.null_count or not live.all():
+        raise ValueError(f"{what} centroid: NULL id or vector on the collected side")
+    return np.asarray(c_ids.to_numpy(zero_copy_only=False), dtype=np.int64), C
 
 
 def _unit_rows(X, what: str | None = None):
@@ -1372,7 +1407,6 @@ def kmeans_step(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     centroid_filter=None,
-    round_dp: int = 6,
 ) -> DataFrame:
     """One Lloyd (k-means) iteration as pure DataFrame ops — the centroid
     refinement the IVF index (:func:`ivf_ann_topk`) notes production uses
@@ -1386,14 +1420,17 @@ def kmeans_step(
     per-(cluster, dimension) mean via posexplode + groupBy — row-form
     output ``(cluster_id, pos, mean_val, n_members)`` (1-based ``pos``), so
     the gate hashes scalars, not arrays; ``F.array_agg`` the rows back when
-    feeding the next iteration. Sims and means are rounded to ``round_dp``
+    feeding the next iteration. Sims and means are rounded to 6dp
     (order-dependent float sums — the engine-divergence rule; same
     treatment as the gated cosine top-k). Empty clusters vanish from the
     output (standard Lloyd: respawn or drop is caller policy).
 
-    At corpus scale the assignment is exactly ``assign_centroids_np``'s
-    Arrow+BLAS tier (measured 35x); this expression form is the
-    oracle-checkable twin with identical semantics.
+    At corpus scale the assignment is ``assign_centroids_np``'s Arrow+BLAS
+    tier (measured 35x), which is NOT this rule: it takes the unrounded
+    BLAS argmax over norms floored at 1e-12, this form the 6dp-rounded fold
+    over unfloored norms. They disagree on 6dp near-ties (in
+    ``test_ivf_matches_fold_reference``'s fixture BLAS picks cell 2 and the
+    rule cell 1); this form is the oracle-checkable one.
     """
     if centroid_filter is None:
         centroid_filter = F.col(id_col) % 50 == 1
@@ -1409,7 +1446,7 @@ def kmeans_step(
             F.sqrt(_dot(F.col("ev"), F.col("ev")))
             * F.sqrt(_dot(F.col("cv"), F.col("cv")))
         ),
-        round_dp,
+        _ROUND_DP,
     )
     ranked = (
         vecs.join(F.broadcast(cent))
@@ -1426,7 +1463,7 @@ def kmeans_step(
         ranked.select("c_id", F.posexplode("ev").alias("pos0", "val"))
         .groupBy(F.col("c_id").alias("cluster_id"), (F.col("pos0") + 1).alias("pos"))
         .agg(
-            F.round(F.avg("val"), round_dp).alias("mean_val"),
+            F.round(F.avg("val"), _ROUND_DP).alias("mean_val"),
             F.count(F.lit(1)).alias("n_members"),
         )
     )
@@ -1448,9 +1485,10 @@ def kmeans_train(
     (:func:`assign_centroids_np` — one matmul per batch, no row explosion),
     then the per-(cluster, dimension) mean via posexplode + groupBy and an
     ``array_sort``-of-structs rebuild — the same update as
-    :func:`kmeans_step` (its row-form output is the oracle-checkable twin;
-    this returns the array form iteration needs). Iterative: each round ends
-    in an eager stats-stripped checkpoint so the plan stays O(1) deep
+    :func:`kmeans_step`, unrounded and in the array form iteration needs;
+    the assignment is the unrounded BLAS argmax, not kmeans_step's rounded
+    fold, so a 6dp near-tie can land in another cluster. Iterative: each
+    round ends in an eager stats-stripped checkpoint so the plan stays O(1) deep
     (`materialize.checkpoint_nostats` — same rule as connected components).
 
     Empty clusters vanish (standard Lloyd; k only ever shrinks). Seeds
@@ -1689,7 +1727,6 @@ def hashed_bow_embeddings(
     text_col: str = "text",
     dim: int = 64,
     normalize: bool = True,
-    round_dp: int = 6,
     tokenizer: str | Column = "space",
 ) -> DataFrame:
     """Deterministic text → dense embedding via the hashing trick
@@ -1754,7 +1791,7 @@ def hashed_bow_embeddings(
         id_col,
         F.when(
             norm > 0,
-            F.transform("embedding", lambda x: F.round(x / norm, round_dp)),
+            F.transform("embedding", lambda x: F.round(x / norm, _ROUND_DP)),
         ).alias("embedding"),
     )
 
@@ -1783,7 +1820,6 @@ def bow_embedding_expr(
     toks: Column,
     dim: int = 64,
     normalize: bool = True,
-    round_dp: int = 6,
 ) -> Column:
     """:func:`hashed_bow_embeddings` as ONE pure-projection Column — no
     explode, no shuffle, no aggregation — so it runs unchanged on a STREAM
@@ -1825,7 +1861,7 @@ def bow_embedding_expr(
         return _once(
             F.sqrt(F.aggregate(raw, F.lit(0.0), lambda a, x: a + x * x)),
             lambda nrm: F.when(
-                nrm > 0, F.transform(raw, lambda x: F.round(x / nrm, round_dp))
+                nrm > 0, F.transform(raw, lambda x: F.round(x / nrm, _ROUND_DP))
             ),
         )
 
@@ -1839,12 +1875,12 @@ def probe_cells_expr(
     cent_rows,
     n_probe: int,
     center_vec: list[float] | None = None,
-    round_dp: int = 6,
 ) -> Column:
     """Per-row IVF probe selection as ONE pure-projection Column: the
     ``n_probe`` nearest cells (cosine desc, 6dp-rounded, ties to the lowest
-    ``c_id`` — exactly :func:`ivf_ann_topk`'s ``nearest_cells`` rank rule,
-    equality-tested) as ``array<bigint>`` of cell ids.
+    ``c_id`` — exactly the IVF cell rule of :func:`ivf_index` and
+    :func:`ivf_ann_topk`'s query probes, equality-tested) as
+    ``array<bigint>`` of cell ids.
 
     ``cent_rows`` is the COLLECTED centroid table (rows with ``c_id`` /
     ``c_vec`` — small by the same broadcast contract as
@@ -1864,7 +1900,7 @@ def probe_cells_expr(
                 F.array(*[F.lit(float(v)) for v in r["c_vec"]]).alias("cv"),
                 # floor like the query norm: a zero-norm centroid must rank
                 # sim-0 deterministically, not poison the whole array_sort
-                # with IEEE Inf/NaN (nearest_cells + the X57 oracle mirror)
+                # with IEEE Inf/NaN (the cell rule + the X57 oracle mirror)
                 F.lit(
                     max(
                         math.sqrt(sum(float(v) * float(v) for v in r["c_vec"])),
@@ -1891,7 +1927,7 @@ def probe_cells_expr(
                             lambda c: F.struct(
                                 (
                                     -F.round(
-                                        _dot(a, c["cv"]) / (an * c["cn"]), round_dp
+                                        _dot(a, c["cv"]) / (an * c["cn"]), _ROUND_DP
                                     )
                                 ).alias("negsim"),
                                 c["c_id"].alias("c_id"),
@@ -2226,7 +2262,7 @@ def pq_topk(
         codes_df.select(id_col, "codes")
         .mapInArrow(batches, schema=schema)
         .filter(F.col("q_id") != F.col("n_id"))
-        .withColumn("dist", F.round("dist", 6))
+        .withColumn("dist", F.round("dist", _ROUND_DP))
         .withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("q_id", "n_id", "rnk", "dist")
@@ -2854,7 +2890,6 @@ def semantic_dedup(
     threshold: float = 0.9,
     centroid_filter=None,
     max_reps: int = 256,
-    round_dp: int = 6,
     center_vec: list[float] | None = None,
     center: bool | str = False,
 ) -> DataFrame:
@@ -2868,8 +2903,9 @@ def semantic_dedup(
     1. **Assignment** — the centroid set (``centroid_filter`` selects
        deterministic seeds; production feeds :func:`kmeans_step` output) is
        collected to the driver, and each vector takes its argmax cosine
-       (rounded to ``round_dp``, ties to the lowest ``c_id``). Map-side
-       O(n·k): the corpus never shuffles for this step.
+       (rounded to 6dp, ties to the lowest ``c_id``) — the IVF cell rule
+       and kernel of :func:`ivf_index`, one cell per row. Map-side O(n·k):
+       the corpus never shuffles for this step.
     2. **Representatives** — the ``max_reps`` smallest-id members of each
        cluster. Every member is compared ONLY against lower-id
        representatives, so per-cluster work is |cluster|·max_reps, never
@@ -2880,13 +2916,15 @@ def semantic_dedup(
        threshold; emitted as a ``keep`` flag for every input row (callers
        filter, or audit the drops).
 
-    Output: ``(id_col, cluster_id, keep)``. Exact cosine, rounded to
-    ``round_dp`` — oracle-reproducible: both dot-heavy steps run as Arrow
-    sweeps that replicate the ``_dot`` fold bit-exactly (see the inline
-    notes), so the output equals the fold form of all three steps
-    (pytest-asserted). Ids may be any orderable type. A NULL-vector
-    centroid scores NULL, as in the fold: it never beats a non-NULL
-    cosine, and a NULL-vector row goes to the smallest ``c_id``.
+    Output: ``(id_col, cluster_id, keep)``. Exact cosine, rounded to 6dp
+    — oracle-reproducible: both dot-heavy steps recompute their cosines
+    with sweeps that replicate the ``_dot`` fold bit-exactly (see the
+    inline notes), so the output equals the fold form of all three steps
+    (pytest-asserted). Ids may be any orderable type and are unique by
+    contract: each input row is assigned on its own, and ``cluster_id``
+    keeps the id column's type. A NULL-vector centroid scores NULL, as in
+    the fold: it never beats a non-NULL cosine, and a NULL-vector row goes
+    to the smallest ``c_id``.
 
     Scale: one small-side collect (centroids; over
     :data:`NP_TIER_MAX_COLLECT` rows it raises), one shuffle on
@@ -2920,136 +2958,18 @@ def semantic_dedup(
             center_vec = probed_mean if ratio > CENTER_AUTO_RATIO else None
         elif center:
             center_vec = embedding_mean(df, vec_col)
-    # assignment-space vectors: centered when center_vec is given (the
-    # verdict sim below always stays on the raw `ev`). Both the assign-
-    # space vector and its floored norm are computed ONCE per row on each
-    # side (r15), never per (vector, centroid) pair. The floor keeps a
-    # vector equal to the corpus mean (centered to zero) at sim 0.0, so it
-    # falls to the lowest c_id instead of NULLing its cluster.
-    ev_a = F.col("ev")
-    cv_a = F.col(vec_col).cast("array<double>")
+    # Assignment: the IVF cell rule's one kernel, in-row with r = 1 — no
+    # corpus shuffle. Centroids are centered here, rows in the kernel; the
+    # verdict sim below always stays on the raw `ev`.
+    cents = df.filter(centroid_filter).select(
+        F.col(id_col).alias("c_id"), F.col(vec_col).alias("c_vec")
+    )
     if center_vec is not None:
-        m_lit = F.array(*[F.lit(float(x)) for x in center_vec])
-        ev_a = F.zip_with(ev_a, m_lit, lambda x, y: x - y)
-        cv_a = F.zip_with(cv_a, m_lit, lambda x, y: x - y)
-    cents = (
-        df.filter(centroid_filter)
-        .select(F.col(id_col).alias("c_id"), cv_a.alias("__ca"))
-        .withColumn(
-            "__cn",
-            F.greatest(F.sqrt(_dot(F.col("__ca"), F.col("__ca"))), F.lit(1e-12)),
-        )
-    )
-    # the collect IS the centroid side's materialization, so the empty-set
-    # guard rides it. Without the guard an empty centroid set assigns no
-    # row, and a keep-filter caller silently drops the whole corpus instead
-    # of learning its filter matched nothing.
-    c_tbl = _collect_small_side(
-        cents.orderBy("c_id"), "semantic_dedup centroid", arrow=True
-    )
-    c_id_arr, c_vec, c_norm = (c.combine_chunks() for c in c_tbl.columns)
-    # a NULL-vector centroid scores NULL against every row, as in the fold:
-    # it loses to any non-NULL sim and only wins the all-NULL tiebreak of
-    # the NULL route below, so the sweep scores the live centroids alone
-    # (positions c_pos in the c_id-ordered table)
-    c_live, C_mat = _vector_matrix(c_vec, "semantic_dedup centroid", allow_null=True)
-    c_pos = np.flatnonzero(c_live)
-    c_norms = c_norm.to_numpy(zero_copy_only=False)[c_pos]
-    if not len(c_id_arr):
-        raise ValueError(
-            "semantic_dedup: centroid_filter selected no rows — every input "
-            "row needs a cluster; pass a filter that matches this corpus's "
-            "ids (or feed kmeans_step output)"
-        )
-
-    # Assignment sweep (r15): the n×k assignment dots are the
-    # operator's dominant cost (measured on x32: ~70 s task-run at sf0.1 as
-    # interpreted folds, ~1 µs per element). The sweep computes the SAME
-    # raw cosines bit-exactly (see _sweep_cross — identical per-pair FP op
-    # sequence; norms are NOT replicated: __vn rides the row from the Spark
-    # expression built below and the collected centroid rows carry the
-    # Spark-computed __cn). Python emits only CANDIDATE winners per vector —
-    # every centroid whose numpy-rounded sim is within two rounding quanta
-    # of the row max (numpy half-even and Spark HALF_UP can disagree by at
-    # most one quantum, so the true winner is always in this superset) —
-    # and the FINAL rounded argmax runs in Spark's max_by/Round
-    # expressions: no Python replication of decimal-rounding semantics
-    # anywhere. Ties go to the lowest c_id through its position __cj in the
-    # c_id-ordered centroid table, which works for any id type.
-    cand_margin = 2 * 10.0 ** (-round_dp)
-    # the sweep wants few LARGE Arrow batches (its parallelism axis is
-    # numpy rows inside the batch), so it reads the un-spread input
-    vecs = df.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>").alias("ev")
-    ).select(
-        F.col(id_col), "ev", ev_a.alias("__va")
-    ).withColumn(
-        "__vn",
-        F.greatest(F.sqrt(_dot(F.col("__va"), F.col("__va"))), F.lit(1e-12)),
-    )
-    cand_schema = T.StructType(
-        [
-            df.schema[id_col],
-            T.StructField("ev", T.ArrayType(T.DoubleType())),
-            # cluster_id keeps the id column's type
-            T.StructField("c_id", df.schema[id_col].dataType),
-            T.StructField("__cj", T.LongType()),
-            T.StructField("__raw", T.DoubleType()),
-        ]
-    )
-
-    def _cands(batch, rows, cj, raw):
-        return pa.RecordBatch.from_pydict({
-            id_col: batch.column(0).take(rows),
-            "ev": batch.column(1).take(rows),
-            "c_id": c_id_arr.take(pa.array(cj)).cast(batch.column(0).type),
-            "__cj": pa.array(cj, pa.int64()),
-            "__raw": pa.nulls(len(rows), pa.float64()) if raw is None else raw,
-        })
-
-    def _assign_batches(it):
-        for batch in it:
-            swept = np.asarray(batch.column(2).is_valid()) & bool(len(c_pos))
-            rows = np.flatnonzero(swept)
-            if len(rows):
-                _, V = _vector_matrix(
-                    batch.column(2), "semantic_dedup", C_mat.shape[1], allow_null=True
-                )
-                vn = np.asarray(batch.column(3), dtype=np.float64)[rows]
-                raw = _sweep_cross(V, C_mat) / np.multiply.outer(vn, c_norms)
-                r_np = np.round(raw, round_dp)
-                mx = r_np.max(axis=1, keepdims=True)
-                # NaN sims (NaN vector data) stay candidates: Spark's
-                # NaN-is-largest max_by ordering decides, as in the fold
-                keep = (r_np >= mx - cand_margin) | np.isnan(r_np)
-                ri, cj = np.nonzero(keep)
-                yield _cands(batch, rows[ri], c_pos[cj], raw[ri, cj])
-            if not swept.all():
-                # whole-vector NULLs (or no live centroid): the fold's sims
-                # are all NULL there and the ordering falls to the tiebreak
-                # — the SMALLEST c_id wins (with the NULL ev riding along).
-                # One candidate row with a NULL __raw reproduces that.
-                nul = np.flatnonzero(~swept)
-                yield _cands(batch, nul, np.zeros(len(nul), dtype=np.int64), None)
-
-    assign = (
-        vecs.mapInArrow(_assign_batches, schema=cand_schema)
-        .groupBy(id_col)
-        .agg(
-            F.max_by(
-                F.struct(F.col("c_id"), F.col("ev")),
-                F.struct(
-                    F.round(F.col("__raw"), round_dp),
-                    (-F.col("__cj")).alias("__nc"),
-                ),
-            ).alias("__best")
-        )
-        .select(
-            F.col(id_col),
-            F.col("__best.ev").alias("ev"),
-            F.col("__best.c_id").alias("cluster_id"),
-        )
-    )
+        cents = center_embeddings(cents, center_vec, "c_vec")
+    cells = _collect_cells(cents, "semantic_dedup")
+    vecs = df.select(F.col(id_col), F.col(vec_col).cast("array<double>").alias("ev"))
+    assign = _assign_cells(vecs, cells, center_vec, 1, "semantic_dedup")
+    assign = assign.withColumnRenamed("c_id", "cluster_id")
     # both the member side and the rep side re-read the assignment (k dot
     # products per vector) — materialize once (deployment-aware). The RAW
     # verdict norm rides the materialized table too: the member-vs-rep pair
@@ -3076,14 +2996,14 @@ def semantic_dedup(
     pairs = assign.join(reps, "cluster_id").filter(
         F.col("__rep_id") < F.col(id_col)
     )
-    # Verdict sweep for the member×rep dots (same contract as the assignment
-    # sweep: _sweep_rows replicates the fold bit-exactly, the norms are the
-    # Spark-computed __n/__rn riding the joined row, and the threshold
+    # Verdict sweep for the member×rep dots (the assignment kernel's
+    # contract: _sweep_rows replicates the fold bit-exactly, the norms are
+    # the Spark-computed __n/__rn riding the joined row, and the threshold
     # decision stays in Spark — the sweep only PRE-FILTERS with a slack of
     # one rounding quantum (no raw value below threshold - 10^-dp can round
     # up to the threshold), then Spark's own Round expression applies the
     # exact cut.
-    margin = threshold - 10.0 ** (-round_dp)
+    margin = threshold - 10.0**-_ROUND_DP
     raw_schema = T.StructType(
         [df.schema[id_col], T.StructField("__raw", T.DoubleType())]
     )
@@ -3122,7 +3042,7 @@ def semantic_dedup(
         pairs.filter(F.col("ev").isNotNull() & F.col("rv").isNotNull())
         .select(id_col, "ev", "rv", "__n", "__rn")
         .mapInArrow(_verdict_batches, schema=raw_schema)
-        .filter(F.round(F.col("__raw"), round_dp) >= threshold)
+        .filter(F.round(F.col("__raw"), _ROUND_DP) >= threshold)
         .select(id_col)
         .distinct()
         .withColumn("__dropped", F.lit(True))

@@ -108,6 +108,17 @@ def state_partitions(
             spark.conf.set(k, v)
 
 
+def _driver_memory() -> str:
+    """``SPARK_DRIVER_MEMORY``, else the smaller of 16g and half of the
+    box's physical memory: in local mode the driver JVM is the whole
+    executor, and a heap allowed past physical memory gets the process
+    OOM-killed (a 16g default did on a 15 GB box) before the GC runs."""
+    if os.environ.get("SPARK_DRIVER_MEMORY"):
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(16 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "crypto-market-data-etl-spark",
     cpus: int | None = None,
@@ -125,7 +136,7 @@ def get_spark(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
     )

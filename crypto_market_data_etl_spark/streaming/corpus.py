@@ -242,8 +242,8 @@ def stream_embedding_neardup_flag(
     watermarked aggregation (the in-row-signature contract): the hashed-BoW
     embedding (:func:`~..operators.similarity.bow_embedding_expr`,
     bit-identical to the batch featurizer), the probe-cell selection
-    (:func:`~..operators.similarity.probe_cells_expr` — the
-    ``nearest_cells`` rank rule without the window a stream can't run),
+    (:func:`~..operators.similarity.probe_cells_expr` — the IVF cell
+    rule of ``ivf_index`` as one in-row Column, which a stream can run),
     an explode over the ``n_probe`` probed cells, the c_id equi-join, and
     one per-document agg emitting ``(ts, id, n_hits, best_sim, neardup)``
     exactly once in append mode. The verdict cosine runs on RAW vectors

@@ -99,9 +99,9 @@ def ivf_ann_topk_fold(
 
 def semantic_dedup_fold(
     df, id_col="vec_id", vec_col="embedding", threshold=0.9,
-    centroid_filter=None, max_reps=256, round_dp=6, center_vec=None,
+    centroid_filter=None, max_reps=256, center_vec=None,
 ):
-    """``semantic_dedup``: assignment = argmax ``round_dp`` cosine in
+    """``semantic_dedup``: assignment = argmax 6dp cosine in
     assignment space (centered by ``center_vec``; floored norms), ties to
     the lowest ``c_id``; reps = each cluster's ``max_reps`` smallest ids;
     verdict = drop iff a lower-id rep's raw rounded cosine reaches
@@ -118,7 +118,7 @@ def semantic_dedup_fold(
     c_sim = F.round(
         _dot(F.col("__va"), F.col("__ca"))
         / (_floored_norm(F.col("__va")) * _floored_norm(F.col("__ca"))),
-        round_dp,
+        6,
     )
     w = Window.partitionBy(id_col).orderBy(F.col("__c_sim").desc(), F.col("c_id"))
     assign = (
@@ -141,7 +141,7 @@ def semantic_dedup_fold(
         )
     )
     pair_sim = F.round(
-        _dot(F.col("ev"), F.col("rv")) / (F.col("__n") * F.col("__rn")), round_dp
+        _dot(F.col("ev"), F.col("rv")) / (F.col("__n") * F.col("__rn")), 6
     )
     dropped = (
         assign.join(reps, "cluster_id")

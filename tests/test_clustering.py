@@ -320,11 +320,13 @@ def test_domain_mixture_sample_deterministic_and_flattening(spark):
 
 
 def test_semantic_dedup_matches_fold_reference(spark):
-    """The r15 Arrow sweeps must be IDENTICAL to the ``_dot`` fold form of
-    assignment and verdict — not tolerance-equal: the sweeps replicate the
-    fold's exact FP sequence (_sweep_cross/_sweep_rows), norms ride the
-    rows from Spark expressions, and rounding/argmax/threshold stay in
-    Spark. Full output equality on every column, plain and centered."""
+    """The Arrow assignment and verdict must be IDENTICAL to the ``_dot``
+    fold form — not tolerance-equal: both recompute their cosines with
+    ``_sweep_rows``, which replicates the fold's exact FP sequence; the
+    assignment kernel computes its floored norms the same way in numpy,
+    the verdict's norms ride the rows from Spark expressions, and
+    rounding/argmax/threshold stay in Spark. Full output equality on every
+    column, plain and centered."""
     from crypto_market_data_etl_spark.operators.similarity import (
         embedding_mean,
         semantic_dedup,

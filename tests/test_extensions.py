@@ -26,6 +26,7 @@ from tests.conftest import SF_SMOKE
 from tests.fold_reference import (
     cosine_topk_fold,
     ivf_ann_topk_fold,
+    nearest_cells_fold,
     semantic_dedup_fold,
 )
 
@@ -222,8 +223,6 @@ def test_ivf_matches_fold_reference(spark, embs):
         ivf_ann_topk,
         ivf_index,
     )
-    from tests.fold_reference import nearest_cells_fold
-
     qs = embs.filter(F.col("vec_id") % 50 == 0)
     flt = F.col("vec_id") % 20 == 1
     cents = embs.filter(flt).select(
@@ -465,6 +464,16 @@ def _vp_kernel(name, spark, df, reference=False):
         "semantic_dedup": lambda: (
             semantic_dedup_fold if reference else sim.semantic_dedup
         )(df, centroid_filter=F.col("vec_id").isin(1, BIG_ID)),
+        "ivf_index": lambda: (
+            nearest_cells_fold(
+                df.select(
+                    F.col("vec_id").alias("n_id"), F.col("embedding").alias("n_vec")
+                ),
+                "n_id", "n_vec", cents, 1,
+            )
+            if reference
+            else sim.ivf_index(df, cents)
+        ),
         "_signature_sweep": lambda: (
             _bucket_signature_sweep if reference else sim._signature_sweep
         )(df, "vec_id", "embedding", 4, 8),
@@ -485,6 +494,7 @@ _VP_NULL_ROUTE = {
     "ivfpq_topk": "raise",
     "semantic_dedup": "expression",
     "_signature_sweep": "expression",
+    "ivf_index": "expression",
 }
 
 
@@ -2808,7 +2818,7 @@ def test_bow_embedding_expr_matches_batch(spark):
 
 
 def test_probe_cells_expr_matches_rank_rule(spark):
-    """probe_cells_expr == the nearest_cells rank rule (cosine desc,
+    """probe_cells_expr == the IVF cell rule (cosine desc,
     6dp-rounded, ties to lowest c_id), incl. an exact-tie pair, the
     centered space, n_probe past the cell count, and NULL vectors."""
     import numpy as np
@@ -3282,7 +3292,7 @@ def test_ivf_index_multi_assignment_dedup(spark):
 def test_zero_norm_centroid_is_floored(spark):
     """A zero-norm centroid row must rank at sim 0 deterministically in
     every centroid assignment — probe_cells_expr (stream gate),
-    nearest_cells (ivf_ann_topk's query probes), assign_centroids_np, and
+    _assign_cells (ivf_ann_topk's query probes), assign_centroids_np, and
     the coarse quantizers of coarse_residuals, ivfpq_index and ivfpq_topk
     — not poison the ordering with Inf/NaN. All of them must agree."""
     import numpy as np
@@ -3338,7 +3348,7 @@ def test_zero_norm_centroid_is_floored(spark):
         assert top1_np[i] == exp[0]
         assert not any(np.isnan(c) or c < 0 for c in probe[i])
 
-    # end-to-end: nearest_cells must not NaN-corrupt ranks
+    # end-to-end: the query probes must not NaN-corrupt ranks
     qs = df.filter("vec_id = 0").select(
         (F.col("vec_id") + 100).alias("vec_id"), "embedding"
     )

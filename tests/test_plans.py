@@ -67,6 +67,28 @@ def test_x05_broadcasts_query_side_only(spark):
     assert "Exchange" not in scoring.split("Scan parquet")[0]
 
 
+def test_ivf_and_semdedup_assign_cells_in_row(spark, monkeypatch):
+    # the IVF cell rule runs in-row (one mapInArrow + sort_array pick) for
+    # the corpus, the query probes and SemDeDup's clustering: the only
+    # Window left in an IVF query is the final rank, and the SemDeDup
+    # assignment that materialize() receives neither aggregates nor
+    # shuffles on the id
+    import re
+
+    from crypto_market_data_etl_spark.operators import similarity
+    from crypto_market_data_etl_spark.schemas import load_table
+
+    plan = _plan(extensions.x15_ivf_ann(spark, SF_SMOKE))
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    seen = []
+    monkeypatch.setattr(similarity, "materialize", lambda df: seen.append(df) or df)
+    similarity.semantic_dedup(load_table(spark, SF_SMOKE, "embeddings"))
+    assign = _plan(seen[0])
+    assert "MapInArrow" in assign
+    assert "Aggregate" not in assign, assign
+    assert not re.search(r"Exchange hashpartitioning\(vec_id", assign), assign
+
+
 def test_partition_filters_reach_scan(spark, tmp_path):
     from crypto_market_data_etl_spark.sources.files import (
         read_partitioned,
